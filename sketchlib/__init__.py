@@ -23,3 +23,13 @@ Spark's execution model:
 from sketchlib.tdigest.core import TDigest, MergingDigest  # noqa: F401
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+# Python workers only: pyspark.daemon imports pyspark.worker before it forks
+# them, and the driver never does.  Stops every later task of this worker
+# from re-reading each zip on sys.path (sketchlib.spark.zipcache).
+if "pyspark.worker" in _sys.modules:
+    from sketchlib.spark.zipcache import install as _install_zipcache
+
+    _install_zipcache()

@@ -1,16 +1,23 @@
-"""dist/sketchlib.zip must track the source tree — a stale deploy artifact
-(spark-submit --py-files) fails at runtime with ModuleNotFoundError on
-exactly the newest modules, which is how it bit round 3."""
+"""The deploy zip (``python tools/package.py`` -> dist/sketchlib.zip, for
+spark-submit --py-files) must track the source tree — a stale artifact
+fails at runtime with ModuleNotFoundError on exactly the newest modules.
+The test builds a fresh zip with the same command, so it needs no prebuilt
+artifact."""
 
 import os
+import subprocess
+import sys
 import zipfile
 
 from tests.conftest import REPO_ROOT
 
 
-def test_dist_zip_is_fresh():
-    zpath = os.path.join(REPO_ROOT, "dist", "sketchlib.zip")
-    assert os.path.exists(zpath), "run: python tools/package.py"
+def test_dist_zip_is_fresh(tmp_path):
+    zpath = str(tmp_path / "sketchlib.zip")
+    subprocess.run(
+        [sys.executable, os.path.join(REPO_ROOT, "tools", "package.py"), zpath],
+        check=True, capture_output=True, cwd=str(tmp_path),
+    )
     with zipfile.ZipFile(zpath) as z:
         in_zip = {i.filename: i.file_size for i in z.infolist()}
     src = {}
@@ -21,11 +28,44 @@ def test_dist_zip_is_fresh():
                 full = os.path.join(root, f)
                 src[os.path.relpath(full, REPO_ROOT)] = os.path.getsize(full)
     assert in_zip == src, (
-        "dist/sketchlib.zip is stale — run: python tools/package.py; "
+        "tools/package.py does not zip the source tree: "
         f"missing={sorted(set(src) - set(in_zip))} "
         f"extra={sorted(set(in_zip) - set(src))} "
         f"size_diff={sorted(k for k in src.keys() & in_zip.keys() if src[k] != in_zip[k])}"
     )
+
+
+class _FakeContext:
+    def __init__(self, app_id):
+        self.applicationId = app_id
+        self.py_files = []
+
+    def addPyFile(self, path):
+        self.py_files.append(path)
+
+
+class _FakeSession:
+    def __init__(self, sc):
+        self.sparkContext = sc
+
+
+def test_ensure_on_workers_ships_once_per_application(monkeypatch):
+    """Keyed by application id, not id(sc): a restarted context allocated
+    at the stopped one's address must still get the zip."""
+    from sketchlib.spark import shipping
+
+    monkeypatch.setattr(shipping, "_SHIPPED", set())
+    first, second = _FakeContext("app-1"), _FakeContext("app-2")
+    for _ in range(2):
+        shipping.ensure_on_workers(_FakeSession(first))
+        shipping.ensure_on_workers(_FakeSession(second))
+    # a different context object of an application already shipped
+    same_app = _FakeContext("app-1")
+    shipping.ensure_on_workers(_FakeSession(same_app))
+    assert len(first.py_files) == 1 and len(second.py_files) == 1
+    assert same_app.py_files == []
+    with zipfile.ZipFile(first.py_files[0]) as z:
+        assert "sketchlib/spark/shipping.py" in z.namelist()
 
 
 def test_query_doc_in_sync():
