@@ -12,10 +12,11 @@ Spark's execution model:
 - ``sketchlib.bloom``      — Bloom filter.
 - ``sketchlib.kll``        — KLL quantile sketch.
 - ``sketchlib.kmv``        — KMV / bottom-k (distinct estimate + coordinated sample).
-- ``sketchlib.aggregator`` — the shared mergeable-Aggregator interface all six implement.
-- ``sketchlib.spark``      — DataFrame-level plumbing: mapInPandas partials,
-                             applyInPandas merges, salted/tree-merge plans,
-                             checkpoint/resume, scalar query UDFs.
+- ``sketchlib.aggregator`` — the shared mergeable-Aggregator interface every
+                             sketch (the t-digest included) implements.
+- ``sketchlib.spark``      — DataFrame-level plumbing: one two-phase sketch
+                             kernel (``spark.sketch_ops``) with salted tree
+                             merges, checkpoint/resume, scalar query UDFs.
 - ``sketchlib.data``       — deterministic Common-Crawl-style page generator +
                              the fixed html→text extraction rule.
 """

@@ -7,23 +7,28 @@ the contract Spark's two-phase aggregation needs:
 
     zero() → update_batch(values) ...    (map side, per Arrow batch)
     serialize() → shuffle →              (16B/centroid binary etc.)
-    deserialize() / merge() ...          (reduce side, per key)
+    merge_blobs(acc, blobs) ...          (reduce side, per key and batch)
+    finish_merge() → serialize()         (once per merged key)
     finish()                             (final compress / estimate)
 
-``sketchlib.spark.sketch_ops`` lifts any Aggregator into a DataFrame-level
-partial/merge plan (mapInPandas partials + applyInPandas merge).
+``sketchlib.spark.sketch_ops`` lifts any registered Aggregator into the
+DataFrame-level partial/merge kernel (mapInPandas partials, one shuffle,
+then a mapInPandas accumulator merge — or ``groupBy().applyInPandas`` for
+the MB-scale Bloom/CMS states).
 """
 
 from __future__ import annotations
 
 import abc
-from typing import Any
+from typing import Any, Iterable
 
 import numpy as np
 
 
 class Aggregator(abc.ABC):
     """A mergeable sketch aggregator: a commutative monoid with batch updates."""
+
+    __slots__ = ()
 
     @classmethod
     @abc.abstractmethod
@@ -50,3 +55,19 @@ class Aggregator(abc.ABC):
     @abc.abstractmethod
     def finish(self) -> Any:
         """Final answer (estimate, digest bytes, bitset...) for this sketch."""
+
+    @classmethod
+    def merge_blobs(cls, acc: "Aggregator | None", blobs: Iterable[bytes],
+                    **params: Any) -> "Aggregator":
+        """Fold serialized sketches into ``acc`` and return it; ``acc=None``
+        starts from the first blob.  The merge phase calls this once per
+        key per Arrow batch, so a family whose wire format has a cheaper
+        union overrides it."""
+        for b in blobs:
+            s = cls.deserialize(b, **params)
+            acc = s if acc is None else acc.merge(s)
+        return acc
+
+    def finish_merge(self) -> "Aggregator":
+        """Runs once on each merged sketch before it is serialized."""
+        return self

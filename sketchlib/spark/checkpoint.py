@@ -28,15 +28,12 @@ same schema, append-only, hermetic for tests (SURVEY.md §7.3.7).
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from sketchlib.tdigest.core import MergingDigest
 
 CHECKPOINT_SCHEMA = (
     "run_id string, part_id int, key string, digest binary, "
@@ -45,13 +42,13 @@ CHECKPOINT_SCHEMA = (
 
 
 class TDigestCheckpointer:
-    """Checkpointer for any sketch kind; named for its default.
+    """Checkpointer for any registered sketch kind; named for its default.
 
-    ``sketch='tdigest'`` (default) ingests the value column as float64 and
-    finalizes via lossless digest union + compress.  Sibling kinds
-    ('hll'/'cms'/'bloom'/'kll'/'kmv', see ``sketch_ops.SKETCHES``) ingest
-    via the same JVM-side xxhash64 projection as the batch path and
-    finalize via their own merge; for the order-insensitive kinds the
+    ``sketch='tdigest'`` (default) takes ``delta``/``discrete``; every other
+    kind in ``sketch_ops.SKETCHES`` takes ``params``.  Partials are built by
+    the sketch kernel's partial builder keyed by (part_id, keys...), so the
+    ingest (projection, NULL handling) is exactly the batch path's, and
+    finalize is the kernel merge; for the order-insensitive kinds the
     byte-identical-resume guarantee holds exactly as for digests."""
 
     def __init__(
@@ -69,6 +66,10 @@ class TDigestCheckpointer:
         params: dict | None = None,
         table_format: str = "parquet",
     ) -> None:
+        from sketchlib.spark.sketch_ops import SKETCHES
+
+        if sketch not in SKETCHES:
+            raise ValueError(f"unknown sketch kind {sketch!r}")
         self.spark = spark
         self.ckpt_path = ckpt_path
         self.keys = keys
@@ -79,7 +80,8 @@ class TDigestCheckpointer:
         self.discrete = discrete
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.sketch = sketch
-        self.params = dict(params or {})
+        self.params = ({"delta": delta, "discrete": discrete} if sketch == "tdigest"
+                       else dict(params or {}))
         # checkpoint table format: any Spark batch source with append
         # support works (parquet default; orc exercised in tests) — the
         # state is plain (part_id, key, digest, metrics) rows, which is
@@ -88,11 +90,10 @@ class TDigestCheckpointer:
         if table_format not in ("parquet", "orc"):
             raise ValueError(f"unsupported checkpoint format {table_format!r}")
         self.table_format = table_format
-        if sketch != "tdigest":
-            from sketchlib.spark.sketch_ops import SKETCHES
 
-            if sketch not in SKETCHES:
-                raise ValueError(f"unknown sketch kind {sketch!r}")
+    def _spec(self) -> dict:
+        return {"name": "digest", "kind": self.sketch, "col": self.value_col,
+                "params": self.params}
 
     # -- helpers ---------------------------------------------------------------
 
@@ -102,7 +103,7 @@ class TDigestCheckpointer:
         )
 
     def _lineage(self) -> str:
-        if self.sketch == "tdigest":
+        if self.sketch == "tdigest":  # the spelling digest checkpoints carry
             return (f"tdigest(delta={self.delta},discrete={self.discrete})"
                     f"<-{self.value_col} by {','.join(self.keys)}")
         # canonical params rendering: the same logical config must produce
@@ -126,8 +127,6 @@ class TDigestCheckpointer:
         """The pre-canonicalization spelling (params dict repr) — accepted
         on read so checkpoints written before the format change stay
         resumable; new rows are always written in canonical form."""
-        if self.sketch == "tdigest":
-            return self._lineage()
         return f"{self.sketch}({self.params})<-{self.value_col} by {','.join(self.keys)}"
 
     def completed_parts(self) -> DataFrame:
@@ -171,21 +170,13 @@ class TDigestCheckpointer:
         (partition, key).  ``fail_after_parts`` injects a crash after that
         many partitions complete (for resume tests).  Returns #partitions
         processed."""
+        from sketchlib.spark.sketch_ops import _partial_builder, _project, _specs
         from sketchlib.spark.shipping import ensure_on_workers
 
         ensure_on_workers(self.spark)
-        hashed = False
-        if self.sketch != "tdigest":
-            from sketchlib.spark.sketch_ops import _HASHED
-
-            hashed = self.sketch in _HASHED
-        # project the value into an internal column: keeps the plan valid
-        # when value_col == id_col (or a key), carries the hash for the
-        # hashed kinds, and casts to double for the numeric kinds exactly
-        # like the batch path (sketch_ops.sketch_partials / tdigest_partials)
-        val = (F.xxhash64(self.value_col) if hashed
-               else F.col(self.value_col).cast("double")).alias("_v")
-        tagged = self._with_part_id(df.select(self.id_col, *self.keys, val))
+        keys = ["_part_id"] + self.keys
+        specs = _specs([self._spec()], keys)
+        tagged = _project(self._with_part_id(df), keys, specs)
         done = self.completed_parts()
         pending = tagged.join(
             F.broadcast(done.withColumnRenamed("part_id", "_part_id")),
@@ -199,66 +190,39 @@ class TDigestCheckpointer:
         if not pending_ids:
             return 0
 
-        keys, value_col, delta, discrete = (
-            self.keys, self.value_col, self.delta, self.discrete,
+        user_keys, build = self.keys, _partial_builder(keys, specs)
+        run_id, input_snapshot, lineage = (
+            self.run_id, self._input_snapshot(df), self._lineage(),
         )
-        run_id, ckpt_path, input_snapshot = (
-            self.run_id, self.ckpt_path, self._input_snapshot(df),
-        )
-        sketch, params = self.sketch, self.params
-        lineage = self._lineage()
 
-        def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            if sketch == "tdigest":
-                make = lambda: MergingDigest(delta=delta, discrete=discrete)  # noqa: E731
-            else:
-                from sketchlib.spark.sketch_ops import SKETCHES
-
-                cls = SKETCHES[sketch]
-                make = lambda: cls(**params)  # noqa: E731
-
+        def checkpoint_rows(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             t0 = time.time()
-            aggs: dict[tuple, object] = {}
-            rows_per_part: dict[int, int] = {}
-            for pdf in batches:
-                if hashed:
-                    vals = pdf["_v"].to_numpy(dtype="int64").view(np.uint64)
-                else:
-                    vals = pdf["_v"].to_numpy(dtype="float64", na_value=np.nan)
-                for gk, idx in pdf.groupby(["_part_id"] + keys, sort=False).indices.items():
-                    gk = gk if isinstance(gk, tuple) else (gk,)
-                    agg = aggs.get(gk)
-                    if agg is None:
-                        agg = aggs[gk] = make()
-                    if hashed:
-                        agg.update_hashed(vals[idx])
-                    else:
-                        agg.update_batch(vals[idx])
-                    rows_per_part[gk[0]] = rows_per_part.get(gk[0], 0) + len(idx)
-            if not aggs:
-                return
-            wall = (time.time() - t0) * 1000.0
-            out = pd.DataFrame(
-                {
+            rows: dict = {}
+
+            def counted():
+                for pdf in batches:
+                    for pid, n in pdf["_part_id"].value_counts().items():
+                        rows[pid] = rows.get(pid, 0) + n
+                    yield pdf
+
+            for out in build(counted()):
+                yield pd.DataFrame({
                     "run_id": run_id,
-                    "part_id": [gk[0] for gk in aggs],
-                    "key": ["|".join(str(x) for x in gk[1:]) for gk in aggs],
-                    "digest": [a.serialize() for a in aggs.values()],
-                    "rows": [rows_per_part[gk[0]] for gk in aggs],
-                    "wall_ms": wall,
+                    "part_id": out["_part_id"],
+                    "key": [_key_string(tuple(k)) for k in
+                            out[user_keys].to_numpy(dtype=object)],
+                    "digest": out["digest"],
+                    "rows": out["_part_id"].map(rows),
+                    "wall_ms": (time.time() - t0) * 1000.0,
                     "input_snapshot": input_snapshot,
                     "lineage": lineage,
-                }
-            )
-            yield out
+                })
 
         ckpt_rows = (
             pending.repartition(len(pending_ids), "_part_id")
-            .mapInPandas(build, schema=CHECKPOINT_SCHEMA)
+            .mapInPandas(checkpoint_rows, schema=CHECKPOINT_SCHEMA)
         )
-        ckpt_rows.write.mode("append").format(self.table_format).save(ckpt_path)
+        ckpt_rows.write.mode("append").format(self.table_format).save(self.ckpt_path)
         return len(pending_ids)
 
     def _input_snapshot(self, df: DataFrame) -> str:
@@ -271,18 +235,18 @@ class TDigestCheckpointer:
         """Merge all checkpointed partials into one sketch per key —
         order-independent, so interrupted and clean runs agree byte-for-byte
         (exactly, for the order-insensitive kinds)."""
+        from sketchlib.spark.sketch_ops import merge
+
         ckpt = self.spark.read.format(self.table_format).load(self.ckpt_path)
         # deduplicate retried partitions (same part_id written twice): partials
         # are deterministic per (part_id, key), keep one
         partials = ckpt.dropDuplicates(["part_id", "key"]).select("key", "digest")
-        if self.sketch == "tdigest":
-            from sketchlib.spark.tdigest_ops import tdigest_merge
+        return merge(partials, ["key"], [self._spec()])
 
-            return tdigest_merge(partials, ["key"], self.delta, self.discrete,
-                                 compress=True)
-        from sketchlib.spark.sketch_ops import sketch_merge
 
-        return sketch_merge(
-            partials.withColumnRenamed("digest", "sketch"), ["key"],
-            self.sketch, self.params,
-        ).withColumnRenamed("sketch", "digest")
+def _key_string(parts: tuple) -> str | None:
+    """A checkpoint row's key: the key values joined by ``|``, a NULL value
+    rendered empty; a key whose every value is NULL stays NULL."""
+    if parts and all(pd.isna(x) for x in parts):
+        return None
+    return "|".join("" if pd.isna(x) else str(x) for x in parts)

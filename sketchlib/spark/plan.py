@@ -8,12 +8,13 @@ Why this matters at 10^12 rows / 100 TB:
 The partial stage emits one ≤40 KB digest per (input partition × key).  At
 P = 800k input partitions (100 TB / 128 MB) a hot key ("en" ≈ 55% of the
 web) receives up to P partial rows ≈ 30 GB into ONE reducer in the naive
-``groupBy(key)`` plan.  ``tree_merge`` bounds every reducer's fan-in to
-``fanin`` partials by inserting salted intermediate merge levels:
+``groupBy(key)`` plan.  The kernel's ``sketch_ops.tree_merge`` (wrapped
+here per family) bounds every reducer's fan-in to ``fanin`` partials by
+inserting salted intermediate merge levels:
 
-  level 0:  groupBy(key, salt = part_hash % S)  — S ≈ P/fanin reducers/key
+  level 0:  merge by (key, salt = blob_hash % S) — S ≈ P/fanin reducers/key
   level k:  salt = salt % (S / fanin^k)          — fan-in ``fanin`` per node
-  final:    groupBy(key)                          — ≤ fanin rows per key
+  final:    merge by key                          — ≤ fanin rows per key
 
 Each level is a shuffle of sketch rows only (KBs per row).  Because the
 distributed merge is a lossless commutative union (compression only where a
@@ -27,20 +28,10 @@ the sketch the unsalted plan would build (same multiset union).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
 
-from sketchlib.spark.tdigest_ops import tdigest_merge, tdigest_partials
-
-
-def add_salt(partials: DataFrame, n_salts: int, salt_col: str = "_salt",
-             blob_col: str = "digest") -> DataFrame:
-    """Deterministic salt from the partial row content (hash of the digest
-    bytes) — uniform, reproducible, no RNG."""
-    return partials.withColumn(
-        salt_col, F.pmod(F.xxhash64(F.col(blob_col)), F.lit(n_salts)).cast("int")
-    )
+from sketchlib.spark.sketch_ops import _sketch, partials, tree_merge
+from sketchlib.spark.tdigest_ops import _digest
 
 
 def tree_merge_tdigest(
@@ -49,28 +40,9 @@ def tree_merge_tdigest(
     delta: float = 0.01,
     discrete: bool = False,
     fanin: int = 64,
-    est_partials_per_key: int | None = None,
 ) -> DataFrame:
-    """Merge partial digests with bounded reducer fan-in.
-
-    est_partials_per_key defaults to the partial row count over distinct
-    keys (cheap: the partials frame is tiny relative to the input).
-    """
-    if est_partials_per_key is None:
-        # one aggregation over the (small) partials frame
-        cnt = partials.groupBy(*keys).count().agg(F.max("count")).collect()[0][0]
-        est_partials_per_key = int(cnt or 1)
-
-    levels = max(0, math.ceil(math.log(max(est_partials_per_key, 1), fanin)) - 1)
-    df = partials
-    n_salts = fanin ** levels
-    while n_salts > 1:
-        salted = add_salt(df, n_salts)
-        df = tdigest_merge(
-            salted, keys + ["_salt"], delta, discrete, compress=True
-        ).drop("_salt")
-        n_salts //= fanin
-    return tdigest_merge(df, keys, delta, discrete, compress=True)
+    """Merge partial digests with bounded reducer fan-in."""
+    return tree_merge(partials, keys, _digest(delta, discrete), fanin)
 
 
 def tree_merge_sketch(
@@ -79,34 +51,16 @@ def tree_merge_sketch(
     sketch: str,
     params: dict | None = None,
     fanin: int = 64,
-    est_partials_per_key: int | None = None,
 ) -> DataFrame:
     """``tree_merge_tdigest`` for every sibling family in the
-    ``sketch_ops.SKETCHES`` registry: bounded reducer fan-in via salted
-    intermediate merge levels, same hot-key arithmetic as the module
-    docstring (P partial rows per key → levels of fan-in ``fanin``).
-
-    Every registry sketch's merge is a commutative semilattice/monoid on
-    the SAME serialized state the direct merge uses, so tree shape does
-    not change the result: for the byte-canonical families
-    (HLL register-max, Bloom bit-OR, CMS counter-sum, KMV bottom-k, dd
-    bucket-sum) the output blob is byte-identical to the flat
-    ``sketch_merge`` — pytest-proved — and for KLL/MG it is within the
-    family's documented merge bound."""
-    from sketchlib.spark.sketch_ops import sketch_merge
-
-    if est_partials_per_key is None:
-        cnt = partials.groupBy(*keys).count().agg(F.max("count")).collect()[0][0]
-        est_partials_per_key = int(cnt or 1)
-
-    levels = max(0, math.ceil(math.log(max(est_partials_per_key, 1), fanin)) - 1)
-    df = partials
-    n_salts = fanin ** levels
-    while n_salts > 1:
-        salted = add_salt(df, n_salts, blob_col="sketch")
-        df = sketch_merge(salted, keys + ["_salt"], sketch, params).drop("_salt")
-        n_salts //= fanin
-    return sketch_merge(df, keys, sketch, params)
+    ``sketch_ops.SKETCHES`` registry.  Every registry sketch's merge is a
+    commutative semilattice/monoid on the SAME serialized state the direct
+    merge uses, so tree shape does not change the result: for the
+    byte-canonical families (HLL register-max, Bloom bit-OR, CMS
+    counter-sum, KMV bottom-k, dd bucket-sum) the output blob is
+    byte-identical to the flat ``sketch_merge`` — pytest-proved — and for
+    KLL/MG it is within the family's documented merge bound."""
+    return tree_merge(partials, keys, _sketch(sketch, params), fanin)
 
 
 def sketch_aggregate_skewed(
@@ -118,10 +72,8 @@ def sketch_aggregate_skewed(
     fanin: int = 64,
 ) -> DataFrame:
     """Full skew-safe sibling-sketch plan: partials → salted tree merge."""
-    from sketchlib.spark.sketch_ops import sketch_partials
-
-    partials = sketch_partials(df, keys, value_col, sketch, params)
-    return tree_merge_sketch(partials, keys, sketch, params, fanin)
+    spec = _sketch(sketch, params, col=value_col)
+    return tree_merge(partials(df, keys, spec), keys, spec, fanin)
 
 
 def tdigest_aggregate_skewed(
@@ -133,8 +85,8 @@ def tdigest_aggregate_skewed(
     fanin: int = 64,
 ) -> DataFrame:
     """Full skew-safe plan: partials → salted tree merge → final digest."""
-    partials = tdigest_partials(df, keys, value_col, delta, discrete)
-    return tree_merge_tdigest(partials, keys, delta, discrete, fanin)
+    spec = _digest(delta, discrete, col=value_col)
+    return tree_merge(partials(df, keys, spec), keys, spec, fanin)
 
 
 def choose_salts_from_counts(df: DataFrame, key: str, rows_per_salt: int = 5_000_000,

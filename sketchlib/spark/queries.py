@@ -30,7 +30,6 @@ from sketchlib.spark.tdigest_ops import (
     tdigest_cdf_udf,
     tdigest_count_udf,
     tdigest_quantiles_udf,
-    tdigest_size_udf,
 )
 
 
@@ -163,43 +162,6 @@ def q_td_cdf_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_c")[1].alias("cdf_500"),
         F.col("_c")[2].alias("cdf_1000"),
     )
-
-
-def q_td_digest_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Digest introspection (reference info/to_string): centroid count ==
-    distinct values in exact mode, total weight == row count, serialized
-    size == 16 B/centroid, wire size == 20 B header + payload (round-tripped
-    through the versioned wire container so the gate covers both formats)."""
-    from sketchlib.spark.tdigest_ops import tdigest_unwire_udf, tdigest_wire_udf
-
-    docs = load(spark, sf_dir, "documents")
-    dig = tdigest_aggregate(docs, ["lang"], "n_chars", delta=0.0)
-    wire = tdigest_wire_udf(delta=0.0, discrete=False)
-    dig = (
-        dig.withColumn("_wire", wire("digest"))
-        .withColumn("_payload", tdigest_unwire_udf("_wire"))  # parse once
-    )
-    return dig.select(
-        "lang",
-        tdigest_size_udf("_payload").cast("long").alias("n_centroids"),
-        tdigest_count_udf("_payload").alias("total_weight"),
-        F.octet_length("digest").cast("long").alias("digest_bytes"),
-        F.octet_length("_wire").cast("long").alias("wire_bytes"),
-    )
-
-
-def q_td_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discrete quantiles of a continuous double column (event value)."""
-    ev = load(spark, sf_dir, "events")
-    dig = tdigest_aggregate(ev, ["event_type"], "value", discrete=True)
-    return _explode_quantiles(dig, "event_type", PS_DISCRETE, discrete=True)
-
-
-def q_td_lineitem_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merging-mode interpolated quantiles over TPC-H lineitem prices."""
-    li = load(spark, sf_dir, "lineitem")
-    dig = tdigest_aggregate(li, ["l_returnflag"], "l_extendedprice", delta=0.0)
-    return _explode_quantiles(dig, "l_returnflag", PS_FLAGSHIP, discrete=False)
 
 
 def q_td_compressed_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -428,13 +390,6 @@ FROM documents GROUP BY lang
 HAVING count(*) >= ceil(0.2 * (SELECT count(*) FROM documents))
 """
 
-_HLL_UNION_SQL = """
-SELECT count(DISTINCT user_id) AS n_exact,
-       TRUE AS union_within_2pct, TRUE AS union_equals_direct
-FROM events
-"""
-
-
 def q_kll_nearest_rank_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLL in oracle mode (k large enough that no compaction triggers at
     test scale): weighted nearest-rank quantiles, exactly SQL-checkable."""
@@ -469,14 +424,6 @@ _STOP_SQL = "['a','the','and','of','to','in']"
 _TOKS = "list_filter(string_split(text, ' '), w -> w != '')"
 
 
-def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token counting + quality counters, pure JVM built-ins
-    (whole-stage codegen, no Python)."""
-    from sketchlib.spark.textops import token_stats
-
-    return token_stats(load(spark, sf_dir, "documents"))
-
-
 def q_text_quality_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus quality scoring per lang; every ratio is one division of two
     exact integer sums (bit-identical under any partitioning)."""
@@ -491,14 +438,6 @@ def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sketchlib.spark.textops import lang_id_confusion
 
     return lang_id_confusion(load(spark, sf_dir, "documents"))
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing-style document fingerprint: min md5-hex over word
-    5-gram shingles (pure built-ins; near-dup blocking key at scale)."""
-    from sketchlib.spark.textops import fingerprint_docs
-
-    return fingerprint_docs(load(spark, sf_dir, "documents"))
 
 
 def q_dedup_exact_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -791,15 +730,6 @@ def q_ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_neighbors(emb, query_ids=list(range(8)), k=10)
 
 
-def q_emb_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding cosine near-dup pairs (>= 0.45): normalized-matrix
-    broadcast x partition matmul, ids-only output."""
-    from sketchlib.spark.ann import cosine_pairs_exact
-
-    emb = load(spark, sf_dir, "embeddings")
-    return cosine_pairs_exact(emb, threshold=0.45)
-
-
 def q_ann_exact_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fold of the two long-green exact-cosine gates (r01 `ann_topk_cosine`
     + `emb_cosine_pairs`, both green since CORRECTNESS_r01): top-10
@@ -930,37 +860,6 @@ def q_td_tpch_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q50", "q95", F.col("n_orders").cast("double").alias("total"),
     )
     return w.unionByName(n)
-
-
-def q_td_info_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference ``info`` op as a struct over exact-mode digests: count,
-    size (= distinct values in exact mode), exact min/max, bytes."""
-    from sketchlib.spark.tdigest_ops import tdigest_info_udf
-
-    docs = load(spark, sf_dir, "documents")
-    dig = tdigest_aggregate(docs, ["lang"], "n_chars", delta=0.0)
-    return dig.select(
-        "lang",
-        tdigest_info_udf("digest").alias("i"),
-    ).select(
-        "lang",
-        F.col("i.count").alias("total_weight"),
-        F.col("i.size").cast("long").alias("n_centroids"),
-        F.col("i.min").alias("min_val"),
-        F.col("i.max").alias("max_val"),
-        F.col("i.bytes").cast("long").alias("n_bytes"),
-    )
-
-
-_INFO_SQL = """
-SELECT lang,
-  CAST(count(*) AS DOUBLE) AS total_weight,
-  count(DISTINCT n_chars) AS n_centroids,
-  CAST(min(n_chars) AS DOUBLE) AS min_val,
-  CAST(max(n_chars) AS DOUBLE) AS max_val,
-  16 * count(DISTINCT n_chars) AS n_bytes
-FROM documents GROUP BY lang
-"""
 
 
 def q_td_cube_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1472,32 +1371,6 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_RECALL_SQL = """
-SELECT count(DISTINCT vec_id) AS n_queries, TRUE AS recall_ge_half
-FROM embeddings WHERE vec_id < 8
-"""
-
-
-def q_media_sniff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing end-to-end: build deterministic binary media
-    payloads from documents, then parse the typed header back out of the
-    opaque binary column.  The oracle recomputes the metadata arithmetically
-    — any encode/decode drift breaks the match."""
-    from sketchlib.spark.media import sniff_media_meta, synth_media_from_docs
-
-    docs = load(spark, sf_dir, "documents")
-    return sniff_media_meta(synth_media_from_docs(docs))
-
-
-def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plan (1 row per sampled ts) over the synthetic
-    media payloads — the UDTF-style explosion that schedules decode work."""
-    from sketchlib.spark.media import sample_frames, synth_media_from_docs
-
-    docs = load(spark, sf_dir, "documents")
-    return sample_frames(synth_media_from_docs(docs), every_ms=7000)
-
-
 _MEDIA_META_SQL = """
 SELECT doc_id AS media_id,
   CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
@@ -1515,19 +1388,6 @@ WITH v AS (
 )
 SELECT media_id, i::INT AS frame_idx, (i * 7000)::INT AS ts_ms
 FROM v, unnest(range(0, (dur + 6999) // 7000)) AS u(i)
-"""
-
-
-def _token_stats_sql() -> str:
-    return f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS tk FROM documents)
-SELECT doc_id,
-  len(tk)::BIGINT AS n_tokens,
-  len(list_distinct(tk))::BIGINT AS n_uniq_tokens,
-  len(list_filter(tk, w -> list_contains({_STOP_SQL}, w)))::BIGINT AS n_stopwords,
-  list_max(list_transform(tk, w -> length(w)))::BIGINT AS max_token_len,
-  list_sum(list_transform(tk, w -> length(w)))::BIGINT AS n_chars_nospace
-FROM t
 """
 
 
@@ -1575,19 +1435,6 @@ WITH toks AS (
 )
 SELECT d.lang, p.predicted, count(*) AS n_docs
 FROM documents d JOIN pred p USING (doc_id) GROUP BY 1, 2
-"""
-
-
-def _fingerprint_sql() -> str:
-    return f"""
-WITH t AS (SELECT doc_id, text, {_TOKS} AS tk FROM documents)
-SELECT doc_id,
-  CASE WHEN len(tk) >= 5 THEN
-    list_min(list_transform(range(1, len(tk) - 3),
-                            i -> substr(md5(array_to_string(tk[i:i+4], ' ')), 1, 16)))
-  ELSE substr(md5(text), 1, 16) END AS fingerprint,
-  len(tk)::BIGINT AS n_tokens
-FROM t
 """
 
 
@@ -1759,12 +1606,6 @@ def q_td_trimmed_mean_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         (F.abs(F.col("_tm") - F.col("_exact")) < 1e-9).alias("tm_ok"),
     )
-
-
-_TRIMMED_MEAN_SQL = """
-SELECT lang, count(*) AS n_docs, TRUE AS tm_ok
-FROM documents WHERE n_chars IS NOT NULL GROUP BY lang
-"""
 
 
 def q_dedup_group_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1995,12 +1836,6 @@ def q_mg_top_sources_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MG_TOP_SQL = """
-SELECT lang, source, count(*) AS cnt
-FROM documents GROUP BY lang, source
-"""
-
-
 def q_mg_guarantee_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SATURATED Misra–Gries (m=2 over this corpus's ~9 sources): gates the
     published guarantees as verdict booleans per distinct source —
@@ -2035,12 +1870,6 @@ def q_mg_guarantee_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ok_retention"
         ),
     )
-
-
-_MG_GUARANTEE_SQL = """
-SELECT source, TRUE AS ok_underestimate, TRUE AS ok_bound, TRUE AS ok_retention
-FROM (SELECT DISTINCT source FROM documents)
-"""
 
 
 _RANGE_JOIN_SQL = """

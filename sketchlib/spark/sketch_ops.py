@@ -1,25 +1,54 @@
-"""Generic DataFrame-level plan for any sketchlib Aggregator (HLL, CMS,
-Bloom, KLL — and t-digest, though tdigest_ops has a specialized path).
+"""The two-phase sketch kernel: every registered Aggregator (t-digest, HLL++,
+CMS, Bloom, KLL, KMV, Misra-Gries, DDSketch) is built by the same plan.
 
-Same two-phase shape as tdigest_ops (mapInPandas partials → applyInPandas
-merge) — the shuffle carries one serialized sketch per (partition × key),
-never raw rows.
+A *spec* names one sketch to build::
 
-Hashing stays JVM-side: for hash-based sketches the plan projects
-``xxhash64(value)`` (whole-stage-codegen, no Python string hashing) and the
-Python worker ingests int64 via ``update_hashed`` — the pre-hash is remixed
-with the sketch seed so query paths agree (``query_hashed``/
-``contains_hashed``).
+    {"name": "digest", "kind": "tdigest", "col": "n_chars",
+     "params": {"delta": 0.01}}
+
+plus optional ``value_fn`` + ``input_cols`` (compute the values in the
+Python stage from raw columns instead of reading ``col``), ``weight_col``
+(t-digest weights), ``params_by_key`` (per-key constructor overrides) and
+``metrics`` (an object whose ``add_from(sketch)`` sees every emitted
+sketch).  Kernel rows are wide: one row per key with one binary column per
+spec, named by the spec.
+
+  ``partials(df, keys, specs)`` — one JVM-side projection per spec (the
+      family's ingest rule in ``_INGEST``), then ONE ``mapInPandas`` that
+      keeps a per-partition ``{key: [sketch per spec]}`` table fed by
+      vectorized batch updates and emits one row per (input partition ×
+      key).  No shuffle; no per-row Python.
+  ``merge(partials, keys, specs)`` — ONE Exchange on the keys, then a
+      ``mapInPandas`` accumulator: one ``merge_blobs`` call per (key, spec,
+      Arrow batch) and one ``finish_merge`` per key at end of partition.
+      When every spec is a ``_LARGE_STATE`` family (Bloom/CMS, MB-scale),
+      ``groupBy().applyInPandas`` holds one group in memory at a time
+      instead.  A (key, spec) that received no sketch merges to NULL.
+  ``tree_merge(partials, keys, specs, fanin)`` — salted intermediate merge
+      levels that bound every reducer's fan-in (see ``spark/plan.py``).
+
+The shuffle therefore carries one serialized sketch per (partition × key ×
+spec), never raw rows.  The one-sketch APIs (``sketch_*`` here,
+``tdigest_*`` in ``tdigest_ops``), the long-format ``profile_*``, the
+checkpointer and the streaming operators are thin wrappers over these.
+
+Ingest rules: hash families project ``xxhash64(value)`` JVM-side
+(whole-stage codegen, no Python string hashing) and ingest int64 through
+``update_hashed`` — the pre-hash is remixed with the sketch seed so query
+paths agree (``query_hashed``/``contains_hashed``); Misra-Gries ingests the
+raw string because it must report items back; the numeric families ingest
+doubles and drop NaN.  NULL values are never ingested.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 from sketchlib.bloom import Bloom
 from sketchlib.cms import CMS
@@ -28,20 +57,247 @@ from sketchlib.hll import HLL
 from sketchlib.kll import KLL
 from sketchlib.kmv import KMV
 from sketchlib.mg import MisraGries
+from sketchlib.tdigest.core import MergingDigest
 
-SKETCHES = {"hll": HLL, "cms": CMS, "bloom": Bloom, "kll": KLL, "kmv": KMV,
-            "mg": MisraGries, "dd": DDSketch}
-_HASHED = {"hll", "cms", "bloom", "kmv"}  # ingest xxhash64 int64; kll/dd ingest doubles
-_RAW = {"mg"}  # ingest the raw (string) item: the sketch must REPORT items back
-#: sketches whose serialized state stays ≤ tens of KB at any cardinality —
-#: their merge takes the repartition+mapInPandas accumulator path (one Python
-#: call per Arrow batch).  Bloom/CMS can be MB-scale per sketch, so they keep
-#: the groupBy().applyInPandas() path that materializes ONE group at a time.
-_SMALL_STATE = {"hll", "kmv", "mg", "kll", "dd"}
+SKETCHES = {"tdigest": MergingDigest, "hll": HLL, "cms": CMS, "bloom": Bloom,
+            "kll": KLL, "kmv": KMV, "mg": MisraGries, "dd": DDSketch}
+#: how each family ingests a column; every other family reads doubles
+_INGEST = {"hll": "hash", "cms": "hash", "bloom": "hash", "kmv": "hash",
+           "mg": "raw"}
+#: families whose serialized state can be MBs per sketch: their merge keeps
+#: ``groupBy().applyInPandas`` (one group materialized at a time) instead of
+#: the per-partition accumulator, which would hold every co-located key's
+#: sketch in memory at once
+_LARGE_STATE = {"bloom", "cms"}
 
 
 def _norm_key(key) -> tuple:
     return key if isinstance(key, tuple) else (key,)
+
+
+def _groups(pdf: pd.DataFrame, keys: list[str]):
+    """(normalized key, row selector) per key group of one Arrow batch."""
+    if not keys:
+        return [((), slice(None))]
+    return ((_norm_key(k), idx) for k, idx in
+            pdf.groupby(keys, dropna=False, sort=False).indices.items())
+
+
+class _Spec:
+    """One validated spec with its family's ingest rule."""
+
+    def __init__(self, spec: dict, i: int) -> None:
+        self.name, self.kind = spec["name"], spec["kind"]
+        if self.kind not in SKETCHES:
+            raise ValueError(f"unknown sketch kind {self.kind!r} in spec {self.name!r}")
+        self.cls = SKETCHES[self.kind]
+        self.params = dict(spec.get("params") or {})
+        self.col = spec.get("col")
+        self.value_fn = spec.get("value_fn")
+        self.input_cols = list(spec.get("input_cols") or [])
+        self.weight_col = spec.get("weight_col")
+        self.params_by_key = spec.get("params_by_key")
+        self.metrics = spec.get("metrics")
+        self.rule = "fn" if self.value_fn is not None else _INGEST.get(self.kind, "double")
+        self._v, self._m, self._w = f"_v{i}", f"_m{i}", f"_w{i}"
+
+    def columns(self) -> list[tuple[str, object]]:
+        """The JVM-side projection: (name, Column) pairs."""
+        c = self.col
+        if self.rule == "fn":
+            cols = [(n, F.col(n)) for n in self.input_cols]
+        elif self.rule == "hash":
+            # xxhash64(NULL) is the seed (42), not NULL, so the NULL mask
+            # rides as a separate boolean column — a nullable int64 would
+            # cross Arrow→pandas as float64 and mangle the hash low bits
+            cols = [(self._v, F.xxhash64(c)), (self._m, F.col(c).isNull())]
+        elif self.rule == "raw":
+            cols = [(self._v, F.col(c).cast("string"))]
+        else:
+            cols = [(self._v, F.col(c).cast("double"))]
+        if self.weight_col:
+            cols.append((self._w, F.col(self.weight_col).cast("double")))
+        return cols
+
+    def values(self, pdf: pd.DataFrame):
+        """(values, NULL mask or None, weights or None) of one Arrow batch."""
+        mask = None
+        if self.rule == "fn":
+            vals = np.asarray(self.value_fn(pdf), dtype="float64")
+        elif self.rule == "hash":
+            mask = pdf[self._m].to_numpy(dtype=bool)
+            vals = pdf[self._v].to_numpy(dtype="int64").view(np.uint64)
+        elif self.rule == "raw":
+            vals = pdf[self._v].to_numpy(dtype=object)
+            mask = pd.isna(vals)
+        else:  # NaN/NULL are dropped by the numeric families' update_batch
+            vals = pdf[self._v].to_numpy(dtype="float64", na_value=np.nan)
+        wts = (pdf[self._w].to_numpy(dtype="float64", na_value=np.nan)
+               if self.weight_col else None)
+        return vals, (mask if mask is not None and mask.any() else None), wts
+
+    def update(self, agg, vals, mask, wts, idx) -> None:
+        v = vals[idx]
+        if mask is not None:
+            v = v[~mask[idx]]
+        if self.rule == "hash":
+            agg.update_hashed(v)
+        elif wts is not None:
+            agg.update_batch(v, wts[idx])
+        else:
+            agg.update_batch(v)
+
+    def new(self, key: tuple = ()):
+        pbk = self.params_by_key
+        if pbk is None:
+            return self.cls(**self.params)
+        over = pbk.value if hasattr(pbk, "value") else pbk
+        return self.cls(**{**self.params, **over.get(key, {})})
+
+    def restore(self, blob: bytes | None):
+        """A sketch holding ``blob`` (a fresh one for None) — streaming state."""
+        return self.cls.merge_blobs(None, [blob], **self.params) if blob else self.new()
+
+    def blob(self, agg, merged: bool) -> bytes | None:
+        if agg is None:
+            return None
+        if merged:
+            agg.finish_merge()
+        out = agg.serialize()
+        if self.metrics is not None:
+            self.metrics.add_from(agg)
+        return out
+
+
+def _specs(specs: list[dict], keys: list[str]) -> list[_Spec]:
+    names = [s["name"] for s in specs]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate spec names: {names}")
+    if set(names) & set(keys):
+        raise ValueError(f"spec names {sorted(set(names) & set(keys))} are also keys")
+    return [_Spec(s, i) for i, s in enumerate(specs)]
+
+
+def _project(df: DataFrame, keys: list[str], specs: list[_Spec]) -> DataFrame:
+    """Narrow projection feeding the partial builder: keys plus each spec's
+    ingest columns, so parquet column pruning happens before Python."""
+    cols = dict.fromkeys(keys)
+    for s in specs:
+        for name, c in s.columns():
+            cols.setdefault(name, c.alias(name))
+    return df.select(*(c if c is not None else F.col(n) for n, c in cols.items()))
+
+
+def _schema(frame: DataFrame, keys: list[str], specs: list[_Spec]) -> StructType:
+    return StructType(
+        [StructField(k, frame.schema[k].dataType, True) for k in keys]
+        + [StructField(s.name, BinaryType(), True) for s in specs]
+    )
+
+
+def _emit(keys: list[str], specs: list[_Spec], table: dict, merged: bool) -> pd.DataFrame:
+    rows = {k: [key[i] for key in table] for i, k in enumerate(keys)}
+    for j, s in enumerate(specs):
+        rows[s.name] = [s.blob(aggs[j], merged) for aggs in table.values()]
+    return pd.DataFrame(rows, columns=keys + [s.name for s in specs])
+
+
+def _partial_builder(keys: list[str], specs: list[_Spec]):
+    """The per-partition partial loop over ``_project``ed Arrow batches."""
+
+    def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        table: dict[tuple, list] = {}
+        for pdf in batches:
+            cols = [s.values(pdf) for s in specs]
+            for key, idx in _groups(pdf, keys):
+                aggs = table.get(key)
+                if aggs is None:
+                    aggs = table[key] = [s.new(key) for s in specs]
+                for s, agg, (vals, mask, wts) in zip(specs, aggs, cols):
+                    s.update(agg, vals, mask, wts, idx)
+        if table:
+            yield _emit(keys, specs, table, merged=False)
+
+    return build
+
+
+def partials(df: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
+    """Phase 1: one row per (input partition × key), one binary column per
+    spec."""
+    from sketchlib.spark.shipping import ensure_on_workers
+
+    ensure_on_workers(df.sparkSession)
+    sp = _specs(specs, keys)
+    narrow = _project(df, keys, sp)
+    return narrow.mapInPandas(_partial_builder(keys, sp), schema=_schema(narrow, keys, sp))
+
+
+def merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
+    """Phase 2: merge the partial rows of each key (module docstring)."""
+    from sketchlib.spark.shipping import ensure_on_workers
+
+    ensure_on_workers(partials.sparkSession)
+    sp = _specs(specs, keys)
+    names = [s.name for s in sp]
+    schema = _schema(partials, keys, sp)
+
+    if all(s.kind in _LARGE_STATE for s in sp):
+
+        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+            aggs = []
+            for s in sp:
+                blobs = [bytes(b) for b in pdf[s.name] if b is not None]
+                aggs.append(s.cls.merge_blobs(None, blobs, **s.params) if blobs else None)
+            key = tuple(pdf[k].iloc[0] for k in keys)
+            return _emit(keys, sp, {key: aggs}, merged=True)
+
+        grouping = keys or [F.lit(1).alias("_g")]
+        return partials.groupBy(*grouping).applyInPandas(merge_group, schema=schema)
+
+    def merge_stream(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        table: dict[tuple, list] = {}
+        for pdf in batches:
+            cols = [pdf[n].to_numpy() for n in names]
+            for key, idx in _groups(pdf, keys):
+                aggs = table.get(key)
+                if aggs is None:
+                    aggs = table[key] = [None] * len(sp)
+                for j, s in enumerate(sp):
+                    blobs = [bytes(b) for b in cols[j][idx] if b is not None]
+                    if blobs:
+                        aggs[j] = s.cls.merge_blobs(aggs[j], blobs, **s.params)
+        if table:
+            yield _emit(keys, sp, table, merged=True)
+
+    shuffled = partials.repartition(*keys) if keys else partials.repartition(1)
+    return shuffled.mapInPandas(merge_stream, schema=schema)
+
+
+def tree_merge(partials: DataFrame, keys: list[str], specs: list[dict],
+               fanin: int = 64) -> DataFrame:
+    """``merge`` with every reducer's fan-in bounded by ``fanin``: salted
+    intermediate merge levels sized from the largest per-key partial count
+    (one aggregation over the small partials frame).  The salt is a hash of
+    the sketch bytes — uniform, reproducible, no RNG."""
+    cnt = partials.groupBy(*keys).count().agg(F.max("count")).collect()[0][0]
+    levels = max(0, math.ceil(math.log(max(int(cnt or 1), 1), fanin)) - 1)
+    blobs = [F.col(s["name"]) for s in specs]
+    n_salts = fanin ** levels
+    while n_salts > 1:
+        salt = F.pmod(F.xxhash64(*blobs), F.lit(n_salts)).cast("int")
+        partials = merge(partials.withColumn("_salt", salt), keys + ["_salt"],
+                         specs).drop("_salt")
+        n_salts //= fanin
+    return merge(partials, keys, specs)
+
+
+# ---------------------------------------------------------------------------
+# One-sketch wrappers: the spec is named "sketch"
+# ---------------------------------------------------------------------------
+
+
+def _sketch(sketch: str, params: dict | None, **kw) -> list[dict]:
+    return [{"name": "sketch", "kind": sketch, "params": params, **kw}]
 
 
 def sketch_partials(
@@ -52,86 +308,17 @@ def sketch_partials(
     params: dict | None = None,
     params_by_key=None,
 ) -> DataFrame:
-    """``params_by_key``: optional per-group constructor overrides — a dict
+    """Phase 1 for one sketch: keys + a ``sketch`` binary column.
+
+    ``params_by_key``: optional per-group constructor overrides — a dict
     (or ``sparkContext.broadcast`` of one, preferred when the key domain is
     large) mapping the normalized key tuple to a params patch, e.g.
     ``{("cnn.com",): {"expected_n": 48211}}``.  Lets each group's sketch be
     sized to ITS cardinality instead of the global row count — without it,
     S Bloom groups each carry m ≈ n_total·9.6 bits and the collected filter
     set is S× larger than needed (the 100-TB failure mode)."""
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(df.sparkSession)
-    cls = SKETCHES[sketch]
-    params = dict(params or {})
-    hashed = sketch in _HASHED
-    raw = sketch in _RAW
-    if hashed:
-        # NULL values are never ingested (SQL-aggregate semantics):
-        # Spark's xxhash64(NULL) returns the SEED (42), not NULL, so an
-        # unguarded projection would count every NULL as one phantom
-        # item.  The mask rides as a SEPARATE boolean column rather than
-        # a nullable hash column — a nullable int64 crosses Arrow→pandas
-        # as float64, which silently mangles the low bits of every hash
-        # in the batch.
-        narrow = df.select(
-            *keys,
-            F.xxhash64(value_col).alias("_v"),
-            F.col(value_col).isNull().alias("_vnull"),
-        )
-    elif raw:
-        narrow = df.select(*keys, F.col(value_col).cast("string").alias("_v"))
-    else:
-        narrow = df.select(*keys, F.col(value_col).cast("double").alias("_v"))
-    key_fields = [narrow.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("sketch", BinaryType(), True)]
-    )
-
-    def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        overrides = (
-            params_by_key.value
-            if hasattr(params_by_key, "value")
-            else (params_by_key or {})
-        )
-        aggs: dict[tuple, object] = {}
-        for pdf in batches:
-            mask = None  # True where the value is NULL (never ingested)
-            if hashed:
-                m = pdf["_vnull"].to_numpy(dtype=bool)
-                mask = m if m.any() else None
-                vals = pdf["_v"].to_numpy(dtype="int64").view(np.uint64)
-            elif raw:
-                vals = pdf["_v"].to_numpy(dtype=object)
-                m = pd.isna(vals)
-                mask = m if m.any() else None
-            else:
-                vals = pdf["_v"].to_numpy(dtype="float64", na_value=np.nan)
-            groups = (
-                pdf.groupby(keys, dropna=False, sort=False).indices.items()
-                if keys
-                else [((), np.arange(len(pdf)))]
-            )
-            for key, idx in groups:
-                key = _norm_key(key)
-                agg = aggs.get(key)
-                if agg is None:
-                    p = params if not overrides else {**params, **overrides.get(key, {})}
-                    agg = aggs[key] = cls(**p)
-                v = vals[idx]
-                if mask is not None:
-                    v = v[~mask[idx]]
-                if hashed:
-                    agg.update_hashed(v)
-                else:
-                    agg.update_batch(v)
-        if aggs:
-            rows = {name: [k[i] for k in aggs] for i, name in enumerate(keys)}
-            rows["sketch"] = [a.serialize() for a in aggs.values()]
-            yield pd.DataFrame(rows, columns=keys + ["sketch"])
-
-    return narrow.mapInPandas(build, schema=out_schema)
+    return partials(df, keys, _sketch(sketch, params, col=value_col,
+                                      params_by_key=params_by_key))
 
 
 def sketch_merge(
@@ -140,83 +327,9 @@ def sketch_merge(
     sketch: str,
     params: dict | None = None,
 ) -> DataFrame:
-    """Phase 2 for sibling sketches — the path depends on the sketch's
-    state size:
-
-    * ``_SMALL_STATE`` kinds (HLL/KMV/MG/KLL, ≤ tens of KB each) take
-      tdigest_merge's repartition+mapInPandas accumulator: ONE Python call
-      per Arrow batch instead of one per GROUP.  At rollup/cube key
-      cardinalities (thousands of (key × hour) groups of a handful of
-      partials each) the per-group ``applyInPandas`` overhead dominates the
-      actual merging by an order of magnitude.
-    * Bloom/CMS keep ``groupBy().applyInPandas`` (one group materialized at
-      a time): a dense Bloom bitmap is MBs, so holding every co-located
-      key's sketch in one partition dict would blow memory at high key
-      cardinality; streaming groups sequentially bounds peak memory at one
-      sketch per task."""
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(partials.sparkSession)
-    cls = SKETCHES[sketch]
-    params = dict(params or {})
-    key_fields = [partials.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("sketch", BinaryType(), True)]
-    )
-
-    if sketch in _SMALL_STATE:
-
-        def merge_stream(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            accs: dict[tuple, object] = {}
-            for pdf in batches:
-                blobs = pdf["sketch"].to_numpy()
-                groups = (
-                    pdf.groupby(keys, dropna=False, sort=False).indices.items()
-                    if keys
-                    else [((), np.arange(len(pdf)))]
-                )
-                for key, idx in groups:
-                    key = _norm_key(key)
-                    acc = accs.get(key)
-                    for b in blobs[idx]:
-                        if b is None:
-                            continue
-                        s = cls.deserialize(bytes(b), **params)
-                        acc = s if acc is None else acc.merge(s)
-                    accs[key] = acc  # None stays None → zero sketch at emit
-            if accs:
-                rows = {name: [k[i] for k in accs] for i, name in enumerate(keys)}
-                rows["sketch"] = [
-                    (a if a is not None else cls(**params)).serialize()
-                    for a in accs.values()
-                ]
-                yield pd.DataFrame(rows, columns=keys + ["sketch"])
-
-        shuffled = (
-            partials.repartition(*[F.col(k) for k in keys])
-            if keys
-            else partials.repartition(1)
-        )
-        return shuffled.mapInPandas(merge_stream, schema=out_schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        it = (bytes(b) for b in pdf["sketch"] if b is not None)
-        acc = None
-        for b in it:
-            s = cls.deserialize(b, **params)
-            acc = s if acc is None else acc.merge(s)
-        if acc is None:
-            acc = cls(**params)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out["sketch"] = [acc.serialize()]
-        return pd.DataFrame(out, columns=keys + ["sketch"])
-
-    if keys:
-        return partials.groupBy(*keys).applyInPandas(merge_group, schema=out_schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: merge_group(pdf), schema=out_schema
-    )
+    """Phase 2 for one sketch: the kernel ``merge`` over the ``sketch``
+    column (Bloom/CMS take the one-group-at-a-time path)."""
+    return merge(partials, keys, _sketch(sketch, params))
 
 
 def sketch_aggregate(
@@ -239,8 +352,6 @@ def mg_items_udf():
     ≤|distinct keys| sketch rows, never row-scale data."""
     from pyspark.sql.types import ArrayType, LongType, StringType
 
-    from sketchlib.mg import MisraGries
-
     schema = ArrayType(StructType([
         StructField("item", StringType(), True),
         StructField("est", LongType(), True),
@@ -260,205 +371,58 @@ def mg_items_udf():
     return f
 
 
-def mg_total_udf():
-    """binary(MG sketch) → long total ingested weight n (for the n/(m+1)
-    error bound)."""
-    from pyspark.sql.types import LongType
-
-    from sketchlib.mg import MisraGries
-
-    @F.pandas_udf(LongType())
-    def f(sk: pd.Series) -> pd.Series:
-        return pd.Series([
-            0 if b is None else MisraGries.deserialize(bytes(b)).n for b in sk
-        ])
-
-    return f
-
-
 # ---------------------------------------------------------------------------
-# One-pass multi-sketch profile
+# One-pass multi-sketch profile, long format (keys, sk_name, sketch)
 # ---------------------------------------------------------------------------
 
-#: kinds usable in profile specs: every registry sketch plus the t-digest
-#: (which lives outside SKETCHES because tdigest_ops has a specialized path)
-_PROFILE_KINDS = set(SKETCHES) | {"tdigest"}
 
-
-def _spec_proj(spec: dict, i: int):
-    """JVM-side typed projection for one profile spec (pre-hash / cast
-    happens in whole-stage codegen, exactly like the single-sketch path)."""
-    kind, col = spec["kind"], spec["col"]
-    alias = f"_v{i}"
-    if kind in _HASHED:
-        # xxhash64(NULL) = seed (42), not NULL: the null mask rides as a
-        # separate boolean column (a nullable int64 would cross
-        # Arrow→pandas as float64 and mangle hash low bits) so NULLs are
-        # never ingested
-        return [F.xxhash64(col).alias(alias),
-                F.col(col).isNull().alias(f"_m{i}")]
-    if kind in _RAW:
-        return [F.col(col).cast("string").alias(alias)]
-    return [F.col(col).cast("double").alias(alias)]  # kll, tdigest
-
-
-def _spec_new(spec: dict):
-    from sketchlib.tdigest.core import MergingDigest
-
-    params = dict(spec.get("params") or {})
-    if spec["kind"] == "tdigest":
-        return MergingDigest(**params)
-    return SKETCHES[spec["kind"]](**params)
-
-
-def _spec_vals(spec: dict, pdf: pd.DataFrame, i: int):
-    """(values, null_mask_or_None) — NULLs are never ingested (hashed/raw
-    kinds; the double kinds drop NaN inside update_batch)."""
-    series = pdf[f"_v{i}"]
-    if spec["kind"] in _HASHED:
-        m = pdf[f"_m{i}"].to_numpy(dtype=bool)
-        vals = series.to_numpy(dtype="int64").view(np.uint64)
-        return vals, (m if m.any() else None)
-    if spec["kind"] in _RAW:
-        vals = series.to_numpy(dtype=object)
-        m = pd.isna(vals)
-        return vals, (m if m.any() else None)
-    return series.to_numpy(dtype="float64", na_value=np.nan), None
+def _long(wide: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
+    """Wide kernel rows → one (keys, sk_name, sketch) row per non-NULL spec
+    column, in spec order: a projection, no shuffle."""
+    pairs = F.array(*[
+        F.struct(F.lit(s["name"]).alias("sk_name"), F.col(s["name"]).alias("sketch"))
+        for s in specs
+    ])
+    return (
+        wide.select(*keys, F.explode(pairs).alias("_p"))
+        .select(*keys, "_p.sk_name", "_p.sketch")
+        .where(F.col("sketch").isNotNull())
+    )
 
 
 def profile_partials(df: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
     """ONE scan builds partials for EVERY spec: the corpus-profile pattern.
 
-    ``specs``: list of ``{"name": str, "col": str, "kind": str, "params":
-    dict}`` where kind ∈ sketch registry ∪ {"tdigest"}.  A profile of S
-    sketch families over K keys costs 1 scan + (in ``profile_aggregate``)
-    1 shuffle of K·S KB-scale sketch rows — the single-sketch path costs
-    S scans + S shuffles.  At 100 TB the scan IS the job; this is the
-    difference between one pass over the corpus and six.
+    ``specs``: kernel specs (module docstring), e.g. ``{"name": str, "col":
+    str, "kind": str, "params": dict}``.  A profile of S sketch families
+    over K keys costs 1 scan + (in ``profile_aggregate``) 1 shuffle of
+    KB-scale sketch rows — the single-sketch path costs S scans + S
+    shuffles.  At 100 TB the scan IS the job; this is the difference
+    between one pass over the corpus and six.
 
     Output is LONG format: ``keys + (sk_name string, sketch binary)``, one
     row per (partition × key × spec); ``profile_pivot`` widens it.
-    Per-row ingest is the same vectorized batch path as the single-sketch
-    builders — no per-row Python.
     """
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(df.sparkSession)
-    names = [s["name"] for s in specs]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate spec names: {names}")
-    for s in specs:
-        if s["kind"] not in _PROFILE_KINDS:
-            raise ValueError(f"unknown sketch kind {s['kind']!r} in spec {s['name']!r}")
-    narrow = df.select(
-        *keys,
-        *(e for i, s in enumerate(specs) for e in _spec_proj(s, i)),
-    )
-    key_fields = [narrow.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("sk_name", StringType(), False),
-           StructField("sketch", BinaryType(), True)]
-    )
-
-    def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        aggs: dict[tuple, object] = {}  # (key..., spec_idx) -> sketch
-        for pdf in batches:
-            vals = [_spec_vals(s, pdf, i) for i, s in enumerate(specs)]
-            groups = (
-                pdf.groupby(keys, dropna=False, sort=False).indices.items()
-                if keys
-                else [((), np.arange(len(pdf)))]
-            )
-            for key, idx in groups:
-                key = _norm_key(key)
-                for i, s in enumerate(specs):
-                    agg = aggs.get(key + (i,))
-                    if agg is None:
-                        agg = aggs[key + (i,)] = _spec_new(s)
-                    v, m = vals[i]
-                    v = v[idx]
-                    if m is not None:
-                        v = v[~m[idx]]
-                    if s["kind"] in _HASHED:
-                        agg.update_hashed(v)
-                    else:
-                        agg.update_batch(v)
-        if aggs:
-            rows = {name: [k[j] for k in aggs] for j, name in enumerate(keys)}
-            rows["sk_name"] = [specs[k[-1]]["name"] for k in aggs]
-            rows["sketch"] = [a.serialize() for a in aggs.values()]
-            yield pd.DataFrame(rows, columns=keys + ["sk_name", "sketch"])
-
-    return narrow.mapInPandas(build, schema=out_schema)
+    return _long(partials(df, keys, specs), keys, specs)
 
 
 def profile_merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
-    """Phase 2: ONE repartition on the keys co-locates every spec's partials
-    for a key; a mapInPandas accumulator merges per (key, spec) — one Python
-    call per Arrow batch.  Holds (keys-per-partition × specs) sketches in
-    memory at once: size profile specs accordingly (KB-scale params; a dense
-    8 MB Bloom per spec belongs on the dedicated single-sketch path)."""
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    from sketchlib.tdigest.core import MergingDigest
-
-    ensure_on_workers(partials.sparkSession)
-    by_name = {s["name"]: s for s in specs}
-    key_fields = [partials.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("sk_name", StringType(), False),
-           StructField("sketch", BinaryType(), True)]
-    )
-
-    def merge_stream(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accs: dict[tuple, object] = {}  # (key..., name) -> sketch
-        for pdf in batches:
-            blobs = pdf["sketch"].to_numpy()
-            names_col = pdf["sk_name"].to_numpy()
-            groups = (
-                pdf.groupby(keys, dropna=False, sort=False).indices.items()
-                if keys
-                else [((), np.arange(len(pdf)))]
-            )
-            for key, idx in groups:
-                key = _norm_key(key)
-                for j in idx:
-                    b = blobs[j]
-                    if b is None:
-                        continue
-                    name = names_col[j]
-                    spec = by_name[name]
-                    params = dict(spec.get("params") or {})
-                    acc = accs.get(key + (name,))
-                    if spec["kind"] == "tdigest":
-                        if acc is None:
-                            acc = accs[key + (name,)] = MergingDigest(**params)
-                        acc.merge_bytes(bytes(b))
-                    else:
-                        s = SKETCHES[spec["kind"]].deserialize(bytes(b), **params)
-                        accs[key + (name,)] = s if acc is None else acc.merge(s)
-        if accs:
-            for k, a in accs.items():
-                if isinstance(a, MergingDigest):
-                    a.compress()
-            rows = {name: [k[j] for k in accs] for j, name in enumerate(keys)}
-            rows["sk_name"] = [k[-1] for k in accs]
-            rows["sketch"] = [a.serialize() for a in accs.values()]
-            yield pd.DataFrame(rows, columns=keys + ["sk_name", "sketch"])
-
-    shuffled = (
-        partials.repartition(*[F.col(k) for k in keys])
-        if keys
-        else partials.repartition(1)
-    )
-    return shuffled.mapInPandas(merge_stream, schema=out_schema)
+    """Phase 2 over long-format partials: each row's sketch moves into its
+    spec's column (a projection, no shuffle), the kernel merges, and the
+    result goes back to long format — one row per (key, spec) present in
+    the input.  The accumulator holds (keys-per-partition × specs) sketches
+    in memory at once: size profile specs accordingly (KB-scale params; a
+    dense 8 MB Bloom belongs on the single-sketch path)."""
+    wide = partials.select(*keys, *[
+        F.when(F.col("sk_name") == s["name"], F.col("sketch")).alias(s["name"])
+        for s in specs
+    ])
+    return _long(merge(wide, keys, specs), keys, specs)
 
 
 def profile_aggregate(df: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
     """One scan + one shuffle → merged sketches for every spec (long format)."""
-    return profile_merge(profile_partials(df, keys, specs), keys, specs)
+    return _long(merge(partials(df, keys, specs), keys, specs), keys, specs)
 
 
 def profile_pivot(profile: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
@@ -510,8 +474,6 @@ def profile_table(
     """
     from pyspark.sql.types import NumericType
 
-    from sketchlib.cms import CMS
-    from sketchlib.hll import HLL
     from sketchlib.spark.tdigest_ops import (
         tdigest_count_udf,
         tdigest_quantiles_udf,

@@ -35,11 +35,11 @@ the content hash, watermark-bounded state).
 from __future__ import annotations
 
 from datetime import timezone
-from typing import Callable, Iterable, Iterator
+from typing import Iterable, Iterator
 from zoneinfo import ZoneInfo
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
@@ -49,7 +49,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from sketchlib.tdigest.core import MergingDigest
+from sketchlib.spark.sketch_ops import _sketch
+from sketchlib.spark.tdigest_ops import _digest
 
 
 def _session_tz(df: DataFrame):
@@ -113,10 +114,7 @@ def _key_ts_out(dt, tz):
 def _stateful_windowed(
     stream: DataFrame,
     keys: list[str],
-    val_expr: Column,
-    restore: Callable[[bytes | None], object],
-    ingest: Callable[[object, pd.Series], None],
-    out_name: str,
+    spec: list[dict],
     ts_col: str,
     window: str,
     watermark: str,
@@ -141,12 +139,16 @@ def _stateful_windowed(
     ``mode='update'``: emit a snapshot row per touched window per trigger;
     on timeout just evict.  ``mode='append'``: emit nothing until the
     watermark passes window_end, then emit the finished sketch exactly once
-    and evict.  ``restore(blob_or_None)`` builds the aggregator (merging
-    prior state); ``ingest(agg, series)`` absorbs one Arrow batch's values.
+    and evict.  ``spec`` is a one-spec list of the sketch kernel
+    (``sketch_ops``): its family's ingest rule projects the value and absorbs each Arrow batch,
+    exactly as in the batch partials, and its name is the output column.
     """
     from sketchlib.spark.shipping import ensure_on_workers
+    from sketchlib.spark.sketch_ops import _specs
 
     ensure_on_workers(stream.sparkSession)
+    (sp,) = _specs(spec, keys)
+    out_name = sp.name
     tz = _session_tz(stream)
     keyed = (
         stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
@@ -156,7 +158,7 @@ def _stateful_windowed(
             *keys,
             F.col("_win.start").alias("window_start"),
             F.col("_win.end").alias("window_end"),
-            val_expr.alias("_v"),
+            *(c.alias(name) for name, c in sp.columns()),
             # the watermarked column must survive to the stateful operator
             # for EventTimeTimeout to be legal
             F.col(ts_col),
@@ -194,9 +196,9 @@ def _stateful_windowed(
             (b,) = state.get
             if b:
                 prev = bytes(b)
-        agg = restore(prev)
+        agg = sp.restore(prev)
         for pdf in pdfs:
-            ingest(agg, pdf["_v"])
+            sp.update(agg, *sp.values(pdf), slice(None))
         blob = agg.serialize()
         state.update((blob,))
         # (re)arm the timeout at window_end (epoch ms from the UTC-naive
@@ -215,19 +217,6 @@ def _stateful_windowed(
         outputMode=mode,
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-def _digest_hooks(delta: float, discrete: bool):
-    def restore(blob: bytes | None) -> MergingDigest:
-        d = MergingDigest(delta=delta, discrete=discrete)
-        if blob:
-            d.merge_bytes(blob)
-        return d
-
-    def ingest(d: MergingDigest, v: pd.Series) -> None:
-        d.update_batch(v.to_numpy(dtype="float64"))
-
-    return restore, ingest
 
 
 def streaming_tdigest(
@@ -249,11 +238,8 @@ def streaming_tdigest(
     merges apply unchanged.  ``slide`` makes the windows sliding ("p99 over
     the trailing hour, every 5 minutes") — see ``_stateful_windowed``.
     """
-    restore, ingest = _digest_hooks(delta, discrete)
-    return _stateful_windowed(
-        stream, keys, F.col(value_col).cast("double"), restore, ingest,
-        "digest", ts_col, window, watermark, mode="update", slide=slide,
-    )
+    return _stateful_windowed(stream, keys, _digest(delta, discrete, col=value_col),
+                              ts_col, window, watermark, mode="update", slide=slide)
 
 
 def streaming_tdigest_final(
@@ -278,11 +264,8 @@ def streaming_tdigest_final(
     crosses it — that call emits the finished digest and drops the state.
     Until then the function emits nothing.
     """
-    restore, ingest = _digest_hooks(delta, discrete)
-    return _stateful_windowed(
-        stream, keys, F.col(value_col).cast("double"), restore, ingest,
-        "digest", ts_col, window, watermark, mode="append", slide=slide,
-    )
+    return _stateful_windowed(stream, keys, _digest(delta, discrete, col=value_col),
+                              ts_col, window, watermark, mode="append", slide=slide)
 
 
 def streaming_exact_dedup(
@@ -549,38 +532,10 @@ def streaming_sketch(
     over a streaming DataFrame — ``streaming_tdigest`` generalized to the
     whole Aggregator family via the same skeleton.
 
-    Hashing stays JVM-side (``xxhash64`` projection for the hashed sketches,
-    exactly like the batch path in ``sketchlib.spark.sketch_ops``), so
-    stream- and batch-built sketches are interchangeable — byte-identical
-    for the order-insensitive sketches (HLL/CMS/Bloom/KMV).
+    Ingest is the batch kernel's (``sketchlib.spark.sketch_ops``): hashing
+    stays JVM-side and NULL values are never ingested, so stream- and
+    batch-built sketches are interchangeable — byte-identical for the
+    order-insensitive sketches (HLL/CMS/Bloom/KMV).
     """
-    import numpy as np
-
-    from sketchlib.spark.sketch_ops import _HASHED, _RAW, SKETCHES
-
-    cls = SKETCHES[sketch]
-    params = dict(params or {})
-    hashed = sketch in _HASHED
-    raw = sketch in _RAW  # mg: the sketch must report raw items back
-
-    def restore(blob: bytes | None):
-        return cls.deserialize(blob, **params) if blob else cls(**params)
-
-    def ingest(sk, v: pd.Series) -> None:
-        if hashed:
-            sk.update_hashed(v.to_numpy(dtype="int64").view(np.uint64))
-        elif raw:
-            sk.update_batch(v.to_numpy(dtype=object))
-        else:
-            sk.update_batch(v.to_numpy(dtype="float64"))
-
-    if hashed:
-        val = F.xxhash64(value_col)
-    elif raw:
-        val = F.col(value_col).cast("string")
-    else:
-        val = F.col(value_col).cast("double")
-    return _stateful_windowed(
-        stream, keys, val, restore, ingest,
-        "sketch", ts_col, window, watermark, mode="update", slide=slide,
-    )
+    return _stateful_windowed(stream, keys, _sketch(sketch, params, col=value_col),
+                              ts_col, window, watermark, mode="update", slide=slide)

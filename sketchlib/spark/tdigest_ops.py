@@ -11,11 +11,14 @@ explicit:
             one partial digest per (input partition × key).  Pure map side,
             no shuffle; the Arrow batches feed ``MergingDigest.update_batch``
             (vectorized numpy, no per-row Python).
-  phase 2 — ``tdigest_merge``: ``groupBy(keys).applyInPandas``; each group
-            merges its ≤ P partial digests by byte-concatenation (a concat of
-            serialized digests IS a valid digest) + one deterministic
-            compress.  Shuffle volume is P × |keys| × ≤40 KB — independent of
-            row count.
+  phase 2 — ``tdigest_merge``: ``repartition(keys)`` + one ``mapInPandas``
+            accumulator; each key's ≤ P partial digests merge by
+            byte-concatenation (a concat of serialized digests IS a valid
+            digest) + one deterministic compress.  Shuffle volume is
+            P × |keys| × ≤40 KB — independent of row count.
+
+Both phases are the one-spec case of the sketch kernel in
+``sketchlib.spark.sketch_ops`` (spec name ``digest``, kind ``tdigest``).
 
 Skew: the shuffle carries one small row per (partition, key), so a hot key
 costs its reducer P×40 KB, not its row share of 100 TB.  For extreme P,
@@ -43,6 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from sketchlib.spark.sketch_ops import _norm_key, merge, partials
 from sketchlib.tdigest.core import (
     MergingDigest,
     bytes_to_centroids,
@@ -53,10 +57,6 @@ from sketchlib.tdigest.core import (
     quantiles_of_centroids,
     wrap_tdigest_wire,
 )
-
-
-def _norm_key(key) -> tuple:
-    return key if isinstance(key, tuple) else (key,)
 
 
 class TDigestMetrics:
@@ -94,6 +94,11 @@ class TDigestMetrics:
         }
 
 
+def _digest(delta: float, discrete: bool, **kw) -> list[dict]:
+    return [{"name": "digest", "kind": "tdigest",
+             "params": {"delta": delta, "discrete": discrete}, **kw}]
+
+
 def tdigest_partials(
     df: DataFrame,
     keys: list[str],
@@ -107,63 +112,14 @@ def tdigest_partials(
 ) -> DataFrame:
     """Phase 1: one partial digest row per (input partition × key).
 
-    Narrow-projects first so parquet column pruning happens before the
-    Python stage.
-
     ``value_fn``: optional ``pd.DataFrame -> np.ndarray`` computing the
     values inside the same Python stage (reads ``input_cols``).  This fuses
     upstream vectorized work — e.g. html→text extraction — with sketch
     ingest in ONE JVM↔Python Arrow hop instead of two.
     """
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(df.sparkSession)
-    if value_fn is None:
-        cols = keys + [value_col] + ([weight_col] if weight_col else [])
-    else:
-        cols = keys + list(input_cols or []) + ([weight_col] if weight_col else [])
-    narrow = df.select(*cols)
-    key_fields = [narrow.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("digest", BinaryType(), True)]
-    )
-
-    def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        aggs: dict[tuple, MergingDigest] = {}
-        for pdf in batches:
-            if value_fn is not None:
-                vals = np.asarray(value_fn(pdf), dtype="float64")
-            else:
-                vals = pdf[value_col].to_numpy(dtype="float64", na_value=np.nan)
-            wts = (
-                pdf[weight_col].to_numpy(dtype="float64", na_value=np.nan)
-                if weight_col
-                else None
-            )
-            if keys:
-                for key, idx in pdf.groupby(keys, dropna=False, sort=False).indices.items():
-                    key = _norm_key(key)
-                    agg = aggs.get(key)
-                    if agg is None:
-                        agg = aggs[key] = MergingDigest(delta=delta, discrete=discrete)
-                    agg.update_batch(vals[idx], wts[idx] if wts is not None else None)
-            else:
-                agg = aggs.get(())
-                if agg is None:
-                    agg = aggs[()] = MergingDigest(delta=delta, discrete=discrete)
-                agg.update_batch(vals, wts)
-        if aggs:
-            rows = {
-                name: [k[i] for k in aggs] for i, name in enumerate(keys)
-            }
-            rows["digest"] = [a.serialize() for a in aggs.values()]
-            if metrics is not None:
-                for a in aggs.values():
-                    metrics.add_from(a)
-            yield pd.DataFrame(rows, columns=keys + ["digest"])
-
-    return narrow.mapInPandas(build, schema=out_schema)
+    return partials(df, keys, _digest(
+        delta, discrete, col=value_col, weight_col=weight_col,
+        value_fn=value_fn, input_cols=input_cols, metrics=metrics))
 
 
 def tdigest_merge(
@@ -171,63 +127,13 @@ def tdigest_merge(
     keys: list[str],
     delta: float = 0.01,
     discrete: bool = False,
-    compress: bool = True,
-    digest_col: str = "digest",
     metrics: TDigestMetrics | None = None,
 ) -> DataFrame:
-    """Phase 2: merge partial digests per key (byte-concat union + one
-    deterministic compress).  Empty-digest partials are the monoid identity.
-
-    Plan: ``repartition(keys)`` (the one Exchange — hash co-location of each
-    key) then ONE ``mapInPandas`` that merges every key group inside the
-    partition.  Semantically identical to ``groupBy.applyInPandas`` (concat
-    order never matters: the payload union sorts/sums by mean), but pays one
-    Python call per Arrow batch instead of one per GROUP — the difference
-    between 150 and 10^6 keys per partition at rollup/cube cardinalities.
-    A key's rows can span Arrow batches, so results accumulate in a
-    per-partition dict and emit once at end-of-partition, exactly like the
-    phase-1 builder."""
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(partials.sparkSession)
-    key_fields = [partials.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("digest", BinaryType(), True)]
-    )
-
-    def merge_partition(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, MergingDigest] = {}
-        for pdf in batches:
-            blobs = pdf[digest_col].to_numpy()
-            if keys:
-                groups = pdf.groupby(keys, dropna=False, sort=False).indices.items()
-            else:
-                groups = [((), np.arange(len(pdf)))]
-            for key, idx in groups:
-                key = _norm_key(key)
-                d = acc.get(key)
-                if d is None:
-                    d = acc[key] = MergingDigest(delta=delta, discrete=discrete)
-                blob = b"".join(bytes(b) for b in blobs[idx] if b is not None)
-                if blob:
-                    d.merge_bytes(blob)
-        if acc:
-            if compress:
-                for d in acc.values():
-                    d.compress()
-            rows = {name: [k[i] for k in acc] for i, name in enumerate(keys)}
-            rows["digest"] = [d.serialize() for d in acc.values()]
-            if metrics is not None:
-                for d in acc.values():
-                    metrics.add_from(d)
-            yield pd.DataFrame(rows, columns=keys + ["digest"])
-
-    if keys:
-        shuffled = partials.repartition(*[F.col(k) for k in keys])
-    else:
-        shuffled = partials.repartition(1)
-    return shuffled.mapInPandas(merge_partition, schema=out_schema)
+    """Phase 2: merge partial digests per key — byte-concat union + one
+    deterministic compress per key (``MergingDigest.merge_blobs``).  Empty
+    digests are the monoid identity; concat order never matters, since the
+    payload union sorts and sums by mean."""
+    return merge(partials, keys, _digest(delta, discrete, metrics=metrics))
 
 
 def tdigest_aggregate(
@@ -237,14 +143,12 @@ def tdigest_aggregate(
     delta: float = 0.01,
     discrete: bool = False,
     weight_col: str | None = None,
-    compress: bool = True,
     metrics: TDigestMetrics | None = None,
 ) -> DataFrame:
     """The full two-phase plan: keys + a final ``digest`` binary column."""
-    partials = tdigest_partials(df, keys, value_col, delta, discrete, weight_col,
-                                metrics=metrics)
-    return tdigest_merge(partials, keys, delta, discrete, compress,
-                         metrics=metrics)
+    spec = _digest(delta, discrete, col=value_col, weight_col=weight_col,
+                   metrics=metrics)
+    return merge(partials(df, keys, spec), keys, spec)
 
 
 # ---------------------------------------------------------------------------

@@ -42,10 +42,12 @@ from __future__ import annotations
 
 import math
 import struct as _struct
-from bisect import bisect_right, insort
+from bisect import bisect_right
 from typing import Iterable, Sequence
 
 import numpy as np
+
+from sketchlib.aggregator import Aggregator
 
 DEFAULT_DELTA = 0.01
 DEFAULT_K = 25.0
@@ -885,7 +887,7 @@ class TDigest:
 # ---------------------------------------------------------------------------
 
 
-class MergingDigest:
+class MergingDigest(Aggregator):
     """Vectorized t-digest for Arrow-batch aggregation on Spark.
 
     Ingest: numpy batches are buffered; when the buffer exceeds
@@ -937,6 +939,13 @@ class MergingDigest:
         self.auto_compress_count = 0
 
     # -- Aggregator interface -------------------------------------------------
+
+    @classmethod
+    def zero(cls, **params) -> "MergingDigest":
+        return cls(**params)
+
+    def finish(self) -> "MergingDigest":
+        return self.compress()
 
     def update_batch(self, values: np.ndarray, weights: np.ndarray | None = None) -> None:
         v = np.asarray(values, dtype=np.float64)
@@ -999,6 +1008,18 @@ class MergingDigest:
             [(self._means, self._ns), bytes_to_centroids(data)]
         )
         return self
+
+    @classmethod
+    def merge_blobs(cls, acc, blobs, **params) -> "MergingDigest":
+        """Merge-phase fast path: a concatenation of serialized digests is
+        itself a valid digest, so a key's blobs from one Arrow batch cost
+        one ``merge_bytes`` call; ``finish_merge`` compresses once."""
+        acc = cls(**params) if acc is None else acc
+        blob = b"".join(blobs)
+        return acc.merge_bytes(blob) if blob else acc
+
+    def finish_merge(self) -> "MergingDigest":
+        return self.compress()
 
     def compress(self, delta: float | None = None) -> "MergingDigest":
         """Deterministic final compression (idempotent for a fixed multiset)."""

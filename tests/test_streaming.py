@@ -340,6 +340,44 @@ def test_streaming_sibling_sketches_match_batch(spark, tmp_path):
         assert abs(rank - 0.5) < 0.05, (k, est, rank)
 
 
+def test_streaming_hll_skips_nulls_like_batch(spark, tmp_path):
+    """streaming_sketch ingests through the batch kernel's NULL mask: an HLL
+    over a stream with NULL values is byte-identical to sketch_aggregate
+    over the same rows (xxhash64(NULL) is 42, never NULL, so an unmasked
+    projection would count one phantom item per window)."""
+    from pyspark.sql import functions as F
+
+    from sketchlib.spark.sketch_ops import sketch_aggregate
+    from sketchlib.spark.streaming import streaming_sketch
+
+    src = str(tmp_path / "nulls")
+    os.makedirs(src)
+    for p in _write_chunks(src, n_files=2, rows_per=300):
+        pdf = pd.read_parquet(p)
+        pdf.loc[pdf.index % 4 == 0, "n_chars"] = None
+        pdf.to_parquet(p)
+    static = spark.read.parquet(src)
+    assert static.where(F.col("n_chars").isNull()).count() > 0
+    stream = spark.readStream.schema(static.schema).option(
+        "maxFilesPerTrigger", "1").parquet(src)
+    out = streaming_sketch(stream, ["lang"], "n_chars", "hll", {"p": 12},
+                           ts_col="warc_ts", window="1 hour", watermark="10 hours")
+    latest = {}
+    q = out.writeStream.outputMode("update").foreachBatch(
+        lambda bdf, _id: latest.update(
+            {(r["lang"], r["window_start"]): bytes(r["sketch"])
+             for r in bdf.collect()})
+    ).start()
+    q.processAllAvailable()
+    q.stop()
+    batch = static.withColumn("_w", F.window("warc_ts", "1 hour")).select(
+        "lang", F.col("_w.start").alias("window_start"), "n_chars")
+    ref = {(r["lang"], r["window_start"]): bytes(r["sketch"])
+           for r in sketch_aggregate(batch, ["lang", "window_start"], "n_chars",
+                                     "hll", {"p": 12}).collect()}
+    assert latest == ref
+
+
 def test_streaming_exact_dedup_first_wins(spark, tmp_path):
     """streaming_exact_dedup: across triggers, exactly one row survives per
     distinct text (Spark's native stateful dedup), and the surviving set of

@@ -4,6 +4,8 @@ Checks, per key operator (at sf0.01, plans only — nothing executes):
 - column pruning reaches the parquet scan (ReadSchema contains only the
   narrow columns, never `text`/`html` when the op doesn't need them);
 - predicate pushdown shows up as PushedFilters;
+- every wrapper of the two-phase sketch kernel (t-digest, sibling sketch,
+  one-spec profile) plans exactly one Exchange;
 - the lang-ID profile join and the resume anti-join are BroadcastHashJoins;
 - whole-stage codegen covers the JVM-side ops (textops/dedup have no
   Python stage before the final aggregation).
@@ -62,12 +64,20 @@ def main():
     )
     check("filter pushdown to parquet", p, must=[r"PushedFilters: \[[^\]]*EqualTo\(lang,en\)"])
 
-    # 3. full two-phase agg: exactly ONE exchange (the digest-row shuffle)
-    p = plan_of(tdigest_aggregate(docs, ["lang"], "n_chars", 0.01))
-    n_exch = len(re.findall(r"\(\d+\) Exchange", p))
-    print(f"{'two-phase agg shuffle count':40s} {'OK' if n_exch == 1 else 'FAIL'} ({n_exch})")
-    if n_exch != 1:
-        FAIL.append(f"two-phase agg: {n_exch} shuffles, want 1")
+    # 3. full two-phase agg: exactly ONE exchange (the sketch-row shuffle)
+    # for every wrapper of the sketch kernel
+    from sketchlib.spark.sketch_ops import profile_aggregate, sketch_aggregate
+
+    for name, df in [
+        ("tdigest_aggregate", tdigest_aggregate(docs, ["lang"], "n_chars", 0.01)),
+        ("sketch_aggregate hll", sketch_aggregate(docs, ["lang"], "source", "hll")),
+        ("one-spec profile_aggregate", profile_aggregate(docs, ["lang"], [
+            {"name": "td", "col": "n_chars", "kind": "tdigest", "params": {}}])),
+    ]:
+        n_exch = len(re.findall(r"\(\d+\) Exchange", plan_of(df)))
+        print(f"{name + ' shuffle count':40s} {'OK' if n_exch == 1 else 'FAIL'} ({n_exch})")
+        if n_exch != 1:
+            FAIL.append(f"{name}: {n_exch} shuffles, want 1")
 
     # 4. lang-ID: profile join is broadcast, tokens never shuffle with text
     from sketchlib.spark.textops import lang_id_confusion
