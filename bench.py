@@ -789,8 +789,10 @@ input_hint).  Warm reps, best-of per level, separate JVMs per level.
 - **e2e** — the north-star pipeline: html -> extracted text -> t-digest
   (delta=0.01) of text length per lang, extraction *fused into the partials
   stage* (one JVM->Python Arrow hop) via the length-only projection pushdown
-  (`extract_len_series`: bytes-native, skips the utf-8 decode and the final
-  join — guarded exact vs `len(extract_one(...))`).
+  (`extract_len_series`: bytes-native, never decodes the html or builds the
+  text or its tokens — after the tag pass a 256-byte `translate` table marks
+  whitespace and the length is counted from it; guarded exact vs
+  `len(extract_one(...))`).
 - **scan** — digest build over the pre-extracted `text` column with
   `length()` computed JVM-side (parquet-scan-dominated).
 

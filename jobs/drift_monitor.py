@@ -25,11 +25,12 @@ PSI and Jensen-Shannon divergence on the baseline side's decile grid
 ``--psi-threshold`` adds PSI to the drift gate — 0.1/0.25 are the
 conventional watch/act cutoffs), left/right values at the requested
 quantiles with their absolute deltas, ingested counts on both sides, and
-a ``drifted`` verdict (KS above the threshold, PSI above its threshold
-when one is set, or the key present on only one side).  Everything is computed
-from the KB-scale sketch rows — the fact tables the digests summarize are
-NEVER rescanned, which is the point: at 100 TB this job costs seconds and
-can run after every ingest batch.
+a ``drifted`` verdict (KS above the threshold, PSI or the 1-Wasserstein
+distance W1 above its threshold when one is set, or the key present on
+only one side; timeline mode gates its ``*_prev`` columns the same way).
+Everything is computed from the KB-scale sketch rows — the fact tables the
+digests summarize are NEVER rescanned, which is the point: at 100 TB this
+job costs seconds and can run after every ingest batch.
 
 Exit status is 0 when no key drifted and 2 otherwise, so the job slots
 directly into an alerting scheduler; the JSON metrics line on stdout
@@ -62,11 +63,11 @@ def main() -> int:
     ap.add_argument("--quantiles", default="0.5,0.95,0.99")
     ap.add_argument("--ks-threshold", type=float, default=0.1)
     ap.add_argument("--psi-threshold", type=float, default=0.0,
-                    help="pair mode: also flag drift when PSI exceeds this "
+                    help="also flag drift when PSI exceeds this "
                          "(0.1 watch / 0.25 act by convention); 0 = report "
                          "PSI/JSD but gate on KS only")
     ap.add_argument("--w1-threshold", type=float, default=0.0,
-                    help="pair mode: also flag drift when the 1-Wasserstein "
+                    help="also flag drift when the 1-Wasserstein "
                          "distance exceeds this many VALUE units (e.g. a "
                          "mean shift of that size); 0 = report w1 but do "
                          "not gate on it")
@@ -98,14 +99,17 @@ def main() -> int:
     if args.timeline:
         # timeline mode: one stored per-epoch digest table -> per (key,
         # epoch) trend rows (n, quantiles, deltas, KS vs previous stored
-        # epoch); drifted = ks_prev above threshold.  First epoch per key
-        # has nothing to compare against -> not drift.
+        # epoch); drifted = ks_prev (or psi_prev / w1_prev, when their
+        # thresholds are set) above threshold.  First epoch per key has
+        # nothing to compare against -> not drift.
         from sketchlib.spark.tdigest_ops import digest_timeline
 
         digs = spark.read.parquet(args.timeline)
         ks_gate = F.col("ks_prev") > F.lit(args.ks_threshold)
         gate = (ks_gate | (F.col("psi_prev") > F.lit(args.psi_threshold))
                 if args.psi_threshold > 0 else ks_gate)
+        if args.w1_threshold > 0:
+            gate = gate | (F.col("w1_prev") > F.lit(args.w1_threshold))
         report = digest_timeline(
             digs, keys, args.epoch_col, ps=ps, discrete=args.discrete,
             ma_window=args.ma_window, psi_jsd=True, w1=True,
@@ -119,6 +123,7 @@ def main() -> int:
             F.max("ks_prev").alias("max_ks"),
             F.max("psi_prev").alias("max_psi"),
             F.max("jsd_prev").alias("max_jsd"),
+            F.max("w1_prev").alias("max_w1"),
         ).collect()[0]
         print(json.dumps({
             "mode": "timeline",
@@ -128,8 +133,10 @@ def main() -> int:
             "max_ks": agg["max_ks"],
             "max_psi": agg["max_psi"],
             "max_jsd": agg["max_jsd"],
+            "max_w1": agg["max_w1"],
             "ks_threshold": args.ks_threshold,
             "psi_threshold": args.psi_threshold,
+            "w1_threshold": args.w1_threshold,
             "output": args.output,
         }))
         drifted = int(agg["n_drifted"] or 0)
@@ -188,7 +195,7 @@ def main() -> int:
     ).withColumn(
         "drifted",
         # a key that appeared or disappeared IS drift; otherwise gate on
-        # KS (and PSI when a threshold is set)
+        # KS (and PSI / W1 when their thresholds are set)
         F.when(F.col("count_left").isNull() | F.col("count_right").isNull(),
                F.lit(True))
         .otherwise(gate),

@@ -17,6 +17,8 @@ construction.
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pandas as pd
 
@@ -270,26 +272,28 @@ def poly_window_fold(values, offsets, n: int, lens=None, min_one=None):
     return out, woffs
 
 
-#: per-process reusable scratch buffers for ``_poly_all_window_sums``,
+#: per-thread reusable scratch buffers for ``_poly_all_window_sums``,
 #: keyed by role (block size / "acc" / "tmp"), grown to the largest batch
-#: seen and then reused.  Spark Python workers are single-threaded per
-#: process, so a module-level cache is safe there; the kernel is NOT
-#: thread-safe across concurrent calls in one process (no Spark path does
-#: that).  Rationale (BENCH/poly_buffer_reuse.json): the doubling kernel's
-#: fresh temporaries are ~6 buffers x batch-bytes per call, and at high
-#: worker counts the page-fault/zeroing rate is the bottleneck the r04
-#: malloc tuning already flagged — reusing warm buffers measured 1.4x per
-#: call at 8 workers and 1.9-2.9x at 32 (mean-of-best / mean-of-median,
-#: interleaved A/B, 4M tokens, n=8).  Memory cost: a few
-#: largest-batch-sized uint64 arrays per worker, bounded by Arrow batch
-#: size.
-_POLY_SCRATCH: dict = {}
+#: seen and then reused.  Thread-local so concurrent callers in one
+#: process (direct library users; Spark Python workers are
+#: single-threaded) never share a buffer.  Rationale
+#: (BENCH/poly_buffer_reuse.json): the doubling kernel's fresh temporaries
+#: are ~6 buffers x batch-bytes per call, and at high worker counts the
+#: page-fault/zeroing rate is the bottleneck the r04 malloc tuning already
+#: flagged — reusing warm buffers measured 1.4x per call at 8 workers and
+#: 1.9-2.9x at 32 (mean-of-best / mean-of-median, interleaved A/B, 4M
+#: tokens, n=8).  Memory cost: a few largest-batch-sized uint64 arrays per
+#: thread, bounded by Arrow batch size.
+_POLY_SCRATCH = threading.local()
 
 
 def _poly_scratch(key, n: int) -> np.ndarray:
-    a = _POLY_SCRATCH.get(key)
+    bufs = getattr(_POLY_SCRATCH, "bufs", None)
+    if bufs is None:
+        bufs = _POLY_SCRATCH.bufs = {}
+    a = bufs.get(key)
     if a is None or len(a) < n:
-        a = _POLY_SCRATCH[key] = np.empty(n, dtype=np.uint64)
+        a = bufs[key] = np.empty(n, dtype=np.uint64)
     return a[:n]
 
 
@@ -299,8 +303,9 @@ def _poly_all_window_sums(vals: np.ndarray, n: int) -> np.ndarray:
     power-of-two sizes, then one shifted combine per set bit of ``n``):
     O(log n) vectorized passes over the buffer, no gathers.  All
     intermediates live in ``_POLY_SCRATCH`` (see note there): the returned
-    array ALIASES scratch and is only valid until the next call — callers
-    must copy or consume it immediately (``poly_window_fold`` does)."""
+    array ALIASES this thread's scratch and is only valid until the
+    thread's next call — callers must copy or consume it immediately
+    (``poly_window_fold`` does)."""
     with np.errstate(over="ignore"):
         blocks = {1: vals}
         p_pow = {1: _GOLDEN}  # P**size per block size

@@ -185,6 +185,55 @@ def test_drift_monitor_timeline_mode(spark, tmp_path, monkeypatch):
     assert rep["n_drifted"] == 1
 
 
+def test_drift_monitor_timeline_w1_gate(spark, tmp_path, monkeypatch):
+    """--w1-threshold gates timeline mode on w1_prev the way
+    --psi-threshold gates it on psi_prev: a planted +40-char shift of one
+    lang at epoch 1 stays under a loose KS threshold, so only the W1 gate
+    flags it; without --w1-threshold the same table reports no drift."""
+    sys.path.insert(0, "jobs")
+    import drift_monitor as job
+
+    from sketchlib.spark.tdigest_ops import tdigest_aggregate
+
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    capture = []
+    monkeypatch.setattr("builtins.print", lambda s: capture.append(s))
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    langs = sorted(r["lang"] for r in docs.select("lang").distinct().collect())
+    hot = langs[0]
+    v = F.length("text").cast("double")
+    e0 = docs.withColumn("v", v).withColumn("epoch", F.lit(0))
+    e1 = docs.withColumn(
+        "v", F.when(F.col("lang") == hot, v + 40.0).otherwise(v)
+    ).withColumn("epoch", F.lit(1))
+    digs = str(tmp_path / "epoch_digests")
+    tdigest_aggregate(
+        e0.unionByName(e1), ["lang", "epoch"], "v", discrete=True
+    ).write.mode("overwrite").parquet(digs)
+
+    argv = ["--timeline", digs, "--epoch-col", "epoch", "--key-cols",
+            "lang", "--discrete", "--ks-threshold", "0.99"]
+    rc = _run(monkeypatch, job, argv + [
+        "--output", str(tmp_path / "rep_ks")], capture)
+    rep = json.loads(capture[-1])
+    assert rc == 0 and rep["n_drifted"] == 0
+    assert rep["w1_threshold"] == 0.0
+    # a uniform shift moves every unit of mass by exactly 40
+    assert rep["max_w1"] == pytest.approx(40.0, rel=0.05)
+
+    out = str(tmp_path / "rep_w1")
+    rc = _run(monkeypatch, job, argv + [
+        "--w1-threshold", "20", "--output", out], capture)
+    rep = json.loads(capture[-1])
+    assert rc == 2 and rep["n_drifted"] == 1 and rep["w1_threshold"] == 20.0
+    rows = {(r["lang"], r["epoch"]): r
+            for r in spark.read.parquet(out).collect()}
+    assert rows[(hot, 1)]["drifted"] and rows[(hot, 1)]["ks_prev"] <= 0.99
+    assert all(not rows[(lg, 1)]["drifted"] and rows[(lg, 1)]["w1_prev"] == 0.0
+               for lg in langs if lg != hot)
+
+
 def test_digest_timeline_moving_average(spark):
     """ma_window=k smooths each quantile over the trailing k STORED epochs
     (warm-up epochs average what exists so far)."""

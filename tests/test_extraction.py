@@ -6,6 +6,7 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from sketchlib.data.extract import extract_one, extract_series
 from sketchlib.data.gen_pages import gen_chunk, write_pages
@@ -99,3 +100,43 @@ def test_extract_len_path_identical():
     for _ in range(500):
         d = "".join(random.choices(frag, k=random.randint(0, 10))).encode("utf-8")
         assert extract_len_one(d) == len(extract_one(d)), repr(d)
+
+
+# HTML fragments that stress every branch of the token-free length count:
+# all six bytes.split() whitespace bytes (\x0b and \x0c included), tags next
+# to whitespace, unclosed "<" / "<script", mixed-case, nested and
+# interleaved spans (the script pass must run before the style pass), the
+# \x1c-\x1f controls str.split() also splits on, and non-ASCII (\x85 and
+# \xa0 are Unicode whitespace, "ö" and "€" are not)
+_FRAGMENTS = [
+    " ", "\t", "\n", "\r", "\x0b", "\x0c", "  \t\n ", "a", "word", "x y",
+    "<p>", "</p>", " <p> ", "<br/>", "<", ">", "a<b", "c>d", "<p \t\n>",
+    "<script>", "</script>", "<script>no close", "<ScRiPt>v=1</sCrIpT>",
+    "<STYLE>.a{}</STYLE>", "<style>", "</style>",
+    "<script><style>x</style>y</script>", "<style><script>z</script></style>",
+    "<script>a<style>b</script>c</style>",
+    "\x1c", "\x1d", "\x1e", "\x1f", "\x85", "\xa0", "ö", "€",
+]
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.sampled_from(_FRAGMENTS), max_size=14))
+def test_extract_len_one_matches_extract_one(parts):
+    from sketchlib.data.extract import extract_len_one
+
+    d = "".join(parts).encode("utf-8")
+    assert extract_len_one(d) == len(extract_one(d))
+
+
+@settings(max_examples=50, deadline=None)
+@given(st.lists(st.lists(st.sampled_from(_FRAGMENTS), max_size=10), max_size=8))
+def test_extract_len_series_accepts_bytes_bytearray_str(docs):
+    from sketchlib.data.extract import extract_len_one, extract_len_series
+
+    strs = ["".join(p) for p in docs]
+    raw = [s.encode("utf-8") for s in strs]
+    want = np.array([extract_len_one(b) for b in raw], dtype=np.float64)
+    for col in (raw, [bytearray(b) for b in raw], strs):
+        got = extract_len_series(pd.Series(col, dtype=object))
+        assert got.dtype == np.float64
+        np.testing.assert_array_equal(got, want)

@@ -173,3 +173,45 @@ def test_poly_window_fold_excludes_cross_doc_and_null_ranges():
     gv2, go2 = poly_window_fold(flat, np.array([10, 20, 30]), 4)
     ev2, eo2 = _brute_poly([flat[10:20].tolist(), flat[20:].tolist()], 4)
     assert list(go2) == list(eo2) and (gv2 == ev2).all()
+
+
+def test_poly_window_fold_concurrent_threads_match_single_threaded():
+    """The kernel's reusable scratch buffers are per thread: threads
+    folding different inputs at the same time get exactly the results of
+    single-threaded calls (a shared buffer interleaves their hashes)."""
+    import sys
+    import threading
+
+    rng = np.random.default_rng(3)
+    inputs = []
+    for k in range(6):  # more threads than cores, each input its own size
+        lens = rng.integers(0, 80, size=1000 + 150 * k)
+        flat = rng.integers(0, 2**64, size=int(lens.sum()), dtype=np.uint64)
+        offs = np.concatenate([[0], np.cumsum(lens)])
+        inputs.append((flat, offs, 5 + k % 4))
+    expected = [poly_window_fold(*args)[0].copy() for args in inputs]
+    start = threading.Barrier(len(inputs))
+    calls = [0] * len(inputs)
+    mismatches = [0] * len(inputs)
+
+    def run(i):
+        start.wait(timeout=60)
+        for _ in range(25):
+            got, _ = poly_window_fold(*inputs[i])
+            mismatches[i] += not np.array_equal(got, expected[i])
+            calls[i] += 1
+
+    threads = [threading.Thread(target=run, args=(i,))
+               for i in range(len(inputs))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert calls == [25] * len(inputs)
+    assert mismatches == [0] * len(inputs)

@@ -1,6 +1,6 @@
 """Extraction-kernel allocation-scaling probe (BENCH/BASELINE.md evidence).
 
-Measures aggregate docs/sec of six extraction-kernel variants across a
+Measures aggregate docs/sec of seven extraction-kernel variants across a
 process pool at 1/8/32 workers, on the same deterministic 20k-page chunk
 per worker.  This is the experiment behind round 4's kernel choice:
 
@@ -9,8 +9,9 @@ per worker.  This is the experiment behind round 4's kernel choice:
   C  batch-blob, 4 subs  (as B + blob-level whitespace collapse)
   D  per-doc len, finditer (bytes, Python-level match iteration)
   E  per-doc len, str    (decode + subs + split, sum of token lens)
-  F  per-doc len, bytes  (no decode, no join — the r04 shipped kernel,
-                          `sketchlib.data.extract.extract_len_series`)
+  F  per-doc len, bytes  (no decode, no join — the r04 shipped kernel)
+  G  per-doc len, counted (no tokens: translate + counts, the current
+                          `sketchlib.data.extract.extract_len_one`)
 
 Findings on this single-kernel VM (best-of-2, 2026-08-18):
   A: 72k/448k/1154k docs/s  -> eff(8->32) 0.64
@@ -19,6 +20,7 @@ Findings on this single-kernel VM (best-of-2, 2026-08-18):
   D: 26k/152k/ 443k         -> 0.73  (scales, but finditer is 3x/core)
   E: 69k/405k/1389k         -> 0.86
   F: 68k/474k/1609k         -> 0.85, 1.39x A at 32 workers  <- shipped
+  (G postdates these findings; it replaced F.)
 
 Conclusion: per-doc KB-sized allocation COUNT is the 8->32 scaling lever;
 batch-concatenation (fewer, bigger allocations) makes it worse.
@@ -136,6 +138,14 @@ def var_f(_):
     return time.time() - t0
 
 
+def var_g(_):
+    from sketchlib.data.extract import extract_len_one
+
+    t0 = time.time()
+    out = [extract_len_one(b) for b in _DOCS]
+    return time.time() - t0
+
+
 VARIANTS = {
     "A_perdoc_fulltext": var_a,
     "B_blob_3subs": var_b,
@@ -143,6 +153,7 @@ VARIANTS = {
     "D_len_finditer": var_d,
     "E_len_str": var_e,
     "F_len_bytes": var_f,
+    "G_len_counted": var_g,
 }
 
 
