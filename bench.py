@@ -2,15 +2,21 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+The same record with every rep goes to BENCH/headline_full.json.
 
-Extra modes (north rule: two-cluster-size scaling evidence — N vs 4N cores
+One more mode (north rule: two-cluster-size scaling evidence — N vs 4N cores
 on the same input; primary pair local[2] vs local[8], with local[32] also
-measured and its flatline diagnosed in BENCH/BASELINE.md):
+measured; the numbers are read in BENCH/BASELINE.md):
 
-  python bench.py --scaling            # generate pages input, interleaved
-                                       # rounds at local[2]/[8]/[32], write
-                                       # BENCH/BASELINE.md + scaling.json
+  python bench.py --scaling            # generate the pages input
+                                       # ($SKETCHLIB_BENCH_ROWS rows under
+                                       # $SKETCHLIB_BENCH_DIR), interleaved
+                                       # rounds at local[2]/[8]/[32]; prints
+                                       # and overwrites BENCH/scaling.json
   python bench.py --measure-build CPUS PATH [REPS]   # internal: one JVM
+
+The per-family kernel, scan, Arrow-hop and shuffle layers are measured by
+perfbench/ (see perfbench/README.md), not here.
 """
 
 from __future__ import annotations
@@ -37,7 +43,7 @@ def _sf_of(path: str) -> float:
 
 
 def run_queries(
-    spark, sf_dir: str, reps: int | None = None
+    spark, sf_dir: str, reps: int = 2
 ) -> tuple[dict[str, float], dict[str, list[float]], int]:
     """Interleaved best-of query timing (same methodology as --scaling):
     the host shows noisy-neighbor drift over tens of minutes, so a single
@@ -47,7 +53,6 @@ def run_queries(
     the BEST rep and record every rep in the JSON for inspection."""
     import __spark_entry__ as e
 
-    reps = reps or int(os.environ.get("SKETCHLIB_BENCH_QUERY_REPS", "2"))
     qs = e.queries()
     all_times: dict[str, list[float]] = {name: [] for name in qs}
     for _ in range(reps):
@@ -355,43 +360,6 @@ def measure_build(cpus: int, path: str, reps: int = 3) -> dict:
     return out
 
 
-def memory_bandwidth_probe() -> dict:
-    """Measure this box's aggregate DRAM bandwidth at 1 and 8 processes
-    (200 MB memcpy loops, warm buffers).  Shapes the interpretation of
-    scaling numbers: if aggregate bandwidth is flat in the process count,
-    data-streaming jobs saturate at bandwidth/percore_demand threads no
-    matter the engine.
-
-    Best of 3 invocations per level: available bandwidth on this shared
-    host swings ~4x with neighbor load (measured 32-134 GB/s aggregate in
-    one minute), and the probe asks what the MACHINE can do, not what the
-    noisiest moment allowed — the same best-of policy as every other bench
-    here."""
-    from concurrent.futures import ProcessPoolExecutor
-
-    def agg_gbs(w: int) -> float:
-        best = 0.0
-        for _ in range(3):
-            with ProcessPoolExecutor(max_workers=w) as ex:
-                times = list(ex.map(_bw_worker, range(w)))
-            best = max(best, w * 3 * 0.4 / max(times))  # 3 reps x 0.4 GB traffic
-        return round(best, 2)
-
-    return {"procs_1_gbs": agg_gbs(1), "procs_8_gbs": agg_gbs(8)}
-
-
-def _bw_worker(_):
-    import numpy as np
-
-    a = np.random.default_rng(0).integers(0, 255, 200_000_000 // 8, dtype=np.int64)
-    b = a.copy()  # warm: materialize pages on both sides
-    t0 = time.time()
-    for _ in range(3):
-        np.copyto(b, a)
-        a, b = b, a
-    return time.time() - t0
-
-
 def _measure_in_subprocess(cpus: int, path: str, reps: int = 3) -> dict:
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--measure-build",
@@ -444,305 +412,18 @@ def quantile_error(path: str) -> dict:
             "max_rank_error": round(max_rank, 6)}
 
 
-def compare_builtin() -> None:
-    """Head-to-head vs Spark's JVM built-in ``percentile_approx`` (the
-    Greenwald-Khanna aggregate Catalyst fully partial-aggregates) on the
-    bench pages input.  Prints one JSON line with wall time + max rank
-    error per contender."""
-    import duckdb
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.session import get_spark
-    from sketchlib.spark.tdigest_ops import tdigest_aggregate, tdigest_quantiles_udf
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    ps = [0.5, 0.95, 0.99]
-    spark = get_spark("builtin-cmp", cpus=CPUS,
-                      extra={"spark.sql.files.maxPartitionBytes": str(32 << 20),
-                             "spark.sql.files.openCostInBytes": str(32 << 20)})
-    spark.sparkContext.setLogLevel("ERROR")
-    pages = (spark.read.parquet(path)
-             .select("lang", F.length("text").cast("double").alias("n_chars")))
-    pages.count()
-
-    def ours():
-        dig = tdigest_aggregate(pages, ["lang"], "n_chars", delta=0.01)
-        return dig.select(
-            "lang", tdigest_quantiles_udf(ps)("digest").alias("qs")).collect()
-
-    def builtin(acc):
-        return pages.groupBy("lang").agg(
-            F.percentile_approx("n_chars", ps, acc).alias("qs")).collect()
-
-    contenders = {
-        "tdigest_two_phase_d001": ours,
-        "percentile_approx_acc10000": lambda: builtin(10000),
-        "percentile_approx_acc100": lambda: builtin(100),
-    }
-    rows = duckdb.connect().execute(
-        f"SELECT lang, length(text)::DOUBLE v FROM read_parquet('{path}/*.parquet')"
-    ).fetchnumpy()
-    langs, vals = rows["lang"], rows["v"]
-    sorted_by_lang = {l: np.sort(vals[langs == l]) for l in set(langs)}
-
-    result = {}
-    for name, fn in contenders.items():
-        fn()  # warm
-        best, out = float("inf"), None
-        for _ in range(3):
-            t0 = time.time()
-            out = fn()
-            best = min(best, time.time() - t0)
-        maxr = 0.0
-        for r in out:
-            v = sorted_by_lang[r["lang"]]
-            for p, e in zip(ps, r["qs"]):
-                rank = np.searchsorted(v, e, side="right") / len(v)
-                maxr = max(maxr, abs(rank - p))
-        result[name] = {"sec": round(best, 2), "max_rank_error": round(maxr, 5)}
-    spark.stop()
-    print(json.dumps(result))
-
-
-def quantile_cmp_bench() -> None:
-    """The three quantile-error models head-to-head over the 8M-row pages
-    table (per-lang text length): t-digest δ=0.01 (RANK error, tightest at
-    the tails), KLL k=200 (uniform normalized-rank error), DDSketch α=0.01
-    (relative VALUE error at any magnitude).  Same two-phase distributed
-    build for each; reports build sec + docs/s, serialized bytes per lang
-    sketch, max rank error and max relative value error vs the exact
-    multiset (floor-rank definition).  One JSON line + BENCH/
-    quantile_cmp.json — the "which sketch when" table in BENCH/BASELINE.md
-    is generated from this."""
-    import duckdb
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from sketchlib.ddsketch import DDSketch
-    from sketchlib.kll import KLL
-    from sketchlib.spark.session import get_spark
-    from sketchlib.spark.sketch_ops import sketch_aggregate
-    from sketchlib.spark.tdigest_ops import tdigest_aggregate
-    from sketchlib.tdigest.core import bytes_to_centroids, quantiles_of_centroids
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    spark = get_spark("quantile-cmp", cpus=CPUS,
-                      extra={"spark.sql.files.maxPartitionBytes": str(32 << 20),
-                             "spark.sql.files.openCostInBytes": str(32 << 20)})
-    spark.sparkContext.setLogLevel("ERROR")
-    pages = spark.read.parquet(path).select(
-        "lang", F.length("text").cast("double").alias("v"))
-    n = pages.count()
-
-    # exact per-lang multisets straight off the parquet (duckdb scan beats
-    # a Spark collect for a one-shot 8M-double oracle)
-    raw = duckdb.sql(
-        f"SELECT lang, length(text) AS v FROM read_parquet('{path}/*.parquet')"
-    ).fetchnumpy()
-    exact = {}
-    langs = raw["lang"]
-    vs = raw["v"].astype(np.float64)
-    for lang in np.unique(langs):
-        exact[str(lang)] = np.sort(vs[langs == lang])
-
-    ps = np.array([0.01, 0.05, 0.25, 0.5, 0.75, 0.9, 0.95, 0.99, 0.999])
-
-    def td_build():
-        rows = tdigest_aggregate(pages, ["lang"], "v", delta=0.01).collect()
-        return {r["lang"]: bytes(r["digest"]) for r in rows}
-
-    def td_quant(blob):
-        m, w = bytes_to_centroids(blob)
-        return quantiles_of_centroids(m, w, ps)
-
-    def sk_build(kind, params):
-        rows = sketch_aggregate(pages, ["lang"], "v", kind, params).collect()
-        return {r["lang"]: bytes(r["sketch"]) for r in rows}
-
-    contenders = {
-        "tdigest_d001": (td_build, td_quant),
-        "kll_k200": (lambda: sk_build("kll", {"k": 200}),
-                     lambda b: KLL.deserialize(b).quantile(ps)),
-        "dd_a01": (lambda: sk_build("dd", {"alpha": 0.01, "max_bins": 2048}),
-                   lambda b: DDSketch.deserialize(b).quantile(ps)),
-    }
-    result = {"rows": n, "cpus": CPUS, "probe_ps": ps.tolist()}
-    for name, (build, quant) in contenders.items():
-        build()  # warm
-        best, blobs = float("inf"), None
-        for _ in range(2):
-            t0 = time.time()
-            blobs = build()
-            best = min(best, time.time() - t0)
-        max_rank_err = 0.0
-        max_rel_err = 0.0
-        for lang, blob in blobs.items():
-            v = exact[lang]
-            est = np.asarray(quant(blob), dtype=float)
-            ranks = np.searchsorted(v, est, side="right") / len(v)
-            max_rank_err = max(max_rank_err, float(np.abs(ranks - ps).max()))
-            true_q = v[np.floor(ps * (len(v) - 1)).astype(int)]
-            nz = true_q != 0
-            max_rel_err = max(max_rel_err, float(
-                (np.abs(est[nz] - true_q[nz]) / np.abs(true_q[nz])).max()))
-        result[name] = {
-            "sec": round(best, 2),
-            "docs_per_sec": round(n / best, 1),
-            "bytes_per_lang_sketch": max(len(b) for b in blobs.values()),
-            "max_rank_error": round(max_rank_err, 6),
-            "max_rel_value_error": round(max_rel_err, 6),
-        }
-    spark.stop()
-    with open(os.path.join(REPO, "BENCH", "quantile_cmp.json"), "w") as f:
-        json.dump(result, f, indent=1)
-    print(json.dumps(result))
-
-
-def sketches_bench() -> None:
-    """Throughput of each sibling sketch's two-phase build over the 8M-row
-    pages table at local[CPUS] (value: url for the hashed sketches, text
-    length for KLL).  One JSON line."""
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.session import get_spark
-    from sketchlib.spark.sketch_ops import sketch_aggregate
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    spark = get_spark("sketches-bench", cpus=CPUS,
-                      extra={"spark.sql.files.maxPartitionBytes": str(32 << 20),
-                             "spark.sql.files.openCostInBytes": str(32 << 20)})
-    spark.sparkContext.setLogLevel("ERROR")
-    pages = spark.read.parquet(path).select(
-        "lang", "url", F.length("text").cast("double").alias("n_chars"))
-    n = pages.count()
-
-    jobs = {
-        "hll_p14": ("url", "hll", {"p": 14}),
-        "cms_16kx5": ("url", "cms", {"width": 16384, "depth": 5}),
-        "bloom_1pct": ("url", "bloom", {"expected_n": BENCH_ROWS, "fpr": 0.01}),
-        "kll_k200": ("n_chars", "kll", {"k": 200}),
-        "dd_a01": ("n_chars", "dd", {"alpha": 0.01, "max_bins": 2048}),
-        "kmv_k1024": ("url", "kmv", {"k": 1024}),
-    }
-    result = {"rows": n, "cpus": CPUS}
-    for name, (col, kind, params) in jobs.items():
-        run = lambda: sketch_aggregate(pages, ["lang"], col, kind, params).collect()
-        run()  # warm
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            run()
-            best = min(best, time.time() - t0)
-        result[name] = {"sec": round(best, 2),
-                        "docs_per_sec": round(n / best, 1)}
-    spark.stop()
-    print(json.dumps(result))
-
-
-def profile_bench() -> None:
-    """One-pass multi-sketch profile vs the dedicated per-family builds over
-    the 8M-row pages table: same four sketches (production t-digest of text
-    length, HLL p14 + CMS 16k×5 + MG m64 of url) per lang, measured as ONE
-    profile_aggregate pass vs the SUM of four dedicated passes.  The ratio
-    is the pass-reduction headroom a 100-TB corpus profile gets (the scan
-    dominates there; locally Python sketch CPU shares one scan).  One JSON
-    line."""
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.session import get_spark
-    from sketchlib.spark.sketch_ops import profile_aggregate, sketch_aggregate
-    from sketchlib.spark.tdigest_ops import tdigest_aggregate
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    spark = get_spark("profile-bench", cpus=CPUS,
-                      extra={"spark.sql.files.maxPartitionBytes": str(32 << 20),
-                             "spark.sql.files.openCostInBytes": str(32 << 20)})
-    spark.sparkContext.setLogLevel("ERROR")
-    pages = spark.read.parquet(path).select(
-        "lang", "url", F.length("text").cast("double").alias("n_chars"))
-    n = pages.count()
-
-    specs = [
-        {"name": "td", "col": "n_chars", "kind": "tdigest",
-         "params": {"delta": 0.01}},
-        {"name": "hll", "col": "url", "kind": "hll", "params": {"p": 14}},
-        {"name": "cms", "col": "url", "kind": "cms",
-         "params": {"width": 16384, "depth": 5}},
-        {"name": "mg", "col": "url", "kind": "mg", "params": {"m": 64}},
-    ]
-
-    def one_pass():
-        profile_aggregate(pages, ["lang"], specs).collect()
-
-    def dedicated():
-        tdigest_aggregate(pages, ["lang"], "n_chars", delta=0.01).collect()
-        sketch_aggregate(pages, ["lang"], "url", "hll", {"p": 14}).collect()
-        sketch_aggregate(pages, ["lang"], "url", "cms",
-                         {"width": 16384, "depth": 5}).collect()
-        sketch_aggregate(pages, ["lang"], "url", "mg", {"m": 64}).collect()
-
-    def best_of(fn, reps=2):
-        fn()  # warm
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.time()
-            fn()
-            best = min(best, time.time() - t0)
-        return best
-
-    t_prof = best_of(one_pass)
-    t_ded = best_of(dedicated)
-    spark.stop()
-    print(json.dumps({
-        "rows": n, "cpus": CPUS, "families": len(specs),
-        "profile_one_pass_sec": round(t_prof, 2),
-        "dedicated_sum_sec": round(t_ded, 2),
-        "speedup": round(t_ded / t_prof, 2),
-        "profile_docs_per_sec": round(n / t_prof, 1),
-    }))
-
-
 def scaling_main() -> None:
     """Interleaved rounds across parallelism levels: the host shows strong
     noisy-neighbor drift (same job varies ~2x over tens of minutes), so
     measuring levels back-to-back confounds level with wall-clock time.
     Two 2->8->32 rounds, best per (level, workload), decorrelates that.
-
-    Additionally merges best-of with an existing BENCH/scaling.json when the
-    row count matches (SKETCHLIB_BENCH_FRESH=1 disables): a single --scaling
-    invocation still samples only ~10 min of host time, and drift operates on
-    that timescale, so accumulating the per-(level, workload) best across
-    invocations is the honest estimator of the plan's capability on this
-    hardware — the same best-of policy the per-query bench uses within a run.
-    """
+    Every figure comes from this invocation; the result replaces
+    BENCH/scaling.json (the prose in BENCH/BASELINE.md quotes it)."""
     path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
     ensure_pages(path, BENCH_ROWS)
-    bw = memory_bandwidth_probe()
 
-    rounds = int(os.environ.get("SKETCHLIB_BENCH_ROUNDS", "2"))
     best: dict[int, dict] = {}
-    prev_path = os.path.join(REPO, "BENCH", "scaling.json")
-    if not os.environ.get("SKETCHLIB_BENCH_FRESH") and os.path.exists(prev_path):
-        try:
-            with open(prev_path) as fh:
-                prev = json.load(fh)
-            if prev.get("rows") == BENCH_ROWS:
-                for cpus in (2, 8, 32):
-                    lvl = prev.get(f"local{cpus}")
-                    if lvl and all(k in lvl for k in ("e2e", "scan")):
-                        best[cpus] = {"cpus": cpus, "docs": lvl["docs"],
-                                      "e2e": dict(lvl["e2e"]),
-                                      "scan": dict(lvl["scan"])}
-                print("# seeded best-of from existing BENCH/scaling.json",
-                      file=sys.stderr)
-        except (OSError, ValueError, KeyError):
-            pass
-    for rnd in range(rounds):
+    for rnd in range(2):
         for cpus in (2, 8, 32):
             m = _measure_in_subprocess(cpus, path, reps=1)
             cur = best.setdefault(cpus, m)
@@ -765,1107 +446,27 @@ def scaling_main() -> None:
     result = {"local2": m2, "local8": m8, "local32": m32,
               "scaling_efficiency_2_to_8": eff_2_8,
               "scaling_efficiency_8_to_32": eff_8_32,
-              "dram_bandwidth": bw, "accuracy": err, "rows": BENCH_ROWS}
+              "accuracy": err, "rows": BENCH_ROWS}
     print(json.dumps(result, indent=2))
-
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    md = f"""# BENCH/BASELINE.md — scaling + accuracy evidence
-
-North rule: throughput scaling efficiency >= 0.8 between cluster sizes N and
-4N executors.  Per the round instructions this sandbox evidences it by
-running the identical job on the identical input at two parallelism levels
-(N and 4N cores).  Primary pair: **local[2] (N) vs local[8] (4N)**; the
-local[8] vs local[32] pair is also reported, with the host measurement that
-explains it (below).
-
-**Input:** deterministic synthetic Common-Crawl-style pages table
-(`sketchlib/data/gen_pages.py`, seed 42, {BENCH_ROWS:,} rows, 160 part
-files ~4.2 GB, schema `(url, warc_ts, html, text, lang)` per BASELINE.json
-input_hint).  Warm reps, best-of per level, separate JVMs per level.
-
-**Workloads** (both end in the two-phase digest plan: `mapInPandas` partials
--> shuffle of ~KB digest rows -> `applyInPandas` byte-concat merge):
-
-- **e2e** — the north-star pipeline: html -> extracted text -> t-digest
-  (delta=0.01) of text length per lang, extraction *fused into the partials
-  stage* (one JVM->Python Arrow hop) via the length-only projection pushdown
-  (`extract_len_series`: bytes-native, never decodes the html or builds the
-  text or its tokens — after the tag pass a 256-byte `translate` table marks
-  whitespace and the length is counted from it; guarded exact vs
-  `len(extract_one(...))`).
-- **scan** — digest build over the pre-extracted `text` column with
-  `length()` computed JVM-side (parquet-scan-dominated).
-
-| workload | local[2] | local[8] | local[32] | eff 2->8 | eff 8->32 |
-|---|---|---|---|---|---|
-| e2e extract+build | {m2['e2e']['docs_per_sec']:,.0f}/s | {m8['e2e']['docs_per_sec']:,.0f}/s | {m32['e2e']['docs_per_sec']:,.0f}/s | **{eff_2_8['e2e']}** | {eff_8_32['e2e']} |
-| scan+build | {m2['scan']['docs_per_sec']:,.0f}/s | {m8['scan']['docs_per_sec']:,.0f}/s | {m32['scan']['docs_per_sec']:,.0f}/s | {eff_2_8['scan']} | {eff_8_32['scan']} |
-
-(When the 2->8 efficiency lands slightly above 1.0 it is measurement noise:
-the local[2] level runs a single long rep and pays proportionally more fixed
-JVM/worker-pool cost.)
-
-## Why 8->32 flattens on this box (and would not on a cluster)
-
-Diagnosed with three microbenchmarks run on this VM (all reproducible):
-
-- **CPU scales**: a register-resident integer loop across a process pool
-  runs 8 -> 32 workers at ~0.95 efficiency (steal time ~5%).
-- **Memory bandwidth scales**: warm-buffer memcpy measures {bw['procs_1_gbs']} GB/s for
-  one process and {bw['procs_8_gbs']} GB/s aggregate for eight
-  (`bench.py memory_bandwidth_probe`).
-- **Allocation-heavy Python does NOT scale**: the round-3 full-text kernel
-  (utf-8 decode + regex passes + join, ~3.4 KB-sized transients/doc)
-  measured 0.64 efficiency 8->32 in a process-pool probe; a batch-blob
-  variant (MB-sized transients, mmap/munmap churn) measured WORSE (0.32);
-  the round-4 length-only bytes kernel (~1.4 KB-sized transients/doc)
-  measures 0.85 efficiency and 1.39x aggregate throughput at 32 workers —
-  allocation count per doc, not instruction count, is the scaling lever
-  (probe data: variants A/B/C/D/E/F, 20k docs/worker, best-of-2).
-
-**The extraction kernel is no longer the 8->32 bottleneck**: with the new
-kernel, e2e scales 8->32 at {eff_8_32['e2e']} while scan+build — NO Python
-extraction at all — scales at {eff_8_32['scan']}; the remaining flattening
-is the host-level allocation/reclaim floor shared by every many-process
-workload on this VM, not any kernel of ours.
-
-So neither CPU nor DRAM is the limit; the limit is kernel page-allocation /
-reclaim contention once ~8+ processes sustain very high allocation rates —
-a property of this virtualized single-kernel box, not of the Spark plan
-(the plan has no serial stage: 160 independent scan+partial tasks, and the
-only shuffle moves ~KB digest rows).  On a real cluster each executor node
-brings its own kernel and memory, so the same plan scales with node count.
-The **local[2] -> local[8]** pair runs below that contention threshold and
-is the meaningful "N vs 4N cores" measurement on this machine; across six
-independent full runs its e2e efficiency ranged 0.84-1.11 (the table above
-shows the latest run).
-The host also shows strong noisy-neighbor drift over tens of minutes, which
-is why the bench interleaves rounds across levels and takes per-level bests.
-
-## Accuracy (compressed digests vs exact)
-
-Max error of delta=0.01 digests at p in {err['probes']} across all langs,
-exact side computed by DuckDB over the same parquet:
-
-| metric | value | bound |
-|---|---|---|
-| max rank error \\|cdf(est) - p\\| | {err['max_rank_error']} | < delta = 0.01 (reference accuracy law, test/test_tdigest.ml:137-154) |
-| max abs value error | {err['max_abs_error']} | (value-space; no bound claimed by t-digest) |
-
-## Reference single-core baseline (BASELINE.md)
-
-SGrondin/tdigest ingests 1,000,000 floats in 770 ms ~= 1.30 M vals/s on one
-core (README.md:64-66; in-memory array ingest only).  Our core ingest
-(`MergingDigest.update_batch`, logit-grid compression) runs ~13 M vals/s on
-one core — ~10x the reference.  The whole distributed scan+build job
-(parquet scan + Arrow transfer + shuffle + merge) reaches
-{m32['scan']['docs_per_sec']:,.0f} docs/s at local[32] =
-{m32['scan']['docs_per_sec']/1.3e6:.1f}x the reference's single-core
-in-memory ingest rate.
-"""
-    # preserve manually-maintained sections (builtin comparison, sibling
-    # sketches, Iceberg probe, ...) below the explicit marker; fall back to
-    # the legacy heading for files written before the marker existed, and
-    # refuse to silently discard a tail we can't locate
-    marker = "<!-- MANUAL SECTIONS BELOW — preserved across bench --scaling runs -->"
-    base_path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    tail = ""
-    try:
-        with open(base_path) as f:
-            old = f.read()
-        cut = old.find(marker)
-        if cut != -1:
-            tail = old[cut + len(marker):].lstrip("\n")
-        else:
-            cut = old.find("## vs Spark's built-in")  # pre-marker files
-            if cut != -1:
-                tail = old[cut:]
-            elif old.strip():
-                # no marker, no known heading, non-empty file: somebody
-                # restructured it — don't silently discard their content
-                print("# WARNING: no manual-section marker in BENCH/BASELINE.md;"
-                      " refusing to overwrite — wrote BASELINE.generated.md",
-                      file=sys.stderr)
-                base_path = os.path.join(REPO, "BENCH", "BASELINE.generated.md")
-    except OSError:
-        pass
-    with open(base_path, "w") as f:
-        f.write(md + "\n" + marker + "\n\n" + tail)
     with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
         json.dump(result, f, indent=2)
-    print("# wrote BENCH/BASELINE.md", file=sys.stderr)
 
 
-
-
-def _gen_events_one(args: tuple[int, int, str]) -> str:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from sketchlib.data.gen_events import SCHEMA, gen_chunk
-
-    start, cnt, part_path = args
-    pdf = gen_chunk(start, cnt)
-    pq.write_table(
-        pa.Table.from_pandas(pdf, schema=SCHEMA, preserve_index=False), part_path
-    )
-    return part_path
-
-
-def ensure_events(path: str, n_rows: int, chunk: int = 250_000) -> None:
-    """Deterministic synthetic clickstream (seed 43); cached parquet dir."""
-    marker = path + ".rows"
-    if os.path.exists(path) and os.path.exists(marker):
-        if int(open(marker).read().strip()) == n_rows:
-            return
-    from concurrent.futures import ProcessPoolExecutor
-
-    os.makedirs(path, exist_ok=True)
-    t0 = time.time()
-    jobs = [
-        (start, min(chunk, n_rows - start),
-         os.path.join(path, f"part-{start // chunk:05d}.parquet"))
-        for start in range(0, n_rows, chunk)
-    ]
-    with ProcessPoolExecutor(max_workers=min(32, os.cpu_count() or 4)) as ex:
-        list(ex.map(_gen_events_one, jobs))
-    with open(marker, "w") as f:
-        f.write(str(n_rows))
-    print(f"# generated {n_rows} events in {time.time()-t0:.1f}s -> {path}",
-          file=sys.stderr)
-
-
-def joins_bench() -> None:
-    """Temporal joins at scale: as-of join and bucketized range join over an
-    8M-row Zipf-skewed clickstream (200k users, ~5% purchases).  Both
-    operators are pure DataFrame compositions (one hash shuffle each, no
-    nested-loop joins, no Python in the row path), so this measures the
-    plans a 1000-executor cluster would run.  Best of 2 warm reps per op."""
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.joins import asof_join, range_join
-    from sketchlib.spark.session import get_spark
-
-    path = os.path.join(BENCH_DIR, f"events_{BENCH_ROWS}.parquet")
-    ensure_events(path, BENCH_ROWS)
-    spark = get_spark("joins-bench", cpus=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    ev = spark.read.parquet(path)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("event_id").alias("purchase_id")
-    )
-
-    def asof_run():
-        return asof_join(
-            ev.select("event_id", "user_id", "ts"), purchases,
-            on="user_id", left_ts="ts", right_ts="ts",
-            payload_cols=["purchase_id"], tiebreak_cols=["purchase_id"],
-        ).count()
-
-    def range_run():
-        win = purchases.select(
-            "user_id", F.col("ts").alias("lo"),
-            (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("hi"),
-            "purchase_id",
-        )
-        return range_join(
-            ev.select("event_id", "user_id", "ts"), win,
-            on="user_id", left_point="ts", right_lo="lo", right_hi="hi",
-            bucket_width=3600.0,
-        ).count()
-
-    out: dict[str, object] = {"rows": BENCH_ROWS, "cpus": CPUS}
-    for name, fn in (("asof", asof_run), ("range", range_run)):
-        best, result = float("inf"), None
-        for _ in range(2):
-            t0 = time.time()
-            result = fn()
-            best = min(best, time.time() - t0)
-        out[f"{name}_sec"] = round(best, 2)
-        out[f"{name}_rows_out"] = result
-        out[f"{name}_left_rows_per_sec"] = round(BENCH_ROWS / best, 1)
-    print(json.dumps(out))
-
-
-def frequent_items_bench() -> None:
-    """Misra-Gries at scale: top hosts per lang over the 8M-row pages table
-    (1000 Zipf(1.3) hosts -> m=256 saturates ~4x).  Reports wall (best of
-    2 warm), total sketch state bytes, and accuracy vs the exact answer:
-    recall of the true top-20 hosts per lang and max relative estimate
-    error over them.  The exact groupBy-count top-k wall is printed for
-    context — at THIS host cardinality exact is cheap; MG's win is state
-    size/overflow-immunity when the domain is unbounded, which is why the
-    accuracy columns are the point."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from sketchlib.mg import MisraGries
-    from sketchlib.spark.session import get_spark
-    from sketchlib.spark.sketch_ops import sketch_aggregate
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    spark = get_spark("mg-bench", cpus=CPUS,
-                      extra={"spark.sql.files.maxPartitionBytes": str(32 << 20),
-                             "spark.sql.files.openCostInBytes": str(32 << 20)})
-    spark.sparkContext.setLogLevel("ERROR")
-    pages = spark.read.parquet(path).select(
-        "lang", F.regexp_extract("url", r"https://([^/]+)/", 1).alias("host"))
-
-    def mg_run():
-        return sketch_aggregate(pages, ["lang"], "host", "mg", {"m": 256}).collect()
-
-    from pyspark.sql import Window
-
-    def exact_run():
-        return (pages.groupBy("lang", "host").count()
-                .withColumn("rk", F.row_number().over(
-                    Window.partitionBy("lang").orderBy(F.desc("count"), "host")))
-                .filter(F.col("rk") <= 20).collect())
-
-    mg_rows, t_mg = None, float("inf")
-    for _ in range(2):
-        t0 = time.time(); mg_rows = mg_run(); t_mg = min(t_mg, time.time() - t0)
-    t_exact = float("inf")
-    for _ in range(2):
-        t0 = time.time(); exact_rows = exact_run(); t_exact = min(t_exact, time.time() - t0)
-
-    exact_top = {}
-    for r in exact_rows:
-        exact_top.setdefault(r["lang"], []).append((r["host"], r["count"]))
-    state_bytes = sum(len(bytes(r["sketch"])) for r in mg_rows)
-    recalls, rel_errs = [], []
-    for r in mg_rows:
-        sk = MisraGries.deserialize(bytes(r["sketch"]))
-        got = dict(sk.items())
-        top = exact_top.get(r["lang"], [])[:20]
-        hit = sum(1 for h, _ in top if h in got)
-        recalls.append(hit / max(1, len(top)))
-        for h, c in top:
-            if h in got:
-                rel_errs.append(abs(c - got[h]) / c)
-    print(json.dumps({
-        "rows": BENCH_ROWS, "m": 256, "langs": len(mg_rows),
-        "mg_sec": round(t_mg, 2),
-        "exact_topk_sec": round(t_exact, 2),
-        "state_bytes_total": state_bytes,
-        "top20_recall_min": round(min(recalls), 3),
-        "top20_rel_err_max": round(max(rel_errs), 4),
-        "cpus": CPUS,
-    }))
-
-def decontam_bench() -> None:
-    """Test-set decontamination throughput over a ~1M-page slice of the
-    bench pages table (1/8 hash sample, ~130 tokens/page), 1% eval split,
-    5-gram containment: hashed (web-scale) vs string-exact mode, plus the
-    stateless Bloom-flag projection.  Best of 2 warm reps each.  One JSON
-    line."""
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.dedup import (
-        bloom_decontam_flags,
-        contamination_hits,
-        eval_ngram_bloom,
-    )
-    from sketchlib.spark.session import get_spark
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    spark = get_spark("decontam-bench", cpus=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    pages = spark.read.parquet(path).select("url", "text").filter(
-        F.abs(F.xxhash64("url")) % 8 == 0
-    ).withColumn("doc_id", F.xxhash64("url"))
-    train = pages.filter(F.abs(F.col("doc_id")) % 97 != 0)
-    ev = pages.filter(F.abs(F.col("doc_id")) % 97 == 0)
-
-    def run(stats_df):
-        return stats_df.agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("n_hits") > 0).cast("long")).alias("c"),
-        ).collect()[0]
-
-    def best_of(fn, reps=2):
-        fn()
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.time()
-            fn()
-            best = min(best, time.time() - t0)
-        return best
-
-    r = run(contamination_hits(train, ev, ngram=5, hashed=True))
-    t_hash = best_of(lambda: run(contamination_hits(train, ev, ngram=5, hashed=True)))
-    t_str = best_of(lambda: run(contamination_hits(train, ev, ngram=5)))
-    blob = eval_ngram_bloom(ev, ngram=5, fpr=1e-4)
-    flags = bloom_decontam_flags(train, blob, ngram=5)
-    t_bloom = best_of(lambda: flags.agg(
-        F.sum(F.col("contaminated").cast("long"))).collect())
-    spark.stop()
-    print(json.dumps({
-        "train_rows": int(r["n"]), "contaminated": int(r["c"]),
-        "bloom_bytes": len(blob), "cpus": CPUS,
-        "hashed_sec": round(t_hash, 2), "string_sec": round(t_str, 2),
-        "bloom_flags_sec": round(t_bloom, 2),
-        "hashed_docs_per_sec": round(r["n"] / t_hash, 1),
-    }))
-
-
-def fuzzydecontam_bench() -> None:
-    """Fuzzy (near-dup) decontamination throughput over the ~1M-page slice
-    (same slice/split convention as --decontam: 1/8 hash sample, ~1% eval):
-    dedup.fuzzy_decontam_pairs at Jaccard >= 0.8, xxh vs poly signature
-    kernels, at 8 and CPUS cores (discovery = sign both sides + broadcast
-    banded-eval join; verification only touches candidates).  The eval
-    split is verbatim-disjoint, so measured cost is the discovery
-    machinery — the scale-relevant part.  One JSON line."""
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.dedup import fuzzy_decontam_pairs
-    from sketchlib.spark.session import get_spark
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    out = {"cpus_levels": [2, 8, int(CPUS)], "kernels": {}}
-    n_train = None
-    for kernel in ("xxh", "poly"):
-        levels = {}
-        for cpus in (2, 8, int(CPUS)):
-            spark = get_spark(f"fuzzydecontam-{kernel}-{cpus}", cpus=cpus)
-            spark.sparkContext.setLogLevel("ERROR")
-            pages = spark.read.parquet(path).select("url", "text").filter(
-                F.abs(F.xxhash64("url")) % 8 == 0
-            ).withColumn("doc_id", F.xxhash64("url"))
-            train = pages.filter(F.abs(F.col("doc_id")) % 97 != 0)
-            ev = pages.filter(F.abs(F.col("doc_id")) % 97 == 0)
-
-            def run():
-                # the operator caches its candidate frame; identical
-                # logical plans would HIT that cache across reps and
-                # skip the signature build — clear it so every rep pays
-                # the full discovery cost
-                spark.catalog.clearCache()
-                return fuzzy_decontam_pairs(
-                    train, ev, threshold=0.8, ngram=5,
-                    hashed_shingles=True, kernel=kernel,
-                ).count()
-
-            n_pairs = run()  # warm
-            best = float("inf")
-            for _ in range(1 if cpus == 2 else 2):
-                t0 = time.time()
-                run()
-                best = min(best, time.time() - t0)
-            if n_train is None:
-                n_train = train.count()
-            spark.stop()
-            levels[str(cpus)] = {"sec": round(best, 2),
-                                 "docs_per_sec": round(n_train / best, 1)}
-        two, lo, hi = levels["2"], levels["8"], levels[str(CPUS)]
-        eff28 = (lo["docs_per_sec"] / two["docs_per_sec"]) / 4.0
-        eff = (hi["docs_per_sec"] / lo["docs_per_sec"]) / (int(CPUS) / 8)
-        out["kernels"][kernel] = {**levels,
-                                  "eff_2_to_8": round(eff28, 3),
-                                  "eff_8_to_cpus": round(eff, 3),
-                                  "n_pairs": n_pairs}
-    out["train_rows"] = n_train
-    with open(os.path.join(REPO, "BENCH", "fuzzydecontam_1m.json"), "w") as f:
-        json.dump(out, f, indent=1)
-    print(json.dumps(out))
-
-
-
-def incdedup_bench() -> None:
-    """Incremental near-dup throughput over a ~1M-page slice (1/8 hash
-    sample of the bench pages): build the banded-LSH index of the
-    "historical" 7/8 once, persist it, then probe the "new crawl" 1/8
-    against the STORED index at two parallelism levels — the north-rule
-    N-vs-4N scaling evidence for the incremental path (the historical
-    corpus is signed exactly once; only the new side is per-run work).
-    Signs with the ``poly`` kernel — the job default since the recall
-    soak (BENCH/soak_sigkernel_d4.json); build and probe must share one
-    kernel, exactly as jobs/dedup_corpus.py pins via ``meta.sig_kernel``.
-    Best-of-2 warm reps.  One JSON line."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.dedup import (
-        banded_signatures,
-        lsh_candidates_vs_index,
-        minhash_signatures,
-        read_bucketed_banded,
-        write_bucketed_banded,
-    )
-    from sketchlib.spark.session import get_spark
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    idx_dir = os.path.join(BENCH_DIR, "incdedup_index")
-    shutil.rmtree(idx_dir, ignore_errors=True)
-    idx_bdir = idx_dir + "_bucketed"
-    shutil.rmtree(idx_bdir, ignore_errors=True)
-
-    def slice_pages(spark):
-        pages = (
-            spark.read.parquet(path).select("url", "text")
-            .filter(F.abs(F.xxhash64("url")) % 8 == 0)
-            .withColumn("doc_id", F.xxhash64("url"))
-        )
-        # reseeded hash: doc_id IS xxhash64(url), so splitting on doc_id%8
-        # would select nothing inside this %8==0 slice
-        split = F.abs(F.xxhash64(F.lit(7), F.col("url"))) % 8
-        hist = pages.filter(split != 0)
-        new = pages.filter(split == 0)
-        return hist, new
-
-    # index build at full parallelism — the amortized side.  Best-of-2
-    # like the probes: a single cold shot folds Python-worker startup and
-    # page-cache state into the one number (measured 75.6 s cold vs 9.4 s
-    # warm for the same build in one session — the warm number is the
-    # kernel, the cold one is the host window)
-    spark = get_spark("incdedup-build", cpus=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    hist, new = slice_pages(spark)
-    n_hist, n_new = hist.count(), new.count()
-    t_build = float("inf")
-    for _ in range(2):
-        shutil.rmtree(idx_dir, ignore_errors=True)
-        t0 = time.time()
-        banded_signatures(minhash_signatures(hist, kernel="poly")) \
-            .write.parquet(idx_dir)
-        t_build = min(t_build, time.time() - t0)
-    idx_rows = spark.read.parquet(idx_dir).count()
-    # bucketed layout of the SAME banded rows (CLUSTERED+SORTED BY
-    # (band, bh), 64 buckets): the probe's join then reads the index side
-    # shuffle-free in any later session
-    t0 = time.time()
-    idx_ddl = write_bucketed_banded(
-        spark.read.parquet(idx_dir), idx_bdir, 64)
-    t_bucket = time.time() - t0
-    spark.stop()
-
-    # new-crawl probe at two parallelism levels (fresh JVM each)
-    probes = {}
-    for cpus in (2, 8):
-        spark = get_spark(f"incdedup-probe-{cpus}", cpus=cpus)
-        spark.sparkContext.setLogLevel("ERROR")
-        _, new = slice_pages(spark)
-        index = spark.read.parquet(idx_dir)
-
-        cap = max(256, int(n_hist ** 0.5))  # same skew rationale as auto mode
-
-        def probe(prune):
-            cands = lsh_candidates_vs_index(
-                banded_signatures(minhash_signatures(new, kernel="poly")),
-                index, max_bucket_size=cap, prune=prune)
-            return cands.agg(
-                F.count("*").alias("pairs"),
-                F.countDistinct("new_id").alias("flagged"),
-            ).collect()[0]
-
-        index_bucketed = read_bucketed_banded(spark, idx_bdir, idx_ddl, 64)
-
-        def probe_b():
-            cands = lsh_candidates_vs_index(
-                banded_signatures(minhash_signatures(new, kernel="poly")),
-                index_bucketed, max_bucket_size=cap)
-            return cands.agg(
-                F.count("*").alias("pairs"),
-                F.countDistinct("new_id").alias("flagged"),
-            ).collect()[0]
-
-        rec = {}
-        for variant, fn in (("plain", lambda: probe(None)),
-                            ("bloom", lambda: probe("bloom")),
-                            ("bucketed", probe_b)):
-            r = fn()  # warm-up
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                r = fn()
-                best = min(best, time.time() - t0)
-            rec[variant] = {
-                "sec": round(best, 2),
-                "new_docs_per_sec": round(n_new / best, 1),
-                "candidate_pairs": int(r["pairs"]),
-                "flagged_new_docs": int(r["flagged"]),
-            }
-        for v in ("bloom", "bucketed"):
-            assert (rec["plain"]["candidate_pairs"]
-                    == rec[v]["candidate_pairs"]), f"{v} changed candidates!"
-        probes[cpus] = {**rec["plain"],
-                        **{f"{v}_probe": {k: rec[v][k]
-                                          for k in ("sec", "new_docs_per_sec")}
-                           for v in ("bloom", "bucketed")}}
-        spark.stop()
-
-    eff = probes[8]["new_docs_per_sec"] / (4.0 * probes[2]["new_docs_per_sec"])
-    print(json.dumps({
-        "hist_docs": int(n_hist), "new_docs": int(n_new),
-        "index_build_sec": round(t_build, 2),
-        "index_build_docs_per_sec": round(n_hist / t_build, 1),
-        "index_bucketed_rewrite_sec": round(t_bucket, 2),
-        "index_rows": int(idx_rows),
-        "probe": probes,
-        "probe_scaling_efficiency_2_to_8": round(eff, 3),
-        "probe_bucket_cap": max(256, int(n_hist ** 0.5)),
-    }))
-
-
-def curate_bench(url_mode: bool = False) -> None:
-    """jobs/curate_corpus.py end-to-end at two parallelism levels — the
-    north-rule scaling evidence on the HEADLINE artifact (the whole
-    curation pipeline, not one operator).  Input: a 1/16 slice of the 8M
-    pages table (~500k docs) with ~10% planted EXACT duplicates (re-id'd
-    copies) and an eval corpus of ~1% of the docs, so the dedup and
-    decontam stages do real work.  The job runs via its own main() (same
-    code path as spark-submit); per-level seconds are the job's summed
-    stage times (JVM/session boot excluded — a cluster pays it once per
-    app, not per stage).  One JSON line.
-
-    ``url_mode`` (``bench.py --curate url``): the input keeps the ``url``
-    column and the planted duplicates are CRAWL VARIANTS of the same page
-    (http + www. + :80 + trailing slash + tracking param + fragment forms
-    of the original URL, identical text, new doc_id); the job runs with
-    ``--url-col url`` so the canonical-URL stage-0 pre-pass does the
-    dropping on the narrow (id, canon) projection before any text-bearing
-    stage sees the variants."""
-    import builtins
-    import sys as _sys
-
-    _sys.path.insert(0, os.path.join(REPO, "jobs"))
-    import curate_corpus as job
-
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.session import get_spark
-
-    pages_path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(pages_path, BENCH_ROWS)
-    # 1/4 slice (~2.2M docs with dups): stages must be long enough that
-    # fixed per-stage costs (write commit, metadata counts, scheduling)
-    # amortize — at a 1/16 slice the 8-core stages ran 7-26 s and constant
-    # overheads capped measured efficiency at 0.62
-    tag = "url_" if url_mode else ""
-    src = os.path.join(BENCH_DIR, f"curate_input_{tag}d4.parquet")
-    ev = os.path.join(BENCH_DIR, f"curate_eval_{tag}d4.parquet")
-    if not (os.path.exists(os.path.join(src, "_SUCCESS"))
-            and os.path.exists(os.path.join(ev, "_SUCCESS"))):
-        spark = get_spark("curate-prep", cpus=8)
-        spark.sparkContext.setLogLevel("ERROR")
-        base = (
-            spark.read.parquet(pages_path).select("url", "lang", "text")
-            .filter(F.abs(F.xxhash64("url")) % 4 == 0)
-            .withColumn("doc_id", F.xxhash64("url"))
-        )
-        dups = (
-            base.filter(F.abs(F.xxhash64("url", F.lit(7))) % 10 == 3)
-            .withColumn("doc_id", F.xxhash64("url", F.lit(99)))
-        )
-        if url_mode:
-            # crawl variants: same page, messier URL (generator URLs are
-            # https://siteNNNN.example/NNNNNN — canonical_url collapses
-            # the variant back onto the original's key)
-            dups = dups.withColumn("url", F.concat(
-                F.lit("http://www."),
-                F.regexp_replace("url", "^https://", ""),
-                F.lit("/?utm_source=bench#top"),
-            ))
-            cols = ["doc_id", "url", "lang", "text"]
-        else:
-            cols = ["doc_id", "lang", "text"]
-        base.unionByName(dups).select(*cols) \
-            .write.mode("overwrite").parquet(src)
-        base.filter(F.abs(F.xxhash64("url", F.lit(13))) % 100 == 0) \
-            .select(*cols) \
-            .write.mode("overwrite").parquet(ev)
-        spark.stop()
-
-    out = {}
-    argv0 = _sys.argv
-    real_print = builtins.print
-    for cpus in (2, 8):
-        spark = get_spark(f"curate-{cpus}", cpus=cpus)
-        spark.sparkContext.setLogLevel("ERROR")
-        wd = os.path.join(BENCH_DIR, f"curate_wd_{tag}{cpus}")
-        dest = os.path.join(BENCH_DIR, f"curate_out_{tag}{cpus}")
-        import shutil
-
-        shutil.rmtree(wd, ignore_errors=True)
-        captured = []
-        _sys.argv = ["job", "--input", src, "--workdir", wd,
-                     "--output", dest, "--eval-input", ev,
-                     "--dedup", "exact", "--decontam-ngram", "8"] \
-            + (["--url-col", "url"] if url_mode else [])
-        builtins.print = lambda s: captured.append(s)
-        try:
-            job.main()  # stops the session itself
-        finally:
-            builtins.print = real_print
-            _sys.argv = argv0
-        m = json.loads(captured[-1])
-        stage_sec = sum(s["sec"] for s in m["stages"].values())
-        n_in = m["stages"]["quality"]["rows"]  # post-quality row count
-        out[cpus] = {
-            "stage_sec": round(stage_sec, 2),
-            "docs_per_sec": round(n_in / stage_sec, 1),
-            "stages": {k: s["sec"] for k, s in m["stages"].items()},
-            "n_out": m["n_out"],
-        }
-    eff = out[8]["docs_per_sec"] / (4.0 * out[2]["docs_per_sec"])
-    assert out[2]["n_out"] == out[8]["n_out"], "level-dependent output!"
-    print(json.dumps({
-        "job": "curate_corpus" + ("+urldedup" if url_mode else ""),
-        "n_out": out[8]["n_out"],
-        "levels": {str(k): v for k, v in out.items()},
-        "scaling_efficiency_2_to_8": round(eff, 3),
-    }))
-
-
-def spandedup_bench() -> None:
-    """duplicate_span_stats throughput over a ~125k-page slice at two
-    parallelism levels (span=20 token windows, >=2 distinct docs).  The
-    per-doc work is tokens x span hash ops and the shuffle is one
-    (id, pos, h) row per token position — the heaviest per-token op in the
-    repo, so the slice is 1/64 (local[2] on larger slices exceeds 10 min).
-    The raw synthetic corpus is i.i.d. words (no real 20-token repeats), so
-    a fixed 30-token boilerplate block is appended to ~10% of docs — the
-    syndicated-fragment workload the operator exists for; those docs must
-    come back flagged with dup_tokens >= 30.  Best of 2 warm reps.  One
-    JSON line."""
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.dedup import duplicate_span_stats
-    from sketchlib.spark.session import get_spark
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    boiler = " ".join(f"boiler{i:02d}" for i in range(30))
-    out = {}
-    for cpus in (2, 8):
-        spark = get_spark(f"spandedup-{cpus}", cpus=cpus)
-        spark.sparkContext.setLogLevel("ERROR")
-        pages = (
-            spark.read.parquet(path).select("url", "text")
-            .filter(F.abs(F.xxhash64("url")) % 64 == 0)
-            .withColumn("doc_id", F.xxhash64("url"))
-            .withColumn(
-                "text",
-                F.when(
-                    F.abs(F.xxhash64("url", F.lit(1))) % 10 == 3,
-                    F.concat_ws(" ", "text", F.lit(boiler)),
-                ).otherwise(F.col("text")),
-            )
-        )
-        n = pages.count()
-
-        def run():
-            return duplicate_span_stats(pages, span=20).agg(
-                F.count("*").alias("docs"),
-                F.sum((F.col("dup_frac") > 0).cast("long")).alias("flagged"),
-                F.sum("dup_tokens").alias("dup_tokens"),
-            ).collect()[0]
-
-        r = run()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            r = run()
-            best = min(best, time.time() - t0)
-        out[cpus] = {"sec": round(best, 2),
-                     "docs_per_sec": round(n / best, 1)}
-        stats = {"docs": int(r["docs"]), "flagged_docs": int(r["flagged"]),
-                 "dup_tokens": int(r["dup_tokens"])}
-        spark.stop()
-    eff = out[8]["docs_per_sec"] / (4.0 * out[2]["docs_per_sec"])
-    print(json.dumps({
-        "span": 20, **stats, "levels": out,
-        "scaling_efficiency_2_to_8": round(eff, 3),
-    }))
-
-
-def rangepart_bench() -> None:
-    """Digest-driven range partitioning vs native ``repartitionByRange`` on
-    the 8M-row pages table (value = length(text), a skewed column).  Three
-    contenders, all ending in sortWithinPartitions + a noop-sink write so
-    the full shuffle+sort executes:
-
-      - native:        df.repartitionByRange(n, v)      (per-job sampling)
-      - digest_inline: repartition_by_digest, digest built in the call
-      - digest_stored: repartition_by_digest with a PRE-built digest —
-                       the claimed production mode (bounds from a stored
-                       KB artifact, zero extra pass over the input)
-
-    Also reports layout quality for native vs digest_stored: max partition
-    rows / ideal (lower = better balance).  Best of 2, interleaved.
-    """
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.plan import repartition_by_digest
-    from sketchlib.spark.session import get_spark
-    from sketchlib.spark.tdigest_ops import tdigest_aggregate
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    spark = get_spark("rangepart-bench", cpus=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    n_parts = 64
-    df = spark.read.parquet(path).select(
-        "url", F.length("text").cast("double").alias("v"))
-
-    dig = bytes(tdigest_aggregate(
-        df.withColumn("_g", F.lit(0)), ["_g"], "v").collect()[0]["digest"])
-
-    def noop(d):
-        d.write.format("noop").mode("overwrite").save()
-
-    runs = {
-        "native": lambda: noop(
-            df.repartitionByRange(n_parts, "v").sortWithinPartitions("v")),
-        "digest_inline": lambda: noop(
-            repartition_by_digest(df, "v", n_parts)),
-        "digest_stored": lambda: noop(
-            repartition_by_digest(df, "v", n_parts, digest=dig)),
-    }
-    best = {k: float("inf") for k in runs}
-    for _ in range(2):  # interleaved best-of
-        for k, fn in runs.items():
-            t0 = time.time()
-            fn()
-            best[k] = min(best[k], time.time() - t0)
-
-    def balance(d):
-        per = (d.withColumn("pid", F.spark_partition_id())
-               .groupBy("pid").count().agg(
-                   F.max("count").alias("mx"),
-                   F.count(F.lit(1)).alias("nparts")).collect()[0])
-        return round(per["mx"] / (BENCH_ROWS / per["nparts"]), 4)
-
-    out = {
-        "rows": BENCH_ROWS, "cpus": CPUS, "n_parts": n_parts,
-        **{f"{k}_sec": round(v, 2) for k, v in best.items()},
-        "native_max_over_ideal": balance(
-            df.repartitionByRange(n_parts, "v")),
-        "digest_max_over_ideal": balance(
-            repartition_by_digest(df, "v", n_parts, digest=dig,
-                                  sort_within=False)),
-        "stored_vs_native_speedup": round(
-            best["native"] / best["digest_stored"], 2),
-    }
-    print(json.dumps(out))
-
-
-def lmquality_bench() -> None:
-    """LM-quality (CCNet-style fluency) throughput over a ~1M-page slice
-    of the bench pages table (1/8 hash sample, per-lang models with
-    realistic 55%-en skew), for the unigram, bigram AND trigram models:
-    model training time, then corpus scoring via (a) the broadcast-join
-    path and (b) the stored-model stateless mapInPandas scorer — each best
-    of 2 warm reps at local[CPUS], with each scorer also measured at
-    local[8]/local[2] for N-vs-4N scaling evidence when CPUS=32.  One JSON
-    line."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.session import get_spark
-    from sketchlib.spark.textops import (
-        score_with_stored_model,
-        train_unigram_model,
-        unigram_logprob_score,
-    )
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-    mdir = tempfile.mkdtemp(prefix="lmq_model_")
-
-    def best_of(fn, reps=2):
-        fn()  # warm
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.time()
-            fn()
-            best = min(best, time.time() - t0)
-        return best
-
-    def corpus(spark):
-        return spark.read.parquet(path).select("url", "lang", "text").filter(
-            F.abs(F.xxhash64("url")) % 8 == 0
-        )
-
-    def force(scored):
-        # full compute: touch every score, no partial short-circuit
-        return scored.agg(
-            F.count("*"), F.sum("n_tokens"), F.sum("logprob_per_token")
-        ).collect()
-
-    spark = get_spark("lmquality-bench", cpus=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = corpus(spark)
-    n_docs = docs.count()
-
-    t0 = time.time()
-    train_unigram_model(docs, vocab_top_k=65536, quantize=6).write.mode(
-        "overwrite").parquet(f"{mdir}/model")
-    t_train = time.time() - t0
-    model = spark.read.parquet(f"{mdir}/model")
-    n_model = model.count()
-
-    # construct ONCE: the scorer's setup (model collect + broadcast) is a
-    # per-job cost, not per-batch — measure it separately from scoring
-    t0 = time.time()
-    scored_stored = score_with_stored_model(docs, model, id_col="url")
-    t_setup = time.time() - t0
-    t_stored = best_of(lambda: force(scored_stored))
-    scored_join = unigram_logprob_score(
-        docs, id_col="url", model=model, quantize=6)
-    t_join = best_of(lambda: force(scored_join))
-    spark.stop()
-
-    out = {
-        "rows": n_docs, "model_rows": n_model, "cpus": CPUS,
-        "train_sec": round(t_train, 2),
-        "scorer_setup_sec": round(t_setup, 2),
-        "score_stored_sec": round(t_stored, 2),
-        "score_join_sec": round(t_join, 2),
-        "stored_docs_per_sec": round(n_docs / t_stored, 1),
-        "join_docs_per_sec": round(n_docs / t_join, 1),
-    }
-    # bigram (stupid-backoff) upgrade: same corpus, same protocol
-    from sketchlib.spark.textops import (
-        bigram_logprob_score,
-        score_with_stored_bigram,
-        train_bigram_model,
-    )
-
-    spark = get_spark("lmquality-bench-bigram", cpus=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = corpus(spark)
-    t0 = time.time()
-    train_bigram_model(
-        docs, vocab_top_k=65536, bigram_top_k=262144, quantize=6,
-        min_count=2,
-    ).write.mode("overwrite").parquet(f"{mdir}/bimodel")
-    t_btrain = time.time() - t0
-    bimodel = spark.read.parquet(f"{mdir}/bimodel")
-    n_bimodel = bimodel.count()
-    t0 = time.time()
-    bscored_stored = score_with_stored_bigram(docs, bimodel, id_col="url")
-    t_bsetup = time.time() - t0
-    t_bstored = best_of(lambda: force(bscored_stored))
-    bscored_join = bigram_logprob_score(
-        docs, id_col="url", model=bimodel, quantize=6)
-    t_bjoin = best_of(lambda: force(bscored_join))
-    spark.stop()
-    out["bigram"] = {
-        "model_rows": n_bimodel,
-        "train_sec": round(t_btrain, 2),
-        "scorer_setup_sec": round(t_bsetup, 2),
-        "score_stored_sec": round(t_bstored, 2),
-        "score_join_sec": round(t_bjoin, 2),
-        "stored_docs_per_sec": round(n_docs / t_bstored, 1),
-        "join_docs_per_sec": round(n_docs / t_bjoin, 1),
-    }
-
-    # trigram (order-3 stupid backoff): same corpus, same protocol — the
-    # any-order kernel against the fully-JVM three-level join plan
-    from sketchlib.spark.textops import (
-        ngram_logprob_score,
-        score_with_stored_ngram,
-        train_ngram_model,
-    )
-
-    spark = get_spark("lmquality-bench-trigram", cpus=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = corpus(spark)
-    t0 = time.time()
-    train_ngram_model(
-        docs, order=3, vocab_top_k=65536, ngram_top_k=262144, quantize=6,
-        min_count=2,
-    ).write.mode("overwrite").parquet(f"{mdir}/trimodel")
-    t_ttrain = time.time() - t0
-    trimodel = spark.read.parquet(f"{mdir}/trimodel")
-    n_trimodel = trimodel.count()
-    t0 = time.time()
-    tscored_stored = score_with_stored_ngram(docs, trimodel, id_col="url")
-    t_tsetup = time.time() - t0
-    t_tstored = best_of(lambda: force(tscored_stored))
-    tscored_join = ngram_logprob_score(
-        docs, order=3, id_col="url", model=trimodel, quantize=6)
-    t_tjoin = best_of(lambda: force(tscored_join))
-    spark.stop()
-    out["trigram"] = {
-        "model_rows": n_trimodel,
-        "train_sec": round(t_ttrain, 2),
-        "scorer_setup_sec": round(t_tsetup, 2),
-        "score_stored_sec": round(t_tstored, 2),
-        "score_join_sec": round(t_tjoin, 2),
-        "stored_docs_per_sec": round(n_docs / t_tstored, 1),
-        "join_docs_per_sec": round(n_docs / t_tjoin, 1),
-    }
-
-    if str(CPUS) == "32":
-        t_at = {}
-        bt_at = {}
-        tt_at = {}
-        for n in (8, 2):
-            sp = get_spark(f"lmquality-bench-{n}", cpus=n)
-            sp.sparkContext.setLogLevel("ERROR")
-            sc = score_with_stored_model(
-                corpus(sp), sp.read.parquet(f"{mdir}/model"), id_col="url")
-            t_at[n] = best_of(lambda: force(sc))
-            bsc = score_with_stored_bigram(
-                corpus(sp), sp.read.parquet(f"{mdir}/bimodel"),
-                id_col="url")
-            bt_at[n] = best_of(lambda: force(bsc))
-            tsc = score_with_stored_ngram(
-                corpus(sp), sp.read.parquet(f"{mdir}/trimodel"),
-                id_col="url")
-            tt_at[n] = best_of(lambda: force(tsc))
-            sp.stop()
-        out["score_stored_sec_local8"] = round(t_at[8], 2)
-        out["score_stored_sec_local2"] = round(t_at[2], 2)
-        # north-rule N vs 4N pairs (primary 2->8; 8->32 hits the known
-        # single-kernel-VM allocation ceiling, see BENCH/BASELINE.md)
-        out["scaling_eff_2_to_8"] = round(t_at[2] / (4.0 * t_at[8]), 3)
-        out["scaling_eff_8_to_32"] = round(t_at[8] / (4.0 * t_stored), 3)
-        out["bigram"]["score_stored_sec_local8"] = round(bt_at[8], 2)
-        out["bigram"]["score_stored_sec_local2"] = round(bt_at[2], 2)
-        out["bigram"]["scaling_eff_2_to_8"] = round(
-            bt_at[2] / (4.0 * bt_at[8]), 3)
-        out["bigram"]["scaling_eff_8_to_32"] = round(
-            bt_at[8] / (4.0 * t_bstored), 3)
-        out["trigram"]["score_stored_sec_local8"] = round(tt_at[8], 2)
-        out["trigram"]["score_stored_sec_local2"] = round(tt_at[2], 2)
-        out["trigram"]["scaling_eff_2_to_8"] = round(
-            tt_at[2] / (4.0 * tt_at[8]), 3)
-        out["trigram"]["scaling_eff_8_to_32"] = round(
-            tt_at[8] / (4.0 * t_tstored), 3)
-    shutil.rmtree(mdir, ignore_errors=True)
-    print(json.dumps(out))
-
-
-def sigkernel_bench() -> None:
-    """MinHash signature-stage throughput, kernel="xxh" (JVM chained
-    xxhash64 shingles + explode/groupBy minima) vs kernel="poly" (each
-    token hashed once, polynomial window fold + splitmix64 minima in one
-    zero-Exchange Arrow projection) over a ~1M-page slice of the bench
-    pages.  Best-of-2 warm reps at full parallelism, plus the poly kernel
-    at 2 and 8 cores for the north-rule N-vs-4N scaling evidence.  One
-    JSON line."""
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.dedup import minhash_signatures
-    from sketchlib.spark.session import get_spark
-
-    path = os.path.join(BENCH_DIR, f"pages_{BENCH_ROWS}.parquet")
-    ensure_pages(path, BENCH_ROWS)
-
-    def pages(spark):
-        return (
-            spark.read.parquet(path).select("url", "text")
-            .filter(F.abs(F.xxhash64("url")) % 8 == 0)
-            .withColumn("doc_id", F.xxhash64("url"))
-        )
-
-    def run(spark, kernel):
-        sigs = minhash_signatures(pages(spark), kernel=kernel)
-        # force every signature without collecting them (shiftright keeps
-        # the ANSI sum far from int64 overflow)
-        return sigs.agg(
-            F.count("*").alias("n"),
-            F.sum(F.shiftright(F.element_at("sig", 1), 33)).alias("chk"),
-        ).collect()[0]
-
-    def best_of(spark, kernel, reps=2):
-        run(spark, kernel)  # warm-up
-        best, r = float("inf"), None
-        for _ in range(reps):
-            t0 = time.time()
-            r = run(spark, kernel)
-            best = min(best, time.time() - t0)
-        return best, r
-
-    out = {}
-    spark = get_spark("sigkernel-bench", cpus=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    n_docs = pages(spark).count()
-    for kernel in ("xxh", "poly"):
-        sec, r = best_of(spark, kernel)
-        out[kernel] = {"sec": round(sec, 2),
-                       "docs_per_sec": round(n_docs / sec, 1),
-                       "signed_docs": int(r["n"])}
-    spark.stop()
-
-    scaling = {}
-    for cpus in (2, 8):
-        spark = get_spark(f"sigkernel-poly-{cpus}", cpus=cpus)
-        spark.sparkContext.setLogLevel("ERROR")
-        sec, _ = best_of(spark, "poly")
-        scaling[cpus] = {"sec": round(sec, 2),
-                         "docs_per_sec": round(n_docs / sec, 1)}
-        spark.stop()
-    eff = scaling[8]["docs_per_sec"] / (4.0 * scaling[2]["docs_per_sec"])
-    print(json.dumps({
-        "docs": int(n_docs),
-        "kernels": out,
-        "poly_speedup": round(out["xxh"]["sec"] / out["poly"]["sec"], 2),
-        "poly_scaling": scaling,
-        "poly_scaling_efficiency_2_to_8": round(eff, 3),
-        "cpus": CPUS,
-    }))
-
-
-_MODES = (
-    "--scaling", "--compare-builtin", "--sketches", "--quantilecmp",
-    "--frequent",
-    "--joins", "--profile", "--decontam", "--fuzzydecontam",
-    "--rangepart", "--lmquality",
-    "--incdedup", "--spandedup", "--curate", "--sigkernel",
-    "--measure-build",
-)
+_MODES = ("--scaling", "--measure-build")
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1].startswith("-") and sys.argv[1] not in _MODES:
+    mode = sys.argv[1] if len(sys.argv) > 1 else None
+    if mode is None:
+        main()
+    elif mode == "--scaling":
+        scaling_main()
+    elif mode == "--measure-build":
+        reps = int(sys.argv[4]) if len(sys.argv) > 4 else 3
+        print(json.dumps(measure_build(int(sys.argv[2]), sys.argv[3], reps)))
+    else:
         # An unrecognized flag (e.g. --help) must NOT fall through to the
         # full headline bench — that launches a multi-minute Spark job.
         print(__doc__)
         print("modes:", " ".join(_MODES), "(no flag = headline query bench)")
-        sys.exit(0 if sys.argv[1] in ("-h", "--help") else 2)
-    if len(sys.argv) > 1 and sys.argv[1] == "--scaling":
-        scaling_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--compare-builtin":
-        compare_builtin()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--sketches":
-        sketches_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--quantilecmp":
-        quantile_cmp_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--frequent":
-        frequent_items_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--profile":
-        profile_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--decontam":
-        decontam_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--fuzzydecontam":
-        fuzzydecontam_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--joins":
-        joins_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--rangepart":
-        rangepart_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--incdedup":
-        incdedup_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--spandedup":
-        spandedup_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--curate":
-        curate_bench(url_mode=len(sys.argv) > 2 and sys.argv[2] == "url")
-    elif len(sys.argv) > 1 and sys.argv[1] == "--lmquality":
-        lmquality_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--sigkernel":
-        sigkernel_bench()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--measure-build":
-        reps = int(sys.argv[4]) if len(sys.argv) > 4 else 3
-        print(json.dumps(measure_build(int(sys.argv[2]), sys.argv[3], reps)))
-    else:
-        main()
+        sys.exit(0 if mode in ("-h", "--help") else 2)

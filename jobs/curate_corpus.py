@@ -115,7 +115,7 @@ def main() -> int:
                     help="near-dup MinHash signature kernel (see "
                          "jobs/dedup_corpus.py --sig-kernel; 'poly' — the "
                          "default since the recall-parity soak in "
-                         "BENCH/soak_sigkernel_d4.json — signs in one "
+                         "BENCH/BASELINE.md, 'Recall-parity soak' — signs in one "
                          "zero-Exchange Arrow projection, each token "
                          "hashed once, ~2x the signature stage)")
     ap.add_argument("--normalize-keys", action="store_true",

@@ -38,7 +38,7 @@ session re-registers the files as a bucketed table from the stored meta
 (no metastore) and the probe's join reads the index side shuffle-free
 and pre-sorted; only the new crawl hits an Exchange.  Measured at a
 14M-row index: probe 8.2 -> 5.5 s at 8 cores, scaling eff(2->8) 0.962
-vs 0.83 plain (BENCH/incdedup_1m.json) — the layout a 10^12-row index
+vs 0.83 plain (BENCH/BASELINE.md, "incremental near-dup index") — the layout a 10^12-row index
 wants, where the plain probe's index shuffle IS the job.
 """
 
@@ -71,8 +71,9 @@ def main() -> None:
                          "hashed once, polynomial window fold + splitmix64 "
                          "minima in one zero-Exchange Arrow projection, "
                          "~2x the signature stage — recall parity vs 'xxh' "
-                         "soaked in BENCH/soak_sigkernel_d4.json: max "
-                         "drift 0.0026 over 6 seeded corpora) or 'xxh' "
+                         "soaked in BENCH/BASELINE.md, 'Recall-parity "
+                         "soak': max drift 0.0026 over 6 seeded runs) or "
+                         "'xxh' "
                          "(JVM chained-xxhash64 shingles + groupBy "
                          "minima).  Signatures from different kernels "
                          "never mix: the kernel is stored in the index "

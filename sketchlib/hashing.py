@@ -276,8 +276,8 @@ def poly_window_fold(values, offsets, n: int, lens=None, min_one=None):
 #: keyed by role (block size / "acc" / "tmp"), grown to the largest batch
 #: seen and then reused.  Thread-local so concurrent callers in one
 #: process (direct library users; Spark Python workers are
-#: single-threaded) never share a buffer.  Rationale
-#: (BENCH/poly_buffer_reuse.json): the doubling kernel's fresh temporaries
+#: single-threaded) never share a buffer.  Rationale (BENCH/BASELINE.md,
+#: "Round-5: poly-kernel scratch-buffer reuse"): the doubling kernel's fresh temporaries
 #: are ~6 buffers x batch-bytes per call, and at high worker counts the
 #: page-fault/zeroing rate is the bottleneck the r04 malloc tuning already
 #: flagged — reusing warm buffers measured 1.4x per call at 8 workers and

@@ -381,7 +381,7 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     combination is O(total tokens), and the ``num_perm`` minima are one
     shared splitmix64 mix + a two-pass multiply-add remix and segmented
     min each (measured ~2x the xxh kernel at 1M pages, eff(2→8) 0.85–0.99
-    — BENCH/sigkernel_d4.json) — all inside one
+    — BENCH/BASELINE.md, "poly-kernel MinHash signatures") — all inside one
     zero-Exchange, stateless projection (runs on a readStream unchanged,
     like ``stateless=True``, without the interpreted higher-order-function
     tax).  The SHINGLE SPACE differs from the default (polynomial sums of

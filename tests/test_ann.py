@@ -370,6 +370,34 @@ def test_stored_ivf_probe_chunked_queries(spark, tmp_path):
                           max_query_rows=1, max_chunks=2)
 
 
+def test_stored_ivf_probe_runs_queries_plan_once(spark, tmp_path):
+    """The probe reads its queries in ONE pass: a counting filter UDF on
+    the queries plan sees each row once, for the single-chunk and the
+    chunked probe alike, and collecting the result reads no query row
+    again (the queries reach the executors as a broadcast)."""
+    import pyspark.sql.functions as F
+
+    from sketchlib.spark.ann import ivf_topk_vs_index, write_ivf_index
+
+    emb = _emb(spark)
+    path = str(tmp_path / "ivf_once")
+    write_ivf_index(emb, path, n_lists=8)
+    for max_query_rows in (65536, 3):
+        seen = spark.sparkContext.accumulator(0)
+
+        def count_row(_vid):
+            seen.add(1)
+            return True
+
+        counted = F.udf(count_row, "boolean").asNondeterministic()
+        queries = emb.filter(F.col("vec_id") < 7).filter(counted("vec_id"))
+        out = ivf_topk_vs_index(spark, path, queries, k=5, nprobe=3,
+                                max_query_rows=max_query_rows)
+        assert seen.value == 7, max_query_rows
+        assert {r["query_id"] for r in out.collect()} == set(range(7))
+        assert seen.value == 7, max_query_rows
+
+
 def test_ivf_append_skip_existing_idempotent(spark, tmp_path):
     """skip_existing=True makes a replayed append a no-op (anti-join on
     the index's stored ids, id-only scan): at-least-once callers can't

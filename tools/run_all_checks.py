@@ -3,7 +3,7 @@
     python tools/run_all_checks.py [--quick]
 
 Runs, in order, failing fast:
-1. the pytest suite (159 tests incl. the in-suite plan audit);
+1. the pytest suite (incl. the in-suite plan audit);
 2. the oracle gate (tools/check_oracles.py) at sf0.001 + sf0.01, plus
    sf0.1 unless --quick;
 3. the physical-plan audit (tools/explain_audit.py);
