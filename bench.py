@@ -1,6 +1,6 @@
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line:
+(default: the CPUs this process may run on) and prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 The same record with every rep goes to BENCH/headline_full.json.
 
@@ -32,7 +32,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 BENCH_DIR = os.environ.get("SKETCHLIB_BENCH_DIR", "/tmp/sketchlib_bench")
 BENCH_ROWS = int(os.environ.get("SKETCHLIB_BENCH_ROWS", "8000000"))
 

@@ -740,7 +740,8 @@ def q_ann_exact_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     `text_normalize_dedup`.  The fold is cheaper than the two standalone
     queries were: the exact >=0.45 pair set (the expensive block-matmul
     plan) is computed ONCE and cached (ids-only, KB), feeding both the
-    pair rows and the precision full-outer join."""
+    pair rows and the precision full-outer join; the result is
+    ``localCheckpoint``-ed and the cache released before returning."""
     from sketchlib.spark.ann import cosine_pairs_exact, signrandom_lsh_pairs
 
     emb = load(spark, sf_dir, "embeddings")
@@ -771,7 +772,11 @@ def q_ann_exact_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("lsh_precision_1"),
         )
     )
-    return topk.unionByName(pairs).crossJoin(F.broadcast(prec))
+    # the (small) result is materialized so the pair-set cache can be
+    # released before returning — repeated calls in one session leak nothing
+    out = topk.unionByName(pairs).crossJoin(F.broadcast(prec)).localCheckpoint(eager=True)
+    exact.unpersist()
+    return out
 
 
 def q_emb_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2122,8 +2127,7 @@ def q_hll_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     storing hourly granularity costs nothing in answer quality).  At 100 TB
     the hourly sketch table is KB/row and day/week/month distinct-user
     questions never touch the fact table again."""
-    from sketchlib.hll import HLL
-    from sketchlib.spark.sketch_ops import sketch_aggregate, sketch_merge
+    from sketchlib.spark.sketch_ops import hll_estimate_udf, sketch_aggregate, sketch_merge
 
     ev = load(spark, sf_dir, "events").select(
         "event_type",
@@ -2138,15 +2142,6 @@ def q_hll_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     direct = sketch_aggregate(ev, ["event_type", "day"], "user_id", "hll", {"p": 14})
 
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def est(s):
-        import pandas as pd
-
-        return pd.Series([HLL.deserialize(bytes(b)).estimate() for b in s])
-
     cmp = (
         daily.select("event_type", "day", F.col("sketch").alias("_sa"))
         .join(
@@ -2154,7 +2149,7 @@ def q_hll_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["event_type", "day"],
         )
         .select(
-            "event_type", "day", est("_sa").alias("_est"),
+            "event_type", "day", hll_estimate_udf("_sa").alias("_est"),
             (F.col("_sa") == F.col("_sb")).alias("rollup_equals_direct"),
         )
     )
@@ -2396,8 +2391,8 @@ def q_corpus_profile_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ±2) of exact).  pytest additionally proves profile output byte-equals
     each dedicated single-sketch path."""
     from sketchlib.cms import CMS
-    from sketchlib.hll import HLL
     from sketchlib.spark.sketch_ops import (
+        hll_estimate_udf,
         mg_items_udf,
         profile_aggregate,
         profile_pivot,
@@ -2415,13 +2410,6 @@ def q_corpus_profile_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
          "params": {"width": 8192, "depth": 5}},
     ]
     wide = profile_pivot(profile_aggregate(docs, ["lang"], specs), ["lang"], specs)
-
-    @F.pandas_udf("double")
-    def hll_est(blobs):
-        return pd.Series([
-            None if b is None else HLL.deserialize(bytes(b)).estimate()
-            for b in blobs
-        ], dtype="float64")
 
     @F.pandas_udf("long")
     def cms_probe(blobs, hs):
@@ -2447,7 +2435,7 @@ def q_corpus_profile_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             tdigest_count_udf("td").cast("long").alias("n_docs"),
             F.col("_qs")[0].alias("p50"),
             F.col("_qs")[1].alias("p95"),
-            hll_est("hll").alias("_hll_est"),
+            hll_estimate_udf("hll").alias("_hll_est"),
             F.col("_top.item").alias("top_source"),
             F.col("_top.est").alias("top_source_count"),
             cms_probe("cms", F.xxhash64(F.col("_top.item"))).alias("cms_top_count"),

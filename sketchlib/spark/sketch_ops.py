@@ -30,7 +30,8 @@ spec, named by the spec.
 The shuffle therefore carries one serialized sketch per (partition × key ×
 spec), never raw rows.  The one-sketch APIs (``sketch_*`` here,
 ``tdigest_*`` in ``tdigest_ops``), the long-format ``profile_*``, the
-checkpointer and the streaming operators are thin wrappers over these.
+checkpointer, the streaming operators and the SQL aggregates
+(``spark/sql.py``) are thin wrappers over these.
 
 Ingest rules: hash families project ``xxhash64(value)`` JVM-side
 (whole-stage codegen, no Python string hashing) and ingest int64 through
@@ -48,7 +49,7 @@ from typing import Iterable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
 
 from sketchlib.bloom import Bloom
 from sketchlib.cms import CMS
@@ -371,6 +372,24 @@ def mg_items_udf():
     return f
 
 
+def _blob_udf(fn):
+    """double per sketch row: ``fn(blob bytes)``, NULL for a NULL sketch.
+    Post-aggregation only: runs on sketch rows, never row-scale data."""
+
+    @F.pandas_udf(DoubleType())
+    def f(blobs: pd.Series) -> pd.Series:
+        return pd.Series([None if b is None else fn(bytes(b)) for b in blobs],
+                         dtype="float64")
+
+    return f
+
+
+hll_estimate_udf = _blob_udf(lambda b: HLL.deserialize(b).estimate())
+kmv_estimate_udf = _blob_udf(lambda b: KMV.deserialize(b).estimate())
+#: exact count of the values a CMS ingested
+cms_total_udf = _blob_udf(lambda b: float(CMS.deserialize(b).total))
+
+
 # ---------------------------------------------------------------------------
 # One-pass multi-sketch profile, long format (keys, sk_name, sketch)
 # ---------------------------------------------------------------------------
@@ -509,35 +528,19 @@ def profile_table(
     staged = df.select(*keys, *cols).withColumn("_ones", F.lit(1))
     wide = profile_pivot(profile_aggregate(staged, keys, specs), keys, specs)
 
-    @F.pandas_udf("double")
-    def _hll_est(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else HLL.deserialize(bytes(b)).estimate()
-             for b in blobs],
-            dtype="float64",
-        )
-
-    @F.pandas_udf("double")
-    def _cms_total(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else float(CMS.deserialize(bytes(b)).total)
-             for b in blobs],
-            dtype="float64",
-        )
-
     # ONE projection over the single wide sketch row, exploded to one row
     # per column — a union of per-column selects would re-execute the
     # whole scan+build subtree once per column (2C scans, exactly what
     # this operator exists to avoid)
     q = tdigest_quantiles_udf([0.5, 0.95], discrete=discrete)
-    n_rows = F.coalesce(_cms_total("_rows"), F.lit(0.0))
+    n_rows = F.coalesce(cms_total_udf("_rows"), F.lit(0.0))
     structs = []
     for i, c in enumerate(cols):
         if c in numeric:
             n_vals = tdigest_count_udf(f"t{i}")
             q50, q95 = q(f"t{i}")[0], q(f"t{i}")[1]
         else:
-            n_vals = F.coalesce(_cms_total(f"c{i}"), F.lit(0.0))
+            n_vals = F.coalesce(cms_total_udf(f"c{i}"), F.lit(0.0))
             q50 = q95 = F.lit(None).cast("double")
         structs.append(F.struct(
             F.lit(c).alias("column"),
@@ -545,7 +548,7 @@ def profile_table(
             n_rows.cast("long").alias("n_rows"),
             n_vals.cast("long").alias("n_vals"),
             (n_rows - n_vals).cast("long").alias("n_nulls"),
-            F.coalesce(_hll_est(f"h{i}"), F.lit(0.0)).alias("est_distinct"),
+            F.coalesce(hll_estimate_udf(f"h{i}"), F.lit(0.0)).alias("est_distinct"),
             q50.alias("q50"),
             q95.alias("q95"),
         ))

@@ -1,5 +1,5 @@
-"""SQL surface: register the sketch functions so plain ``spark.sql`` works
-(SURVEY.md §2.9 "UDF/UDAF surface").
+"""SQL surface: every registered sketch family as plain ``spark.sql``
+functions (SURVEY.md §2.9 "UDF/UDAF surface").
 
     from sketchlib.spark.sql import register_sql_functions
     register_sql_functions(spark)
@@ -9,424 +9,226 @@
         FROM docs GROUP BY lang
     ''')
 
-``tdigest_agg`` here is a pandas GROUPED_AGG UDF — convenient for ad-hoc
-SQL, but Catalyst gives GROUPED_AGG UDFs **no partial aggregation**: every
-group's rows shuffle to one reducer.  For production scale use the explicit
-two-phase plan (``sketchlib.spark.tdigest_ops.tdigest_aggregate``); this
-module is the interactive/BI convenience layer over the same wire format,
-so digests built either way are interchangeable (``tdigest_merge_agg``
-merges stored digest columns by byte concat).
+Two aggregates are generated for every kind in ``sketch_ops.SKETCHES``,
+built with that family's one parameter set in ``PARAMS``:
+
+  ``<kind>_agg(col)``        ingests the group's values by the kernel's rule
+      (``_Spec.update``); NULLs are never ingested, so an all-NULL group
+      gives an empty sketch;
+  ``<kind>_merge_agg(blob)`` merges stored sketches (``merge_blobs`` +
+      ``finish_merge``); a group whose sketches are all NULL merges to NULL.
+
+Input types (checked per group; any other type fails the query with an
+error naming the CAST to write):
+  - hll, cms, bloom, kmv take BIGINT, hashed as Spark's ``xxhash64`` hashes
+    a BIGINT.  Write ``hll_agg(CAST(id AS BIGINT))`` for an INT column:
+    Spark hashes 4-byte ints differently, so an INT read as-is would not
+    match the kernel's sketch of the same column;
+  - mg takes STRING;
+  - tdigest, kll, dd take any integer or floating column, read as DOUBLE
+    (NaN is dropped like NULL).
+So a sketch built here is the one ``sketch_aggregate(df, keys, col, kind,
+PARAMS[kind])`` builds over the same rows — byte-identical for every
+family whose merge ignores arrival order (KLL and Misra-Gries agree on
+their ingested totals) — and sketches built either way mix freely in
+``<kind>_merge_agg`` and the query functions.  ``cms_query`` and
+``bloom_contains`` hash their BIGINT probe the same way.
+
+The aggregates are Arrow grouped-aggregate UDFs (PySpark >= 4.1): a
+pandas one would receive a nullable BIGINT as float64 and round the low
+bits away.  Catalyst gives either kind **no partial aggregation** — every
+group's rows shuffle to one reducer — so at scale build with the two-phase
+kernel (``sketch_aggregate`` / ``tdigest_aggregate``) and use this module
+over the stored sketch columns.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, DoubleType, IntegerType
+from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.types import BinaryType, BooleanType, DataType, DoubleType, LongType
 
+from sketchlib.bloom import Bloom
+from sketchlib.cms import CMS
+from sketchlib.ddsketch import DDSketch
+from sketchlib.hashing import xxh64_long
+from sketchlib.kll import KLL
+from sketchlib.mg import MisraGries
+from sketchlib.spark.sketch_ops import SKETCHES, _Spec, hll_estimate_udf, kmv_estimate_udf
+from sketchlib.spark.tdigest_ops import (
+    tdigest_count_udf,
+    tdigest_ks_udf,
+    tdigest_psi_jsd_udf,
+    tdigest_size_udf,
+    tdigest_unwire_udf,
+    tdigest_w1_udf,
+    tdigest_wire_udf,
+)
 from sketchlib.tdigest.core import (
-    MergingDigest,
     bytes_to_centroids,
     cdf_of_centroids,
-    centroids_to_bytes,
-    merge_centroid_arrays,
-    parse_tdigest_wire,
     quantiles_of_centroids,
     trimmed_mean_of_centroids,
-    wrap_tdigest_wire,
 )
 
+#: the parameters every SQL-built sketch of a family uses
+PARAMS = {
+    "tdigest": {"delta": 0.01},
+    "hll": {"p": 14},
+    "cms": {"width": 16384, "depth": 5},
+    "bloom": {"expected_n": 100_000, "fpr": 0.01},
+    "kll": {"k": 200},
+    "kmv": {"k": 1024},
+    "mg": {"m": 64},
+    "dd": {"alpha": 0.01, "max_bins": 2048},
+}
 
-def register_sql_functions(spark: SparkSession, delta: float = 0.01) -> None:
-    """Idempotent registration of the sketch SQL surface (t-digest family;
-    sibling-sketch query functions are driven through their own modules)."""
+#: per kernel ingest rule: does an Arrow type qualify, and the SQL type to
+#: CAST anything else to
+_ACCEPTS = {
+    "hash": (lambda t: t == pa.int64(), "BIGINT"),
+    "raw": (lambda t: pa.types.is_string(t) or pa.types.is_large_string(t), "STRING"),
+    "double": (lambda t: pa.types.is_integer(t) or pa.types.is_floating(t), "DOUBLE"),
+}
+
+
+def _check(name: str, rule: str, arr: pa.Array) -> None:
+    ok, sql_type = _ACCEPTS[rule]
+    if not ok(arr.type):
+        raise TypeError(f"{name} takes {sql_type}, got Arrow type {arr.type}: "
+                        f"pass CAST(<column> AS {sql_type})")
+
+
+def _ingest(rule: str, arr: pa.Array) -> np.ndarray:
+    """The non-NULL values of one group in the form ``_Spec.update`` takes
+    (the kernel's ``_Spec.values`` over its JVM-side projection)."""
+    arr = arr.drop_null()
+    if rule == "hash":
+        return xxh64_long(arr.to_numpy())
+    if rule == "raw":
+        return arr.to_numpy(zero_copy_only=False)
+    return arr.cast(pa.float64(), safe=False).to_numpy()
+
+
+def _aggregates(kind: str) -> dict:
+    """``<kind>_agg`` and ``<kind>_merge_agg`` for one registered family."""
+    spec = _Spec({"name": kind, "kind": kind, "params": PARAMS[kind]}, 0)
+    name = f"{kind}_agg"
+
+    @arrow_udf(BinaryType())
+    def agg(v: pa.Array) -> bytes:
+        _check(name, spec.rule, v)
+        sk = spec.new()
+        spec.update(sk, _ingest(spec.rule, v), None, None, slice(None))
+        return spec.blob(sk, merged=True)
+
+    @arrow_udf(BinaryType())
+    def merge_agg(blobs: pa.Array) -> bytes | None:
+        present = blobs.drop_null().to_pylist()
+        acc = spec.cls.merge_blobs(None, present, **spec.params) if present else None
+        return spec.blob(acc, merged=True)
+
+    return {name: agg, f"{kind}_merge_agg": merge_agg}
+
+
+# ---------------------------------------------------------------------------
+# Query functions with per-row arguments.  Post-aggregation only: they loop
+# over sketch rows in Python, never over row-scale data.
+# ---------------------------------------------------------------------------
+
+
+def _rowwise(rtype: DataType, fn):
+    """``(blob, arg...) -> rtype``: ``fn(blob bytes, arg...)`` per row, NULL
+    where the blob is NULL or empty or an argument is NULL."""
+
+    @pandas_udf(rtype)
+    def f(blob: pd.Series, *args: pd.Series) -> pd.Series:
+        return pd.Series([
+            None if b is None or len(b) == 0 or any(x is None for x in a)
+            else fn(bytes(b), *a)
+            for b, *a in zip(blob, *args)
+        ], dtype="object")
+
+    return f
+
+
+def _probe(name: str, rtype: DataType, out_type: pa.DataType, fn):
+    """``(blob, key BIGINT) -> rtype``: ``fn(blob bytes, hashed key)`` per
+    row, the key hashed as the hash-family aggregates hash it; NULL where
+    either side is NULL."""
+
+    @arrow_udf(rtype)
+    def f(blob: pa.Array, key: pa.Array) -> pa.Array:
+        _check(name, "hash", key)
+        h = xxh64_long(key.fill_null(0).to_numpy())
+        return pa.array([
+            None if b is None or k is None else fn(b, h[i:i + 1])
+            for i, (b, k) in enumerate(zip(blob.to_pylist(), key.to_pylist()))
+        ], type=out_type)
+
+    return f
+
+
+def _td_quantile(b: bytes, p, discrete: bool = False) -> float:
+    return float(quantiles_of_centroids(*bytes_to_centroids(b), [float(p)], discrete)[0])
+
+
+def _td_trimmed_mean(b: bytes, lo, hi) -> float | None:
+    """Mean of the mass between rank quantiles [lo, hi); NULL for invalid
+    bounds (NaN fails every comparison) instead of aborting the job."""
+    lo, hi = float(lo), float(hi)
+    if not 0.0 <= lo < hi <= 1.0:
+        return None
+    return trimmed_mean_of_centroids(*bytes_to_centroids(b), lo, hi)
+
+
+def _td_winsor_bound(b: bytes, p) -> float | None:
+    """The rank-``p`` clip value (discrete mode ⇒ an exact data value): use
+    in pairs, ``greatest(lo, least(hi, v))``."""
+    return _td_quantile(b, p, discrete=True) if 0.0 <= float(p) <= 1.0 else None
+
+
+def _quantile(cls):
+    return lambda b, p: float(np.atleast_1d(cls.deserialize(b).quantile([float(p)]))[0])
+
+
+FUNCTIONS = {
+    **{n: f for kind in SKETCHES for n, f in _aggregates(kind).items()},
+    "tdigest_quantile": _rowwise(DoubleType(), _td_quantile),
+    "tdigest_cdf": _rowwise(DoubleType(), lambda b, q: float(
+        cdf_of_centroids(*bytes_to_centroids(b), [float(q)])[0])),
+    "tdigest_trimmed_mean": _rowwise(DoubleType(), _td_trimmed_mean),
+    "tdigest_winsor_bound": _rowwise(DoubleType(), _td_winsor_bound),
+    "tdigest_ks": tdigest_ks_udf,
+    "tdigest_w1": tdigest_w1_udf,
+    "tdigest_psi_jsd": tdigest_psi_jsd_udf(),
+    "tdigest_size": tdigest_size_udf,
+    "tdigest_count": tdigest_count_udf,
+    "tdigest_to_wire": tdigest_wire_udf(PARAMS["tdigest"]["delta"]),
+    "tdigest_from_wire": tdigest_unwire_udf,
+    "hll_estimate": hll_estimate_udf,
+    "kmv_estimate": kmv_estimate_udf,
+    "cms_query": _probe("cms_query", LongType(), pa.int64(),
+                        lambda b, h: int(CMS.deserialize(b).query_hashed(h)[0])),
+    "cms_inner_product": _rowwise(LongType(), lambda a, b: int(
+        CMS.deserialize(a).inner_product(CMS.deserialize(bytes(b))))),
+    "bloom_contains": _probe("bloom_contains", BooleanType(), pa.bool_(),
+                             lambda b, h: bool(Bloom.deserialize(b).contains_hashed(h)[0])),
+    "kll_quantile": _rowwise(DoubleType(), _quantile(KLL)),
+    "dd_quantile": _rowwise(DoubleType(), _quantile(DDSketch)),
+    "mg_estimate": _rowwise(LongType(), lambda b, item: (
+        MisraGries.deserialize(b).estimate(str(item)))),
+}
+
+
+def register_sql_functions(spark: SparkSession) -> None:
+    """Register every function in ``FUNCTIONS`` under its name
+    (idempotent)."""
     from sketchlib.spark.shipping import ensure_on_workers
 
     ensure_on_workers(spark)
-
-    @pandas_udf(BinaryType())
-    def tdigest_agg(v: pd.Series) -> bytes:
-        d = MergingDigest(delta=delta)
-        d.update_batch(v.to_numpy(dtype="float64", na_value=np.nan))
-        d.compress()
-        return d.serialize()
-
-    @pandas_udf(BinaryType())
-    def tdigest_merge_agg(blobs: pd.Series) -> bytes:
-        d = MergingDigest.deserialize(
-            b"".join(bytes(b) for b in blobs if b is not None), delta=delta
-        )
-        d.compress()
-        return d.serialize()
-
-    @pandas_udf(DoubleType())
-    def tdigest_quantile(dig: pd.Series, p: pd.Series) -> pd.Series:
-        out = []
-        for b, pp in zip(dig, p):
-            if b is None or len(b) == 0:
-                out.append(float("nan"))
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(float(quantiles_of_centroids(m, n, [float(pp)])[0]))
-        return pd.Series(out)
-
-    @pandas_udf(DoubleType())
-    def tdigest_cdf(dig: pd.Series, q: pd.Series) -> pd.Series:
-        out = []
-        for b, qq in zip(dig, q):
-            if b is None or len(b) == 0:
-                out.append(float("nan"))
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(float(cdf_of_centroids(m, n, [float(qq)])[0]))
-        return pd.Series(out)
-
-    @pandas_udf(DoubleType())
-    def tdigest_trimmed_mean(dig: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
-        import math
-
-        out = []
-        for b, l, h in zip(dig, lo, hi):
-            # SQL NULL doubles arrive as NaN (not None) through Arrow, and
-            # invalid bounds must degrade per-row, not abort the job
-            if (
-                b is None or len(b) == 0 or l is None or h is None
-                or math.isnan(l) or math.isnan(h) or not 0.0 <= l < h <= 1.0
-            ):
-                out.append(float("nan"))
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(trimmed_mean_of_centroids(m, n, float(l), float(h)))
-        return pd.Series(out)
-
-    @pandas_udf(DoubleType())
-    def tdigest_ks(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-        """Two-sample KS distance between two digest columns — the SQL form
-        of the drift monitor (``tdigest_ops.tdigest_ks_udf``).  NULL when
-        either side is NULL or holds zero centroids."""
-        from sketchlib.tdigest.core import ks_of_centroids
-
-        out = []
-        for a, b in zip(dig_a, dig_b):
-            if a is None or b is None or len(a) == 0 or len(b) == 0:
-                out.append(None)
-                continue
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                out.append(float(ks_of_centroids(ma, na, mb, nb)))
-        return pd.Series(out, dtype="float64")
-
-    @pandas_udf(DoubleType())
-    def tdigest_w1(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-        """1-Wasserstein distance between two digest columns — the SQL form
-        of ``tdigest_ops.tdigest_w1_udf`` (drift in VALUE units).  NULL
-        when either side is NULL or holds zero centroids."""
-        from sketchlib.tdigest.core import w1_of_centroids
-
-        out = []
-        for a, b in zip(dig_a, dig_b):
-            if a is None or b is None or len(a) == 0 or len(b) == 0:
-                out.append(None)
-                continue
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                out.append(float(w1_of_centroids(ma, na, mb, nb)))
-        return pd.Series(out, dtype="float64")
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def tdigest_psi_jsd(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-        """array<double> [psi, jsd] between two digest columns — the SQL
-        form of ``tdigest_ops.tdigest_psi_jsd_udf`` at its defaults
-        (decile bins on the second argument's grid, eps 1e-6, 9-decimal
-        rounding).  NULL when either side is NULL or holds zero
-        centroids."""
-        from sketchlib.tdigest.core import psi_jsd_of_centroids
-
-        out = []
-        for a, b in zip(dig_a, dig_b):
-            if a is None or b is None or len(a) == 0 or len(b) == 0:
-                out.append(None)
-                continue
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                psi, jsd = psi_jsd_of_centroids(ma, na, mb, nb)
-                out.append([round(psi, 9), round(jsd, 9)])
-        return pd.Series(out)
-
-    @pandas_udf(DoubleType())
-    def tdigest_winsor_bound(dig: pd.Series, p: pd.Series) -> pd.Series:
-        """Winsorize-bound helper: the rank-``p`` clip value read off a
-        digest (discrete mode ⇒ an exact data value).  Use in pairs:
-        ``greatest(lo, least(hi, v))`` with lo = tdigest_winsor_bound(d, .05)
-        and hi = tdigest_winsor_bound(d, .95)."""
-        import math
-
-        out = []
-        for b, q in zip(dig, p):
-            if (
-                b is None or len(b) == 0 or q is None or math.isnan(q)
-                or not 0.0 <= q <= 1.0
-            ):
-                out.append(float("nan"))
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(
-                    float(quantiles_of_centroids(m, n, [float(q)],
-                                                 discrete=True)[0])
-                )
-        return pd.Series(out)
-
-    @pandas_udf(IntegerType())
-    def tdigest_size(dig: pd.Series) -> pd.Series:
-        return pd.Series([0 if b is None else len(b) // 16 for b in dig],
-                         dtype="int32")
-
-    @pandas_udf(DoubleType())
-    def tdigest_count(dig: pd.Series) -> pd.Series:
-        out = []
-        for b in dig:
-            if b is None or len(b) == 0:
-                out.append(0.0)
-            else:
-                _, n = bytes_to_centroids(bytes(b))
-                out.append(float(n.sum()))
-        return pd.Series(out)
-
-    @pandas_udf(BinaryType())
-    def tdigest_to_wire(dig: pd.Series) -> pd.Series:
-        # session-delta, merging mode: the header records how the blob was built
-        return pd.Series([
-            None if b is None else wrap_tdigest_wire(bytes(b), delta, False)
-            for b in dig
-        ])
-
-    @pandas_udf(BinaryType())
-    def tdigest_from_wire(blob: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if b is None else parse_tdigest_wire(bytes(b))[0] for b in blob
-        ])
-
-    spark.udf.register("tdigest_agg", tdigest_agg)
-    spark.udf.register("tdigest_merge_agg", tdigest_merge_agg)
-    spark.udf.register("tdigest_to_wire", tdigest_to_wire)
-    spark.udf.register("tdigest_from_wire", tdigest_from_wire)
-    spark.udf.register("tdigest_quantile", tdigest_quantile)
-    spark.udf.register("tdigest_cdf", tdigest_cdf)
-    spark.udf.register("tdigest_trimmed_mean", tdigest_trimmed_mean)
-    spark.udf.register("tdigest_ks", tdigest_ks)
-    spark.udf.register("tdigest_w1", tdigest_w1)
-    spark.udf.register("tdigest_psi_jsd", tdigest_psi_jsd)
-    spark.udf.register("tdigest_winsor_bound", tdigest_winsor_bound)
-    spark.udf.register("tdigest_size", tdigest_size)
-    spark.udf.register("tdigest_count", tdigest_count)
-
-    # ---- sibling sketches ------------------------------------------------
-    from pyspark.sql.types import BooleanType, LongType
-
-    from sketchlib.bloom import Bloom
-    from sketchlib.cms import CMS
-    from sketchlib.hll import HLL
-    from sketchlib.kll import KLL
-
-    def _vals(v: pd.Series) -> np.ndarray:
-        return v.to_numpy(dtype="int64", na_value=0)
-
-    @pandas_udf(BinaryType())
-    def hll_agg(v: pd.Series) -> bytes:
-        h = HLL(p=14)
-        h.update_batch(_vals(v))
-        return h.serialize()
-
-    @pandas_udf(DoubleType())
-    def hll_estimate(blobs: pd.Series) -> pd.Series:
-        return pd.Series([
-            float("nan") if b is None else HLL.deserialize(bytes(b)).estimate()
-            for b in blobs
-        ])
-
-    @pandas_udf(BinaryType())
-    def hll_merge_agg(blobs: pd.Series) -> bytes:
-        out = None
-        for b in blobs:
-            if b is None:
-                continue
-            h = HLL.deserialize(bytes(b))
-            out = h if out is None else out.merge(h)
-        return (out or HLL(p=14)).serialize()
-
-    @pandas_udf(LongType())
-    def cms_inner_product(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            if x is None or y is None:
-                out.append(None)
-                continue
-            out.append(int(
-                CMS.deserialize(bytes(x)).inner_product(
-                    CMS.deserialize(bytes(y)))
-            ))
-        return pd.Series(out, dtype="object")
-
-    @pandas_udf(BinaryType())
-    def cms_agg(v: pd.Series) -> bytes:
-        c = CMS(width=16384, depth=5)
-        c.update_batch(_vals(v))
-        return c.serialize()
-
-    @pandas_udf(LongType())
-    def cms_query(blob: pd.Series, key: pd.Series) -> pd.Series:
-        out = []
-        for b, x in zip(blob, key):
-            if b is None or x is None:
-                out.append(None)
-                continue
-            c = CMS.deserialize(bytes(b))
-            out.append(int(c.query(np.asarray([x], dtype=np.int64))[0]))
-        return pd.Series(out, dtype="object")
-
-    @pandas_udf(BinaryType())
-    def bloom_agg(v: pd.Series) -> bytes:
-        b = Bloom(expected_n=100_000, fpr=0.01)
-        b.update_batch(_vals(v))
-        return b.serialize()
-
-    @pandas_udf(BooleanType())
-    def bloom_contains(blob: pd.Series, key: pd.Series) -> pd.Series:
-        out = []
-        for b, x in zip(blob, key):
-            if b is None or x is None:
-                out.append(None)
-                continue
-            f = Bloom.deserialize(bytes(b))
-            out.append(bool(f.contains(np.asarray([x], dtype=np.int64))[0]))
-        return pd.Series(out, dtype="object")
-
-    @pandas_udf(BinaryType())
-    def kll_agg(v: pd.Series) -> bytes:
-        s = KLL(k=200)
-        s.update_batch(v.to_numpy(dtype="float64", na_value=np.nan))
-        return s.serialize()
-
-    @pandas_udf(DoubleType())
-    def kll_quantile(blob: pd.Series, p: pd.Series) -> pd.Series:
-        out = []
-        for b, pp in zip(blob, p):
-            if b is None or pp is None:
-                out.append(float("nan"))
-                continue
-            s = KLL.deserialize(bytes(b))
-            out.append(float(np.atleast_1d(s.quantile([float(pp)]))[0]))
-        return pd.Series(out)
-
-    spark.udf.register("hll_agg", hll_agg)
-    spark.udf.register("hll_merge_agg", hll_merge_agg)
-    spark.udf.register("hll_estimate", hll_estimate)
-    spark.udf.register("cms_agg", cms_agg)
-    spark.udf.register("cms_query", cms_query)
-    spark.udf.register("cms_inner_product", cms_inner_product)
-    spark.udf.register("bloom_agg", bloom_agg)
-    spark.udf.register("bloom_contains", bloom_contains)
-    from sketchlib.kmv import KMV
-
-    @pandas_udf(BinaryType())
-    def kmv_agg(v: pd.Series) -> bytes:
-        s = KMV(k=1024)
-        s.update_batch(_vals(v))
-        return s.serialize()
-
-    @pandas_udf(BinaryType())
-    def kmv_merge_agg(blobs: pd.Series) -> bytes:
-        out = None
-        for b in blobs:
-            if b is None:
-                continue
-            s = KMV.deserialize(bytes(b))
-            out = s if out is None else out.merge(s)
-        return (out or KMV(k=1024)).serialize()
-
-    @pandas_udf(DoubleType())
-    def kmv_estimate(blobs: pd.Series) -> pd.Series:
-        return pd.Series([
-            float("nan") if b is None else KMV.deserialize(bytes(b)).estimate()
-            for b in blobs
-        ])
-
-    from sketchlib.mg import MisraGries
-
-    @pandas_udf(BinaryType())
-    def mg_agg(v: pd.Series) -> bytes:
-        s = MisraGries(m=64)
-        s.update_batch(v.to_numpy(dtype=object))
-        return s.serialize()
-
-    @pandas_udf(BinaryType())
-    def mg_merge_agg(blobs: pd.Series) -> bytes:
-        out = None
-        for b in blobs:
-            if b is None:
-                continue
-            s = MisraGries.deserialize(bytes(b))
-            out = s if out is None else out.merge(s)
-        return (out or MisraGries(m=64)).serialize()
-
-    @pandas_udf(LongType())
-    def mg_estimate(blob: pd.Series, item: pd.Series) -> pd.Series:
-        out = []
-        for b, x in zip(blob, item):
-            if b is None or x is None:
-                out.append(None)
-                continue
-            out.append(MisraGries.deserialize(bytes(b)).estimate(str(x)))
-        return pd.Series(out, dtype="object")
-
-    from sketchlib.ddsketch import DDSketch
-
-    @pandas_udf(BinaryType())
-    def dd_agg(v: pd.Series) -> bytes:
-        s = DDSketch(alpha=0.01, max_bins=2048)
-        s.update_batch(v.to_numpy(dtype="float64", na_value=np.nan))
-        return s.serialize()
-
-    @pandas_udf(BinaryType())
-    def dd_merge_agg(blobs: pd.Series) -> bytes:
-        out = None
-        for b in blobs:
-            if b is None:
-                continue
-            s = DDSketch.deserialize(bytes(b))
-            out = s if out is None else out.merge(s)
-        return (out or DDSketch(alpha=0.01, max_bins=2048)).serialize()
-
-    @pandas_udf(DoubleType())
-    def dd_quantile(blob: pd.Series, p: pd.Series) -> pd.Series:
-        out = []
-        for b, pp in zip(blob, p):
-            if b is None or pp is None:
-                out.append(float("nan"))
-                continue
-            s = DDSketch.deserialize(bytes(b))
-            out.append(float(np.atleast_1d(s.quantile([float(pp)]))[0]))
-        return pd.Series(out)
-
-    spark.udf.register("kll_agg", kll_agg)
-    spark.udf.register("kll_quantile", kll_quantile)
-    spark.udf.register("dd_agg", dd_agg)
-    spark.udf.register("dd_merge_agg", dd_merge_agg)
-    spark.udf.register("dd_quantile", dd_quantile)
-    spark.udf.register("kmv_agg", kmv_agg)
-    spark.udf.register("kmv_merge_agg", kmv_merge_agg)
-    spark.udf.register("kmv_estimate", kmv_estimate)
-    spark.udf.register("mg_agg", mg_agg)
-    spark.udf.register("mg_merge_agg", mg_merge_agg)
-    spark.udf.register("mg_estimate", mg_estimate)
+    for name, f in FUNCTIONS.items():
+        spark.udf.register(name, f)

@@ -376,3 +376,122 @@ def test_sql_tdigest_psi_jsd(spark):
     assert spark.sql(
         "SELECT tdigest_psi_jsd(CAST(NULL AS BINARY), CAST(NULL AS BINARY)) AS e"
     ).collect()[0]["e"] is None
+
+
+#: every SQL name registered before the aggregates were generated from the
+#: sketch registry — all must keep resolving
+LEGACY_NAMES = [
+    "tdigest_agg", "tdigest_merge_agg", "tdigest_to_wire", "tdigest_from_wire",
+    "tdigest_quantile", "tdigest_cdf", "tdigest_trimmed_mean", "tdigest_ks",
+    "tdigest_w1", "tdigest_psi_jsd", "tdigest_winsor_bound", "tdigest_size",
+    "tdigest_count", "hll_agg", "hll_merge_agg", "hll_estimate", "cms_agg",
+    "cms_query", "cms_inner_product", "bloom_agg", "bloom_contains", "kll_agg",
+    "kll_quantile", "dd_agg", "dd_merge_agg", "dd_quantile", "kmv_agg",
+    "kmv_merge_agg", "kmv_estimate", "mg_agg", "mg_merge_agg", "mg_estimate",
+]
+#: the column each family's SQL aggregate reads: BIGINT for the hash
+#: families, STRING for mg, DOUBLE for the numeric ones
+SQL_COL = {"tdigest": "x", "hll": "v", "cms": "v", "bloom": "v", "kmv": "v",
+           "mg": "s", "kll": "x", "dd": "x"}
+BIG = 2**53 + 1  # the smallest BIGINT a float64 cannot hold
+
+
+def test_sql_registers_every_family(spark):
+    from sketchlib.spark.sketch_ops import SKETCHES
+    from sketchlib.spark.sql import register_sql_functions
+
+    register_sql_functions(spark)
+    generated = [f"{k}_{a}" for k in SKETCHES for a in ("agg", "merge_agg")]
+    assert len(LEGACY_NAMES) == 32
+    missing = [n for n in LEGACY_NAMES + generated
+               if not spark.catalog.functionExists(n)]
+    assert not missing, missing
+
+
+@pytest.fixture(scope="module")
+def nullable(spark):
+    """200 rows for each of the keys NULL, "a", "b": a sub-key, and
+    NULL-bearing BIGINT (with 2^53 and 2^53+1), DOUBLE and STRING columns."""
+    rows = [
+        (None if i % 3 == 0 else "ab"[i % 3 - 1], i % 4,
+         None if i % 7 == 0 else BIG if i % 11 == 0 else BIG - 1 if i % 13 == 0
+         else (i * 7919) % 1000 - 500,
+         None if i % 5 == 0 else float((i * 37) % 101),
+         None if i % 6 == 0 else f"w{i % 23}")
+        for i in range(600)
+    ]
+    df = spark.createDataFrame(rows, "g string, sub int, v long, x double, s string")
+    df.createOrReplaceTempView("nullable_sql")
+    return df
+
+
+def test_sql_aggs_match_kernel_bytes(spark, nullable):
+    """Each ``<kind>_agg`` builds the bytes ``sketch_aggregate`` builds with
+    the same params on NULL-bearing input (KLL and MG, whose bytes depend on
+    arrival order, on ingested totals); ``<kind>_merge_agg`` over
+    per-(key, sub-key) sketches equals the direct aggregate where the merge
+    is exact; the BIGINT probes find 2^53+1 in the hash sketches."""
+    from tests.test_kernel import ORDER_SENSITIVE, _total
+
+    from sketchlib.spark.sketch_ops import SKETCHES, sketch_aggregate
+    from sketchlib.spark.sql import PARAMS, register_sql_functions
+
+    register_sql_functions(spark)
+    aggs = ", ".join(f"{k}_agg({SQL_COL[k]}) AS {k}" for k in SKETCHES)
+    merges = ", ".join(f"{k}_merge_agg({k}) AS {k}" for k in SKETCHES)
+    direct = {r["g"]: r for r in spark.sql(
+        f"SELECT g, {aggs} FROM nullable_sql GROUP BY g").collect()}
+    merged = {r["g"]: r for r in spark.sql(f"""
+        WITH p AS (SELECT g, sub, {aggs} FROM nullable_sql GROUP BY g, sub)
+        SELECT g, {merges} FROM p GROUP BY g""").collect()}
+    assert set(direct) == set(merged) == {None, "a", "b"}
+
+    lossy_merge = ORDER_SENSITIVE | {"tdigest"}  # compress is not a union
+    for kind in SKETCHES:
+        kernel = {r["g"]: bytes(r["sketch"]) for r in sketch_aggregate(
+            nullable, ["g"], SQL_COL[kind], kind, PARAMS[kind]).collect()}
+        assert set(kernel) == set(direct), kind
+        for g, want in kernel.items():
+            sql_b, merged_b = bytes(direct[g][kind]), bytes(merged[g][kind])
+            if kind in ORDER_SENSITIVE:
+                assert _total(kind, sql_b) == _total(kind, want), (kind, g)
+            else:
+                assert sql_b == want, (kind, g)
+            if kind in lossy_merge:
+                assert _total(kind, merged_b) == _total(kind, want), (kind, g)
+            else:
+                assert merged_b == want, (kind, g)
+
+    probes = {r["g"]: r for r in spark.sql(f"""
+        WITH d AS (SELECT g, {aggs} FROM nullable_sql GROUP BY g)
+        SELECT g, cms_query(cms, {BIG}) AS c, bloom_contains(bloom, {BIG}) AS b,
+               cms_query(cms, CAST(NULL AS BIGINT)) AS n
+        FROM d""").collect()}
+    exact = {}
+    for r in nullable.collect():
+        exact[r["g"]] = exact.get(r["g"], 0) + (r["v"] == BIG)
+    for g, r in probes.items():
+        assert r["c"] == exact[g] > 0 and r["b"] is True and r["n"] is None, g
+
+
+@pytest.mark.parametrize("arg", ["sub", "s"], ids=["int", "string"])
+def test_sql_hash_agg_rejects_non_bigint(spark, nullable, arg):
+    from sketchlib.spark.sql import register_sql_functions
+
+    register_sql_functions(spark)
+    with pytest.raises(Exception, match=r"hll_agg takes BIGINT.*CAST"):
+        spark.sql(f"SELECT g, hll_agg({arg}) FROM nullable_sql GROUP BY g").collect()
+
+
+def test_sql_merge_agg_all_null_is_null(spark, nullable):
+    from sketchlib.spark.sketch_ops import SKETCHES
+    from sketchlib.spark.sql import register_sql_functions
+
+    register_sql_functions(spark)
+    merges = ", ".join(f"{k}_merge_agg(b) AS {k}" for k in SKETCHES)
+    rows = spark.sql(f"""
+        SELECT g, {merges}
+        FROM (SELECT g, CAST(NULL AS BINARY) AS b FROM nullable_sql) GROUP BY g
+    """).collect()
+    assert len(rows) == 3
+    assert all(r[k] is None for r in rows for k in SKETCHES)

@@ -3,27 +3,13 @@ session config — DST session timezone, odd shuffle partition count, small
 Arrow batches, AQE off — any layout/timezone/batch-size dependence in a
 result would surface as a MISMATCH here before it surfaces in the
 driver's window."""
-import math, os, sys
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
+import os
+import sys
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-def norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=repr)
-    return out
+from tools.check_oracles import TABLES, norm
 
 import __spark_entry__ as e
 spark = (SparkSession.builder.master("local[5]")
