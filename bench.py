@@ -215,6 +215,8 @@ def main() -> None:
             sc = json.load(f)
         out["pages_bench"] = {
             "rows": sc["rows"],
+            # the host the record was measured on, which need not be this one
+            "cpus": sc["local32"]["cpus"],
             "e2e_docs_per_sec_local32": sc["local32"]["e2e"]["docs_per_sec"],
             "scan_docs_per_sec_local32": sc["local32"]["scan"]["docs_per_sec"],
             "scaling_efficiency_n_vs_4n": sc["scaling_efficiency_2_to_8"],

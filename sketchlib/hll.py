@@ -34,7 +34,7 @@ import struct
 
 import numpy as np
 
-from sketchlib.aggregator import Aggregator
+from sketchlib.aggregator import Aggregator, segment_ids
 from sketchlib.hashing import hash64
 
 _MAGIC_DENSE = b"HLD1"
@@ -71,6 +71,92 @@ def _alpha(m: int) -> float:
     if m == 64:
         return 0.709
     return 0.7213 / (1.0 + 1.079 / m)
+
+
+def _idx_rho(h: np.ndarray, p: int) -> tuple[np.ndarray, np.ndarray]:
+    """(register index, rho) of pre-hashed uint64 values."""
+    idx = (h >> np.uint64(64 - p)).astype(np.int64)
+    w = h & np.uint64((1 << (64 - p)) - 1)
+    # rho = leading-zero count of the (64-p)-bit suffix + 1
+    #     = (64-p) + 1 - bit_length(w); frexp exponent == bit_length
+    # exact because w < 2^50 ≤ 2^53 for p ≥ 14; for p < 14 the top bits
+    # still dominate bit_length (float rounding can't cross a power of 2
+    # upward for values below 2^63 except at all-ones mantissa overflow,
+    # which we guard by clipping rho to its max).
+    bl = np.frexp(w.astype(np.float64))[1]
+    rho = np.clip((64 - p) + 1 - bl, 1, 64 - p + 1).astype(np.uint8)
+    rho[w == 0] = 64 - p + 1
+    return idx, rho
+
+
+def _emit_segments(seg: np.ndarray, idx: np.ndarray, rho: np.ndarray,
+                   k: int, p: int) -> list[bytes]:
+    """``serialize()`` of each of ``k`` sketches given as (segment,
+    register, rho) pairs: one sort by (segment, register), the max rho of
+    each run, then a sparse blob below the density cutoff and a dense one
+    at or above it — the register set alone fixes the bytes."""
+    m = 1 << p
+    reg = (seg.astype(np.int64) << p) | idx
+    order = np.argsort(reg)
+    reg, rho = reg[order], rho[order]
+    if len(reg):
+        at = np.flatnonzero(np.r_[True, reg[1:] != reg[:-1]])
+        reg, rho = reg[at], np.maximum.reduceat(rho, at)
+    uidx = reg & (m - 1)
+    n = np.bincount(reg >> p, minlength=k).tolist()
+    itype, isz = ("<u2", 2) if p <= 16 else ("<u4", 4)
+    idx_b, rho_b = uidx.astype(itype).tobytes(), rho.astype(np.uint8).tobytes()
+    sparse, dense = _MAGIC_SPARSE + bytes([p]), _MAGIC_DENSE + bytes([p])
+    out, a = [], 0
+    for c in n:
+        if c * 3 < m:
+            out.append(b"".join((sparse, struct.pack("<I", c),
+                                 idx_b[isz * a:isz * (a + c)], rho_b[a:a + c])))
+        else:
+            regs = np.zeros(m, dtype=np.uint8)
+            regs[uidx[a:a + c]] = rho[a:a + c]
+            out.append(dense + regs.tobytes())
+        a += c
+    return out
+
+
+def _parse_blobs(blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray, int] | None:
+    """(blob of each pair, register, rho, p) of serialized sketches of one
+    precision, or None when any blob is malformed or the precisions differ
+    (``deserialize``/``merge`` then raise their own errors)."""
+    lens = np.fromiter(map(len, blobs), dtype=np.int64, count=len(blobs))
+    if len(blobs) == 0 or (lens < 9).any():
+        return None
+    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    off = np.cumsum(lens) - lens
+    ps = buf[off + 4]
+    p = int(ps[0])
+    if (ps != p).any() or not 4 <= p <= 18:
+        return None
+    m, isz = 1 << p, (2 if p <= 16 else 4)
+    magic = buf[off[:, None] + np.arange(4)]
+    sparse = (magic == np.frombuffer(_MAGIC_SPARSE, np.uint8)).all(axis=1)
+    dense = (magic == np.frombuffer(_MAGIC_DENSE, np.uint8)).all(axis=1)
+    n = buf[off[:, None] + np.arange(5, 9)].astype(np.int64) @ (1 << np.arange(0, 32, 8))
+    if not ((sparse & (lens == 9 + n * (isz + 1))) | (dense & (lens == 5 + m))).all():
+        return None
+    n = np.where(sparse, n, 0)
+    which = np.repeat(np.arange(len(blobs)), n)
+    r = np.arange(len(which)) - np.repeat(np.cumsum(n) - n, n)
+    base = off[which] + 9
+    idx = np.zeros(len(which), dtype=np.int64)
+    for b in range(isz):
+        idx |= buf[base + isz * r + b].astype(np.int64) << (8 * b)
+    rho = buf[base + isz * n[which] + r]
+    parts = [(which, idx, rho)]
+    for b in np.flatnonzero(dense):
+        regs = buf[off[b] + 5:off[b] + 5 + m]
+        nz = np.flatnonzero(regs)
+        parts.append((np.full(len(nz), b), nz, regs[nz]))
+    which, idx, rho = (np.concatenate(x) for x in zip(*parts))
+    if len(idx) and idx.max() >= m:
+        return None
+    return which, idx, rho, p
 
 
 class HLL(Aggregator):
@@ -114,7 +200,7 @@ class HLL(Aggregator):
             self._densify()  # fold any buffer into the dense array
             nz = np.flatnonzero(self._regs)
             return nz, self._regs[nz]
-        if not self._sidx:
+        if not self._scount:  # a deserialized empty sparse blob buffers no pairs
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint8)
         idx = np.concatenate(self._sidx)
         rho = np.concatenate(self._srho)
@@ -142,18 +228,7 @@ class HLL(Aggregator):
         h = h.astype(np.uint64, copy=False)
         if len(h) == 0:
             return
-        idx = (h >> np.uint64(64 - self.p)).astype(np.int64)
-        w = h & np.uint64((1 << (64 - self.p)) - 1)
-        # rho = leading-zero count of the (64-p)-bit suffix + 1
-        #     = (64-p) + 1 - bit_length(w); frexp exponent == bit_length
-        # exact because w < 2^50 ≤ 2^53 for p ≥ 14; for p < 14 the top bits
-        # still dominate bit_length (float rounding can't cross a power of 2
-        # upward for values below 2^63 except at all-ones mantissa overflow,
-        # which we guard by clipping rho to its max).
-        bl = np.frexp(w.astype(np.float64))[1]
-        rho = np.clip((64 - self.p) + 1 - bl, 1, 64 - self.p + 1).astype(np.uint8)
-        rho[w == 0] = 64 - self.p + 1
-        self._absorb_pairs(idx, rho)
+        self._absorb_pairs(*_idx_rho(h, self.p))
 
     def update_batch(self, values: np.ndarray) -> None:
         self.update_hashed(hash64(values))
@@ -168,6 +243,28 @@ class HLL(Aggregator):
             self._densify()
             np.maximum(self._regs, other._regs, out=self._regs)
         return self
+
+    @classmethod
+    def build_segments(cls, values, starts, p: int = 14) -> list[bytes | None]:
+        """Every key's partial in one pass: (register, rho) of all values,
+        the max rho per (key, register) run, the same bytes as
+        ``update_hashed`` + ``serialize`` on each run."""
+        cls(p=p)  # validates p
+        h = values if values.dtype == np.uint64 else hash64(values)
+        idx, rho = _idx_rho(h, p)
+        return _emit_segments(segment_ids(starts, len(h)), idx, rho, len(starts), p)
+
+    @classmethod
+    def merge_segments(cls, blobs, starts, **params) -> list[bytes | None]:
+        """Every key's merge in one pass: the (register, rho) pairs of all
+        sparse and dense blobs, then the same emit as ``build_segments``
+        (register-wise max; ``finish_merge`` is the identity)."""
+        parsed = _parse_blobs(blobs)
+        if parsed is None:
+            return super().merge_segments(blobs, starts, **params)
+        which, idx, rho, p = parsed
+        seg = segment_ids(starts, len(blobs))[which]
+        return _emit_segments(seg, idx, rho, len(starts), p)
 
     # -- estimators ------------------------------------------------------------
 

@@ -89,30 +89,6 @@ def tdigest_aggregate_skewed(
     return tree_merge(partials(df, keys, spec), keys, spec, fanin)
 
 
-def choose_salts_from_counts(df: DataFrame, key: str, rows_per_salt: int = 5_000_000,
-                             max_salts: int = 1024,
-                             max_keys: int = 4096) -> dict[str, int]:
-    """Presample per-key row counts (or read them from table stats) and pick
-    a salt count per key — the explicit-salting knob for *row-level* salted
-    repartition when a downstream op (not a sketch) needs balanced groups.
-
-    Only the ``max_keys`` HOTTEST keys are collected (keys below
-    ``rows_per_salt`` never need salting, and callers default absent keys
-    to salt 1), so the driver-side dict stays bounded on open key domains.
-    """
-    counts = (
-        df.groupBy(key).count()
-        .filter(F.col("count") > rows_per_salt)
-        .orderBy(F.desc("count"))
-        .limit(max_keys)
-        .collect()
-    )
-    return {
-        r[key]: int(min(max_salts, max(1, r["count"] // rows_per_salt + 1)))
-        for r in counts
-    }
-
-
 # ---------------------------------------------------------------------------
 # Digest-driven range partitioning
 # ---------------------------------------------------------------------------

@@ -40,6 +40,16 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _released(out: DataFrame, *cached: DataFrame) -> DataFrame:
+    """``out`` materialized (``localCheckpoint``), then the caches it was
+    built from released: a query leaves nothing cached in the session, so
+    repeated calls leak no storage memory."""
+    out = out.localCheckpoint(eager=True)
+    for df in cached:
+        df.unpersist()
+    return out
+
+
 # ---------------------------------------------------------------------------
 # Oracle SQL fragments
 # ---------------------------------------------------------------------------
@@ -305,6 +315,12 @@ def q_cms_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str,
                         phi: float = 0.2) -> DataFrame:
+    """``_cms_heavy_hitters_plan`` materialized, its candidate cache released."""
+    return _released(*_cms_heavy_hitters_plan(spark, sf_dir, phi))
+
+
+def _cms_heavy_hitters_plan(spark: SparkSession, sf_dir: str,
+                            phi: float) -> tuple[DataFrame, DataFrame]:
     """Heavy hitters (langs with ≥ φ·N docs; en ≈ 44% of the corpus is the
     only one at φ=0.2) the sketch way: one global CMS pass, a DISTRIBUTED
     probe of the distinct keys keeps candidates with estimate ≥ φ·N — a
@@ -350,11 +366,12 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str,
         .groupBy("lang")
         .agg(F.count("*").alias("n_docs"))
     )
-    return (
+    out = (
         cand.join(exact, "lang")
         .filter(F.col("n_docs") >= thr)
         .select("lang", "est_count", "n_docs")
     )
+    return out, cand
 
 
 def q_hll_union_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -772,11 +789,7 @@ def q_ann_exact_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("lsh_precision_1"),
         )
     )
-    # the (small) result is materialized so the pair-set cache can be
-    # released before returning — repeated calls in one session leak nothing
-    out = topk.unionByName(pairs).crossJoin(F.broadcast(prec)).localCheckpoint(eager=True)
-    exact.unpersist()
-    return out
+    return _released(topk.unionByName(pairs).crossJoin(F.broadcast(prec)), exact)
 
 
 def q_emb_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -868,6 +881,12 @@ def q_td_tpch_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_td_cube_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_td_cube_lang_source_plan`` materialized, its partials cache released."""
+    return _released(*_td_cube_lang_source_plan(spark, sf_dir))
+
+
+def _td_cube_lang_source_plan(spark: SparkSession,
+                              sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """CUBE(lang, source) digests from ONE set of partials — the showcase of
     mergeability: the same per-partition (lang, source) partial digests are
     re-merged under each grouping set instead of re-scanning the input.
@@ -896,7 +915,7 @@ def q_td_cube_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     by_lang = qs(tdigest_merge(partials, ["lang"], discrete=True), True, False)
     by_source = qs(tdigest_merge(partials, ["source"], discrete=True), False, True)
     overall = qs(tdigest_merge(partials, [], discrete=True), False, False)
-    return full.unionByName(by_lang).unionByName(by_source).unionByName(overall)
+    return full.unionByName(by_lang).unionByName(by_source).unionByName(overall), partials
 
 
 def _explode_quantiles_keys(digests: DataFrame, keys: list[str],
@@ -2175,6 +2194,12 @@ FROM events GROUP BY event_type, day
 
 
 def q_td_ks_drift_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_td_ks_drift_by_lang_plan`` materialized, its digest cache released."""
+    return _released(*_td_ks_drift_by_lang_plan(spark, sf_dir))
+
+
+def _td_ks_drift_by_lang_plan(spark: SparkSession,
+                              sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Distribution drift from STORED sketches: the two-sample KS distance
     between each lang's n_chars distribution and the whole-corpus
     distribution, computed entirely from discrete digests — one scan builds
@@ -2207,7 +2232,7 @@ def q_td_ks_drift_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("digest").alias("_gdigest")
     )
     pj = tdigest_psi_jsd_udf(bins=10, ndigits=6)
-    return (
+    out = (
         lang_dig.crossJoin(F.broadcast(glob))
         .withColumn("_pj", pj("digest", "_gdigest"))
         .select(
@@ -2223,6 +2248,7 @@ def q_td_ks_drift_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_pj")[1].alias("jsd_global"),
         )
     )
+    return out, lang_dig
 
 
 _KS_DRIFT_SQL = """
@@ -3420,9 +3446,9 @@ def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, vocab_top_k=LM_TOPK, bigram_top_k=LM_BIGRAM_TOPK,
         alpha=0.5, quantize=6,
     ).cache()
-    return bigram_logprob_score(
+    return _released(bigram_logprob_score(
         docs, model=model, quantize=6, backoff=0.4,
-    )
+    ), model)
 
 
 _LM_BIGRAM_SQL = f"""
@@ -3512,9 +3538,9 @@ def q_lm_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, order=3, vocab_top_k=LM_TOPK, ngram_top_k=LM_BIGRAM_TOPK,
         alpha=0.5, quantize=6,
     ).cache()
-    return ngram_logprob_score(
+    return _released(ngram_logprob_score(
         docs, order=3, model=model, quantize=6, backoff=0.4,
-    )
+    ), model)
 
 
 _LM_TRIGRAM_SQL = f"""
@@ -3947,7 +3973,7 @@ def q_sketch_laws_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only needs the exact rollup, so the partial caches can go now
     parts.unpersist()
     hparts.unpersist()
-    return h.crossJoin(F.broadcast(hh)).crossJoin(F.broadcast(ddrow))
+    return _released(h.crossJoin(F.broadcast(hh)).crossJoin(F.broadcast(ddrow)), exacts)
 
 
 def q_td_quantiles_cdf_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,17 +15,28 @@ spec, named by the spec.
 
   ``partials(df, keys, specs)`` — one JVM-side projection per spec (the
       family's ingest rule in ``_INGEST``), then ONE ``mapInPandas`` that
-      keeps a per-partition ``{key: [sketch per spec]}`` table fed by
-      vectorized batch updates and emits one row per (input partition ×
-      key).  No shuffle; no per-row Python.
+      emits one row per (input partition × key).  No shuffle; no per-row
+      Python.
   ``merge(partials, keys, specs)`` — ONE Exchange on the keys, then a
-      ``mapInPandas`` accumulator: one ``merge_blobs`` call per (key, spec,
-      Arrow batch) and one ``finish_merge`` per key at end of partition.
-      When every spec is a ``_LARGE_STATE`` family (Bloom/CMS, MB-scale),
+      ``mapInPandas`` accumulator emitting one merged row per key.  When
+      every spec is a ``_LARGE_STATE`` family (Bloom/CMS, MB-scale),
       ``groupBy().applyInPandas`` holds one group in memory at a time
       instead.  A (key, spec) that received no sketch merges to NULL.
   ``tree_merge(partials, keys, specs, fanin)`` — salted intermediate merge
       levels that bound every reducer's fan-in (see ``spark/plan.py``).
+
+Both ``mapInPandas`` stages give every row a partition-wide key code (one
+``pd.factorize`` per key column; the NULL key and a key spread over several
+Arrow batches stay one group).  A spec whose family overrides the segment
+pair (``Aggregator.build_segments`` / ``merge_segments``: the t-digest and
+HLL) keeps each batch's (code, value) or (code, blob) arrays and makes ONE
+segment call per partition that builds or merges every key at once.  The
+per-object loop — one sketch per key fed batch by batch, ``update`` /
+``merge_blobs`` then ``serialize`` / ``finish_merge`` — runs instead for
+the other families, for specs with ``params_by_key``, ``metrics`` or
+``weight_col``, for each key the segment call answers None for, and for
+the rest of a partition whose kept arrays pass ``_RETAIN_BYTES``.  Either
+way the bytes are the per-object loop's.
 
 The shuffle therefore carries one serialized sketch per (partition × key ×
 spec), never raw rows.  The one-sketch APIs (``sketch_*`` here,
@@ -44,6 +55,7 @@ doubles and drop NaN.  NULL values are never ingested.
 from __future__ import annotations
 
 import math
+from functools import partial
 from typing import Iterable, Iterator
 
 import numpy as np
@@ -51,6 +63,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
 
+from sketchlib.aggregator import Aggregator, narrow_codes
 from sketchlib.bloom import Bloom
 from sketchlib.cms import CMS
 from sketchlib.ddsketch import DDSketch
@@ -76,12 +89,122 @@ def _norm_key(key) -> tuple:
     return key if isinstance(key, tuple) else (key,)
 
 
-def _groups(pdf: pd.DataFrame, keys: list[str]):
-    """(normalized key, row selector) per key group of one Arrow batch."""
-    if not keys:
-        return [((), slice(None))]
-    return ((_norm_key(k), idx) for k, idx in
-            pdf.groupby(keys, dropna=False, sort=False).indices.items())
+#: retained input per spec and partition on the segment path, in bytes;
+#: past it the partition finishes on the per-object loop, whose memory each
+#: family's own buffers bound
+_RETAIN_BYTES = 1 << 23
+
+
+class _KeyCodes:
+    """Partition-wide key codes: each distinct key tuple gets the next
+    integer when it first appears.  The keys new to a batch are numbered
+    in pandas' ``groupby(sort=False)`` order (by each key column's order of
+    first appearance, leftmost column first), so rows come out in the
+    order they always had.  A NULL key value is None, so the NULL key is
+    one group in every Arrow batch."""
+
+    def __init__(self, keys: list[str]) -> None:
+        self.keys = keys
+        self.code: dict[tuple, int] = {}
+        self.tuples: list[tuple] = []
+
+    def __call__(self, pdf: pd.DataFrame) -> np.ndarray:
+        """The key code of every row of one batch: one ``factorize`` per
+        key column, one dict lookup per distinct key of the batch."""
+        if not self.keys:
+            self._code(())
+            return np.zeros(len(pdf), dtype=np.intp)
+        gid, cols = None, []
+        for k in self.keys:
+            c, u = pd.factorize(pdf[k], use_na_sentinel=False)
+            u = np.asarray(u, dtype=object)
+            u[pd.isna(u)] = None
+            cols.append((c, u))
+            if gid is None:
+                gid = c
+            else:  # lexicographic in the column codes, kept dense
+                gid = np.unique(gid * len(u) + c, return_inverse=True)[1]
+        if len(cols) == 1 and len(gid):
+            # factorize numbers values in order of first appearance, so each
+            # one's first row is where the running max of gid steps up
+            top = np.maximum.accumulate(gid)
+            first = np.flatnonzero(np.r_[True, top[1:] != top[:-1]])
+        else:
+            first = np.unique(gid, return_index=True)[1]
+        lut = np.fromiter(map(self._code, zip(*(u[c[first]] for c, u in cols))),
+                          dtype=np.intp, count=len(first))
+        return lut[gid]
+
+    def _code(self, key: tuple) -> int:
+        code = self.code.get(key)
+        if code is None:
+            code = self.code[key] = len(self.tuples)
+            self.tuples.append(key)
+        return code
+
+
+def _runs(codes: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Rows grouped by code, in arrival order within each code: the rows
+    of code c are ``order[start[c]:start[c] + count[c]]``."""
+    order = np.argsort(narrow_codes(codes, k), kind="stable")
+    count = np.bincount(codes, minlength=k)
+    return order, np.cumsum(count) - count, count
+
+
+class _Partition:
+    """One spec's input over one partition.  On the segment path it keeps
+    each Arrow batch as a chunk of (key codes, value arrays) for ONE
+    segment call at the end of the partition (``finish``).  ``feed(agg,
+    code, *values)`` is the per-object loop: it folds one key's slice of
+    one batch into that key's sketch.  It runs every batch when the family
+    has no segment path, replays the keys the segment call answers None
+    for, and takes over the whole partition once the chunks outgrow
+    ``_RETAIN_BYTES`` — each time batch by batch, as the loop always ran."""
+
+    def __init__(self, feed, segmented: bool) -> None:
+        self.feed = feed
+        self.chunks: list | None = [] if segmented else None
+        self.size = 0
+        self.aggs: dict[int, object] = {}
+
+    def add(self, codes: np.ndarray, values: tuple, size: int, k: int) -> None:
+        if self.chunks is None:
+            self._replay([(codes, values)], k)
+            return
+        self.chunks.append((codes, values))
+        self.size += size
+        if self.size > _RETAIN_BYTES:
+            self._replay(self.chunks, k)
+            self.chunks = None
+
+    def _replay(self, chunks: list, k: int, want: np.ndarray | None = None) -> None:
+        for codes, values in chunks:
+            if want is not None:
+                sel = want[codes]
+                codes, values = codes[sel], tuple(v[sel] for v in values)
+            order, start, count = _runs(codes, k)
+            for c in np.flatnonzero(count).tolist():
+                idx = order[start[c]:start[c] + count[c]]
+                self.aggs[c] = self.feed(self.aggs.get(c), c, *(v[idx] for v in values))
+
+    def finish(self, segments, k: int, skip_empty: bool) -> list:
+        """One entry per key code: the bytes ``segments(*values, starts)``
+        gave that key, or None — then the key's sketch, if it has one, is
+        in ``aggs``.  ``skip_empty`` leaves keys without input out of the
+        call (merge runs are never empty)."""
+        out: list = [None] * k
+        if not self.chunks:
+            return out
+        order, start, count = _runs(np.concatenate([c for c, _ in self.chunks]), k)
+        values = [np.concatenate(v)[order] for v in zip(*(v for _, v in self.chunks))]
+        todo = np.flatnonzero(count) if skip_empty else np.arange(k)
+        want = np.zeros(k, dtype=bool)
+        for c, blob in zip(todo.tolist(), segments(*values, start[todo])):
+            out[c] = blob
+            want[c] = blob is None
+        if want.any():
+            self._replay(self.chunks, k, want)
+        return out
 
 
 class _Spec:
@@ -101,6 +224,15 @@ class _Spec:
         self.metrics = spec.get("metrics")
         self.rule = "fn" if self.value_fn is not None else _INGEST.get(self.kind, "double")
         self._v, self._m, self._w = f"_v{i}", f"_m{i}", f"_w{i}"
+        # the families overriding the segment pair take it, except where
+        # the per-object loop alone defines the bytes: per-key params, a
+        # per-object metrics hook, weighted input
+        base = Aggregator.build_segments.__func__, Aggregator.merge_segments.__func__
+        self.build_segmented = (self.cls.build_segments.__func__ is not base[0]
+                                and self.metrics is None and self.params_by_key is None
+                                and self.weight_col is None)
+        self.merge_segmented = (self.cls.merge_segments.__func__ is not base[1]
+                                and self.metrics is None)
 
     def columns(self) -> list[tuple[str, object]]:
         """The JVM-side projection: (name, Column) pairs."""
@@ -196,28 +328,50 @@ def _schema(frame: DataFrame, keys: list[str], specs: list[_Spec]) -> StructType
     )
 
 
-def _emit(keys: list[str], specs: list[_Spec], table: dict, merged: bool) -> pd.DataFrame:
-    rows = {k: [key[i] for key in table] for i, k in enumerate(keys)}
-    for j, s in enumerate(specs):
-        rows[s.name] = [s.blob(aggs[j], merged) for aggs in table.values()]
+def _frame(keys: list[str], specs: list[_Spec], tuples: list[tuple],
+           blobs: list[list]) -> pd.DataFrame:
+    """Kernel rows: one per key tuple, one binary column per spec."""
+    rows = {k: [key[i] for key in tuples] for i, k in enumerate(keys)}
+    rows.update(zip([s.name for s in specs], blobs))
     return pd.DataFrame(rows, columns=keys + [s.name for s in specs])
 
 
 def _partial_builder(keys: list[str], specs: list[_Spec]):
-    """The per-partition partial loop over ``_project``ed Arrow batches."""
+    """The per-partition partial builder over ``_project``ed Arrow batches:
+    one ``build_segments`` call per spec at the end of the partition, or
+    the per-object loop (``_Partition``)."""
 
     def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        table: dict[tuple, list] = {}
+        codes_of = _KeyCodes(keys)
+
+        def feeder(s: _Spec):
+            def feed(agg, code, v, w=None):
+                agg = s.new(codes_of.tuples[code]) if agg is None else agg
+                s.update(agg, v, None, w, slice(None))
+                return agg
+            return feed
+
+        parts = [_Partition(feeder(s), s.build_segmented) for s in specs]
         for pdf in batches:
-            cols = [s.values(pdf) for s in specs]
-            for key, idx in _groups(pdf, keys):
-                aggs = table.get(key)
-                if aggs is None:
-                    aggs = table[key] = [s.new(key) for s in specs]
-                for s, agg, (vals, mask, wts) in zip(specs, aggs, cols):
-                    s.update(agg, vals, mask, wts, idx)
-        if table:
-            yield _emit(keys, specs, table, merged=False)
+            codes = codes_of(pdf)
+            k = len(codes_of.tuples)
+            for s, part in zip(specs, parts):
+                vals, mask, wts = s.values(pdf)
+                keep = slice(None) if mask is None else ~mask  # NULLs never ingested
+                values = (vals[keep],) if wts is None else (vals[keep], wts[keep])
+                part.add(codes[keep], values,
+                         codes[keep].nbytes + sum(v.nbytes for v in values), k)
+        if codes_of.tuples:
+            k, tuples = len(codes_of.tuples), codes_of.tuples
+            blobs = []
+            for s, part in zip(specs, parts):
+                out = part.finish(partial(s.cls.build_segments, **s.params), k,
+                                  skip_empty=False)
+                blobs.append([
+                    b if b is not None else
+                    s.blob(part.aggs[c] if c in part.aggs else s.new(tuples[c]), merged=False)
+                    for c, b in enumerate(out)])
+            yield _frame(keys, specs, tuples, blobs)
 
     return build
 
@@ -239,7 +393,6 @@ def merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
 
     ensure_on_workers(partials.sparkSession)
     sp = _specs(specs, keys)
-    names = [s.name for s in sp]
     schema = _schema(partials, keys, sp)
 
     if all(s.kind in _LARGE_STATE for s in sp):
@@ -250,25 +403,38 @@ def merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
                 blobs = [bytes(b) for b in pdf[s.name] if b is not None]
                 aggs.append(s.cls.merge_blobs(None, blobs, **s.params) if blobs else None)
             key = tuple(pdf[k].iloc[0] for k in keys)
-            return _emit(keys, sp, {key: aggs}, merged=True)
+            return _frame(keys, sp, [key], [[s.blob(a, merged=True)] for s, a in zip(sp, aggs)])
 
         grouping = keys or [F.lit(1).alias("_g")]
         return partials.groupBy(*grouping).applyInPandas(merge_group, schema=schema)
 
     def merge_stream(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        table: dict[tuple, list] = {}
+        codes_of = _KeyCodes(keys)
+
+        def feeder(s: _Spec):
+            def feed(agg, code, blobs):
+                return s.cls.merge_blobs(agg, [bytes(b) for b in blobs], **s.params)
+            return feed
+
+        parts = [_Partition(feeder(s), s.merge_segmented) for s in sp]
         for pdf in batches:
-            cols = [pdf[n].to_numpy() for n in names]
-            for key, idx in _groups(pdf, keys):
-                aggs = table.get(key)
-                if aggs is None:
-                    aggs = table[key] = [None] * len(sp)
-                for j, s in enumerate(sp):
-                    blobs = [bytes(b) for b in cols[j][idx] if b is not None]
-                    if blobs:
-                        aggs[j] = s.cls.merge_blobs(aggs[j], blobs, **s.params)
-        if table:
-            yield _emit(keys, sp, table, merged=True)
+            codes = codes_of(pdf)
+            for s, part in zip(sp, parts):
+                col = pdf[s.name].to_numpy()
+                present = ~pd.isna(col)
+                part.add(codes[present], (col[present],), sum(map(len, col[present])),
+                         len(codes_of.tuples))
+        if codes_of.tuples:
+            k = len(codes_of.tuples)
+            blobs = []
+            for s, part in zip(sp, parts):
+                out = part.finish(partial(s.cls.merge_segments, **s.params), k,
+                                  skip_empty=True)
+                blobs.append([
+                    b if b is not None else
+                    s.blob(part.aggs[c], merged=True) if c in part.aggs else None
+                    for c, b in enumerate(out)])
+            yield _frame(keys, sp, codes_of.tuples, blobs)
 
     shuffled = partials.repartition(*keys) if keys else partials.repartition(1)
     return shuffled.mapInPandas(merge_stream, schema=schema)

@@ -47,7 +47,7 @@ from typing import Iterable, Sequence
 
 import numpy as np
 
-from sketchlib.aggregator import Aggregator
+from sketchlib.aggregator import Aggregator, narrow_codes, segment_ids
 
 DEFAULT_DELTA = 0.01
 DEFAULT_K = 25.0
@@ -289,6 +289,88 @@ def compress_centroids_vec(
     seg_mean[0] = means[0]
     seg_mean[-1] = means[-1]
     return seg_mean, seg_n
+
+
+# ---------------------------------------------------------------------------
+# Segmented kernels: the union and compress of many keys in one numpy pass
+# (``MergingDigest.build_segments`` / ``merge_segments``)
+# ---------------------------------------------------------------------------
+
+#: below this magnitude float64 holds every integer, so sums of
+#: integer-valued weights are exact in any order and grouping
+_EXACT_SUM = 2.0**53
+
+
+def segment_union(
+    seg: np.ndarray, means: np.ndarray, ns: np.ndarray | None, k: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``_group_equal_means`` of each of ``k`` segments at once: sorted by
+    (segment, mean), equal means of a segment summed (``ns=None``: one per
+    value).  Means must be NaN-free; -0.0 counts as +0.0.  Returns
+    (segment, mean, n) of the union, sorted the same way."""
+    means = means + 0.0  # -0.0 + 0.0 is +0.0
+    order = np.argsort(means)
+    order = order[np.argsort(narrow_codes(seg[order], k), kind="stable")]
+    seg, means = seg[order], means[order]
+    if len(means) == 0:
+        return seg, means, np.empty(0)
+    brk = np.empty(len(means), dtype=bool)
+    brk[0] = True
+    brk[1:] = (seg[1:] != seg[:-1]) | (means[1:] != means[:-1])
+    at = np.flatnonzero(brk)
+    if ns is None:
+        w = np.diff(np.r_[at, len(means)]).astype(np.float64)
+    else:
+        w = np.add.reduceat(ns[order], at)
+    return seg[at], means[at], w
+
+
+def compress_segments(
+    seg: np.ndarray, means: np.ndarray, ns: np.ndarray, k: int, delta: float,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``compress_centroids_vec`` of each of ``k`` segments at once, in
+    closed form: per-segment cumulative weights, one logit bucket per
+    centroid, cluster boundaries forced at every segment's first, second
+    and last centroid, segments of ≤ 3 centroids left alone.  Input is
+    ``segment_union``'s output and ``delta`` > 0.  Byte-identical to the
+    per-segment call whenever every cumulative weight is exact, i.e. for
+    integer-valued weights summing below 2**53."""
+    n = len(means)
+    if n == 0:
+        return seg, means, ns
+    size = np.bincount(seg, minlength=k)
+    first = np.cumsum(size) - size
+    last = first + size - 1
+    cum = np.cumsum(ns)
+    w = cum - np.r_[0.0, cum][first][seg]  # per-segment np.cumsum(ns)
+    total = w[last[seg]]
+    q_mid = (w - ns * 0.5) / total
+    bucket = np.floor(np.log(q_mid / (1.0 - q_mid)) / (4.0 * delta))
+    brk = np.empty(n, dtype=bool)
+    brk[0] = True
+    brk[1:] = bucket[1:] != bucket[:-1]
+    big = size > 3
+    small = np.flatnonzero(~big[seg])
+    pinned = np.r_[first[big], last[big], small]
+    brk[pinned] = True
+    brk[first[big] + 1] = True
+    at = np.flatnonzero(brk)
+    cn = np.add.reduceat(ns, at)
+    cm = np.add.reduceat(means * ns, at) / cn
+    # min/max centroids (and short segments) keep their exact means
+    cm[(np.cumsum(brk) - 1)[pinned]] = means[pinned]
+    return seg[at], cm, cn
+
+
+def _segment_blobs(means: np.ndarray, ns: np.ndarray, size: np.ndarray) -> list[bytes]:
+    """Each segment's centroids in the wire format: consecutive 16-byte
+    aligned slices of one interleaved buffer."""
+    flat = np.empty(2 * len(means), dtype="<f8")
+    flat[0::2] = means
+    flat[1::2] = ns
+    buf = flat.tobytes()
+    ends = (np.cumsum(size) * 16).tolist()
+    return [buf[a:b] for a, b in zip([0, *ends[:-1]], ends)]
 
 
 # ---------------------------------------------------------------------------
@@ -1020,6 +1102,70 @@ class MergingDigest(Aggregator):
 
     def finish_merge(self) -> "MergingDigest":
         return self.compress()
+
+    @classmethod
+    def build_segments(cls, values, starts, **params) -> list[bytes | None]:
+        """Every key's partial from one sort: NaN dropped, equal values
+        counted into one centroid, the bytes of ``update_batch`` +
+        ``serialize`` on each run.  Where that pair would compress, the run
+        leaves the fast path: more than 4·max_size distinct values take the
+        default loop (``serialize`` compresses them), and a run of
+        ``buffer_size`` values or more with over max_size distinct answers
+        None, because the per-object loop compresses it at Arrow-batch
+        boundaries."""
+        d = cls(**params)
+        k = len(starts)
+        v = np.asarray(values, dtype=np.float64)
+        seg = segment_ids(starts, len(v))
+        keep = ~np.isnan(v)
+        useg, means, ns = segment_union(seg[keep], v[keep], None, k)
+        size = np.bincount(useg, minlength=k)
+        out: list[bytes | None] = _segment_blobs(means, ns, size)
+        if not d.discrete and d.delta > 0 and d.max_size is not None:
+            rows = np.bincount(seg[keep], minlength=k)
+            ends = np.r_[starts[1:], len(v)].astype(np.intp)
+            for i in np.flatnonzero(size > d.max_size):
+                if rows[i] >= d.buffer_size:
+                    out[i] = None
+                elif size[i] > 4 * d.max_size:
+                    out[i] = super().build_segments(v[starts[i]:ends[i]], [0], **params)[0]
+        return out
+
+    @classmethod
+    def merge_segments(cls, blobs, starts, **params) -> list[bytes | None]:
+        """Every key's merge in one pass: the union of each run's
+        centroids (one sort by key and mean, equal means summed), the
+        closed-form ``compress_segments`` (``finish_merge``) and the
+        ``serialize`` size cap.  Exact for integer-valued weights only: a
+        run holding a fractional or non-finite weight or a NaN mean answers
+        None, since its sums depend on how its blobs were batched."""
+        lens = np.fromiter(map(len, blobs), dtype=np.int64, count=len(blobs))
+        if (lens % 16).any():  # the default raises the wire error
+            return super().merge_segments(blobs, starts, **params)
+        d = cls(**params)
+        k = len(starts)
+        flat = np.frombuffer(b"".join(blobs), dtype="<f8")
+        means, ns = flat[0::2], flat[1::2]
+        seg = np.repeat(segment_ids(starts, len(blobs)), lens // 16)
+        bad = np.isnan(means) | ~np.isfinite(ns) | (ns != np.floor(ns))
+        exact = np.bincount(seg[bad], minlength=k) == 0
+        keep = exact[seg]
+        if not np.abs(ns[keep]).sum() < _EXACT_SUM:
+            return [None] * k
+        useg, means, ns = segment_union(seg[keep], means[keep], ns[keep], k)
+        if not d.discrete and d.delta > 0 and math.isfinite(1.0 / (4.0 * d.delta)):
+            useg, means, ns = compress_segments(useg, means, ns, k, d.delta)
+        size = np.bincount(useg, minlength=k)
+        out: list[bytes | None] = _segment_blobs(means, ns, size)
+        if d.max_size is not None:
+            ends = np.cumsum(size)
+            for i in np.flatnonzero(size > 4 * d.max_size):
+                a = ends[i] - size[i]
+                out[i] = centroids_to_bytes(*compress_centroids_vec(
+                    means[a:ends[i]], ns[a:ends[i]], d.delta, d.discrete))
+        for i in np.flatnonzero(~exact):
+            out[i] = None
+        return out
 
     def compress(self, delta: float | None = None) -> "MergingDigest":
         """Deterministic final compression (idempotent for a fixed multiset)."""

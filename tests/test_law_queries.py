@@ -91,3 +91,22 @@ def test_hll_hourly_rollup_laws(spark):
     for r in rows:
         assert r["within_tol"], r
         assert r["rollup_equals_direct"], r
+
+
+@pytest.mark.parametrize("name", [
+    "q_cms_heavy_hitters", "q_td_cube_lang_source", "q_td_ks_drift_by_lang",
+    "q_lm_bigram_score", "q_lm_trigram_score", "q_sketch_laws_summary",
+    "q_ann_exact_cosine",
+])
+def test_query_leaves_no_cache_behind(spark, name):
+    """A catalog query caches its shared intermediate while it builds the
+    result, then releases it: the session's cache registry is as empty
+    after the call as before (a ``localCheckpoint``ed result is freed with
+    the DataFrame, a ``.cache()`` only by ``unpersist``)."""
+    from sketchlib.spark import queries
+
+    registry = spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+    spark.catalog.clearCache()
+    rows = getattr(queries, name)(spark, SF_SMALL).collect()
+    assert rows
+    assert registry.isEmpty()

@@ -265,23 +265,6 @@ def test_checkpoint_orc_format_byte_identical(spark, docs, tmp_path):
                             table_format="csv", **kw)
 
 
-def test_choose_salts_collects_only_hot_keys(spark):
-    """The row-level salting knob must only bring HOT keys to the driver
-    (bounded dict on open key domains); cold keys default to salt 1."""
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.plan import choose_salts_from_counts
-
-    df = spark.range(10_000).select(
-        F.when(F.col("id") < 9_000, F.lit("hot")).otherwise(
-            F.concat(F.lit("cold"), (F.col("id") % 50).cast("string"))
-        ).alias("k")
-    )
-    salts = choose_salts_from_counts(df, "k", rows_per_salt=1_000)
-    assert set(salts) == {"hot"}
-    assert salts["hot"] == 9_000 // 1_000 + 1
-
-
 def test_legacy_lineage_still_resumes(spark, docs, tmp_path):
     """Checkpoints written with the pre-canonicalization lineage spelling
     (params dict repr) must stay resumable after the format change."""

@@ -147,13 +147,21 @@ def test_tdigest_metrics_accumulators(spark, docs):
     m = TDigestMetrics(spark)
     out = tdigest_aggregate(docs, ["lang"], "n_chars", delta=0.01, metrics=m)
     assert m.snapshot()["cumulates_count"] == 0  # lazy: nothing ran yet
-    out.collect()
+    n_keys = len(out.collect())
     snap = m.snapshot()
     # every emitted digest flushed at least once, and the merge phase runs
     # one explicit compress per key group
     assert snap["cumulates_count"] > 0
     assert snap["compress_count"] >= 1
     assert snap["auto_compress_count"] >= 0
+    # a metrics hook keeps the per-object loop, so the totals count objects:
+    # one flush per non-empty partial digest, one compress per merged key
+    from sketchlib.spark.tdigest_ops import tdigest_partials
+
+    parts = tdigest_partials(docs, ["lang"], "n_chars", delta=0.01)
+    n_parts = parts.where(F.length("digest") > 0).count()
+    assert snap == {"cumulates_count": n_parts, "compress_count": n_keys,
+                    "auto_compress_count": 0}
 
 
 def test_prank_rows_discrete_equals_cume_dist(spark, docs):

@@ -144,9 +144,12 @@ def main():
 
     # 6c. cube over partials: ONE parquet scan feeds all grouping sets (the
     # partials frame is cached and re-merged; no per-grouping-set rescan)
-    from sketchlib.spark.queries import q_td_cube_lang_source
+    from sketchlib.spark.queries import _td_cube_lang_source_plan
 
-    p = plan_of(q_td_cube_lang_source(spark, sf_dir))
+    # the lazy plan: the query itself returns it materialized, cache released
+    cube, cached = _td_cube_lang_source_plan(spark, sf_dir)
+    p = plan_of(cube)
+    cached.unpersist()
     n_scan = len(re.findall(r"Scan parquet", p))
     n_mem = len(re.findall(r"InMemory(?:TableScan|Relation)", p))
     ok = n_mem >= 3
@@ -244,9 +247,11 @@ def main():
     # 6j. CMS heavy hitters: the exact verification must touch only the
     # CANDIDATES' rows — a broadcast LeftSemi join under the count, plus
     # the distributed MapInPandas probe; no local result construction
-    from sketchlib.spark.queries import q_cms_heavy_hitters
+    from sketchlib.spark.queries import _cms_heavy_hitters_plan
 
-    p = plan_of(q_cms_heavy_hitters(spark, sf_dir))
+    hh, cached = _cms_heavy_hitters_plan(spark, sf_dir, 0.2)
+    p = plan_of(hh)
+    cached.unpersist()
     check("cms heavy hitters verify semi-join", p,
           must=[r"BroadcastHashJoin [^\n]*LeftSemi", r"MapInPandas"],
           must_not=[r"LocalTableScan|Scan ExistingRDD"])
@@ -334,10 +339,11 @@ def main():
     # 6s. KS drift: the digest table is CACHED (one fact scan feeds both the
     # per-lang side and the global merge) and the global row joins by
     # broadcast — never a sort-merge join, never a second parquet scan
-    from sketchlib.spark.queries import q_td_ks_drift_by_lang
+    from sketchlib.spark.queries import _td_ks_drift_by_lang_plan
 
-    df_ks = q_td_ks_drift_by_lang(spark, sf_dir)
+    df_ks, cached = _td_ks_drift_by_lang_plan(spark, sf_dir)
     p = plan_of(df_ks)
+    cached.unpersist()
     n_mem = len(re.findall(r"InMemory(?:TableScan|Relation)", p))
     ok = n_mem >= 2 and not re.search(r"SortMergeJoin", p)
     print(f"{'ks drift cached digest reuse':40s} {'OK' if ok else 'FAIL'} "
