@@ -120,6 +120,7 @@ def main() -> None:
             measure=args.fuzzy_measure,
             hashed_shingles=args.hashed,
             kernel=args.fuzzy_kernel,
+            eager=True,
         )
         # per-train-doc match stats; docs with no row are clean (unlike
         # the exact engine's flag mode, which emits a row per train doc)

@@ -1365,7 +1365,7 @@ def fuzzy_decontam_pairs(
     measure: str = "jaccard",
     hashed_shingles: bool = False,
     kernel: str = "xxh",
-    eager: bool = True,
+    eager: bool = False,
 ) -> DataFrame:
     """NEAR-DUPLICATE test-set decontamination (asymmetric LSH): every
     (train doc, eval doc) pair whose word-``ngram`` similarity is >=
@@ -1407,15 +1407,17 @@ def fuzzy_decontam_pairs(
     both sides always share one family — signatures from different
     kernels never mix.
 
-    Caching contract (ADVICE r04): the verify stage persists the
-    candidate set and both candidate shingle frames.  With the default
-    ``eager=True`` the (small — contamination-sized) result is
-    ``localCheckpoint``-ed and every intermediate cache is unpersisted
-    before returning, so repeated calls in a long-lived session leak
-    nothing.  ``eager=False`` returns the fully-lazy plan instead and the
-    three persisted frames live until ``spark.catalog.clearCache()`` —
-    use it only when the caller composes the result into a larger plan
-    and manages the session's cache itself.
+    Caching contract: the verify stage persists the candidate set and
+    both candidate shingle frames.  By default the result is a lazy plan
+    (it composes into a larger one and runs once, when the caller acts on
+    it), and the three persisted frames live until
+    ``spark.catalog.clearCache()``.  ``eager=True`` runs the plan inside
+    the call, ``localCheckpoint``s the (small, contamination-sized)
+    result and unpersists every intermediate, so repeated calls in a
+    long-lived session leak nothing; the checkpoint truncates lineage,
+    so an executor lost after the call loses that result for good
+    (``jobs/decontaminate_corpus.py`` opts in: it acts on the result
+    twice and holds one session).
     """
     rpb = num_perm // bands
     sig_t = minhash_signatures(train, id_col, text_col, ngram, num_perm,

@@ -313,67 +313,6 @@ def q_cms_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keys.mapInPandas(probe, schema="source string, est_count long")
 
 
-def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str,
-                        phi: float = 0.2) -> DataFrame:
-    """``_cms_heavy_hitters_plan`` materialized, its candidate cache released."""
-    return _released(*_cms_heavy_hitters_plan(spark, sf_dir, phi))
-
-
-def _cms_heavy_hitters_plan(spark: SparkSession, sf_dir: str,
-                            phi: float) -> tuple[DataFrame, DataFrame]:
-    """Heavy hitters (langs with ≥ φ·N docs; en ≈ 44% of the corpus is the
-    only one at φ=0.2) the sketch way: one global CMS pass, a DISTRIBUTED
-    probe of the distinct keys keeps candidates with estimate ≥ φ·N — a
-    SUPERSET of the truth, because CMS never undercounts — then ONE exact
-    count over only the candidates' fact rows (broadcast semi-join)
-    confirms them.  At web scale the candidate set is tiny, so the verify
-    pass groups a sliver of the table; with w ≫ #keys the estimates here
-    equal the exact counts, making the whole result SQL-exact."""
-    import math
-
-    import pandas as pd
-
-    from sketchlib.cms import CMS
-    from sketchlib.spark.sketch_ops import sketch_aggregate
-
-    docs = load(spark, sf_dir, "documents")
-    thr = int(math.ceil(phi * _parquet_row_count(sf_dir, "documents")))
-    blob = bytes(
-        sketch_aggregate(docs, [], "lang", "cms", {"width": 16384, "depth": 5})
-        .collect()[0]["sketch"]
-    )
-    bc = spark.sparkContext.broadcast(blob)
-    keys = docs.select("lang", F.xxhash64("lang").alias("h")).distinct()
-
-    def probe(batches):
-        import numpy as np
-
-        cms = CMS.deserialize(bc.value)
-        for pdf in batches:
-            est = cms.query_hashed(
-                pdf["h"].to_numpy(dtype="int64").view(np.uint64)
-            )
-            yield pd.DataFrame(
-                {"lang": pdf["lang"], "est_count": est.astype("int64")}
-            )
-
-    # the candidate frame feeds BOTH the semi-join build side and the final
-    # join — cache it so the distinct+probe runs once, not twice
-    cand = keys.mapInPandas(probe, schema="lang string, est_count long") \
-        .filter(F.col("est_count") >= thr).cache()
-    exact = (
-        docs.join(F.broadcast(cand.select("lang")), "lang", "left_semi")
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"))
-    )
-    out = (
-        cand.join(exact, "lang")
-        .filter(F.col("n_docs") >= thr)
-        .select("lang", "est_count", "n_docs")
-    )
-    return out, cand
-
-
 def q_hll_union_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL as a semilattice: the UNION of the per-event-type user sketches
     must (a) estimate the overall distinct-user count within 2% and (b) be

@@ -94,7 +94,7 @@ def test_hll_hourly_rollup_laws(spark):
 
 
 @pytest.mark.parametrize("name", [
-    "q_cms_heavy_hitters", "q_td_cube_lang_source", "q_td_ks_drift_by_lang",
+    "q_td_cube_lang_source", "q_td_ks_drift_by_lang",
     "q_lm_bigram_score", "q_lm_trigram_score", "q_sketch_laws_summary",
     "q_ann_exact_cosine",
 ])

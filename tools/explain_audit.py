@@ -244,18 +244,6 @@ def main():
           must=[r"MapInPandas", r"Scan parquet"],
           must_not=[r"LocalTableScan|Scan ExistingRDD"])
 
-    # 6j. CMS heavy hitters: the exact verification must touch only the
-    # CANDIDATES' rows — a broadcast LeftSemi join under the count, plus
-    # the distributed MapInPandas probe; no local result construction
-    from sketchlib.spark.queries import _cms_heavy_hitters_plan
-
-    hh, cached = _cms_heavy_hitters_plan(spark, sf_dir, 0.2)
-    p = plan_of(hh)
-    cached.unpersist()
-    check("cms heavy hitters verify semi-join", p,
-          must=[r"BroadcastHashJoin [^\n]*LeftSemi", r"MapInPandas"],
-          must_not=[r"LocalTableScan|Scan ExistingRDD"])
-
     # 6k. as-of join: ONE hash-partition Exchange + window, never an
     # inequality nested-loop/cartesian join
     from sketchlib.spark.queries import q_events_asof_purchase
@@ -551,9 +539,7 @@ def main():
 
     train = docs.filter(F.col("doc_id") % 5 != 0)
     ev = docs.filter(F.col("doc_id") % 5 == 0)
-    # eager=False: the default localCheckpoints the result (cache-release
-    # contract), which would collapse the audited plan to a checkpoint scan
-    p = plan_of(fuzzy_decontam_pairs(train, ev, threshold=0.8, eager=False))
+    p = plan_of(fuzzy_decontam_pairs(train, ev, threshold=0.8))
     check("fuzzy decontam broadcast eval side", p,
           must=[r"BroadcastExchange"],
           must_not=[r"hashpartitioning\(band"])
