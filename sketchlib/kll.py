@@ -23,6 +23,7 @@ import struct
 import numpy as np
 
 from sketchlib.aggregator import Aggregator
+from sketchlib.tdigest.core import nearest_rank
 
 _MAGIC = b"KLL1"
 _C = 2.0 / 3.0
@@ -104,12 +105,7 @@ class KLL(Aggregator):
         w = np.concatenate(weights)
         order = np.argsort(x, kind="stable")
         x, w = x[order], w[order]
-        cum = np.cumsum(w)
-        total = cum[-1]
-        ps_arr = np.atleast_1d(np.asarray(ps, dtype=np.float64))
-        # weighted nearest rank: smallest x with cum >= p·total
-        idx = np.searchsorted(cum, ps_arr * total, side="left")
-        return x[np.clip(idx, 0, len(x) - 1)]
+        return x[nearest_rank(np.cumsum(w), np.atleast_1d(ps))]
 
     def rank(self, q: float) -> float:
         num = 0.0

@@ -14,7 +14,8 @@ and its answers are bit-identical to SQL:
 
 * merging-mode interpolated quantiles ≡ piecewise-linear interpolation at
   centroid midpoints (mean_cumn) — expressed with window functions;
-* discrete-mode quantiles ≡ weighted Nearest Rank (min v with cum ≥ N·p);
+* discrete-mode quantiles ≡ weighted Nearest Rank (min v with cum ≥ N·p,
+  compared exactly: ``_rank_sql``);
 * discrete-mode CDF ≡ count(x ≤ q)/count(*).
 
 Compressed-mode (delta=0.01) accuracy is validated in pytest with tolerance
@@ -31,6 +32,7 @@ from sketchlib.spark.tdigest_ops import (
     tdigest_count_udf,
     tdigest_quantiles_udf,
 )
+from sketchlib.tdigest.core import rank_fraction
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -99,30 +101,43 @@ GROUP BY k
 """
 
 
-def _nearest_rank_sql(table: str, key: str, val: str, ps: dict[str, float]) -> str:
-    """Exact SQL for discrete-mode t-digest quantiles: weighted Nearest Rank,
-    ``min v with cumulative weight ≥ N·p`` (reference percentile Discrete
-    branch, src/tdigest.ml:454-455)."""
-    sel = ",\n".join(
-        f"  min(v) FILTER (WHERE cum >= total * {p}) AS {alias}"
-        for alias, p in ps.items()
-    )
+def _rank_sql(p: float, cum: str = "cum", total: str = "total") -> str:
+    """``cum ≥ total·p`` in exact integer arithmetic: ``(a, b) =
+    rank_fraction(p)``, then ``cum·b ≥ total·a`` in HUGEINT (a ``total·a``
+    of ``1/3``'s 16-digit numerator overflows BIGINT).  ``cum`` and
+    ``total`` must hold integer values."""
+    a, b = rank_fraction(p)
+    return f"CAST({cum} AS HUGEINT) * {b} >= CAST({total} AS HUGEINT) * {a}"
+
+
+def _nearest_rank_sql(source: str, keys: list[str], val: str,
+                      ps: dict[str, float], weight: str | None = None,
+                      total: str | None = None) -> str:
+    """Exact SQL for discrete-mode t-digest quantiles: weighted Nearest Rank
+    (reference percentile Discrete branch, src/tdigest.ml:454-455), the
+    rule of ``core.nearest_rank``.  Per key of ``source``: the smallest
+    ``val`` whose cumulative weight is ≥ ``N·p``, p read as the decimal
+    ``a/b`` the caller wrote, i.e. the ``⌈N·a/b⌉``-th smallest value.
+    The weight is ``weight`` summed (integer-valued) or the row count;
+    ``total`` names an extra ``max(N)`` column.  ``source`` is a table,
+    CTE or parenthesized subquery."""
+    k = "".join(f"{c}, " for c in keys)
+    part = f"PARTITION BY {', '.join(keys)}" if keys else ""
+    sel = [f"min(v) FILTER (WHERE {_rank_sql(p)}) AS {alias}"
+           for alias, p in ps.items()]
+    if total:
+        sel.append(f"max(total) AS {total}")
+    group = f"\nGROUP BY {', '.join(keys)}" if keys else ""
     return f"""
-WITH g AS (
-  SELECT {key} AS k, CAST({val} AS DOUBLE) AS v, CAST(count(*) AS DOUBLE) AS c
-  FROM {table}
-  WHERE {val} IS NOT NULL
-  GROUP BY {key}, {val}
-), s AS (
-  SELECT k, v,
-         sum(c) OVER (PARTITION BY k ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY k) AS total
-  FROM g
-)
-SELECT k AS {key},
-{sel}
-FROM s
-GROUP BY k
+SELECT {k}{', '.join(sel)}
+FROM (
+  SELECT {k}v,
+         sum(c) OVER ({part} ORDER BY v) AS cum,
+         sum(c) OVER ({part}) AS total
+  FROM (SELECT {k}CAST({val} AS DOUBLE) AS v,
+               CAST({f"sum({weight})" if weight else "count(*)"} AS DOUBLE) AS c
+        FROM {source} WHERE {val} IS NOT NULL GROUP BY {k}{val})
+){group}
 """
 
 
@@ -575,7 +590,7 @@ def q_decontam_fuzzy_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     train = docs.filter(F.col("doc_id") % 5 != 0)
     ev = docs.filter(F.col("doc_id") % 5 == 0)
-    return fuzzy_decontam_pairs(train, ev, threshold=0.8)
+    return fuzzy_decontam_pairs(train, ev, threshold=0.8, eager=True)
 
 
 def q_dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -778,23 +793,10 @@ def q_td_weighted_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WEIGHTED_SQL = """
-WITH g AS (
-  SELECT l_returnflag AS k, CAST(l_extendedprice AS DOUBLE) AS v,
-         CAST(sum(l_quantity) AS DOUBLE) AS c
-  FROM lineitem GROUP BY l_returnflag, l_extendedprice
-), s AS (
-  SELECT k, v,
-         sum(c) OVER (PARTITION BY k ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY k) AS total
-  FROM g
+_WEIGHTED_SQL = _nearest_rank_sql(
+    "lineitem", ["l_returnflag"], "l_extendedprice", {"wq50": 0.5, "wq95": 0.95},
+    weight="l_quantity", total="total_weight",
 )
-SELECT k AS l_returnflag,
-       min(v) FILTER (WHERE cum >= total * 0.5) AS wq50,
-       min(v) FILTER (WHERE cum >= total * 0.95) AS wq95,
-       max(total) AS total_weight
-FROM s GROUP BY k
-"""
 
 
 def q_td_tpch_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -868,27 +870,11 @@ def _explode_quantiles_keys(digests: DataFrame, keys: list[str],
 
 def _cube_sql() -> str:
     blocks = []
-    for with_lang, with_src in ((1, 1), (1, 0), (0, 1), (0, 0)):
-        dims = ([("lang", with_lang)][0:with_lang] +
-                [("source", with_src)][0:with_src])
-        dim_cols = [d for d, _ in dims]
-        grp = ", ".join(dim_cols + ["n_chars"])
-        part = ", ".join(dim_cols) if dim_cols else "1"
-        sel_lang = "lang" if with_lang else "CAST(NULL AS VARCHAR)"
-        sel_src = "source" if with_src else "CAST(NULL AS VARCHAR)"
-        inner_dims = (", ".join(dim_cols) + "," if dim_cols else "")
-        blocks.append(f"""
-SELECT {sel_lang} AS lang, {sel_src} AS source,
-       min(v) FILTER (WHERE cum >= total * 0.5) AS q50,
-       min(v) FILTER (WHERE cum >= total * 0.9) AS q90
-FROM (
-  SELECT {inner_dims} v,
-         sum(c) OVER (PARTITION BY {part} ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY {part}) AS total
-  FROM (SELECT {inner_dims} CAST(n_chars AS DOUBLE) AS v,
-               CAST(count(*) AS DOUBLE) AS c
-        FROM documents GROUP BY {grp})
-) GROUP BY {', '.join(dim_cols) if dim_cols else 'ALL'}""")
+    for dims in (["lang", "source"], ["lang"], ["source"], []):
+        lang, source = (d if d in dims else "CAST(NULL AS VARCHAR)"
+                        for d in ("lang", "source"))
+        nr = _nearest_rank_sql("documents", dims, "n_chars", {"q50": 0.5, "q90": 0.9})
+        blocks.append(f"SELECT {lang} AS lang, {source} AS source, q50, q90\nFROM ({nr})")
     return "\nUNION ALL\n".join(blocks)
 
 
@@ -1086,25 +1072,12 @@ def q_td_order_value_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORDER_NATION_SQL = """
-WITH facts AS (
-  SELECT n.n_name AS nation, CAST(o.o_totalprice AS DOUBLE) AS v
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-               JOIN nation n ON c.c_nationkey = n.n_nationkey
-), g AS (
-  SELECT nation, v, CAST(count(*) AS DOUBLE) AS c FROM facts GROUP BY nation, v
-), s AS (
-  SELECT nation, v,
-         sum(c) OVER (PARTITION BY nation ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY nation) AS total
-  FROM g
+_ORDER_NATION_SQL = _nearest_rank_sql(
+    """(SELECT n.n_name AS nation, o.o_totalprice
+        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+                      JOIN nation n ON c.c_nationkey = n.n_nationkey)""",
+    ["nation"], "o_totalprice", {"q50": 0.5, "q95": 0.95}, total="n_orders",
 )
-SELECT nation,
-       min(v) FILTER (WHERE cum >= total * 0.5) AS q50,
-       min(v) FILTER (WHERE cum >= total * 0.95) AS q95,
-       max(total) AS n_orders
-FROM s GROUP BY nation
-"""
 
 
 _TD_TPCH_SQL = f"""
@@ -1213,24 +1186,11 @@ def q_td_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLUP_SQL = """
-WITH g AS (
-  SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-         CAST(value AS DOUBLE) AS v, CAST(count(*) AS DOUBLE) AS c
-  FROM events WHERE value IS NOT NULL
-  GROUP BY event_type, day, value
-), s AS (
-  SELECT event_type, day, v,
-         sum(c) OVER (PARTITION BY event_type, day ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY event_type, day) AS total
-  FROM g
+_ROLLUP_SQL = _nearest_rank_sql(
+    """(SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, value
+        FROM events)""",
+    ["event_type", "day"], "value", {"q50": 0.5, "q95": 0.95}, total="n_events",
 )
-SELECT event_type, day,
-       min(v) FILTER (WHERE cum >= total * 0.5) AS q50,
-       min(v) FILTER (WHERE cum >= total * 0.95) AS q95,
-       max(total) AS n_events
-FROM s GROUP BY event_type, day
-"""
 
 
 def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1264,7 +1224,7 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counts.join(qs, "lang")
 
 
-_PIPELINE_SQL = """
+_PIPELINE_SQL = f"""
 WITH tk AS (
   SELECT doc_id, len(list_filter(string_split(text, ' '), w -> w != '')) AS n_tokens,
          len(list_filter(string_split(text, ' '),
@@ -1278,20 +1238,7 @@ WITH tk AS (
   SELECT * FROM (
     SELECT *, min(doc_id) OVER (PARTITION BY text) AS keeper
     FROM filtered) WHERE doc_id = keeper
-), g AS (
-  SELECT lang, CAST(n_chars AS DOUBLE) AS v, CAST(count(*) AS DOUBLE) AS c
-  FROM kept GROUP BY lang, n_chars
-), s AS (
-  SELECT lang, v,
-         sum(c) OVER (PARTITION BY lang ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY lang) AS total
-  FROM g
-), q AS (
-  SELECT lang,
-         min(v) FILTER (WHERE cum >= total * 0.5) AS q50,
-         min(v) FILTER (WHERE cum >= total * 0.9) AS q90
-  FROM s GROUP BY lang
-)
+), q AS ({_nearest_rank_sql("kept", ["lang"], "n_chars", {"q50": 0.5, "q90": 0.9})})
 SELECT k.lang, count(*) AS n_docs_kept, count(DISTINCT k.source) AS n_sources,
        any_value(q.q50) AS q50, any_value(q.q90) AS q90
 FROM kept k JOIN q USING (lang)
@@ -2190,7 +2137,12 @@ def _td_ks_drift_by_lang_plan(spark: SparkSession,
     return out, lang_dig
 
 
-_KS_DRIFT_SQL = """
+_DECILE_EDGES_SQL = "\n  UNION ALL ".join(
+    f"SELECT {i} AS i, min(v) AS edge FROM sa WHERE {_rank_sql(i / 10, 'cuma', 'na')}"
+    for i in range(1, 10)
+)
+
+_KS_DRIFT_SQL = f"""
 WITH d AS (
   SELECT lang AS k, CAST(n_chars AS DOUBLE) AS v
   FROM documents WHERE n_chars IS NOT NULL
@@ -2216,11 +2168,8 @@ WITH d AS (
   FROM ga
 ), lt AS (  -- per-lang totals
   SELECT k, sum(c) AS n FROM g GROUP BY k
-), e AS (   -- global decile edges: weighted Nearest Rank (min v, cum >= N*p)
-  SELECT b.i, min(sa.v) AS edge
-  FROM (SELECT unnest(generate_series(1, 9)) AS i) b, sa
-  WHERE sa.cuma >= sa.na * (b.i / 10.0)
-  GROUP BY b.i
+), e AS (   -- global decile edges: weighted Nearest Rank (min v, cum >= N*i/10)
+  {_DECILE_EDGES_SQL}
 ), fk AS (  -- per-lang step CDF at each edge
   SELECT l.k, e.i,
          coalesce(sum(CASE WHEN g2.v <= e.edge THEN g2.c END), 0) / l.n AS f
@@ -2231,7 +2180,7 @@ WITH d AS (
          (SELECT sum(CASE WHEN ga.v <= e.edge THEN ga.c END) FROM ga)
            / (SELECT sum(c) FROM ga) AS f
   FROM e
-), pk AS (  -- per-lang decile-bin masses (F_i - F_{i-1}, top bin to 1.0)
+), pk AS (  -- per-lang decile-bin masses (F_i - F_{{i-1}}, top bin to 1.0)
   SELECT k, i, f - coalesce(lag(f) OVER (PARTITION BY k ORDER BY i), 0) AS p
   FROM (SELECT k, i, f FROM fk UNION ALL SELECT k, 10 AS i, 1.0 AS f FROM lt)
 ), pg AS (
@@ -2294,23 +2243,11 @@ def q_td_winsorize_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINSORIZE_SQL = """
+_WINSORIZE_SQL = f"""
 WITH d AS (
   SELECT lang AS k, CAST(n_chars AS DOUBLE) AS v
   FROM documents WHERE n_chars IS NOT NULL
-), g AS (
-  SELECT k, v, CAST(count(*) AS DOUBLE) AS c FROM d GROUP BY k, v
-), s AS (
-  SELECT k, v,
-         sum(c) OVER (PARTITION BY k ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY k) AS total
-  FROM g
-), b AS (
-  SELECT k,
-         min(v) FILTER (WHERE cum >= total * 0.05) AS lo,
-         min(v) FILTER (WHERE cum >= total * 0.95) AS hi
-  FROM s GROUP BY k
-)
+), b AS ({_nearest_rank_sql("d", ["k"], "v", {"lo": 0.05, "hi": 0.95})})
 SELECT d.k AS lang,
        count(*) AS n_docs,
        CAST(sum(CASE WHEN d.v < b.lo THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_lo,
@@ -2421,21 +2358,11 @@ def q_corpus_profile_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PROFILE_SQL = """
-WITH g AS (
-  SELECT lang AS k, CAST(n_chars AS DOUBLE) AS v, CAST(count(*) AS DOUBLE) AS c
-  FROM documents WHERE n_chars IS NOT NULL GROUP BY lang, n_chars
-), s AS (
-  SELECT k, v,
-         sum(c) OVER (PARTITION BY k ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY k) AS total
-  FROM g
-), q AS (
-  SELECT k,
-         CAST(max(total) AS BIGINT) AS n_docs,
-         min(v) FILTER (WHERE cum >= total * 0.5) AS p50,
-         min(v) FILTER (WHERE cum >= total * 0.95) AS p95
-  FROM s GROUP BY k
+_PROFILE_SQL = f"""
+WITH q AS (
+  SELECT lang AS k, CAST(n AS BIGINT) AS n_docs, p50, p95
+  FROM ({_nearest_rank_sql("documents", ["lang"], "n_chars",
+                           {"p50": 0.5, "p95": 0.95}, total="n")})
 ), src AS (
   SELECT lang, source, count(*) AS cnt FROM documents GROUP BY lang, source
 ), top AS (
@@ -2810,7 +2737,7 @@ def q_td_quantiles_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MULTI_TABLE_SQL = f"""
 SELECT 'events' AS tbl, event_type AS grp, q50, q95, q99
-FROM ({_nearest_rank_sql("events", "event_type", "value", PS_FLAGSHIP)})
+FROM ({_nearest_rank_sql("events", ["event_type"], "value", PS_FLAGSHIP)})
 UNION ALL
 SELECT 'lineitem' AS tbl, l_returnflag AS grp, q50, q95, q99
 FROM ({_interp_quantile_sql("lineitem", "l_returnflag", "l_extendedprice", PS_FLAGSHIP)})
@@ -3085,20 +3012,8 @@ WITH toks AS (
   LEFT JOIN lp l ON l.lang = d.lang AND l.word = d.word
   JOIN oov o ON o.lang = d.lang
   GROUP BY d.doc_id, d.lang
-), g AS (
-  SELECT lang, score, CAST(count(*) AS DOUBLE) AS c
-  FROM scored GROUP BY lang, score
-), s AS (
-  SELECT lang, score,
-         sum(c) OVER (PARTITION BY lang ORDER BY score) AS cum,
-         sum(c) OVER (PARTITION BY lang) AS total
-  FROM g
-), cuts AS (
-  SELECT lang,
-         min(score) FILTER (WHERE cum >= total * (1.0/3.0)) AS cut_lo,
-         min(score) FILTER (WHERE cum >= total * (2.0/3.0)) AS cut_hi
-  FROM s GROUP BY lang
-)
+), cuts AS ({_nearest_rank_sql("scored", ["lang"], "score",
+                                {"cut_lo": 1.0 / 3.0, "cut_hi": 2.0 / 3.0})})
 SELECT sc.lang,
        CASE WHEN sc.score <= c.cut_lo THEN 'head'
             WHEN sc.score <= c.cut_hi THEN 'middle'
@@ -3205,23 +3120,15 @@ def q_td_timeline_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TIMELINE_SQL = """
+_TIMELINE_SQL = f"""
 WITH d AS (
   SELECT event_type AS k, CAST(ts AS DATE) AS day, value AS v
   FROM events WHERE value IS NOT NULL
 ), g AS (
   SELECT k, day, v, CAST(count(*) AS DOUBLE) AS c FROM d GROUP BY k, day, v
-), s AS (
-  SELECT k, day, v,
-         sum(c) OVER (PARTITION BY k, day ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY k, day) AS total
-  FROM g
 ), q AS (
-  SELECT k, day,
-         CAST(max(total) AS BIGINT) AS n,
-         min(v) FILTER (WHERE cum >= total * 0.5) AS p5,
-         min(v) FILTER (WHERE cum >= total * 0.95) AS p95
-  FROM s GROUP BY k, day
+  SELECT k, day, CAST(n AS BIGINT) AS n, p5, p95
+  FROM ({_nearest_rank_sql("d", ["k", "day"], "v", {"p5": 0.5, "p95": 0.95}, total="n")})
 ), grid AS (  -- every (key, day) CDF evaluated on the key's union support
   SELECT kd.k, kd.day, pts.v
   FROM (SELECT DISTINCT k, day FROM d) kd
@@ -3324,7 +3231,7 @@ def q_td_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SLIDING_SQL = """
+_SLIDING_SQL = f"""
 WITH d AS (
   SELECT event_type AS k, CAST(ts AS DATE) AS day, value AS v
   FROM events WHERE value IS NOT NULL
@@ -3334,20 +3241,10 @@ WITH d AS (
   SELECT a.k, a.day AS anchor, d.v
   FROM days a JOIN d ON d.k = a.k
    AND d.day BETWEEN a.day - 2 AND a.day
-), g AS (
-  SELECT k, anchor, v, CAST(count(*) AS DOUBLE) AS c
-  FROM win GROUP BY k, anchor, v
-), s AS (
-  SELECT k, anchor, v,
-         sum(c) OVER (PARTITION BY k, anchor ORDER BY v) AS cum,
-         sum(c) OVER (PARTITION BY k, anchor) AS total
-  FROM g
 ), q AS (
-  SELECT k, anchor,
-         CAST(max(total) AS BIGINT) AS n,
-         min(v) FILTER (WHERE cum >= total * 0.5) AS p50,
-         min(v) FILTER (WHERE cum >= total * 0.95) AS p95
-  FROM s GROUP BY k, anchor
+  SELECT k, anchor, CAST(n AS BIGINT) AS n, p50, p95
+  FROM ({_nearest_rank_sql("win", ["k", "anchor"], "v", {"p50": 0.5, "p95": 0.95},
+                           total="n")})
 ), ns AS (
   SELECT a.k, a.day AS anchor, CAST(count(*) AS INT) AS n_slides
   FROM days a JOIN days b ON b.k = a.k AND b.day BETWEEN a.day - 2 AND a.day
@@ -4250,7 +4147,7 @@ FROM documents GROUP BY lang
     #  DuckDB runs each independently so only the key set must match)
     # --- round-4 folds ---
     "td_kll_quantiles_by_lang": _nearest_rank_sql(
-        "documents", "lang", "n_chars",
+        "documents", ["lang"], "n_chars",
         {**PS_DISCRETE, **{f"k{a}": p for a, p in PS_DISCRETE.items()}},
     ),
     "td_quantiles_multi_table": _MULTI_TABLE_SQL,

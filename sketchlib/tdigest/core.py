@@ -43,6 +43,8 @@ from __future__ import annotations
 import math
 import struct as _struct
 from bisect import bisect_right
+from fractions import Fraction
+from functools import lru_cache
 from typing import Iterable, Sequence
 
 import numpy as np
@@ -379,6 +381,46 @@ def _segment_blobs(means: np.ndarray, ns: np.ndarray, size: np.ndarray) -> list[
 # ---------------------------------------------------------------------------
 
 
+@lru_cache(maxsize=256)
+def rank_fraction(p: float) -> tuple[int, int]:
+    """``p`` as the decimal the caller wrote, ``(a, b)`` in lowest terms:
+    ``0.95 -> (19, 20)``, ``1/3 -> (3333333333333333, 10**16)``.
+    ``str(float(p))`` is the shortest decimal that reads back as the same
+    double (numpy 2's ``repr`` of a float64 is not a decimal)."""
+    f = Fraction(str(float(p)))
+    return f.numerator, f.denominator
+
+
+def _rank_target(total: float, p: float) -> float:
+    """The smallest double ≥ the exact rational ``total·a/b`` for ``(a, b)
+    = rank_fraction(p)``: a double cumulative weight is ≥ it iff it is ≥
+    ``total·a/b`` (for integer weights, iff it is ≥ ``⌈total·a/b⌉``).  NaN
+    and ±inf pass through; ``searchsorted`` sends them to an end."""
+    if not math.isfinite(p):
+        return p
+    a, b = rank_fraction(p)
+    m, d = total.as_integer_ratio()
+    num, den = m * a, d * b
+    t = num / den  # int / int rounds correctly to nearest
+    tn, td = t.as_integer_ratio()
+    return t if tn * den >= num * td else math.nextafter(t, math.inf)
+
+
+def nearest_rank(cum: np.ndarray, ps: Sequence[float] | np.ndarray) -> np.ndarray:
+    """Weighted Nearest Rank (reference ``percentile`` Discrete branch,
+    src/tdigest.ml:437-456), the one rank rule of every discrete quantile:
+    for each p, the index of the first cumulative weight ≥ ``total·p``,
+    where p is read as its decimal ``a/b`` (``rank_fraction``) and the
+    comparison is exact; clamped to the last index.  ``cum`` is the
+    ascending cumulative weight, ``cum[-1]`` the total.  The SQL oracles
+    spell the same rule ``cum·b ≥ total·a`` in HUGEINT."""
+    ps = np.asarray(ps, dtype=np.float64)
+    total = float(cum[-1])
+    targets = [_rank_target(total, p) for p in ps.ravel().tolist()]
+    idx = np.searchsorted(cum, targets, side="left")
+    return np.minimum(idx, len(cum) - 1).reshape(ps.shape)
+
+
 def quantiles_of_centroids(
     means: np.ndarray,
     ns: np.ndarray,
@@ -389,7 +431,7 @@ def quantiles_of_centroids(
 
     Merging mode: linear interpolation between centroid midpoints in
     (mean_cumn, mean) space; clamps to min/max outside [0,1].
-    Discrete mode: Nearest Rank Method (h ≤ lower.cumn → lower else upper).
+    Discrete mode: ``nearest_rank``.
     Empty digest → NaN.
     """
     ps = np.asarray(ps, dtype=np.float64)
@@ -397,6 +439,8 @@ def quantiles_of_centroids(
     if s == 0:
         return np.full(ps.shape, np.nan)
     cumn = np.cumsum(ns)
+    if discrete:
+        return np.asarray(means[nearest_rank(cumn, ps)])
     mean_cumn = cumn - ns / 2.0
     total = cumn[-1]
     h = total * ps
@@ -414,15 +458,11 @@ def quantiles_of_centroids(
     out[eq] = means[li[eq]]
     both = mid & ~eq
     bi = li[both]
-    if discrete:
-        take_lower = h[both] <= cumn[bi]
-        out[both] = np.where(take_lower, means[bi], means[bi + 1])
-    else:
-        out[both] = means[bi] + (
-            (h[both] - mean_cumn[bi])
-            * (means[bi + 1] - means[bi])
-            / (mean_cumn[bi + 1] - mean_cumn[bi])
-        )
+    out[both] = means[bi] + (
+        (h[both] - mean_cumn[bi])
+        * (means[bi + 1] - means[bi])
+        / (mean_cumn[bi + 1] - mean_cumn[bi])
+    )
     return out
 
 

@@ -96,7 +96,7 @@ def test_hll_hourly_rollup_laws(spark):
 @pytest.mark.parametrize("name", [
     "q_td_cube_lang_source", "q_td_ks_drift_by_lang",
     "q_lm_bigram_score", "q_lm_trigram_score", "q_sketch_laws_summary",
-    "q_ann_exact_cosine",
+    "q_ann_exact_cosine", "q_decontam_fuzzy_neardup",
 ])
 def test_query_leaves_no_cache_behind(spark, name):
     """A catalog query caches its shared intermediate while it builds the
