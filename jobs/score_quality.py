@@ -1,6 +1,6 @@
 """Production job: CCNet-style LM-quality scoring — train a per-language
-unigram (or ``--ngram N`` stupid-backoff n-gram, any order) fluency model
-once, or score a corpus against a stored model.
+stupid-backoff n-gram fluency model of order ``--ngram`` (default 1, the
+unigram model) once, or score a corpus against a stored model.
 
 Train (on the reference corpus, e.g. a vetted wiki-like slice):
 
@@ -17,16 +17,20 @@ Score (any later batch — the live crawl — against the stored model):
         --output /warehouse/scored/2026-08-18 \
         --buckets   # optionally add head/middle/tail via per-lang digests
 
-The model is a ≤ langs×(K+1)-row parquet table (OOV bucket = word-NULL
-row); scoring is ONE stateless broadcast-dict pass over the scan — no
-explode, no join, no aggregate — so at 100 TB the job is scan-bound and
-the same call works inside ``readStream``/``foreachBatch``.  Scores are
-integer micro-nats (``quantize=6``): bit-identical on any partition
-layout, cluster size, or engine, so stored scores from different runs are
-directly comparable.  With ``--buckets`` the job additionally builds one
-DISCRETE t-digest per language over the scores (KB shuffle) and labels
-each doc head/middle/tail at the exact per-lang score terciles — CCNet's
-"keep the most fluent third" split.
+Every order stores ONE parquet table ([lang], ctx, word, lp): the
+``ctx IS NULL`` rows are the unigram level (OOV bucket = word-NULL row;
+≤ langs×(K+1) rows, the whole model at order 1), and a ctx of j words
+holds the capped (j+1)-gram relative frequencies.  A table stored before
+the ``ctx`` column existed, ([lang], word, lp), scores as the order-1
+model it is.  Scoring is ONE stateless broadcast-dict pass over the scan
+— no explode, no join, no aggregate — so at 100 TB the job is scan-bound
+and the same call works inside ``readStream``/``foreachBatch``.  Scores
+are integer micro-nats (``quantize=6``): bit-identical on any partition
+layout, cluster size, or engine, so stored scores from different runs
+are directly comparable.  With ``--buckets`` the job additionally builds
+one DISCRETE t-digest per language over the scores (KB shuffle) and
+labels each doc head/middle/tail at the exact per-lang score terciles —
+CCNet's "keep the most fluent third" split.
 
 JSON metrics line on stdout; exit 0 on success.
 """
@@ -69,10 +73,13 @@ def main() -> int:
                          "for huge multi-language models; 'join': fully-JVM "
                          "broadcast-join plan (no driver collect)")
     ap.add_argument("--ngram", type=int, default=1,
-                    help="1 = unigram model; 2 = stupid-backoff bigram; "
-                         "N>=3 = order-N stupid backoff (per-level capped "
-                         "models, per-missed-level penalties)")
-    ap.add_argument("--bigram-top-k", type=int, default=262144,
+                    help="model order: 1 = unigram, 2 = bigram, N = "
+                         "order-N stupid backoff (per-level capped models, "
+                         "per-missed-level penalties); the 'join' "
+                         "distribution scores at this order, the kernel "
+                         "distributions at the stored model's order")
+    ap.add_argument("--bigram-top-k", dest="ngram_top_k", type=int,
+                    default=262144,
                     help="per-lang per-level stored n-gram cap (ngram>=2)")
     ap.add_argument("--min-count", type=int, default=1,
                     help="prune n-grams rarer than this before the cap")
@@ -94,43 +101,22 @@ def main() -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from sketchlib.spark.textops import (
-        bigram_logprob_score,
-        score_with_model_path,
-        score_with_stored_bigram,
-        score_with_stored_model,
-        train_bigram_model,
-        train_unigram_model,
-        unigram_logprob_score,
+        ngram_logprob_score,
+        score_with_ngram_path,
+        score_with_stored_ngram,
+        train_ngram_model,
     )
 
     t0 = time.time()
     if args.mode == "train":
-        if args.ngram >= 3 or (args.ngram == 2 and args.context_top_k):
-            from sketchlib.spark.textops import train_ngram_model
-
-            model = train_ngram_model(
-                spark.read.parquet(args.input), order=args.ngram,
-                lang_col=args.lang_col, text_col=args.text_col,
-                vocab_top_k=args.vocab_top_k,
-                ngram_top_k=args.bigram_top_k, alpha=args.alpha,
-                quantize=args.quantize, min_count=args.min_count,
-                context_top_k=args.context_top_k,
-            )
-        elif args.ngram == 2:
-            model = train_bigram_model(
-                spark.read.parquet(args.input),
-                lang_col=args.lang_col, text_col=args.text_col,
-                vocab_top_k=args.vocab_top_k,
-                bigram_top_k=args.bigram_top_k, alpha=args.alpha,
-                quantize=args.quantize, min_count=args.min_count,
-            )
-        else:
-            model = train_unigram_model(
-                spark.read.parquet(args.input),
-                lang_col=args.lang_col, text_col=args.text_col,
-                vocab_top_k=args.vocab_top_k, alpha=args.alpha,
-                quantize=args.quantize,
-            )
+        model = train_ngram_model(
+            spark.read.parquet(args.input), order=args.ngram,
+            lang_col=args.lang_col, text_col=args.text_col,
+            vocab_top_k=args.vocab_top_k,
+            ngram_top_k=args.ngram_top_k, alpha=args.alpha,
+            quantize=args.quantize, min_count=args.min_count,
+            context_top_k=args.context_top_k,
+        )
         model.write.mode("overwrite").parquet(args.model)
         stored = spark.read.parquet(args.model)
         print(json.dumps({
@@ -144,73 +130,20 @@ def main() -> int:
     if not args.output:
         ap.error("score mode requires --output")
     docs = spark.read.parquet(args.input)
-    if args.ngram >= 3:
-        # any-order paths: the stored model itself implies the order for
-        # the kernel variants; the join plan is told explicitly
-        if args.model_distribution == "join":
-            from sketchlib.spark.textops import ngram_logprob_score
-
-            scored = ngram_logprob_score(
-                docs, order=args.ngram, model=spark.read.parquet(args.model),
-                id_col=args.id_col, text_col=args.text_col,
-                lang_col=args.lang_col,
-                quantize=args.quantize, backoff=args.backoff,
-            )
-        elif args.model_distribution == "path":
-            from sketchlib.spark.textops import score_with_ngram_path
-
-            scored = score_with_ngram_path(
-                docs, args.model, id_col=args.id_col,
-                text_col=args.text_col, lang_col=args.lang_col,
-                quantize=args.quantize, backoff=args.backoff,
-            )
-        else:
-            from sketchlib.spark.textops import score_with_stored_ngram
-
-            scored = score_with_stored_ngram(
-                docs, spark.read.parquet(args.model), id_col=args.id_col,
-                text_col=args.text_col, lang_col=args.lang_col,
-                quantize=args.quantize, backoff=args.backoff,
-            )
-    elif args.ngram == 2:
-        if args.model_distribution == "join":
-            scored = bigram_logprob_score(
-                docs, model=spark.read.parquet(args.model),
-                id_col=args.id_col, text_col=args.text_col,
-                lang_col=args.lang_col,
-                quantize=args.quantize, backoff=args.backoff,
-            )
-        elif args.model_distribution == "path":
-            from sketchlib.spark.textops import score_with_bigram_path
-
-            scored = score_with_bigram_path(
-                docs, args.model, id_col=args.id_col,
-                text_col=args.text_col, lang_col=args.lang_col,
-                quantize=args.quantize, backoff=args.backoff,
-            )
-        else:
-            scored = score_with_stored_bigram(
-                docs, spark.read.parquet(args.model), id_col=args.id_col,
-                text_col=args.text_col, lang_col=args.lang_col,
-                quantize=args.quantize, backoff=args.backoff,
-            )
+    score_kw = dict(id_col=args.id_col, text_col=args.text_col,
+                    lang_col=args.lang_col, quantize=args.quantize,
+                    backoff=args.backoff)
+    # the kernel distributions read the order off the stored model's
+    # deepest context; the join plan is told it
+    if args.model_distribution == "join":
+        scored = ngram_logprob_score(
+            docs, order=args.ngram, model=spark.read.parquet(args.model),
+            **score_kw)
     elif args.model_distribution == "path":
-        scored = score_with_model_path(
-            docs, args.model, id_col=args.id_col, text_col=args.text_col,
-            lang_col=args.lang_col, quantize=args.quantize,
-        )
-    elif args.model_distribution == "join":
-        scored = unigram_logprob_score(
-            docs, model=spark.read.parquet(args.model),
-            id_col=args.id_col, text_col=args.text_col,
-            lang_col=args.lang_col, quantize=args.quantize,
-        )
+        scored = score_with_ngram_path(docs, args.model, **score_kw)
     else:
-        model = spark.read.parquet(args.model)
-        scored = score_with_stored_model(
-            docs, model, id_col=args.id_col, text_col=args.text_col,
-            lang_col=args.lang_col, quantize=args.quantize,
-        )
+        scored = score_with_stored_ngram(
+            docs, spark.read.parquet(args.model), **score_kw)
     if args.buckets or args.cuts_in:
         from sketchlib.spark.textops import bucket_by_cuts, score_cut_table
 

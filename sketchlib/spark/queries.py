@@ -222,14 +222,6 @@ def q_td_compressed_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _parquet_row_count(sf_dir: str, name: str) -> int:
-    """Row count straight from the parquet footers — metadata reads only, no
-    table scan (the table-statistics lookup a production catalog provides)."""
-    import pyarrow.dataset as ds
-
-    return ds.dataset(f"{sf_dir}/{name}.parquet").count_rows()
-
-
 # filled in by q_bloom_membership_by_source for inspection/benchmarking:
 # {source: serialized filter bytes} of the most recent run
 LAST_BLOOM_FILTER_BYTES: dict[str, int] = {}
@@ -2957,14 +2949,16 @@ def q_lm_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram-LM fluency score, per language), gated as per-(lang, bucket)
     doc counts + token mass + the exact per-lang cut scores.  CCNet scores
     Common-Crawl with a Wikipedia KenLM and keeps the most-fluent third;
-    here the model is the degenerate unigram case so every number is
-    bit-checkable: ``quantize=6`` stores per-token log-probs as integer
-    micro-nats, making each doc's score EXACT integer arithmetic (one
-    final IEEE division) — identical on any partition layout or engine —
-    and the DISCRETE per-lang t-digest makes the cut points exact
-    nearest-rank quantiles of those scores.  Plan: broadcast model join →
-    one (doc,lang) aggregate → KB digest build → 5-row broadcast → codegen
-    CASE; no row-scale shuffle beyond the score aggregate."""
+    here the model is the order-1 case of the stupid-backoff n-gram stack
+    (``train_ngram_model``/``ngram_logprob_score`` at ``order=1``, via
+    ``quality_buckets``) so every number is bit-checkable: ``quantize=6``
+    stores per-token log-probs as integer micro-nats, making each doc's
+    score EXACT integer arithmetic (one final IEEE division) — identical
+    on any partition layout or engine — and the DISCRETE per-lang t-digest
+    makes the cut points exact nearest-rank quantiles of those scores.
+    Plan: broadcast model join → one (doc,lang) aggregate → KB digest
+    build → 5-row broadcast → codegen CASE; no row-scale shuffle beyond
+    the score aggregate."""
     from sketchlib.spark.textops import quality_buckets
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
@@ -3262,28 +3256,29 @@ LM_BIGRAM_TOPK = 512  # per-lang bigram cap — small enough that the gated
 
 
 def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stupid-backoff bigram LM quality score, per document — the n-gram
-    upgrade of the unigram scorer (Brants et al. 2007's web-scale scoring
-    rule: stored relative frequency when the bigram is in the capped
-    model, else ln(0.4) + the smoothed unigram score; a doc's first token
-    scores as pure unigram).  ``quantize=6`` makes every per-doc sum exact
-    integer arithmetic, so all 500 per-doc doubles hash-match the oracle,
-    which retrains the same capped model in SQL (total-ordered top-k
-    tie-break) and rescores every document.  Plan: token pairing is an
-    in-array JVM projection (no window), both model joins broadcast, one
-    per-doc aggregate — the same shape that scores a live crawl."""
-    from sketchlib.spark.textops import bigram_logprob_score, train_bigram_model
+    """Stupid-backoff bigram LM quality score, per document —
+    ``ngram_logprob_score`` at ``order=2`` (Brants et al. 2007's web-scale
+    scoring rule: stored relative frequency when the bigram is in the
+    capped model, else ln(0.4) + the smoothed unigram score; a doc's first
+    token scores as pure unigram).  ``quantize=6`` makes every per-doc sum
+    exact integer arithmetic, so all 500 per-doc doubles hash-match the
+    oracle, which retrains the same capped model in SQL (total-ordered
+    top-k tie-break) and rescores every document.  Plan: token pairing is
+    an in-array JVM projection (no window), the three model joins
+    broadcast, one per-doc aggregate — the same shape that scores a live
+    crawl."""
+    from sketchlib.spark.textops import ngram_logprob_score, train_ngram_model
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     # cache the (KB-scale) model table: it feeds THREE broadcast joins in
     # the scorer — uncached, each join re-derives the whole training
     # sub-plan (9 fact scans instead of 1 training pass + 1 scoring scan)
-    model = train_bigram_model(
-        docs, vocab_top_k=LM_TOPK, bigram_top_k=LM_BIGRAM_TOPK,
+    model = train_ngram_model(
+        docs, order=2, vocab_top_k=LM_TOPK, ngram_top_k=LM_BIGRAM_TOPK,
         alpha=0.5, quantize=6,
     ).cache()
-    return _released(bigram_logprob_score(
-        docs, model=model, quantize=6, backoff=0.4,
+    return _released(ngram_logprob_score(
+        docs, order=2, model=model, quantize=6, backoff=0.4,
     ), model)
 
 

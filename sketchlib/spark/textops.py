@@ -461,153 +461,264 @@ def pack_sequences(
 # ---------------------------------------------------------------------------
 
 
-def train_unigram_model(
+def _top_k(df: DataFrame, keys: list, k: int, *order) -> DataFrame:
+    """The first ``k`` rows per ``keys`` group under the total ``order``."""
+    if keys:
+        w = Window.partitionBy(*keys).orderBy(*order)
+        return (df.withColumn("_rk", F.row_number().over(w))
+                .filter(F.col("_rk") <= k).drop("_rk"))
+    # global model: sort+limit compiles to TakeOrderedAndProject
+    # (distributed partial top-k) — a keyless row_number window would
+    # drag the whole vocabulary through ONE task
+    return df.orderBy(*order).limit(k)
+
+
+def _lp_units(lp: "F.Column", quantize: int | None) -> "F.Column":
+    # integer micro-nat (10^-q) units: per-doc sums become exact long
+    # arithmetic — identical on any partition layout or engine
+    if quantize is None:
+        return lp
+    return F.round(lp * float(10**quantize)).cast("long")
+
+
+def _token_ngrams(order: int) -> "F.Column":
+    """Per-token struct (word, ctx1, .., ctx{order-1}) computed INSIDE the
+    tokens array: ``ctx_j`` is the space-join of the ``j`` preceding tokens
+    (NULL when fewer than ``j`` precede; ``F.get`` is 0-based and NULL out
+    of bounds).  Tokens are whitespace-split, so the space-join is
+    collision-free; this is a pure JVM projection at scan grain — no
+    window, no shuffle, any order."""
+    def fields(w, i):
+        fs = [w.alias("word")]
+        for j in range(1, order):
+            parts = [F.get(F.col("tokens"), i - k) for k in range(j, 0, -1)]
+            ctx = parts[0] if j == 1 else F.concat_ws(" ", *parts)
+            fs.append(F.when(i >= j, ctx).alias(f"ctx{j}"))
+        return F.struct(*fs)
+
+    return F.transform(F.col("tokens"), fields)
+
+
+def train_ngram_model(
     ref: DataFrame,
+    order: int = 3,
     lang_col: str | None = "lang",
     text_col: str = "text",
     vocab_top_k: int = 65536,
+    ngram_top_k: int = 262144,
     alpha: float = 0.5,
     quantize: int | None = None,
+    min_count: int = 1,
+    context_top_k: int | None = None,
 ) -> DataFrame:
-    """Train the capped-vocab unigram LM used by ``unigram_logprob_score``
-    and return it as a STORABLE table: rows ([lang], word, lp) where lp is
-    ln p(word) under add-``alpha`` smoothing (integer 10^-q units when
-    ``quantize=q``), and the per-language OOV bucket is the ``word IS
-    NULL`` row.  ≤ langs × (K+1) rows by construction — write it once with
-    ``df.write.parquet`` and every future batch/stream scores against it
-    without rescanning the reference corpus (CCNet's train-on-Wikipedia /
-    score-Common-Crawl split)."""
+    """Train the stupid-backoff LM of any ``order`` used by
+    ``ngram_logprob_score`` and return ONE storable table ([lang], ctx,
+    word, lp).  Write it once with ``df.write.parquet`` and every future
+    batch/stream scores against it without rescanning the reference corpus
+    (CCNet's train-on-Wikipedia / score-Common-Crawl split).
+
+    - ``ctx IS NULL`` → the unigram level, the whole model at ``order=1``:
+      per ``lang_col`` (pass ``lang_col=None`` for one global model) token
+      counts capped to the ``vocab_top_k`` most frequent words (tie-break
+      word ASC), add-``alpha`` smoothing over vocab + one OOV bucket —
+      p(w) = (cnt + alpha) / (total + alpha·(V+1)), the ``word IS NULL``
+      row gets alpha / (total + alpha·(V+1)).
+    - a ``ctx`` of ``j`` space-joined words → the (j+1)-gram rows with
+      lp = ln(cnt(ctx,word)/cnt(ctx)), the stupid-backoff relative
+      frequency (Brants et al. 2007, "Large Language Models in Machine
+      Translation"): NO normalization across the backoff — the published
+      web-scale choice precisely because training stays one explode of
+      the per-token context struct feeding ``order-1`` independent
+      pair-count aggregates, embarrassingly parallel at any order.
+
+    Each level above 1 is capped independently at ``ngram_top_k`` rows per
+    lang (total-ordered tie-break cnt DESC, ctx, word), with context totals
+    computed over ALL n-grams BEFORE capping, so stored probabilities stay
+    true relative frequencies whichever rows survive.  ``min_count`` prunes
+    rarer n-grams BEFORE the cap — at web scale the n-gram vocabulary is
+    hapax-dominated, so ``min_count=2`` typically halves the window input.
+    ``context_top_k=K`` additionally keeps only the K most frequent
+    CONTEXTS per lang per level (by total context count, tie-break ctx
+    ASC) before the row cap: a rare context's continuations are noise the
+    backoff chain handles better than a stored 1-count estimate — a
+    dropped context simply backs off one level (one ln(backoff) penalty),
+    exactly as if it had never been seen.  ``quantize=q`` stores integer
+    10^-q-nat log-probs (exact arithmetic downstream).  ≤ langs × (K+1)
+    rows at order 1 by construction."""
+    if order < 1:
+        raise ValueError(f"train_ngram_model: order must be >= 1, got {order}")
     keys = [lang_col] if lang_col else []
-    rtoks = (
-        with_tokens(ref.select(*keys, text_col), text_col)
-        .select(*keys, F.explode("tokens").alias("word"))
+    toks = with_tokens(ref.select(*keys, text_col), text_col)
+    null_ctx = F.lit(None).cast("string").alias("ctx")
+    counts = (
+        toks.select(*keys, F.explode("tokens").alias("word"))
+        .groupBy(*keys, "word").agg(F.count("*").alias("cnt"))
     )
-    counts = rtoks.groupBy(*keys, "word").agg(F.count("*").alias("cnt"))
-    if keys:
-        wk = Window.partitionBy(*keys).orderBy(F.desc("cnt"), F.asc("word"))
-        model = (
-            counts.withColumn("_rk", F.row_number().over(wk))
-            .filter(F.col("_rk") <= vocab_top_k)
-            .drop("_rk")
-        )
-    else:
-        # global model: sort+limit compiles to TakeOrderedAndProject
-        # (distributed partial top-k) — a keyless row_number window would
-        # drag the whole vocabulary through ONE task
-        model = counts.orderBy(F.desc("cnt"), F.asc("word")).limit(vocab_top_k)
-    totals = model.groupBy(*keys).agg(
+    vocab = _top_k(counts, keys, vocab_top_k, F.desc("cnt"), F.asc("word"))
+    totals = vocab.groupBy(*keys).agg(
         F.sum("cnt").alias("_total"), F.count("*").alias("_v")
     )
     denom = F.col("_total") + F.lit(alpha) * (F.col("_v") + F.lit(1.0))
-    lp_expr = F.log((F.col("cnt") + F.lit(alpha)) / denom)
-    oov_expr = F.log(F.lit(alpha) / denom)
-    if quantize is not None:
-        # integer micro-nat (10^-q) units: per-doc sums become exact long
-        # arithmetic — identical on any partition layout or engine
-        scale = float(10**quantize)
-        lp_expr = F.round(lp_expr * scale).cast("long")
-        oov_expr = F.round(oov_expr * scale).cast("long")
-    word_rows = model.join(
+    word_rows = vocab.join(
         totals, keys or None, "inner" if keys else "cross"
-    ).select(*keys, "word", lp_expr.alias("lp"))
+    ).select(*keys, null_ctx, "word",
+             _lp_units(F.log((F.col("cnt") + F.lit(alpha)) / denom),
+                       quantize).alias("lp"))
     oov_rows = totals.select(
-        *keys, F.lit(None).cast("string").alias("word"), oov_expr.alias("lp")
+        *keys, null_ctx, F.lit(None).cast("string").alias("word"),
+        _lp_units(F.log(F.lit(alpha) / denom), quantize).alias("lp"),
     )
-    return word_rows.unionByName(oov_rows)
+    out = word_rows.unionByName(oov_rows)
+    base = toks.select(*keys, F.explode(_token_ngrams(order)).alias("_p"))
+    for j in range(2, order + 1):
+        grams = base.select(
+            *keys,
+            F.col(f"_p.ctx{j - 1}").alias("ctx"),
+            F.col("_p.word").alias("word"),
+        ).filter(F.col("ctx").isNotNull())
+        cnt = grams.groupBy(*keys, "ctx", "word").agg(F.count("*").alias("cnt"))
+        tot = cnt.groupBy(*keys, "ctx").agg(F.sum("cnt").alias("_tot"))
+        if context_top_k is not None:
+            # prune to the K hottest contexts BEFORE the row cap; `tot` is
+            # one row per context, so this ranks contexts, not rows
+            tot = _top_k(tot, keys, context_top_k, F.desc("_tot"), F.asc("ctx"))
+        if min_count > 1:
+            cnt = cnt.filter(F.col("cnt") >= min_count)
+        capped = _top_k(cnt.join(tot, keys + ["ctx"]), keys, ngram_top_k,
+                        F.desc("cnt"), F.asc("ctx"), F.asc("word"))
+        out = out.unionByName(capped.select(
+            *keys, "ctx", "word",
+            _lp_units(F.log(F.col("cnt") / F.col("_tot")), quantize).alias("lp"),
+        ))
+    return out
 
 
-def _check_model_quantize(model: DataFrame, quantize: int | None) -> None:
+def _model_table(model: DataFrame, quantize: int | None) -> DataFrame:
+    """The one entry check of every scorer: the model's lp type must match
+    ``quantize``, and a table stored before the ``ctx`` column existed —
+    ([lang], word, lp) — reads as the order-1 model it is."""
     lp_type = dict(model.dtypes)["lp"]
     if (lp_type == "bigint") != (quantize is not None):
         raise ValueError(
             f"model lp column is {lp_type} but quantize={quantize}: pass the "
             "same quantize= the model was trained with"
         )
+    if "ctx" in model.columns:
+        return model
+    return model.withColumn("ctx", F.lit(None).cast("string"))
 
 
-def unigram_logprob_score(
+def _backoff_units(backoff: float, quantize: int | None):
+    import math
+
+    if quantize is None:
+        return math.log(backoff)
+    return int(round(math.log(backoff) * 10**quantize))
+
+
+def ngram_logprob_score(
     df: DataFrame,
     ref: DataFrame | None = None,
+    order: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     lang_col: str | None = "lang",
     vocab_top_k: int = 65536,
+    ngram_top_k: int = 262144,
     alpha: float = 0.5,
     quantize: int | None = None,
+    backoff: float = 0.4,
     model: DataFrame | None = None,
 ) -> DataFrame:
     """CCNet-style language-model quality score: the mean negative log
-    probability of a document's tokens under a unigram model trained on a
-    REFERENCE corpus (CCNet scores Common-Crawl against a Wikipedia-trained
-    KenLM; the unigram degenerate case keeps this operator pure-DataFrame
-    and bit-checkable while the plumbing — train on ref, broadcast the
-    model, score at scan grain — is exactly the production shape, and a
-    stronger model only changes the probability lookup).
+    probability of a document's tokens under a stupid-backoff n-gram model
+    of ``order`` trained on a REFERENCE corpus (``ref``, default ``df``
+    itself; CCNet scores Common-Crawl against a Wikipedia-trained KenLM —
+    stupid backoff keeps this operator pure-DataFrame and bit-checkable
+    while the plumbing — train on ref, broadcast the model, score at scan
+    grain — is exactly the production shape).  Pass ``model=`` (a
+    ``train_ngram_model`` result, e.g. read back from parquet) to skip
+    training; ``quantize`` must then match the stored model's.
 
-    Model: per ``lang_col`` (per-language models, as CCNet trains them;
-    pass ``lang_col=None`` for one global model) token counts over ``ref``
-    (default: ``df`` itself), capped to the ``vocab_top_k`` most frequent
-    words per language (open web vocabulary is unbounded — the cap makes
-    the broadcast ≤ langs × K rows by construction, same policy as
-    ``lang_id_confusion``).  Add-``alpha`` smoothing over vocab + one OOV
-    bucket: p(w) = (cnt + alpha) / (total + alpha·(V+1)), OOV gets
-    alpha / (total + alpha·(V+1)).
+    Returns (id, [lang], n_tokens, logprob_per_token); LOWER is more
+    fluent, and empty docs and docs whose lang has no model row score
+    (0, NULL).  Per-token score walks the backoff chain top-down: the
+    stored (j+1)-gram lp when (ctx_j, word) is in the model, else
+    ln(``backoff``) + the j-gram score, down to the unigram lp or the OOV
+    bucket — penalties accumulate per missed level, and a position with
+    fewer than ``j`` preceding tokens skips level j+1 WITHOUT penalty (a
+    doc's first token is pure unigram).  ``order=1`` is the plain unigram
+    model.
 
-    Returns (id, [lang], n_tokens, logprob_per_token) where
-    logprob_per_token = mean of -ln p(token); LOWER is more fluent, and
-    empty docs score NULL.  At scale: the model join is broadcast, the only
-    wide shuffle is the (id, partial-sum) aggregate behind a map-side
-    partial — the same plan as one sketch build.
-
-    ``quantize=q`` rounds each token's log-prob to integer units of
-    10^-q nats before summing, making the per-doc score EXACT integer
-    arithmetic: bit-identical on any partition layout, addition order, or
-    engine (a raw float sum is order-dependent at ~1e-16, which turns
-    exact ties between duplicate documents into nondeterministic
+    Plan: per-token contexts are an in-array JVM projection
+    (``_token_ngrams`` — no window, no extra shuffle), every model level
+    joins as a broadcast, and the only wide shuffle is the per-doc
+    aggregate behind a map-side partial — the same plan as one sketch
+    build.  ``quantize=q`` rounds each token's log-prob to integer units
+    of 10^-q nats, making the per-doc score EXACT integer arithmetic (one
+    final IEEE division): bit-identical on any partition layout, addition
+    order, or engine (a raw float sum is order-dependent at ~1e-16, which
+    turns exact ties between duplicate documents into nondeterministic
     near-ties — fatal for reproducible corpus splits and for oracle
     checking).  q=6 (micro-nats) keeps per-token quantization error below
-    5e-7 while 10^4-token docs still sum < 2^53.
-
-    Pass ``model=`` (a ``train_unigram_model`` result, e.g. read back from
-    parquet) to skip training entirely — train once on the reference
-    corpus, store the ≤ langs×(K+1)-row table, score every future batch
-    against it.  ``quantize`` must then match the stored model's.
-    """
+    5e-7 while 10^4-token docs still sum < 2^53.  Gated as
+    ``lm_quality_buckets`` (order 1), ``lm_bigram_score`` and
+    ``lm_trigram_score``."""
+    if order < 1:
+        raise ValueError(f"ngram_logprob_score: order must be >= 1, got {order}")
     keys = [lang_col] if lang_col else []
     if model is None:
-        model = train_unigram_model(
-            df if ref is None else ref, lang_col, text_col,
-            vocab_top_k, alpha, quantize,
+        model = train_ngram_model(
+            df if ref is None else ref, order, lang_col, text_col,
+            vocab_top_k, ngram_top_k, alpha, quantize,
         )
     else:
-        _check_model_quantize(model, quantize)
-    words = model.filter(F.col("word").isNotNull()).select(
-        *keys, "word", F.col("lp").alias("_lp")
+        model = _model_table(model, quantize)
+    bq = F.lit(_backoff_units(backoff, quantize))
+    zero = F.lit(0).cast("long") if quantize is not None else F.lit(0.0)
+    uni = model.filter(F.col("ctx").isNull() & F.col("word").isNotNull()).select(
+        *keys, "word", F.col("lp").alias("_uni")
     )
-    oov = model.filter(F.col("word").isNull()).select(
-        *keys, F.col("lp").alias("_oov_lp")
+    oov = model.filter(F.col("ctx").isNull() & F.col("word").isNull()).select(
+        *keys, F.col("lp").alias("_oov")
     )
     # explode_OUTER keeps empty/NULL-text docs as one word-NULL row, and the
     # OOV join is LEFT so docs whose lang has no model row keep their rows
     # too: every doc reaches the aggregate, so there is NO row-scale
     # join-back to restore (0, NULL) rows — that join was a SortMergeJoin +
-    # an extra full-corpus Exchange (plan-audited out in round 4).  A row
-    # counts as a scored token only when it has a word AND its lang has a
-    # model (`_valid`); docs with zero valid rows score (0, NULL).
+    # an extra full-corpus Exchange (plan-audited out).  A row counts as a
+    # scored token only when it has a word AND its lang has a model
+    # (`valid`); docs with zero valid rows score (0, NULL).
     toks = (
         with_tokens(df.select(id_col, *keys, text_col), text_col)
-        .select(id_col, *keys, F.explode_outer("tokens").alias("word"))
+        .select(id_col, *keys, F.explode_outer(_token_ngrams(order)).alias("_p"))
+        .select(id_col, *keys, F.col("_p.word").alias("word"),
+                *[F.col(f"_p.ctx{j}").alias(f"ctx{j}") for j in range(1, order)])
     )
-    joined = (
-        toks.join(F.broadcast(words), keys + ["word"], "left")
-        .join(F.broadcast(oov), keys, "left") if keys else
-        toks.join(F.broadcast(words), ["word"], "left").crossJoin(
-            F.broadcast(oov))
-    )
-    valid = F.col("word").isNotNull() & F.col("_oov_lp").isNotNull()
-    joined = joined.withColumn(
-        "_lp", F.when(valid, F.coalesce("_lp", F.col("_oov_lp")))
-    )
+    joined = toks
+    for j in range(2, order + 1):
+        # level-j rows: ctx has exactly j-1 space-separated words
+        lv = model.filter(
+            F.col("ctx").isNotNull()
+            & (F.size(F.split(F.col("ctx"), " ")) == j - 1)
+        ).select(
+            *keys, F.col("ctx").alias(f"ctx{j - 1}"), "word",
+            F.col("lp").alias(f"_g{j}"),
+        )
+        joined = joined.join(
+            F.broadcast(lv), keys + [f"ctx{j - 1}", "word"], "left")
+    joined = joined.join(F.broadcast(uni), keys + ["word"], "left")
+    joined = (joined.join(F.broadcast(oov), keys, "left") if keys
+              else joined.crossJoin(F.broadcast(oov)))
+    valid = F.col("word").isNotNull() & F.col("_oov").isNotNull()
+    # backoff chain bottom-up: unigram base, then each level wraps it
+    lp = F.coalesce("_uni", "_oov")
+    for j in range(2, order + 1):
+        pen = F.when(F.col(f"ctx{j - 1}").isNull(), zero).otherwise(bq)
+        lp = F.when(F.col(f"_g{j}").isNotNull(), F.col(f"_g{j}")).otherwise(
+            pen + lp
+        )
+    joined = joined.withColumn("_lp", F.when(valid, lp))
     n_expr = F.sum(valid.cast("long"))
     score_expr = -F.sum("_lp") / n_expr
     if quantize is not None:
@@ -619,130 +730,156 @@ def unigram_logprob_score(
     )
 
 
-def score_with_stored_model(
+def _ngram_level_dicts(rows_iter):
+    """(lang, ctx, word, lp) rows -> (uni, oov, levels) where ``levels[j]``
+    maps lang -> {(ctx_word_1, .., ctx_word_j, word): lp} for context
+    length j.  Tuple keys avoid re-joining strings in the scoring loop;
+    the stored model's space-joined ctx splits back losslessly because
+    tokens are whitespace-split."""
+    uni: dict = {}
+    oov: dict = {}
+    levels: dict = {}
+    for lang, c, w, lp in rows_iter:
+        if c is not None:
+            cw = tuple(c.split(" "))
+            levels.setdefault(len(cw), {}).setdefault(lang, {})[cw + (w,)] = lp
+        elif w is None:
+            oov[lang] = lp
+        else:
+            uni.setdefault(lang, {})[w] = lp
+    return uni, oov, levels
+
+
+def score_with_stored_ngram(
     df: DataFrame,
     model: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     lang_col: str | None = "lang",
     quantize: int | None = 6,
+    backoff: float = 0.4,
     max_broadcast_rows: int | None = 2_000_000,
 ) -> DataFrame:
-    """Score documents against a STORED unigram model with ZERO shuffle:
-    the ≤ langs×(K+1)-row model table is collected once, broadcast as a
-    dict, and scoring is one stateless Arrow-batched ``mapInPandas`` over
-    the scan — no explode, no join, no aggregate.  Because it is stateless
-    it runs unchanged on a ``readStream`` (no watermark, no state store):
-    the production shape for scoring a live crawl against last month's
-    model.  With ``quantize`` (must match the model's), per-doc sums are
-    exact Python-int arithmetic, so results are BIT-IDENTICAL to the
-    broadcast-join path of ``unigram_logprob_score`` — asserted in pytest.
-
-    Same output contract as ``unigram_logprob_score``: (id, [lang],
-    n_tokens, logprob_per_token); empty docs → (0, NULL); docs whose lang
-    has no model row → (0, NULL) (the join path drops them the same way).
+    """Score documents against a STORED n-gram model of ANY order with
+    ZERO shuffle (the order is implied by the model's deepest context — no
+    parameter to get wrong): the capped model table is collected once,
+    broadcast as per-level dicts, and scoring is one stateless
+    Arrow-batched ``mapInPandas`` over the scan — no explode, no join, no
+    aggregate.  Because it is stateless it runs unchanged on a
+    ``readStream`` (no watermark, no state store): the production shape
+    for scoring a live crawl against last month's model.  With
+    ``quantize`` (must match the model's) results are BIT-IDENTICAL to
+    ``ngram_logprob_score(df, model=...)`` at the model's order — asserted
+    in pytest.  Same output contract as ``ngram_logprob_score``.
 
     The broadcast dict is the scale trade: ~60 MB per million model rows
     on every executor.  ``max_broadcast_rows`` (default 2M ≈ 30 langs at
     K=65536) guards against silently shipping a giant model — above it
-    this raises and the broadcast-JOIN path (``unigram_logprob_score``
-    with ``model=``, fully JVM, no driver collect) is the right plan.
-    """
-    _check_model_quantize(model, quantize)
+    this raises, and ``score_with_ngram_path`` (executor-side read) or the
+    broadcast-JOIN path (``ngram_logprob_score`` with ``model=``, fully
+    JVM, no driver collect) is the right plan."""
+    model = _model_table(model, quantize)
     if max_broadcast_rows is not None:
         n_model = model.count()  # model tables are KB-MB parquet — cheap
         if n_model > max_broadcast_rows:
             raise ValueError(
                 f"model has {n_model} rows > max_broadcast_rows="
-                f"{max_broadcast_rows}: for models this large use "
-                "score_with_model_path (executor-side read, no broadcast) "
-                "or unigram_logprob_score(df, model=model) (broadcast-join "
-                "path), or raise/disable the guard explicitly"
+                f"{max_broadcast_rows}: use score_with_ngram_path "
+                "(executor-side read, no broadcast) or ngram_logprob_score"
+                "(df, model=model) (broadcast-join path, fully JVM), or "
+                "raise/disable the guard explicitly"
             )
-    rows = model.collect()  # bounded: langs × (vocab_top_k + 1) rows
-    lut: dict = {}
-    oov: dict = {}
-    for r in rows:
-        lang = r[lang_col] if lang_col else None
-        if r["word"] is None:
-            oov[lang] = r["lp"]
-        else:
-            lut.setdefault(lang, {})[r["word"]] = r["lp"]
-    scale = float(10**quantize) if quantize is not None else None
-    bc = df.sparkSession.sparkContext.broadcast((lut, oov))
-    return _apply_score_kernel(df, lambda: bc.value, id_col, text_col,
-                               lang_col, scale)
+    packed = _ngram_level_dicts(
+        (r[lang_col] if lang_col else None, r["ctx"], r["word"], r["lp"])
+        for r in model.collect()
+    )
+    bc = df.sparkSession.sparkContext.broadcast(packed)
+    return _apply_ngram_kernel(df, lambda: bc.value, id_col, text_col,
+                               lang_col, quantize, backoff)
 
 
-#: worker-side (path, lang_col) -> (lut, oov) cache; python workers are
-#: long-lived (spark.python.worker.reuse), so each worker pays the model
-#: read once per job, not once per task
+#: worker-side (path, lang_col) -> (uni, oov, levels) cache; python workers
+#: are long-lived (spark.python.worker.reuse), so each worker pays the
+#: model read once per job, not once per task
 _WORKER_MODEL_CACHE: dict = {}
 
 
-def _load_model_dicts(path: str, lang_col: str | None):
+def _load_ngram_dicts(path: str, lang_col: str | None, schema):
+    """worker-side columnar read of a stored model table in the arrow
+    ``schema`` of its ``_model_table`` (a column the files lack reads as
+    NULLs) -> (uni, oov, levels), cached per worker."""
     key = (path, lang_col)
     hit = _WORKER_MODEL_CACHE.get(key)
     if hit is not None:
         return hit
     import pyarrow.dataset as ds
 
-    cols = ([lang_col] if lang_col else []) + ["word", "lp"]
-    tbl = ds.dataset(path, format="parquet").to_table(columns=cols)
+    tbl = ds.dataset(path, format="parquet", schema=schema).to_table()
     langs = (tbl[lang_col].to_pylist() if lang_col
              else [None] * tbl.num_rows)
-    lut: dict = {}
-    oov: dict = {}
-    for lang, w, lp in zip(langs, tbl["word"].to_pylist(),
-                           tbl["lp"].to_pylist()):
-        if w is None:
-            oov[lang] = lp
-        else:
-            lut.setdefault(lang, {})[w] = lp
+    packed = _ngram_level_dicts(zip(
+        langs, tbl["ctx"].to_pylist(), tbl["word"].to_pylist(),
+        tbl["lp"].to_pylist()))
     if len(_WORKER_MODEL_CACHE) >= 3:  # bound worker memory across jobs
         _WORKER_MODEL_CACHE.clear()
-    _WORKER_MODEL_CACHE[key] = (lut, oov)
-    return lut, oov
+    _WORKER_MODEL_CACHE[key] = packed
+    return packed
 
 
-def score_with_model_path(
+def score_with_ngram_path(
     df: DataFrame,
     model_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     lang_col: str | None = "lang",
     quantize: int | None = 6,
+    backoff: float = 0.4,
 ) -> DataFrame:
-    """The big-model variant of :func:`score_with_stored_model`: instead of
-    driver-collecting and broadcasting the model, each executor-side Python
-    WORKER reads the stored model parquet itself (pyarrow, pruned to
-    word/lp columns) and caches the dicts for the life of the worker — no
-    driver collect, no broadcast, so a 10M-row multi-language model costs
-    the driver nothing and each worker one pruned columnar read.  Same
-    stateless zero-shuffle plan, same streaming capability, and
+    """The big-model variant of :func:`score_with_stored_ngram`: instead
+    of driver-collecting and broadcasting the model, each executor-side
+    Python WORKER reads the stored model parquet itself (pyarrow, pruned
+    to the model columns) and caches the dicts for the life of the worker
+    — no driver collect, no broadcast, so a 10M-row multi-language model
+    costs the driver nothing and each worker one pruned columnar read.
+    Same stateless zero-shuffle plan, same streaming capability, and
     BIT-IDENTICAL output to both other paths under ``quantize``
     (pytest-gated).  ``model_path`` must be readable from the executors
     (shared FS / object store — the normal cluster arrangement)."""
-    model_schema = df.sparkSession.read.parquet(model_path)
-    _check_model_quantize(model_schema, quantize)
-    scale = float(10**quantize) if quantize is not None else None
-    return _apply_score_kernel(
-        df, lambda: _load_model_dicts(model_path, lang_col),
-        id_col, text_col, lang_col, scale)
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    model = _model_table(df.sparkSession.read.parquet(model_path), quantize)
+    cols = ([lang_col] if lang_col else []) + ["ctx", "word", "lp"]
+    schema = to_arrow_schema(model.select(*cols).schema)
+    return _apply_ngram_kernel(
+        df, lambda: _load_ngram_dicts(model_path, lang_col, schema),
+        id_col, text_col, lang_col, quantize, backoff)
 
 
-def _apply_score_kernel(df, get_model, id_col, text_col, lang_col, scale):
+def _apply_ngram_kernel(df, get_model, id_col, text_col, lang_col,
+                        quantize, backoff):
+    """Arrow-batched any-order stupid-backoff scoring kernel: per token,
+    walk the backoff chain from the deepest context the model stores (and
+    the position allows) down to the unigram/OOV base, adding one backoff
+    penalty per missed level — the exact semantics of the
+    ``ngram_logprob_score`` join chain, in one pass over the tokens."""
     id_type = dict(df.dtypes)[id_col]
     lang_field = f"{lang_col} string, " if lang_col else ""
     schema = (f"{id_col} {id_type}, {lang_field}"
               "n_tokens long, logprob_per_token double")
+    bq = _backoff_units(backoff, quantize)
+    scale = float(10**quantize) if quantize is not None else None
 
     def score_batches(batches):
         from itertools import repeat
 
         import pandas as pd
 
-        lut_, oov_ = get_model()
+        uni_, oov_, levels_ = get_model()
+        max_ctx = max(levels_, default=0)
+        bq2 = bq + bq
+        lv1_all = levels_.get(1, {})
+        lv2_all = levels_.get(2, {})
+        _EMPTY: dict = {}
         for pdf in batches:
             out_n, out_s = [], []
             langs = pdf[lang_col] if lang_col else [None] * len(pdf)
@@ -750,14 +887,64 @@ def _apply_score_kernel(df, get_model, id_col, text_col, lang_col, scale):
                 toks = (text or "").split(" ")
                 if "" in toks:  # only pay the filter on irregular spacing
                     toks = [w for w in toks if w]
-                m = lut_.get(lang)
+                m = uni_.get(lang)
                 o = oov_.get(lang)
                 if not toks or o is None:
                     out_n.append(0)
                     out_s.append(None)
                     continue
-                # C-level lookup loop: sum(map(dict.get, toks, repeat(oov)))
-                s = sum(map(m.get, toks, repeat(o)))
+                if max_ctx == 0:
+                    # unigram model: sum(map(dict.get, toks, repeat(oov)))
+                    # is the whole score, one C-level lookup loop
+                    s = sum(map(m.get, toks, repeat(o)))
+                else:
+                    u = list(map(m.get, toks, repeat(o)))
+                if max_ctx == 2:
+                    # trigram fast path: rolling (p2, p1) context vars, no
+                    # per-token slicing — same chain as the generic loop
+                    get2 = lv2_all.get(lang, _EMPTY).get
+                    get1 = lv1_all.get(lang, _EMPTY).get
+                    s = u[0]
+                    p2 = None
+                    p1 = toks[0]
+                    for i in range(1, len(toks)):
+                        w = toks[i]
+                        if p2 is None:
+                            g = get1((p1, w))
+                            s += g if g is not None else bq + u[i]
+                        else:
+                            g = get2((p2, p1, w))
+                            if g is not None:
+                                s += g
+                            else:
+                                g = get1((p1, w))
+                                s += (bq + g) if g is not None else bq2 + u[i]
+                        p2 = p1
+                        p1 = w
+                elif max_ctx == 1:
+                    # bigram fast path
+                    get1 = lv1_all.get(lang, _EMPTY).get
+                    s = u[0]
+                    p1 = toks[0]
+                    for i in range(1, len(toks)):
+                        w = toks[i]
+                        g = get1((p1, w))
+                        s += g if g is not None else bq + u[i]
+                        p1 = w
+                elif max_ctx > 2:
+                    lv = [None] + [levels_.get(j, {}).get(lang, _EMPTY)
+                                   for j in range(1, max_ctx + 1)]
+                    s = 0
+                    for i, w in enumerate(toks):
+                        acc = 0
+                        lp = None
+                        for j in range(min(max_ctx, i), 0, -1):
+                            g = lv[j].get((*toks[i - j:i], w))
+                            if g is not None:
+                                lp = acc + g
+                                break
+                            acc += bq
+                        s += lp if lp is not None else acc + u[i]
                 n = len(toks)
                 # same op order as the SQL path: (-s / n) / scale
                 v = (-s) / n
@@ -787,11 +974,12 @@ def quality_buckets(
     **score_kwargs,
 ) -> DataFrame:
     """CCNet's head/middle/tail corpus split, driven by our own sketches:
-    score every doc with ``unigram_logprob_score``, build one DISCRETE
-    t-digest of scores per language (lossless → the cut points are exact
-    per-lang score quantiles), broadcast the ≤|langs| threshold rows back,
-    and bucket each doc with pure JVM comparisons — head = most fluent
-    (lowest score) third, as CCNet keeps it.
+    score every doc with the unigram model (``ngram_logprob_score`` at
+    ``order=1``), build one DISCRETE t-digest of scores per language
+    (lossless → the cut points are exact per-lang score quantiles),
+    broadcast the ≤|langs| threshold rows back, and bucket each doc with
+    pure JVM comparisons — head = most fluent (lowest score) third, as
+    CCNet keeps it.
 
     The whole plan is: score (one broadcast join + one aggregate) → digest
     build over the tiny (id, score) frame → 5-row broadcast → codegen CASE.
@@ -810,12 +998,12 @@ def quality_buckets(
             for k in ("vocab_top_k", "alpha", "quantize")
             if k in score_kwargs
         }
-        score_kwargs["model"] = train_unigram_model(
-            df if ref is None else ref, lang_col, text_col, **train_kw
+        score_kwargs["model"] = train_ngram_model(
+            df if ref is None else ref, 1, lang_col, text_col, **train_kw
         ).cache()
         score_kwargs["quantize"] = train_kw.get("quantize")
-    scores = unigram_logprob_score(
-        df, id_col=id_col, text_col=text_col, lang_col=lang_col,
+    scores = ngram_logprob_score(
+        df, order=1, id_col=id_col, text_col=text_col, lang_col=lang_col,
         **score_kwargs,
     ).filter(F.col("logprob_per_token").isNotNull())
     thr = score_cut_table(scores, lang_col=lang_col, cuts=cuts)
@@ -875,795 +1063,6 @@ def bucket_by_cuts(
             *extra,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Bigram (stupid-backoff) upgrade of the LM quality scorer
-# ---------------------------------------------------------------------------
-
-
-def _token_pairs() -> "F.Column":
-    """(word, ctx=previous word) pairs computed INSIDE the tokens array —
-    ``F.get`` is 0-based and NULL out-of-bounds, so the first token gets
-    ctx NULL with no window/shuffle: the pairing is a JVM-side projection
-    at scan grain."""
-    return F.transform(
-        F.col("tokens"),
-        lambda w, i: F.struct(
-            w.alias("word"), F.get(F.col("tokens"), i - 1).alias("ctx")
-        ),
-    )
-
-
-def train_bigram_model(
-    ref: DataFrame,
-    lang_col: str | None = "lang",
-    text_col: str = "text",
-    vocab_top_k: int = 65536,
-    bigram_top_k: int = 262144,
-    alpha: float = 0.5,
-    quantize: int | None = None,
-    min_count: int = 1,
-) -> DataFrame:
-    """Train the stupid-backoff bigram LM used by ``bigram_logprob_score``
-    and return ONE storable table: rows ([lang], ctx, word, lp).
-
-    - ``ctx IS NULL``  → the unigram sub-model (``train_unigram_model``
-      verbatim: capped vocab + add-alpha smoothing + the ``word IS NULL``
-      OOV bucket), which the bigram path backs off to.
-    - ``ctx NOT NULL`` → bigram rows with lp = ln(cnt(ctx,word)/cnt(ctx)),
-      the stupid-backoff relative frequency (Brants et al. 2007, "Large
-      Language Models in Machine Translation"): NO normalization across
-      the backoff — the published web-scale choice precisely because it
-      keeps training one pair-count aggregate, embarrassingly parallel.
-
-    Context totals cnt(ctx) are computed over ALL bigrams BEFORE capping,
-    so stored probabilities are true relative frequencies regardless of
-    which rows survive the cap.  The per-lang cap (``bigram_top_k`` most
-    frequent, total-ordered tie-break cnt DESC, ctx, word) bounds the
-    stored/broadcast model; ``min_count`` prunes hapax bigrams BEFORE the
-    top-k window — at web scale the bigram vocabulary is hapax-dominated,
-    so ``min_count=2`` typically shrinks the window input ~2× for free.
-    ``quantize=q`` stores integer 10^-q-nat log-probs (exact arithmetic
-    downstream), matching ``train_unigram_model``."""
-    keys = [lang_col] if lang_col else []
-    uni = train_unigram_model(
-        ref, lang_col, text_col, vocab_top_k, alpha, quantize
-    ).withColumn("ctx", F.lit(None).cast("string"))
-    pairs = (
-        with_tokens(ref.select(*keys, text_col), text_col)
-        .select(*keys, F.explode(_token_pairs()).alias("_p"))
-        .select(*keys, F.col("_p.ctx").alias("ctx"), F.col("_p.word").alias("word"))
-        .filter(F.col("ctx").isNotNull())
-    )
-    bic = pairs.groupBy(*keys, "ctx", "word").agg(F.count("*").alias("cnt"))
-    tot = bic.groupBy(*keys, "ctx").agg(F.sum("cnt").alias("_tot"))
-    if min_count > 1:
-        bic = bic.filter(F.col("cnt") >= min_count)
-    lp_expr = F.log(F.col("cnt") / F.col("_tot"))
-    if quantize is not None:
-        lp_expr = F.round(lp_expr * float(10**quantize)).cast("long")
-    scored = bic.join(tot, keys + ["ctx"])
-    if keys:
-        wk = Window.partitionBy(*keys).orderBy(
-            F.desc("cnt"), F.asc("ctx"), F.asc("word")
-        )
-        capped = (
-            scored.withColumn("_rk", F.row_number().over(wk))
-            .filter(F.col("_rk") <= bigram_top_k)
-        )
-    else:
-        capped = scored.orderBy(
-            F.desc("cnt"), F.asc("ctx"), F.asc("word")
-        ).limit(bigram_top_k)
-    bi_rows = capped.select(*keys, "ctx", "word", lp_expr.alias("lp"))
-    return uni.select(*keys, "ctx", "word", "lp").unionByName(bi_rows)
-
-
-def bigram_logprob_score(
-    df: DataFrame,
-    ref: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-    vocab_top_k: int = 65536,
-    bigram_top_k: int = 262144,
-    alpha: float = 0.5,
-    quantize: int | None = None,
-    backoff: float = 0.4,
-    model: DataFrame | None = None,
-    hash_bigrams: bool = False,
-) -> DataFrame:
-    """Stupid-backoff bigram LM quality score — the n-gram upgrade of
-    ``unigram_logprob_score`` with the SAME output contract (id, [lang],
-    n_tokens, logprob_per_token; lower = more fluent; empty docs NULL).
-
-    Per-token log-score: the stored bigram lp when (ctx, word) is in the
-    model, else ln(``backoff``) + the unigram score (smoothed lp or OOV);
-    a document's FIRST token has no context and scores as pure unigram
-    with no penalty.  With ``quantize`` every per-doc sum is exact integer
-    arithmetic (one final IEEE division) — bit-identical across partition
-    layouts and engines, driver-gated as ``lm_bigram_score``.
-
-    Plan shape is unchanged from the unigram scorer: token pairing is an
-    in-array JVM projection (``_token_pairs`` — no window, no extra
-    shuffle), both model joins are broadcasts, and the only wide shuffle
-    is the per-doc aggregate.  ``hash_bigrams=True`` replaces the (ctx,
-    word) string join key with one JVM-side ``xxhash64`` long on BOTH
-    sides before the broadcast — the stored model keeps strings, but the
-    shipped broadcast shrinks to 8 B/key (what "hashed-context capping"
-    buys at langs × 262k rows); a 64-bit collision scoring a false bigram
-    is ~1e-11 per model and only perturbs that one token's score.
-    """
-    keys = [lang_col] if lang_col else []
-    if model is None:
-        model = train_bigram_model(
-            df if ref is None else ref, lang_col, text_col,
-            vocab_top_k, bigram_top_k, alpha, quantize,
-        )
-    else:
-        _check_model_quantize(model, quantize)
-    import math
-
-    if quantize is not None:
-        bq = F.lit(int(round(math.log(backoff) * 10**quantize)))
-        zero = F.lit(0).cast("long")
-    else:
-        bq = F.lit(float(math.log(backoff)))
-        zero = F.lit(0.0)
-    uni = model.filter(F.col("ctx").isNull() & F.col("word").isNotNull()).select(
-        *keys, "word", F.col("lp").alias("_uni")
-    )
-    oov = model.filter(F.col("ctx").isNull() & F.col("word").isNull()).select(
-        *keys, F.col("lp").alias("_oov")
-    )
-    bi = model.filter(F.col("ctx").isNotNull()).select(
-        *keys, "ctx", "word", F.col("lp").alias("_bi")
-    )
-    # explode_OUTER + LEFT OOV join: every doc reaches the aggregate (empty
-    # docs as one word-NULL row, lang-absent docs with _oov NULL), so no
-    # row-scale join-back is needed — see unigram_logprob_score.
-    toks = (
-        with_tokens(df.select(id_col, *keys, text_col), text_col)
-        .select(id_col, *keys, F.explode_outer(_token_pairs()).alias("_p"))
-        .select(id_col, *keys, F.col("_p.ctx").alias("ctx"),
-                F.col("_p.word").alias("word"))
-    )
-    if hash_bigrams:
-        bi = bi.select(*keys, F.xxhash64("ctx", "word").alias("_bw"), "_bi")
-        toks = toks.withColumn(
-            "_bw",
-            F.when(F.col("ctx").isNotNull(), F.xxhash64("ctx", "word")),
-        )
-        bi_keys = keys + ["_bw"]
-    else:
-        bi_keys = keys + ["ctx", "word"]
-    joined = (
-        toks.join(F.broadcast(bi), bi_keys, "left")
-        .join(F.broadcast(uni), keys + ["word"], "left")
-    )
-    joined = (joined.join(F.broadcast(oov), keys, "left") if keys
-              else joined.crossJoin(F.broadcast(oov)))
-    valid = F.col("word").isNotNull() & F.col("_oov").isNotNull()
-    joined = joined.withColumn(
-        "_lp",
-        F.when(
-            valid,
-            F.when(F.col("_bi").isNotNull(), F.col("_bi")).otherwise(
-                F.when(F.col("ctx").isNull(), zero).otherwise(bq)
-                + F.coalesce("_uni", "_oov")
-            ),
-        ),
-    )
-    n_expr = F.sum(valid.cast("long"))
-    score_expr = -F.sum("_lp") / n_expr
-    if quantize is not None:
-        score_expr = score_expr / F.lit(float(10**quantize))
-    return joined.groupBy(id_col, *keys).agg(
-        n_expr.cast("long").alias("n_tokens"),
-        F.when(n_expr > 0, score_expr).alias("logprob_per_token"),
-    )
-
-
-def score_with_stored_bigram(
-    df: DataFrame,
-    model: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-    quantize: int | None = 6,
-    backoff: float = 0.4,
-    max_broadcast_rows: int | None = 2_000_000,
-) -> DataFrame:
-    """Zero-shuffle stateless scorer for a STORED bigram model — the
-    bigram sibling of ``score_with_stored_model``: collect the capped
-    model once, broadcast dicts, score with one Arrow-batched
-    ``mapInPandas`` over the scan (runs unchanged on a readStream).  With
-    ``quantize`` (must match the model's) results are BIT-IDENTICAL to
-    ``bigram_logprob_score(df, model=...)`` — asserted in pytest.  Same
-    broadcast-size guard and contract as the unigram scorer."""
-    import math
-
-    _check_model_quantize(model, quantize)
-    if max_broadcast_rows is not None:
-        n_model = model.count()
-        if n_model > max_broadcast_rows:
-            raise ValueError(
-                f"model has {n_model} rows > max_broadcast_rows="
-                f"{max_broadcast_rows}: use bigram_logprob_score(df, "
-                "model=model) (broadcast-join path, fully JVM) or raise "
-                "the guard explicitly"
-            )
-    rows = model.collect()
-    uni: dict = {}
-    oov: dict = {}
-    big: dict = {}
-    for r in rows:
-        lang = r[lang_col] if lang_col else None
-        if r["ctx"] is not None:
-            big.setdefault(lang, {})[(r["ctx"], r["word"])] = r["lp"]
-        elif r["word"] is None:
-            oov[lang] = r["lp"]
-        else:
-            uni.setdefault(lang, {})[r["word"]] = r["lp"]
-    bq = (int(round(math.log(backoff) * 10**quantize))
-          if quantize is not None else math.log(backoff))
-    scale = float(10**quantize) if quantize is not None else None
-    bc = df.sparkSession.sparkContext.broadcast((uni, oov, big))
-    return _apply_bigram_kernel(df, lambda: bc.value, id_col, text_col,
-                                lang_col, scale, bq)
-
-
-def _load_bigram_dicts(path: str, lang_col: str | None):
-    """worker-side pruned columnar read of a stored bigram-model table ->
-    (uni, oov, big) dicts, cached per worker like ``_load_model_dicts``."""
-    key = (path, lang_col, "bigram")
-    hit = _WORKER_MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import pyarrow.dataset as ds
-
-    cols = ([lang_col] if lang_col else []) + ["ctx", "word", "lp"]
-    tbl = ds.dataset(path, format="parquet").to_table(columns=cols)
-    langs = (tbl[lang_col].to_pylist() if lang_col
-             else [None] * tbl.num_rows)
-    uni: dict = {}
-    oov: dict = {}
-    big: dict = {}
-    for lang, c, w, lp in zip(langs, tbl["ctx"].to_pylist(),
-                              tbl["word"].to_pylist(),
-                              tbl["lp"].to_pylist()):
-        if c is not None:
-            big.setdefault(lang, {})[(c, w)] = lp
-        elif w is None:
-            oov[lang] = lp
-        else:
-            uni.setdefault(lang, {})[w] = lp
-    if len(_WORKER_MODEL_CACHE) >= 3:  # bound worker memory across jobs
-        _WORKER_MODEL_CACHE.clear()
-    _WORKER_MODEL_CACHE[key] = (uni, oov, big)
-    return uni, oov, big
-
-
-def score_with_bigram_path(
-    df: DataFrame,
-    model_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-    quantize: int | None = 6,
-    backoff: float = 0.4,
-) -> DataFrame:
-    """The big-model variant of :func:`score_with_stored_bigram` — the
-    bigram sibling of ``score_with_model_path``: each executor-side Python
-    worker reads the stored bigram-model parquet itself (pyarrow, pruned
-    columns, cached for the worker's lifetime) — no driver collect, no
-    broadcast, so a 10M-row multi-language bigram model costs the driver
-    nothing.  Same stateless zero-shuffle plan, same streaming capability,
-    BIT-IDENTICAL to the other two bigram paths under ``quantize``
-    (pytest-gated).  ``model_path`` must be readable from the executors."""
-    import math
-
-    model_schema = df.sparkSession.read.parquet(model_path)
-    _check_model_quantize(model_schema, quantize)
-    bq = (int(round(math.log(backoff) * 10**quantize))
-          if quantize is not None else math.log(backoff))
-    scale = float(10**quantize) if quantize is not None else None
-    return _apply_bigram_kernel(
-        df, lambda: _load_bigram_dicts(model_path, lang_col),
-        id_col, text_col, lang_col, scale, bq)
-
-
-def _apply_bigram_kernel(df, get_model, id_col, text_col, lang_col, scale, bq):
-    id_type = dict(df.dtypes)[id_col]
-    lang_field = f"{lang_col} string, " if lang_col else ""
-    schema = (f"{id_col} {id_type}, {lang_field}"
-              "n_tokens long, logprob_per_token double")
-
-    def score_batches(batches):
-        from itertools import repeat
-
-        import pandas as pd
-
-        uni_, oov_, big_ = get_model()
-        for pdf in batches:
-            out_n, out_s = [], []
-            langs = pdf[lang_col] if lang_col else [None] * len(pdf)
-            for text, lang in zip(pdf[text_col], langs):
-                toks = (text or "").split(" ")
-                if "" in toks:
-                    toks = [w for w in toks if w]
-                m = uni_.get(lang)
-                o = oov_.get(lang)
-                if not toks or o is None:
-                    out_n.append(0)
-                    out_s.append(None)
-                    continue
-                g = big_.get(lang, {})
-                # unigram scores for every position in one C-level pass
-                u = list(map(m.get, toks, repeat(o)))
-                s = u[0]
-                prev = toks[0]
-                for i in range(1, len(toks)):
-                    w = toks[i]
-                    b = g.get((prev, w))
-                    s += b if b is not None else bq + u[i]
-                    prev = w
-                n = len(toks)
-                v = (-s) / n
-                if scale is not None:
-                    v = v / scale
-                out_n.append(n)
-                out_s.append(v)
-            res = pd.DataFrame({id_col: pdf[id_col]})
-            if lang_col:
-                res[lang_col] = pdf[lang_col]
-            res["n_tokens"] = pd.array(out_n, dtype="int64")
-            res["logprob_per_token"] = pd.array(out_s, dtype="float64")
-            yield res
-
-    cols = [id_col] + ([lang_col] if lang_col else []) + [text_col]
-    ensure_on_workers(df.sparkSession)
-    return df.select(*cols).mapInPandas(score_batches, schema)
-
-
-def _token_ngrams(order: int) -> "F.Column":
-    """Per-token struct (word, ctx1, .., ctx{order-1}) computed INSIDE the
-    tokens array: ``ctx_j`` is the space-join of the ``j`` preceding tokens
-    (NULL when fewer than ``j`` precede).  Tokens are whitespace-split, so
-    the space-join is collision-free; like ``_token_pairs`` this is a pure
-    JVM projection at scan grain — no window, no shuffle, any order."""
-    def fields(w, i):
-        fs = [w.alias("word")]
-        for j in range(1, order):
-            parts = [F.get(F.col("tokens"), i - k) for k in range(j, 0, -1)]
-            ctx = parts[0] if j == 1 else F.concat_ws(" ", *parts)
-            fs.append(F.when(i >= j, ctx).alias(f"ctx{j}"))
-        return F.struct(*fs)
-
-    return F.transform(F.col("tokens"), fields)
-
-
-def train_ngram_model(
-    ref: DataFrame,
-    order: int = 3,
-    lang_col: str | None = "lang",
-    text_col: str = "text",
-    vocab_top_k: int = 65536,
-    ngram_top_k: int = 262144,
-    alpha: float = 0.5,
-    quantize: int | None = None,
-    min_count: int = 1,
-    context_top_k: int | None = None,
-) -> DataFrame:
-    """Order-agnostic stupid-backoff LM trainer — ``train_bigram_model``
-    generalized to any ``order`` (the trigram/TOP-K-context extension).
-    Returns ONE storable table ([lang], ctx, word, lp): ``ctx IS NULL`` is
-    the unigram sub-model (capped vocab, add-alpha, NULL-word OOV bucket);
-    a ``ctx`` of ``j`` space-joined words carries the (j+1)-gram rows with
-    lp = ln(cnt(ctx,word)/cnt(ctx)), the stupid-backoff relative frequency
-    (Brants et al. 2007) — each level capped independently at
-    ``ngram_top_k`` rows per lang (total-ordered tie-break cnt DESC, ctx,
-    word), totals computed BEFORE capping so stored probabilities stay true
-    relative frequencies.  ``order=2`` reproduces ``train_bigram_model``
-    row-for-row (asserted in pytest).  Training is one explode of the
-    per-token context struct feeding ``order-1`` independent pair-count
-    aggregates — embarrassingly parallel at any order, which is exactly why
-    stupid backoff is the published web-scale choice.
-
-    ``context_top_k=K`` additionally keeps only the K most frequent
-    CONTEXTS per lang per level (by total context count, tie-break ctx
-    ASC) before the per-level row cap: at web scale the context set is
-    hapax-dominated, and a rare context's continuations are noise the
-    backoff chain handles better than a stored 1-count estimate — a
-    dropped context simply backs off one level (one ln(backoff) penalty),
-    exactly as if it had never been seen.  Stored probabilities are
-    unaffected (totals are per-context)."""
-    if order < 2:
-        raise ValueError(f"train_ngram_model: order must be >= 2, got {order}")
-    keys = [lang_col] if lang_col else []
-    uni = train_unigram_model(
-        ref, lang_col, text_col, vocab_top_k, alpha, quantize
-    ).withColumn("ctx", F.lit(None).cast("string"))
-    base = (
-        with_tokens(ref.select(*keys, text_col), text_col)
-        .select(*keys, F.explode(_token_ngrams(order)).alias("_p"))
-    )
-    levels = [uni.select(*keys, "ctx", "word", "lp")]
-    for j in range(2, order + 1):
-        grams = base.select(
-            *keys,
-            F.col(f"_p.ctx{j - 1}").alias("ctx"),
-            F.col("_p.word").alias("word"),
-        ).filter(F.col("ctx").isNotNull())
-        cnt = grams.groupBy(*keys, "ctx", "word").agg(F.count("*").alias("cnt"))
-        tot = cnt.groupBy(*keys, "ctx").agg(F.sum("cnt").alias("_tot"))
-        if context_top_k is not None:
-            # prune to the K hottest contexts BEFORE the row cap; `tot` is
-            # one row per context, so this window ranks contexts, not rows
-            if keys:
-                wc = Window.partitionBy(*keys).orderBy(
-                    F.desc("_tot"), F.asc("ctx")
-                )
-                tot = (
-                    tot.withColumn("_crk", F.row_number().over(wc))
-                    .filter(F.col("_crk") <= context_top_k)
-                    .drop("_crk")
-                )
-            else:
-                tot = tot.orderBy(
-                    F.desc("_tot"), F.asc("ctx")
-                ).limit(context_top_k)
-        if min_count > 1:
-            cnt = cnt.filter(F.col("cnt") >= min_count)
-        lp_expr = F.log(F.col("cnt") / F.col("_tot"))
-        if quantize is not None:
-            lp_expr = F.round(lp_expr * float(10**quantize)).cast("long")
-        scored = cnt.join(tot, keys + ["ctx"])
-        if keys:
-            wk = Window.partitionBy(*keys).orderBy(
-                F.desc("cnt"), F.asc("ctx"), F.asc("word")
-            )
-            capped = (
-                scored.withColumn("_rk", F.row_number().over(wk))
-                .filter(F.col("_rk") <= ngram_top_k)
-            )
-        else:
-            capped = scored.orderBy(
-                F.desc("cnt"), F.asc("ctx"), F.asc("word")
-            ).limit(ngram_top_k)
-        levels.append(capped.select(*keys, "ctx", "word", lp_expr.alias("lp")))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
-
-
-def ngram_logprob_score(
-    df: DataFrame,
-    ref: DataFrame | None = None,
-    order: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-    vocab_top_k: int = 65536,
-    ngram_top_k: int = 262144,
-    alpha: float = 0.5,
-    quantize: int | None = None,
-    backoff: float = 0.4,
-    model: DataFrame | None = None,
-    hash_ngrams: bool = False,
-) -> DataFrame:
-    """Stupid-backoff n-gram LM quality score at any ``order`` — the
-    trigram/TOP-K-context extension of ``bigram_logprob_score`` with the
-    SAME output contract (id, [lang], n_tokens, logprob_per_token; lower =
-    more fluent; empty docs NULL) and the same plan shape: per-token
-    contexts are an in-array JVM projection (``_token_ngrams`` — no window,
-    no extra shuffle), every model level joins as a broadcast, and the only
-    wide shuffle is the per-doc aggregate.
-
-    Per-token score walks the backoff chain top-down: the stored (j+1)-gram
-    lp when (ctx_j, word) is in the model, else ln(``backoff``) + the
-    j-gram score — penalties accumulate per missed level, and a position
-    with fewer than ``j`` preceding tokens skips level j+1 WITHOUT penalty
-    (a doc's first token is pure unigram, its second starts at the bigram
-    level).  ``order=2`` is bit-identical to ``bigram_logprob_score``
-    (asserted in pytest).  With ``quantize`` every per-doc sum is exact
-    integer arithmetic (one final IEEE division) — bit-identical across
-    partition layouts and engines, driver-gated as ``lm_trigram_score``.
-    ``hash_ngrams=True`` replaces each level's (ctx, word) string join key
-    with one JVM-side ``xxhash64`` long on both sides, shrinking every
-    shipped broadcast to 8 B/key exactly as ``hash_bigrams`` does."""
-    if order < 2:
-        raise ValueError(f"ngram_logprob_score: order must be >= 2, got {order}")
-    keys = [lang_col] if lang_col else []
-    if model is None:
-        model = train_ngram_model(
-            df if ref is None else ref, order, lang_col, text_col,
-            vocab_top_k, ngram_top_k, alpha, quantize,
-        )
-    else:
-        _check_model_quantize(model, quantize)
-    import math
-
-    if quantize is not None:
-        bq = F.lit(int(round(math.log(backoff) * 10**quantize)))
-        zero = F.lit(0).cast("long")
-    else:
-        bq = F.lit(float(math.log(backoff)))
-        zero = F.lit(0.0)
-    uni = model.filter(F.col("ctx").isNull() & F.col("word").isNotNull()).select(
-        *keys, "word", F.col("lp").alias("_uni")
-    )
-    oov = model.filter(F.col("ctx").isNull() & F.col("word").isNull()).select(
-        *keys, F.col("lp").alias("_oov")
-    )
-    toks = (
-        with_tokens(df.select(id_col, *keys, text_col), text_col)
-        .select(id_col, *keys, F.explode_outer(_token_ngrams(order)).alias("_p"))
-        .select(id_col, *keys, F.col("_p.word").alias("word"),
-                *[F.col(f"_p.ctx{j}").alias(f"ctx{j}") for j in range(1, order)])
-    )
-    joined = toks
-    for j in range(2, order + 1):
-        # level-j rows: ctx has exactly j-1 space-separated words
-        lv = model.filter(
-            F.col("ctx").isNotNull()
-            & (F.size(F.split(F.col("ctx"), " ")) == j - 1)
-        )
-        if hash_ngrams:
-            lv = lv.select(
-                *keys, F.xxhash64("ctx", "word").alias(f"_h{j}"),
-                F.col("lp").alias(f"_g{j}"),
-            )
-            joined = joined.withColumn(
-                f"_h{j}",
-                F.when(F.col(f"ctx{j - 1}").isNotNull(),
-                       F.xxhash64(f"ctx{j - 1}", "word")),
-            )
-            jk = keys + [f"_h{j}"]
-        else:
-            lv = lv.select(
-                *keys, F.col("ctx").alias(f"ctx{j - 1}"), "word",
-                F.col("lp").alias(f"_g{j}"),
-            )
-            jk = keys + [f"ctx{j - 1}", "word"]
-        joined = joined.join(F.broadcast(lv), jk, "left")
-    joined = joined.join(F.broadcast(uni), keys + ["word"], "left")
-    joined = (joined.join(F.broadcast(oov), keys, "left") if keys
-              else joined.crossJoin(F.broadcast(oov)))
-    valid = F.col("word").isNotNull() & F.col("_oov").isNotNull()
-    # backoff chain bottom-up: unigram base, then each level wraps it
-    lp = F.coalesce("_uni", "_oov")
-    for j in range(2, order + 1):
-        pen = F.when(F.col(f"ctx{j - 1}").isNull(), zero).otherwise(bq)
-        lp = F.when(F.col(f"_g{j}").isNotNull(), F.col(f"_g{j}")).otherwise(
-            pen + lp
-        )
-    joined = joined.withColumn("_lp", F.when(valid, lp))
-    n_expr = F.sum(valid.cast("long"))
-    score_expr = -F.sum("_lp") / n_expr
-    if quantize is not None:
-        score_expr = score_expr / F.lit(float(10**quantize))
-    return joined.groupBy(id_col, *keys).agg(
-        n_expr.cast("long").alias("n_tokens"),
-        F.when(n_expr > 0, score_expr).alias("logprob_per_token"),
-    )
-
-
-def _ngram_level_dicts(rows_iter, lang_col):
-    """(lang, ctx, word, lp) rows -> (uni, oov, levels) where ``levels[j]``
-    maps lang -> {(ctx_word_1, .., ctx_word_j, word): lp} for context
-    length j.  Tuple keys avoid re-joining strings in the scoring loop;
-    the stored model's space-joined ctx splits back losslessly because
-    tokens are whitespace-split."""
-    uni: dict = {}
-    oov: dict = {}
-    levels: dict = {}
-    for lang, c, w, lp in rows_iter:
-        if c is not None:
-            cw = tuple(c.split(" "))
-            levels.setdefault(len(cw), {}).setdefault(lang, {})[cw + (w,)] = lp
-        elif w is None:
-            oov[lang] = lp
-        else:
-            uni.setdefault(lang, {})[w] = lp
-    return uni, oov, levels
-
-
-def score_with_stored_ngram(
-    df: DataFrame,
-    model: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-    quantize: int | None = 6,
-    backoff: float = 0.4,
-    max_broadcast_rows: int | None = 2_000_000,
-) -> DataFrame:
-    """Zero-shuffle stateless scorer for a STORED n-gram model of ANY order
-    (the order is implied by the model's deepest context — no parameter to
-    get wrong): collect the capped model once, broadcast per-level dicts,
-    score with one Arrow-batched ``mapInPandas`` over the scan (runs
-    unchanged on a readStream).  With ``quantize`` (must match the model's)
-    results are BIT-IDENTICAL to ``ngram_logprob_score(df, model=...)`` at
-    the model's order — asserted in pytest.  Same broadcast-size guard and
-    contract as the unigram/bigram kernels."""
-    import math
-
-    _check_model_quantize(model, quantize)
-    if max_broadcast_rows is not None:
-        n_model = model.count()
-        if n_model > max_broadcast_rows:
-            raise ValueError(
-                f"model has {n_model} rows > max_broadcast_rows="
-                f"{max_broadcast_rows}: use ngram_logprob_score(df, "
-                "model=model) (broadcast-join path, fully JVM) or raise "
-                "the guard explicitly"
-            )
-    packed = _ngram_level_dicts(
-        ((r[lang_col] if lang_col else None, r["ctx"], r["word"], r["lp"])
-         for r in model.collect()),
-        lang_col,
-    )
-    bq = (int(round(math.log(backoff) * 10**quantize))
-          if quantize is not None else math.log(backoff))
-    scale = float(10**quantize) if quantize is not None else None
-    bc = df.sparkSession.sparkContext.broadcast(packed)
-    return _apply_ngram_kernel(df, lambda: bc.value, id_col, text_col,
-                               lang_col, scale, bq)
-
-
-def _load_ngram_dicts(path: str, lang_col: str | None):
-    """worker-side pruned columnar read of a stored n-gram model table ->
-    (uni, oov, levels), cached per worker like ``_load_model_dicts``."""
-    key = (path, lang_col, "ngram")
-    hit = _WORKER_MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import pyarrow.dataset as ds
-
-    cols = ([lang_col] if lang_col else []) + ["ctx", "word", "lp"]
-    tbl = ds.dataset(path, format="parquet").to_table(columns=cols)
-    langs = (tbl[lang_col].to_pylist() if lang_col
-             else [None] * tbl.num_rows)
-    packed = _ngram_level_dicts(
-        zip(langs, tbl["ctx"].to_pylist(), tbl["word"].to_pylist(),
-            tbl["lp"].to_pylist()),
-        lang_col,
-    )
-    if len(_WORKER_MODEL_CACHE) >= 3:  # bound worker memory across jobs
-        _WORKER_MODEL_CACHE.clear()
-    _WORKER_MODEL_CACHE[key] = packed
-    return packed
-
-
-def score_with_ngram_path(
-    df: DataFrame,
-    model_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-    quantize: int | None = 6,
-    backoff: float = 0.4,
-) -> DataFrame:
-    """The big-model variant of :func:`score_with_stored_ngram`: each
-    executor-side Python worker reads the stored model parquet itself
-    (pyarrow, pruned columns, cached for the worker's lifetime) — no driver
-    collect, no broadcast.  Same stateless zero-shuffle plan, same
-    streaming capability, BIT-IDENTICAL to the broadcast-join path under
-    ``quantize`` (pytest-gated).  ``model_path`` must be readable from the
-    executors."""
-    import math
-
-    model_schema = df.sparkSession.read.parquet(model_path)
-    _check_model_quantize(model_schema, quantize)
-    bq = (int(round(math.log(backoff) * 10**quantize))
-          if quantize is not None else math.log(backoff))
-    scale = float(10**quantize) if quantize is not None else None
-    return _apply_ngram_kernel(
-        df, lambda: _load_ngram_dicts(model_path, lang_col),
-        id_col, text_col, lang_col, scale, bq)
-
-
-def _apply_ngram_kernel(df, get_model, id_col, text_col, lang_col, scale, bq):
-    """Arrow-batched any-order stupid-backoff scoring kernel: per token,
-    walk the backoff chain from the deepest context the model stores (and
-    the position allows) down to the unigram/OOV base, adding one backoff
-    penalty per missed level — the exact semantics of the
-    ``ngram_logprob_score`` join chain, in one pass over the tokens."""
-    id_type = dict(df.dtypes)[id_col]
-    lang_field = f"{lang_col} string, " if lang_col else ""
-    schema = (f"{id_col} {id_type}, {lang_field}"
-              "n_tokens long, logprob_per_token double")
-
-    def score_batches(batches):
-        from itertools import repeat
-
-        import pandas as pd
-
-        uni_, oov_, levels_ = get_model()
-        max_ctx = max(levels_, default=0)
-        bq2 = bq + bq
-        lv1_all = levels_.get(1, {})
-        lv2_all = levels_.get(2, {})
-        _EMPTY: dict = {}
-        for pdf in batches:
-            out_n, out_s = [], []
-            langs = pdf[lang_col] if lang_col else [None] * len(pdf)
-            for text, lang in zip(pdf[text_col], langs):
-                toks = (text or "").split(" ")
-                if "" in toks:
-                    toks = [w for w in toks if w]
-                m = uni_.get(lang)
-                o = oov_.get(lang)
-                if not toks or o is None:
-                    out_n.append(0)
-                    out_s.append(None)
-                    continue
-                u = list(map(m.get, toks, repeat(o)))
-                if max_ctx == 2:
-                    # trigram fast path: rolling (p2, p1) context vars, no
-                    # per-token slicing — same chain as the generic loop
-                    get2 = lv2_all.get(lang, _EMPTY).get
-                    get1 = lv1_all.get(lang, _EMPTY).get
-                    s = u[0]
-                    p2 = None
-                    p1 = toks[0]
-                    for i in range(1, len(toks)):
-                        w = toks[i]
-                        if p2 is None:
-                            g = get1((p1, w))
-                            s += g if g is not None else bq + u[i]
-                        else:
-                            g = get2((p2, p1, w))
-                            if g is not None:
-                                s += g
-                            else:
-                                g = get1((p1, w))
-                                s += (bq + g) if g is not None else bq2 + u[i]
-                        p2 = p1
-                        p1 = w
-                elif max_ctx == 1:
-                    # bigram model through the any-order kernel
-                    get1 = lv1_all.get(lang, _EMPTY).get
-                    s = u[0]
-                    p1 = toks[0]
-                    for i in range(1, len(toks)):
-                        w = toks[i]
-                        g = get1((p1, w))
-                        s += g if g is not None else bq + u[i]
-                        p1 = w
-                else:
-                    lv = [None] + [levels_.get(j, {}).get(lang, _EMPTY)
-                                   for j in range(1, max_ctx + 1)]
-                    s = 0
-                    for i, w in enumerate(toks):
-                        acc = 0
-                        lp = None
-                        for j in range(min(max_ctx, i), 0, -1):
-                            g = lv[j].get((*toks[i - j:i], w))
-                            if g is not None:
-                                lp = acc + g
-                                break
-                            acc += bq
-                        s += lp if lp is not None else acc + u[i]
-                n = len(toks)
-                v = (-s) / n
-                if scale is not None:
-                    v = v / scale
-                out_n.append(n)
-                out_s.append(v)
-            res = pd.DataFrame({id_col: pdf[id_col]})
-            if lang_col:
-                res[lang_col] = pdf[lang_col]
-            res["n_tokens"] = pd.array(out_n, dtype="int64")
-            res["logprob_per_token"] = pd.array(out_s, dtype="float64")
-            yield res
-
-    cols = [id_col] + ([lang_col] if lang_col else []) + [text_col]
-    ensure_on_workers(df.sparkSession)
-    return df.select(*cols).mapInPandas(score_batches, schema)
 
 
 # Engine-portable PII patterns: Java regex (Spark) and RE2 (DuckDB, the

@@ -110,41 +110,37 @@ def test_curate_job_truth_and_resume(spark, tmp_path, monkeypatch):
     assert got4 == want
 
 
-def test_curate_job_lmscore_stage(spark, tmp_path, monkeypatch):
-    """--model threads the stored-model scorer in as stage 2: the output
-    carries the score column and the gate drops the low-fluency doc."""
-    sys.path.insert(0, "jobs")
-    import curate_corpus as job
-
-    from sketchlib.spark.textops import score_with_ngram_path, train_ngram_model
-
-    capture = []
-    monkeypatch.setattr("builtins.print", lambda s: capture.append(s))
-    monkeypatch.setattr(type(spark), "stop", lambda self: None)
-
-    # fluent text: 24 DISTINCT in-model words (no repetition-filter hit);
-    # the low-fluency doc is all out-of-vocab tokens -> OOV-bucket score
+def _lm_corpus(spark, tmp_path):
+    """Pages for the LM gate: ten fluent docs of 24 DISTINCT in-model words
+    (no repetition-filter hit) and one doc of out-of-vocab tokens (OOV
+    bucket score), plus a held-out fluent REFERENCE to train on (CCNet
+    shape: a wiki-like ref model scores the crawl).  Returns the
+    (pages, ref) paths."""
     common = " ".join(f"word{i:02d}" for i in range(24))
     rare = " ".join(f"zzq{i}" for i in range(24))
     rows = [(i, "en", common) for i in range(10)] + [(50, "en", rare)]
     src = str(tmp_path / "pages")
     spark.createDataFrame(rows, "doc_id long, lang string, text string") \
         .write.parquet(src)
-    # model trained on a held-out fluent REFERENCE (CCNet shape: wiki-like
-    # ref model scores the crawl), so OOV tokens hit the NULL bucket
     ref = str(tmp_path / "ref")
     spark.createDataFrame([(900 + i, "en", common) for i in range(4)],
                           "doc_id long, lang string, text string") \
         .write.parquet(ref)
-    mpath = str(tmp_path / "model")
-    train_ngram_model(spark.read.parquet(ref), order=2, quantize=6) \
-        .write.parquet(mpath)
+    return src, ref
+
+
+def _run_lm_gate(spark, tmp_path, monkeypatch, job, src, mpath):
+    """curate with ``--model mpath`` and a score cut between the fluent
+    docs and the OOV doc; returns the surviving doc ids."""
+    from sketchlib.spark.textops import score_with_ngram_path
 
     scores = {r["doc_id"]: r["logprob_per_token"] for r in score_with_ngram_path(
         spark.read.parquet(src), mpath).collect()}
     cut = (scores[0] + scores[50]) / 2    # between fluent (low) and OOV-heavy (high)
 
     wd, out = str(tmp_path / "wd"), str(tmp_path / "curated")
+    capture = []
+    monkeypatch.setattr("builtins.print", lambda s: capture.append(s))
     rc = _run(monkeypatch, job, [
         "--input", src, "--workdir", wd, "--output", out,
         "--model", mpath, "--max-score", str(cut), "--dedup", "exact"])
@@ -153,10 +149,44 @@ def test_curate_job_lmscore_stage(spark, tmp_path, monkeypatch):
     assert list(m["stages"]) == ["quality", "lmscore", "dedup"]
     res = spark.read.parquet(out)
     assert "score" in res.columns
-    got = {r["doc_id"] for r in res.select("doc_id").collect()}
+    return {r["doc_id"] for r in res.select("doc_id").collect()}
+
+
+def test_curate_job_lmscore_stage(spark, tmp_path, monkeypatch):
+    """--model threads the stored-model scorer in as stage 2: the output
+    carries the score column and the gate drops the low-fluency doc."""
+    sys.path.insert(0, "jobs")
+    import curate_corpus as job
+
+    from sketchlib.spark.textops import train_ngram_model
+
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    src, ref = _lm_corpus(spark, tmp_path)
+    mpath = str(tmp_path / "model")
+    train_ngram_model(spark.read.parquet(ref), order=2, quantize=6) \
+        .write.parquet(mpath)
     # the 10 fluent docs are EXACT duplicates of each other -> one keeper;
     # the OOV-heavy doc fell to the score gate
-    assert got == {0}
+    assert _run_lm_gate(spark, tmp_path, monkeypatch, job, src, mpath) == {0}
+
+
+def test_curate_job_reads_default_score_quality_model(
+        spark, tmp_path, monkeypatch):
+    """a model written by ``score_quality.py train`` with default flags
+    (order 1) is a valid ``--model`` for the lmscore stage: every model
+    table has the one ([lang], ctx, word, lp) schema."""
+    sys.path.insert(0, "jobs")
+    import curate_corpus as job
+    import score_quality
+
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    monkeypatch.setattr("builtins.print", lambda s: None)
+    src, ref = _lm_corpus(spark, tmp_path)
+    mpath = str(tmp_path / "model")
+    assert _run(monkeypatch, score_quality,
+                ["train", "--input", ref, "--model", mpath]) == 0
+    assert "ctx" in spark.read.parquet(mpath).columns
+    assert _run_lm_gate(spark, tmp_path, monkeypatch, job, src, mpath) == {0}
 
 
 def test_curate_job_urldedup_stage(spark, tmp_path, monkeypatch):

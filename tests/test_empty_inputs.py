@@ -116,23 +116,24 @@ def test_textops_empty(edocs):
 
 def test_lm_train_score_empty(spark, edocs):
     from sketchlib.spark.textops import (
-        train_unigram_model,
-        unigram_logprob_score,
+        ngram_logprob_score,
+        train_ngram_model,
     )
 
-    model = train_unigram_model(edocs, vocab_top_k=10)
+    model = train_ngram_model(edocs, order=1, vocab_top_k=10)
     # empty reference corpus -> empty (or OOV-only) model; scoring real
     # docs against it must not crash
     docs = spark.createDataFrame(
         [(1, "en", "a b"), (2, "en", "c")], "doc_id long, lang string, text string")
-    scored = unigram_logprob_score(docs, model=model)
+    scored = ngram_logprob_score(docs, order=1, model=model)
     assert scored.count() in (0, 2)
     # empty SCORING side against a real model
     ref = spark.createDataFrame(
         [(1, "en", "a b a")], "doc_id long, lang string, text string")
-    m2 = train_unigram_model(ref, vocab_top_k=10)
-    assert unigram_logprob_score(
-        edocs.select("doc_id", "lang", "text"), model=m2).count() == 0
+    m2 = train_ngram_model(ref, order=1, vocab_top_k=10)
+    assert ngram_logprob_score(
+        edocs.select("doc_id", "lang", "text"), order=1,
+        model=m2).count() == 0
 
 
 def test_sampling_empty(edocs):

@@ -1,7 +1,7 @@
-"""Stupid-backoff bigram LM quality scoring (the n-gram upgrade of the
-CCNet-style unigram scorer), checked against a pure-python oracle and for
-bit-identity across its three execution paths (broadcast-join, hashed-key
-join, stored-model mapInPandas kernel)."""
+"""Stupid-backoff bigram LM quality scoring (the n-gram stack at
+``order=2``), checked against a pure-python oracle and for bit-identity
+across its three execution paths (broadcast-join, stored-model
+mapInPandas kernel, executor-side path kernel)."""
 
 import math
 from collections import Counter, defaultdict
@@ -22,7 +22,7 @@ BACKOFF = 0.4
 
 def _py_model(rows, utopk=UTOPK, btopk=BTOPK, alpha=ALPHA):
     """per-lang capped unigram + capped stupid-backoff bigram model with
-    quantized (10^-6 nat) integer log-probs — mirrors train_bigram_model"""
+    quantized (10^-6 nat) integer log-probs — mirrors train_ngram_model"""
     uc, bc = defaultdict(Counter), defaultdict(Counter)
     for lang, text in rows:
         toks = [w for w in (text or "").split(" ") if w]
@@ -70,13 +70,13 @@ def _docs(spark):
 
 
 def test_bigram_scores_match_python_oracle(spark):
-    from sketchlib.spark.textops import bigram_logprob_score
+    from sketchlib.spark.textops import ngram_logprob_score
 
     docs = _docs(spark)
     got = {
         r["doc_id"]: (r["n_tokens"], r["logprob_per_token"])
-        for r in bigram_logprob_score(
-            docs, vocab_top_k=UTOPK, bigram_top_k=BTOPK, alpha=ALPHA,
+        for r in ngram_logprob_score(
+            docs, order=2, vocab_top_k=UTOPK, ngram_top_k=BTOPK, alpha=ALPHA,
             quantize=Q, backoff=BACKOFF,
         ).collect()
     }
@@ -87,12 +87,13 @@ def test_bigram_scores_match_python_oracle(spark):
 
 
 def test_three_paths_bit_identical(spark, tmp_path):
-    """broadcast-join == hashed-key join == stored-model kernel, through a
+    """broadcast-join == stored-model kernel == path kernel, through a
     parquet round-trip, incl. empty docs and a lang absent from the model."""
     from sketchlib.spark.textops import (
-        bigram_logprob_score,
-        score_with_stored_bigram,
-        train_bigram_model,
+        ngram_logprob_score,
+        score_with_ngram_path,
+        score_with_stored_ngram,
+        train_ngram_model,
     )
 
     docs = _docs(spark).withColumn(
@@ -101,22 +102,18 @@ def test_three_paths_bit_identical(spark, tmp_path):
     )
     ref = docs.filter(F.col("lang") != "zh")
     mpath = str(tmp_path / "bigram_model")
-    train_bigram_model(
-        ref, vocab_top_k=UTOPK, bigram_top_k=BTOPK, quantize=Q
+    train_ngram_model(
+        ref, order=2, vocab_top_k=UTOPK, ngram_top_k=BTOPK, quantize=Q
     ).write.parquet(mpath)
     model = spark.read.parquet(mpath)
 
-    from sketchlib.spark.textops import score_with_bigram_path
-
-    a = sorted(tuple(r) for r in bigram_logprob_score(
-        docs, model=model, quantize=Q).collect())
-    b = sorted(tuple(r) for r in bigram_logprob_score(
-        docs, model=model, quantize=Q, hash_bigrams=True).collect())
-    c = sorted(tuple(r) for r in score_with_stored_bigram(
+    a = sorted(tuple(r) for r in ngram_logprob_score(
+        docs, order=2, model=model, quantize=Q).collect())
+    b = sorted(tuple(r) for r in score_with_stored_ngram(
         docs, model, quantize=Q).collect())
-    d = sorted(tuple(r) for r in score_with_bigram_path(
+    c = sorted(tuple(r) for r in score_with_ngram_path(
         docs, mpath, quantize=Q).collect())
-    assert a == b == c == d
+    assert a == b == c
     zh = [r for r in a if r[1] == "zh"]
     assert zh and all(r[2] == 0 and r[3] is None for r in zh)
 
@@ -124,7 +121,7 @@ def test_three_paths_bit_identical(spark, tmp_path):
 def test_backoff_semantics_handcrafted(spark):
     """a seen bigram scores its stored relative frequency; an unseen pair
     pays ln(backoff) + unigram; the first token pays NO penalty."""
-    from sketchlib.spark.textops import bigram_logprob_score
+    from sketchlib.spark.textops import ngram_logprob_score
 
     ref = spark.createDataFrame(
         [(i, "en", "a b a b a c") for i in range(3)],
@@ -137,8 +134,8 @@ def test_backoff_semantics_handcrafted(spark):
          (102, "en", "a")],       # uni(a) only — no penalty anywhere
         "doc_id long, lang string, text string",
     )
-    got = {r["doc_id"]: r for r in bigram_logprob_score(
-        probe, ref=ref, vocab_top_k=10, bigram_top_k=10,
+    got = {r["doc_id"]: r for r in ngram_logprob_score(
+        probe, order=2, ref=ref, vocab_top_k=10, ngram_top_k=10,
         alpha=ALPHA, backoff=BACKOFF).collect()}
 
     # reproduce by hand: unigram counts over the 3 ref docs a=9,b=6,c=3
@@ -153,18 +150,18 @@ def test_backoff_semantics_handcrafted(spark):
 
 
 def test_model_cap_and_min_count(spark):
-    from sketchlib.spark.textops import train_bigram_model
+    from sketchlib.spark.textops import train_ngram_model
 
     docs = _docs(spark)
-    m = train_bigram_model(docs, vocab_top_k=UTOPK, bigram_top_k=25)
+    m = train_ngram_model(docs, order=2, vocab_top_k=UTOPK, ngram_top_k=25)
     per_lang = (
         m.filter("ctx IS NOT NULL").groupBy("lang").count().collect()
     )
     assert per_lang and all(r["count"] == 25 for r in per_lang)
     # min_count prunes rarities BEFORE the cap: strictly fewer stored rows
-    m2 = train_bigram_model(
-        docs, vocab_top_k=UTOPK, bigram_top_k=10**6, min_count=3)
-    m1 = train_bigram_model(docs, vocab_top_k=UTOPK, bigram_top_k=10**6)
+    m2 = train_ngram_model(
+        docs, order=2, vocab_top_k=UTOPK, ngram_top_k=10**6, min_count=3)
+    m1 = train_ngram_model(docs, order=2, vocab_top_k=UTOPK, ngram_top_k=10**6)
     assert (m2.filter("ctx IS NOT NULL").count()
             < m1.filter("ctx IS NOT NULL").count())
 
@@ -173,22 +170,23 @@ def test_stored_bigram_scorer_streams(spark, tmp_path):
     """the kernel scorer is stateless: the SAME function over a readStream
     (1 file per trigger) yields exactly the batch scores."""
     from sketchlib.spark.textops import (
-        score_with_stored_bigram,
-        train_bigram_model,
+        score_with_stored_ngram,
+        train_ngram_model,
     )
 
     src = str(tmp_path / "src")
     _docs(spark).repartition(4).write.parquet(src)
     static = spark.read.parquet(src)
-    model = train_bigram_model(
-        static, vocab_top_k=UTOPK, bigram_top_k=BTOPK, quantize=Q).cache()
+    model = train_ngram_model(
+        static, order=2, vocab_top_k=UTOPK, ngram_top_k=BTOPK,
+        quantize=Q).cache()
     batch = {r["doc_id"]: (r["n_tokens"], r["logprob_per_token"])
-             for r in score_with_stored_bigram(static, model).collect()}
+             for r in score_with_stored_ngram(static, model).collect()}
 
     stream = spark.readStream.schema(static.schema).option(
         "maxFilesPerTrigger", "1").parquet(src)
     got = []
-    q = (score_with_stored_bigram(stream, model)
+    q = (score_with_stored_ngram(stream, model)
          .writeStream.outputMode("append")
          .foreachBatch(lambda bdf, _id: got.extend(bdf.collect())).start())
     q.processAllAvailable()
@@ -204,7 +202,7 @@ def test_property_random_corpora_bigram_match_python_oracle(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from sketchlib.spark.textops import bigram_logprob_score
+    from sketchlib.spark.textops import ngram_logprob_score
 
     words = st.sampled_from(["aa", "b", "ccc"])
     text = st.lists(
@@ -223,8 +221,8 @@ def test_property_random_corpora_bigram_match_python_oracle(spark):
         rows = [(i, lang, t) for i, (lang, t) in enumerate(docs_py)]
         df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
         got = {r["doc_id"]: (r["n_tokens"], r["logprob_per_token"])
-               for r in bigram_logprob_score(
-                   df, vocab_top_k=3, bigram_top_k=4, alpha=0.5,
+               for r in ngram_logprob_score(
+                   df, order=2, vocab_top_k=3, ngram_top_k=4, alpha=0.5,
                    quantize=6, backoff=0.4).collect()}
         # python oracle: top-3 unigram, top-4 bigram (total-order tie-break
         # cnt DESC, ctx, word), ctx totals over ALL bigrams pre-cap

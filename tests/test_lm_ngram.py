@@ -1,8 +1,8 @@
 """Order-agnostic stupid-backoff n-gram LM (the trigram/TOP-K-context
-extension): order=2 must be bit-identical to the bigram path, order=3 is
-checked against a pure-python stupid-backoff oracle and for handcrafted
-backoff-chain semantics (per-level penalties, no penalty for positions
-that lack the context)."""
+extension; orders 1 and 2 are tested in test_lm_quality.py and
+test_lm_bigram.py): order=3 is checked against a pure-python
+stupid-backoff oracle and for handcrafted backoff-chain semantics
+(per-level penalties, no penalty for positions that lack the context)."""
 
 import math
 from collections import Counter, defaultdict
@@ -31,32 +31,6 @@ def _nullsafe(rows):
         (tuple(r) for r in rows),
         key=lambda t: tuple((x is None, x) for x in t),
     )
-
-
-def test_order2_bit_identical_to_bigram(spark):
-    """train_ngram_model(order=2) == train_bigram_model row-for-row and
-    ngram_logprob_score(order=2) == bigram_logprob_score doc-for-doc,
-    including the hashed-key variant — the order-agnostic plumbing is a
-    strict generalization, not a fork."""
-    from sketchlib.spark.textops import (
-        bigram_logprob_score,
-        ngram_logprob_score,
-        train_bigram_model,
-        train_ngram_model,
-    )
-
-    docs = _docs(spark)
-    m2 = train_ngram_model(
-        docs, order=2, vocab_top_k=UTOPK, ngram_top_k=NTOPK, quantize=Q
-    ).cache()
-    mb = train_bigram_model(
-        docs, vocab_top_k=UTOPK, bigram_top_k=NTOPK, quantize=Q)
-    assert _nullsafe(m2.collect()) == _nullsafe(mb.collect())
-    a = _nullsafe(ngram_logprob_score(docs, order=2, model=m2, quantize=Q).collect())
-    b = _nullsafe(bigram_logprob_score(docs, model=mb, quantize=Q).collect())
-    h = _nullsafe(ngram_logprob_score(
-        docs, order=2, model=m2, quantize=Q, hash_ngrams=True).collect())
-    assert a == b == h
 
 
 def _py_tri_model(rows, utopk=UTOPK, ntopk=NTOPK, alpha=ALPHA):
@@ -166,9 +140,9 @@ def test_trigram_backoff_semantics_handcrafted(spark):
     assert got[102]["logprob_per_token"] == pytest.approx(-(ua + bi_ab) / 2)
 
 
-def test_trigram_hashed_and_stored_roundtrip(spark, tmp_path):
-    """hash_ngrams=True and a parquet model round-trip are bit-identical to
-    the plain broadcast-join path, incl. empty docs and an uncovered lang."""
+def test_trigram_stored_roundtrip(spark, tmp_path):
+    """a parquet model round-trip is bit-identical to scoring with the
+    model trained inline, incl. empty docs and an uncovered lang."""
     from sketchlib.spark.textops import ngram_logprob_score, train_ngram_model
 
     docs = _docs(spark).withColumn(
@@ -184,7 +158,8 @@ def test_trigram_hashed_and_stored_roundtrip(spark, tmp_path):
     a = _nullsafe(ngram_logprob_score(
         docs, order=3, model=model, quantize=Q).collect())
     b = _nullsafe(ngram_logprob_score(
-        docs, order=3, model=model, quantize=Q, hash_ngrams=True).collect())
+        docs, ref=ref, order=3, vocab_top_k=UTOPK, ngram_top_k=NTOPK,
+        quantize=Q).collect())
     assert a == b
     zh = [r for r in a if r[1] == "zh"]
     assert zh and all(r[2] == 0 and r[3] is None for r in zh)
@@ -194,13 +169,12 @@ def test_stored_ngram_kernel_bit_identical(spark, tmp_path):
     """broadcast-join path == collected-broadcast kernel == executor-read
     kernel for a stored TRIGRAM model (order implied by the model), through
     a parquet round-trip, incl. empty docs and an uncovered lang; and the
-    same kernel reproduces the BIGRAM paths when handed a bigram model."""
+    same kernel reproduces the order-2 join path when handed an order-2
+    model."""
     from sketchlib.spark.textops import (
-        bigram_logprob_score,
         ngram_logprob_score,
         score_with_ngram_path,
         score_with_stored_ngram,
-        train_bigram_model,
         train_ngram_model,
     )
 
@@ -220,9 +194,11 @@ def test_stored_ngram_kernel_bit_identical(spark, tmp_path):
     c = _nullsafe(score_with_ngram_path(docs, mpath, quantize=Q).collect())
     assert a == b == c
 
-    bi = train_bigram_model(
-        ref, vocab_top_k=UTOPK, bigram_top_k=NTOPK, quantize=Q).cache()
-    d = _nullsafe(bigram_logprob_score(docs, model=bi, quantize=Q).collect())
+    bi = train_ngram_model(
+        ref, order=2, vocab_top_k=UTOPK, ngram_top_k=NTOPK, quantize=Q
+    ).cache()
+    d = _nullsafe(ngram_logprob_score(
+        docs, order=2, model=bi, quantize=Q).collect())
     e = _nullsafe(score_with_stored_ngram(docs, bi, quantize=Q).collect())
     assert d == e
 
@@ -344,3 +320,14 @@ def test_order4_generic_kernel_parity(spark, tmp_path):
     # tokens: a(uni) b(bi hit ln1=0) c(tri hit ln1=0) z(3 misses + oov)
     want = -(ua + 0.0 + 0.0 + (3 * bq + oov)) / 4
     assert got["logprob_per_token"] == pytest.approx(want)
+
+
+def test_order_below_one_raises(spark):
+    """order=1 is the unigram model; below it there is no model."""
+    from sketchlib.spark.textops import ngram_logprob_score, train_ngram_model
+
+    docs = _docs(spark)
+    with pytest.raises(ValueError, match="order must be >= 1"):
+        train_ngram_model(docs, order=0)
+    with pytest.raises(ValueError, match="order must be >= 1"):
+        ngram_logprob_score(docs, order=0)

@@ -1,5 +1,6 @@
-"""CCNet-style unigram LM quality scoring + digest-driven head/middle/tail
-bucketing, checked against a pure-python oracle."""
+"""CCNet-style unigram LM quality scoring (the n-gram stack at
+``order=1``) + digest-driven head/middle/tail bucketing, checked against a
+pure-python oracle."""
 
 import math
 from collections import Counter, defaultdict
@@ -49,7 +50,7 @@ def _python_scores(rows, models):
 
 
 def test_scores_match_python_oracle(spark):
-    from sketchlib.spark.textops import unigram_logprob_score
+    from sketchlib.spark.textops import ngram_logprob_score
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "lang", "text")
@@ -59,8 +60,8 @@ def test_scores_match_python_oracle(spark):
             F.col("text")))
     got = {
         r["doc_id"]: (r["n_tokens"], r["logprob_per_token"])
-        for r in unigram_logprob_score(
-            docs, vocab_top_k=TOPK, alpha=ALPHA).collect()
+        for r in ngram_logprob_score(
+            docs, order=1, vocab_top_k=TOPK, alpha=ALPHA).collect()
     }
     raw = [(r["doc_id"], r["lang"], r["text"]) for r in docs.collect()]
     models = _python_model([(l, t) for _, l, t in raw])
@@ -75,13 +76,13 @@ def test_scores_match_python_oracle(spark):
 
 
 def test_global_model_and_external_ref(spark):
-    from sketchlib.spark.textops import unigram_logprob_score
+    from sketchlib.spark.textops import ngram_logprob_score
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "lang", "text")
     ref = docs.filter(F.col("doc_id") % 2 == 0)  # train on half
-    out = unigram_logprob_score(
-        docs, ref=ref, lang_col=None, vocab_top_k=TOPK).collect()
+    out = ngram_logprob_score(
+        docs, order=1, ref=ref, lang_col=None, vocab_top_k=TOPK).collect()
     assert len(out) == docs.count()
     # scoring corpus != ref: ref-absent docs still score (OOV smoothing)
     assert all(r["logprob_per_token"] is not None for r in out
@@ -89,7 +90,7 @@ def test_global_model_and_external_ref(spark):
 
 
 def test_quality_buckets_exact_thirds_law(spark):
-    from sketchlib.spark.textops import quality_buckets, unigram_logprob_score
+    from sketchlib.spark.textops import ngram_logprob_score, quality_buckets
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "lang", "text")
@@ -131,20 +132,20 @@ def test_quantized_scores_deterministic_and_close(spark):
     """quantize=6: scores are exact integer arithmetic — bit-identical
     across partition layouts — and within the documented 5e-7/token
     error of the float path."""
-    from sketchlib.spark.textops import unigram_logprob_score
+    from sketchlib.spark.textops import ngram_logprob_score
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "lang", "text")
     a = {r["doc_id"]: r["logprob_per_token"]
-         for r in unigram_logprob_score(
-             docs, vocab_top_k=TOPK, quantize=6).collect()}
+         for r in ngram_logprob_score(
+             docs, order=1, vocab_top_k=TOPK, quantize=6).collect()}
     b = {r["doc_id"]: r["logprob_per_token"]
-         for r in unigram_logprob_score(
-             docs.repartition(7, "lang"), vocab_top_k=TOPK,
+         for r in ngram_logprob_score(
+             docs.repartition(7, "lang"), order=1, vocab_top_k=TOPK,
              quantize=6).collect()}
     raw = {r["doc_id"]: r["logprob_per_token"]
-           for r in unigram_logprob_score(
-               docs, vocab_top_k=TOPK).collect()}
+           for r in ngram_logprob_score(
+               docs, order=1, vocab_top_k=TOPK).collect()}
     assert a == b  # bit-identical, incl. float equality
     for k, v in a.items():
         if v is not None:
@@ -197,9 +198,9 @@ def test_stored_model_scorer_bit_identical_to_join_path(spark, tmp_path):
     path under quantize (exact integer sums either way), incl. empty docs
     and a lang absent from the model."""
     from sketchlib.spark.textops import (
-        score_with_stored_model,
-        train_unigram_model,
-        unigram_logprob_score,
+        ngram_logprob_score,
+        score_with_stored_ngram,
+        train_ngram_model,
     )
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
@@ -210,12 +211,13 @@ def test_stored_model_scorer_bit_identical_to_join_path(spark, tmp_path):
     # model trained WITHOUT one lang -> those docs must score (0, NULL)
     ref = docs.filter(F.col("lang") != "zh")
     mpath = str(tmp_path / "model")
-    train_unigram_model(ref, vocab_top_k=TOPK, quantize=6).write.parquet(mpath)
+    train_ngram_model(
+        ref, order=1, vocab_top_k=TOPK, quantize=6).write.parquet(mpath)
     model = spark.read.parquet(mpath)
 
-    join_path = unigram_logprob_score(
-        docs, model=model, vocab_top_k=TOPK, quantize=6)
-    fast_path = score_with_stored_model(docs, model, quantize=6)
+    join_path = ngram_logprob_score(
+        docs, order=1, model=model, vocab_top_k=TOPK, quantize=6)
+    fast_path = score_with_stored_ngram(docs, model, quantize=6)
     a = sorted(tuple(r) for r in join_path.collect())
     b = sorted(tuple(r) for r in fast_path.collect())
     assert a == b
@@ -227,8 +229,8 @@ def test_stored_model_scorer_streams(spark, tmp_path):
     """the scorer is a stateless projection: the SAME function over a
     readStream (1 file per trigger) yields exactly the batch scores."""
     from sketchlib.spark.textops import (
-        score_with_stored_model,
-        train_unigram_model,
+        score_with_stored_ngram,
+        train_ngram_model,
     )
 
     src = str(tmp_path / "src")
@@ -236,15 +238,15 @@ def test_stored_model_scorer_streams(spark, tmp_path):
         "doc_id", "lang", "text")
     docs.repartition(4).write.parquet(src)
     static = spark.read.parquet(src)
-    model = train_unigram_model(static, vocab_top_k=TOPK, quantize=6)
+    model = train_ngram_model(static, order=1, vocab_top_k=TOPK, quantize=6)
     model = model.cache()
     batch = {r["doc_id"]: (r["n_tokens"], r["logprob_per_token"])
-             for r in score_with_stored_model(static, model).collect()}
+             for r in score_with_stored_ngram(static, model).collect()}
 
     stream = spark.readStream.schema(static.schema).option(
         "maxFilesPerTrigger", "1").parquet(src)
     got = []
-    q = (score_with_stored_model(stream, model)
+    q = (score_with_stored_ngram(stream, model)
          .writeStream.outputMode("append")
          .foreachBatch(lambda bdf, _id: got.extend(bdf.collect())).start())
     q.processAllAvailable()
@@ -256,30 +258,30 @@ def test_stored_model_scorer_streams(spark, tmp_path):
 
 def test_model_quantize_mismatch_raises(spark):
     from sketchlib.spark.textops import (
-        score_with_stored_model,
-        train_unigram_model,
-        unigram_logprob_score,
+        ngram_logprob_score,
+        score_with_stored_ngram,
+        train_ngram_model,
     )
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "lang", "text")
-    m_q = train_unigram_model(docs, vocab_top_k=TOPK, quantize=6)
-    m_f = train_unigram_model(docs, vocab_top_k=TOPK)
+    m_q = train_ngram_model(docs, order=1, vocab_top_k=TOPK, quantize=6)
+    m_f = train_ngram_model(docs, order=1, vocab_top_k=TOPK)
     with pytest.raises(ValueError, match="quantize"):
-        score_with_stored_model(docs, m_q, quantize=None)
+        score_with_stored_ngram(docs, m_q, quantize=None)
     with pytest.raises(ValueError, match="quantize"):
-        unigram_logprob_score(docs, model=m_f, quantize=6)
+        ngram_logprob_score(docs, order=1, model=m_f, quantize=6)
 
 
 def test_streaming_bucket_labeling_with_stored_cuts(spark, tmp_path):
     """the full curriculum pipeline on a stream: stored model + stored cut
-    table -> score_with_stored_model + bucket_by_cuts over a readStream is
+    table -> score_with_stored_ngram + bucket_by_cuts over a readStream is
     stateless and yields exactly the batch labels."""
     from sketchlib.spark.textops import (
         bucket_by_cuts,
         score_cut_table,
-        score_with_stored_model,
-        train_unigram_model,
+        score_with_stored_ngram,
+        train_ngram_model,
     )
 
     src = str(tmp_path / "src")
@@ -287,8 +289,9 @@ def test_streaming_bucket_labeling_with_stored_cuts(spark, tmp_path):
         "doc_id", "lang", "text")
     docs.repartition(3).write.parquet(src)
     static = spark.read.parquet(src)
-    model = train_unigram_model(static, vocab_top_k=TOPK, quantize=6).cache()
-    scored = score_with_stored_model(static, model)
+    model = train_ngram_model(
+        static, order=1, vocab_top_k=TOPK, quantize=6).cache()
+    scored = score_with_stored_ngram(static, model)
     cuts = score_cut_table(
         scored.filter(F.col("logprob_per_token").isNotNull())).cache()
     cuts.count()
@@ -299,7 +302,7 @@ def test_streaming_bucket_labeling_with_stored_cuts(spark, tmp_path):
     stream = spark.readStream.schema(static.schema).option(
         "maxFilesPerTrigger", "1").parquet(src)
     got = []
-    q = (bucket_by_cuts(score_with_stored_model(stream, model), cuts)
+    q = (bucket_by_cuts(score_with_stored_ngram(stream, model), cuts)
          .writeStream.outputMode("append")
          .foreachBatch(lambda b, _i: got.extend(b.collect())).start())
     q.processAllAvailable()
@@ -315,17 +318,17 @@ def test_streaming_bucket_labeling_with_stored_cuts(spark, tmp_path):
 
 def test_huge_model_guard_routes_to_join_path(spark):
     from sketchlib.spark.textops import (
-        score_with_stored_model,
-        train_unigram_model,
+        score_with_stored_ngram,
+        train_ngram_model,
     )
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "lang", "text")
-    model = train_unigram_model(docs, vocab_top_k=TOPK, quantize=6)
+    model = train_ngram_model(docs, order=1, vocab_top_k=TOPK, quantize=6)
     with pytest.raises(ValueError, match="max_broadcast_rows"):
-        score_with_stored_model(docs, model, max_broadcast_rows=3)
+        score_with_stored_ngram(docs, model, max_broadcast_rows=3)
     # explicit disable works
-    out = score_with_stored_model(docs, model, max_broadcast_rows=None)
+    out = score_with_stored_ngram(docs, model, max_broadcast_rows=None)
     assert out.count() == docs.count()
 
 
@@ -335,7 +338,7 @@ def test_property_random_corpora_match_python_oracle(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from sketchlib.spark.textops import unigram_logprob_score
+    from sketchlib.spark.textops import ngram_logprob_score
 
     words = st.sampled_from(["aa", "b", "ccc", "dd", "e"])
     text = st.lists(
@@ -354,8 +357,9 @@ def test_property_random_corpora_match_python_oracle(spark):
         rows = [(i, lang, t) for i, (lang, t) in enumerate(docs_py)]
         df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
         got = {r["doc_id"]: (r["n_tokens"], r["logprob_per_token"])
-               for r in unigram_logprob_score(
-                   df, vocab_top_k=3, alpha=0.5, quantize=6).collect()}
+               for r in ngram_logprob_score(
+                   df, order=1, vocab_top_k=3, alpha=0.5,
+                   quantize=6).collect()}
         # python oracle with the same top-3 cap / smoothing / quantization
         counts = defaultdict(Counter)
         for _, lang, t in rows:
@@ -382,13 +386,13 @@ def test_property_random_corpora_match_python_oracle(spark):
 
 
 def test_path_scorer_bit_identical_and_streams(spark, tmp_path):
-    """score_with_model_path (executor-side model read, no driver collect,
+    """score_with_ngram_path (executor-side model read, no driver collect,
     no broadcast): bit-identical to both other paths, worker cache warm on
     the second pass, and stateless on a readStream."""
     from sketchlib.spark.textops import (
-        score_with_model_path,
-        score_with_stored_model,
-        train_unigram_model,
+        score_with_ngram_path,
+        score_with_stored_ngram,
+        train_ngram_model,
     )
 
     src = str(tmp_path / "src")
@@ -397,27 +401,68 @@ def test_path_scorer_bit_identical_and_streams(spark, tmp_path):
     docs.repartition(3).write.parquet(src)
     static = spark.read.parquet(src)
     mpath = str(tmp_path / "model")
-    train_unigram_model(static, vocab_top_k=TOPK, quantize=6).write.parquet(
-        mpath)
+    train_ngram_model(
+        static, order=1, vocab_top_k=TOPK, quantize=6).write.parquet(mpath)
     model = spark.read.parquet(mpath)
 
     bcast = sorted(tuple(r) for r in
-                   score_with_stored_model(static, model).collect())
-    from_path = score_with_model_path(static, mpath)
+                   score_with_stored_ngram(static, model).collect())
+    from_path = score_with_ngram_path(static, mpath)
     assert sorted(tuple(r) for r in from_path.collect()) == bcast
     # second pass: worker cache path (same results)
     assert sorted(tuple(r) for r in from_path.collect()) == bcast
 
     # quantize mismatch rejected from the stored schema
     with pytest.raises(ValueError, match="quantize"):
-        score_with_model_path(static, mpath, quantize=None)
+        score_with_ngram_path(static, mpath, quantize=None)
 
     stream = spark.readStream.schema(static.schema).option(
         "maxFilesPerTrigger", "1").parquet(src)
     got = []
-    q = (score_with_model_path(stream, mpath)
+    q = (score_with_ngram_path(stream, mpath)
          .writeStream.outputMode("append")
          .foreachBatch(lambda b, _i: got.extend(b.collect())).start())
     q.processAllAvailable()
     q.stop()
     assert sorted(tuple(r) for r in got) == bcast
+
+
+def test_legacy_three_column_model_scores_as_order1(spark, tmp_path):
+    """a model table stored in the old ([lang], word, lp) format — no ctx
+    column — scores bit-identically to the same model in the one
+    ([lang], ctx, word, lp) schema, through all three distributions
+    (broadcast dict, executor-side path read, broadcast join)."""
+    from sketchlib.spark.textops import (
+        ngram_logprob_score,
+        score_with_ngram_path,
+        score_with_stored_ngram,
+        train_ngram_model,
+    )
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
+        "doc_id", "lang", "text")
+    docs = docs.withColumn(
+        "text", F.when(F.col("doc_id") % 29 == 0, F.lit("")).otherwise(
+            F.col("text")))
+    ref = docs.filter(F.col("lang") != "zh")
+    new_path = str(tmp_path / "model_new")
+    old_path = str(tmp_path / "model_old")
+    train_ngram_model(
+        ref, order=1, vocab_top_k=TOPK, quantize=6).write.parquet(new_path)
+    spark.read.parquet(new_path).select("lang", "word", "lp") \
+        .write.parquet(old_path)
+    assert spark.read.parquet(old_path).columns == ["lang", "word", "lp"]
+
+    def three_ways(path):
+        model = spark.read.parquet(path)
+        return [sorted(tuple(r) for r in df.collect()) for df in (
+            score_with_stored_ngram(docs, model),
+            score_with_ngram_path(docs, path),
+            ngram_logprob_score(docs, order=1, model=model, quantize=6),
+        )]
+
+    new = three_ways(new_path)
+    assert new[0] == new[1] == new[2]
+    assert three_ways(old_path) == new
+    zh = [r for r in new[0] if r[1] == "zh"]
+    assert zh and all(r[2] == 0 and r[3] is None for r in zh)

@@ -54,10 +54,10 @@ def test_score_quality_job_end_to_end(spark, tmp_path, monkeypatch):
     assert set(rep["bucket_counts"]) == {"head", "middle", "tail"}
 
     # stored scores equal the library path bit-for-bit
-    from sketchlib.spark.textops import score_with_stored_model
+    from sketchlib.spark.textops import score_with_stored_ngram
 
     lib = {r["doc_id"]: (r["n_tokens"], r["logprob_per_token"])
-           for r in score_with_stored_model(docs, model).collect()}
+           for r in score_with_stored_ngram(docs, model).collect()}
     got = {r["doc_id"]: (r["n_tokens"], r["logprob_per_token"])
            for r in spark.read.parquet(opath).collect()}
     assert got == lib
@@ -99,10 +99,10 @@ def test_score_job_stable_cuts_across_epochs(spark, tmp_path, monkeypatch):
     # the new docs were labeled too (same model, same stored cuts)
     assert len(s2) == len(docs.collect())
     # labels equal the library path against the stored artifacts
-    from sketchlib.spark.textops import bucket_by_cuts, score_with_stored_model
+    from sketchlib.spark.textops import bucket_by_cuts, score_with_stored_ngram
 
     lib = {r["doc_id"]: r["bucket"] for r in bucket_by_cuts(
-        score_with_stored_model(docs, spark.read.parquet(mpath)),
+        score_with_stored_ngram(docs, spark.read.parquet(mpath)),
         spark.read.parquet(cuts)).collect()}
     assert s2 == lib
 
@@ -241,6 +241,46 @@ def test_score_quality_job_trigram_mode(spark, tmp_path, monkeypatch):
         out = str(tmp_path / f"scored_{dist}")
         rc = _run(monkeypatch, job, [
             "score", "--input", src, "--model", mpath, "--ngram", "3",
+            "--model-distribution", dist, "--output", out], capture)
+        assert rc == 0
+        outs[dist] = {
+            r["doc_id"]: (r["n_tokens"], r["logprob_per_token"])
+            for r in spark.read.parquet(out).collect()
+        }
+    assert outs["broadcast"] == outs["path"] == outs["join"]
+    assert any(v[1] is not None for v in outs["join"].values())
+
+
+def test_score_quality_job_unigram_mode(spark, tmp_path, monkeypatch):
+    """--ngram 1 (the default order) lifecycle: the stored model has only
+    ctx-NULL rows, and all three model distributions give identical
+    outputs (exact integer arithmetic)."""
+    sys.path.insert(0, "jobs")
+    import score_quality as job
+
+    capture = []
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    monkeypatch.setattr("builtins.print", lambda s: capture.append(s))
+
+    src = str(tmp_path / "ref")
+    docs = spark.read.parquet(f"{SF_MED}/documents.parquet").select(
+        "doc_id", "lang", "text")
+    docs.write.parquet(src)
+    mpath = str(tmp_path / "unimodel")
+
+    rc = _run(monkeypatch, job, [
+        "train", "--input", src, "--model", mpath, "--ngram", "1",
+        "--vocab-top-k", "64"], capture)
+    assert rc == 0
+    stored = spark.read.parquet(mpath)
+    assert stored.filter("ctx IS NOT NULL").count() == 0
+    assert stored.filter("word IS NULL").count() == 5
+
+    outs = {}
+    for dist in ("broadcast", "path", "join"):
+        out = str(tmp_path / f"scored_{dist}")
+        rc = _run(monkeypatch, job, [
+            "score", "--input", src, "--model", mpath, "--ngram", "1",
             "--model-distribution", dist, "--output", out], capture)
         assert rc == 0
         outs[dist] = {

@@ -466,23 +466,23 @@ def main():
     if not ok:
         FAIL.append(f"packing query: scans={n_scan} ex={n_ex} or shape wrong")
 
-    # 6ab. bigram LM scoring against a STORED model (the production shape:
-    # train once, score every later batch): token pairing is an IN-ARRAY
-    # projection — the plan must contain NO Window (a lag-window pairing
-    # would shuffle the corpus at token grain); the three model joins are
-    # all broadcast; explode_outer + LEFT oov join keep every doc in the
-    # aggregate so there is NO row-scale join-back (no SortMergeJoin) and
-    # exactly ONE Exchange (the per-doc aggregate)
+    # 6ab. bigram (order-2) LM scoring against a STORED model (the
+    # production shape: train once, score every later batch): token
+    # pairing is an IN-ARRAY projection — the plan must contain NO Window
+    # (a lag-window pairing would shuffle the corpus at token grain); the
+    # three model joins are all broadcast; explode_outer + LEFT oov join
+    # keep every doc in the aggregate so there is NO row-scale join-back
+    # (no SortMergeJoin) and exactly ONE Exchange (the per-doc aggregate)
     import tempfile
 
-    from sketchlib.spark.textops import bigram_logprob_score, train_bigram_model
+    from sketchlib.spark.textops import ngram_logprob_score, train_ngram_model
 
     mpath = tempfile.mkdtemp(prefix="audit_bigram_") + "/model"
-    train_bigram_model(
-        docs, vocab_top_k=4096, bigram_top_k=512, quantize=6
+    train_ngram_model(
+        docs, order=2, vocab_top_k=4096, ngram_top_k=512, quantize=6
     ).write.parquet(mpath)
-    p = plan_of(bigram_logprob_score(
-        docs.select("doc_id", "lang", "text"),
+    p = plan_of(ngram_logprob_score(
+        docs.select("doc_id", "lang", "text"), order=2,
         model=spark.read.parquet(mpath), quantize=6))
     n_bhj = len(re.findall(r"\(\d+\) BroadcastHashJoin", p))
     n_win = len(re.findall(r"\(\d+\) Window", p))
