@@ -27,8 +27,8 @@ ingest buffer, fractional t-digest weights); the caller then feeds that key
 batch by batch through the per-object loop.
 
 ``sketchlib.spark.sketch_ops`` lifts any registered Aggregator into the
-DataFrame-level partial/merge kernel (mapInPandas partials, one shuffle,
-then a mapInPandas accumulator merge — or ``groupBy().applyInPandas`` for
+DataFrame-level partial/merge kernel (mapInArrow partials, one shuffle,
+then a mapInArrow accumulator merge — or ``groupBy().applyInPandas`` for
 the MB-scale Bloom/CMS states).  It calls the segment pair once per spec
 and partition for the families that override them.
 """

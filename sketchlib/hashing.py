@@ -20,7 +20,6 @@ from __future__ import annotations
 import threading
 
 import numpy as np
-import pandas as pd
 
 _C1 = np.uint64(0xBF58476D1CE4E5B9)
 _C2 = np.uint64(0x94D049BB133111EB)
@@ -43,6 +42,8 @@ def hash64(values, seed: int = 0) -> np.ndarray:
     if isinstance(values, np.ndarray) and values.dtype.kind in "iu":
         base = values.astype(np.uint64)
     else:
+        import pandas as pd  # here only: importing this module stays pandas-free
+
         s = values if isinstance(values, pd.Series) else pd.Series(values)
         base = pd.util.hash_pandas_object(s, index=False).to_numpy(dtype=np.uint64)
     if seed:

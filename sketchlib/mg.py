@@ -36,11 +36,14 @@ the input_hint mandates.
 from __future__ import annotations
 
 import struct
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 
 from sketchlib.aggregator import Aggregator
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 _MAGIC = b"MG01"
 
@@ -51,6 +54,8 @@ class MisraGries(Aggregator):
     def __init__(self, m: int = 64) -> None:
         if m < 1:
             raise ValueError(f"MisraGries: m must be >= 1, got {m}")
+        import pandas as pd  # on use: importing this module stays pandas-free
+
         self.m = int(m)
         self.counts: pd.Series = pd.Series(dtype="int64")  # item(str) -> count
         self.n = 0  # total ingested weight
@@ -63,6 +68,8 @@ class MisraGries(Aggregator):
     def _absorb(self, other_counts: pd.Series, other_n: int) -> None:
         if len(other_counts):
             if len(self.counts):
+                import pandas as pd
+
                 s = pd.concat([self.counts, other_counts])
                 s = s.groupby(level=0, sort=False).sum()
             else:
@@ -81,6 +88,8 @@ class MisraGries(Aggregator):
         self.n += int(other_n)
 
     def update_batch(self, values: np.ndarray) -> None:
+        import pandas as pd
+
         vals = pd.Series(values)
         vals = vals[vals.notna()]
         if len(vals) == 0:
@@ -131,6 +140,8 @@ class MisraGries(Aggregator):
         m_wire, n, cnt = struct.unpack_from("<IQI", data, 4)
         if m is not None and m != m_wire:
             raise ValueError(f"MisraGries: m mismatch {m} vs wire {m_wire}")
+        import pandas as pd
+
         out = cls(m=m_wire)
         off = 4 + 16
         keys, vals = [], []
@@ -141,7 +152,7 @@ class MisraGries(Aggregator):
             off += 12
             if len(data) < off + klen:
                 raise ValueError("MisraGries blob truncated in key bytes")
-            keys.append(data[off:off + klen].decode("utf-8"))
+            keys.append(str(data[off:off + klen], "utf-8"))
             off += klen
             vals.append(v)
         out.counts = pd.Series(vals, index=keys, dtype="int64")

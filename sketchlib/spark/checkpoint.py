@@ -12,7 +12,7 @@ Design:
   checkpoint table with lineage (run_id, part_id, input fingerprint) and
   metrics (rows ingested, wall ms) — one writer task per logical partition
   via ``repartition(n_parts, part_id)`` + ``foreachPartition``-free
-  mapInPandas append (idempotent: re-running a finished partition overwrites
+  mapInArrow append (idempotent: re-running a finished partition overwrites
   the same rows).
 - Resume = LEFT ANTI JOIN of pending part_ids against completed ones
   (broadcast: the checkpoint side is tiny) → only unfinished partitions are
@@ -30,15 +30,22 @@ from __future__ import annotations
 
 import time
 import uuid
+from datetime import datetime
 from typing import Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 CHECKPOINT_SCHEMA = (
     "run_id string, part_id int, key string, digest binary, "
     "rows long, wall_ms double, input_snapshot string, lineage string"
 )
+_CHECKPOINT_ARROW = pa.schema([
+    ("run_id", pa.string()), ("part_id", pa.int32()), ("key", pa.string()),
+    ("digest", pa.binary()), ("rows", pa.int64()), ("wall_ms", pa.float64()),
+    ("input_snapshot", pa.string()), ("lineage", pa.string()),
+])
 
 
 class TDigestCheckpointer:
@@ -195,32 +202,35 @@ class TDigestCheckpointer:
             self.run_id, self._input_snapshot(df), self._lineage(),
         )
 
-        def checkpoint_rows(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def checkpoint_rows(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             t0 = time.time()
             rows: dict = {}
 
             def counted():
-                for pdf in batches:
-                    for pid, n in pdf["_part_id"].value_counts().items():
-                        rows[pid] = rows.get(pid, 0) + n
-                    yield pdf
+                for batch in batches:
+                    for vc in pc.value_counts(batch.column("_part_id")).to_pylist():
+                        rows[vc["values"]] = rows.get(vc["values"], 0) + vc["counts"]
+                    yield batch
 
             for out in build(counted()):
-                yield pd.DataFrame({
-                    "run_id": run_id,
-                    "part_id": out["_part_id"],
-                    "key": [_key_string(tuple(k)) for k in
-                            out[user_keys].to_numpy(dtype=object)],
-                    "digest": out["digest"],
-                    "rows": out["_part_id"].map(rows),
-                    "wall_ms": (time.time() - t0) * 1000.0,
-                    "input_snapshot": input_snapshot,
-                    "lineage": lineage,
-                })
+                pids = out.column("_part_id").to_pylist()
+                key_vals = [out.column(k).to_pylist() for k in user_keys]
+                keys_of = zip(*key_vals) if key_vals else [()] * len(pids)
+                wall_ms = (time.time() - t0) * 1000.0
+                yield pa.RecordBatch.from_pydict({
+                    "run_id": [run_id] * len(pids),
+                    "part_id": pids,
+                    "key": [_key_string(k) for k in keys_of],
+                    "digest": out.column("digest"),
+                    "rows": [rows[p] for p in pids],
+                    "wall_ms": [wall_ms] * len(pids),
+                    "input_snapshot": [input_snapshot] * len(pids),
+                    "lineage": [lineage] * len(pids),
+                }, schema=_CHECKPOINT_ARROW)
 
         ckpt_rows = (
             pending.repartition(len(pending_ids), "_part_id")
-            .mapInPandas(checkpoint_rows, schema=CHECKPOINT_SCHEMA)
+            .mapInArrow(checkpoint_rows, schema=CHECKPOINT_SCHEMA)
         )
         ckpt_rows.write.mode("append").format(self.table_format).save(self.ckpt_path)
         return len(pending_ids)
@@ -245,8 +255,11 @@ class TDigestCheckpointer:
 
 
 def _key_string(parts: tuple) -> str | None:
-    """A checkpoint row's key: the key values joined by ``|``, a NULL value
-    rendered empty; a key whose every value is NULL stays NULL."""
-    if parts and all(pd.isna(x) for x in parts):
+    """A checkpoint row's key: the key values joined by ``|``, a NULL or
+    NaN value rendered empty, a timestamp as its session-local wall time; a
+    key whose every value is NULL or NaN stays NULL."""
+    missing = [x is None or x != x for x in parts]
+    if parts and all(missing):
         return None
-    return "|".join("" if pd.isna(x) else str(x) for x in parts)
+    return "|".join("" if m else str(x.replace(tzinfo=None) if isinstance(x, datetime) else x)
+                    for x, m in zip(parts, missing))

@@ -5,8 +5,11 @@ local[N]):
 
 - AQE on: runtime coalescing of the post-aggregation shuffles (sketch rows
   are tiny — one ≤40 KB row per partition×key — so AQE collapses them).
-- Arrow on, large batches: every sketch ingest path is a vectorized
-  pandas/Arrow UDF; bigger batches amortize the JVM↔Python hop.
+- Arrow on, batches bounded by rows and by bytes: every sketch ingest path
+  is a vectorized Arrow (or pandas) UDF.  Up to 65536 rows amortize the
+  JVM↔Python hop for narrow sketch rows; the 4 MiB cap
+  (``arrow.maxBytesPerBatch``) keeps a batch of wide rows (html pages)
+  from holding tens of MB per Python worker.
 - shuffle.partitions is a default for local runs; at cluster scale set it
   to ~2-3× total cores or rely on AQE.
 - Python-worker glibc malloc tuning (MALLOC_MMAP_MAX_=0,
@@ -70,6 +73,9 @@ from dataclasses import dataclass
 from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+#: ``spark.sql.execution.arrow.maxBytesPerBatch`` of both factories
+ARROW_BATCH_BYTES = 4 << 20
 
 # JVM flags of our own that the archive check must not inherit from the
 # recorded input arguments
@@ -269,6 +275,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SKETCHLIB_DRIVER_MEM", "8g"))
@@ -307,10 +314,12 @@ def get_spark(
 def job_session(app: str) -> SparkSession:
     """SparkSession for spark-submit jobs: master / memory / cluster
     configs come from the submit command; this only applies the library's
-    python-worker glibc tunables (see module docstring) so the Arrow
-    kernels don't pay mmap/munmap churn per batch on any deployment."""
+    Arrow batch byte cap and the python-worker glibc tunables (see module
+    docstring) so the Arrow kernels don't pay mmap/munmap churn per batch
+    on any deployment."""
     return (
         SparkSession.builder.appName(app)
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.executorEnv.MALLOC_MMAP_MAX_", "0")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
         .getOrCreate()

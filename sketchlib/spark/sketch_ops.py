@@ -14,22 +14,30 @@ sketch).  Kernel rows are wide: one row per key with one binary column per
 spec, named by the spec.
 
   ``partials(df, keys, specs)`` — one JVM-side projection per spec (the
-      family's ingest rule in ``_INGEST``), then ONE ``mapInPandas`` that
+      family's ingest rule in ``_INGEST``), then ONE ``mapInArrow`` that
       emits one row per (input partition × key).  No shuffle; no per-row
       Python.
   ``merge(partials, keys, specs)`` — ONE Exchange on the keys, then a
-      ``mapInPandas`` accumulator emitting one merged row per key.  When
+      ``mapInArrow`` accumulator emitting one merged row per key.  When
       every spec is a ``_LARGE_STATE`` family (Bloom/CMS, MB-scale),
       ``groupBy().applyInPandas`` holds one group in memory at a time
       instead.  A (key, spec) that received no sketch merges to NULL.
   ``tree_merge(partials, keys, specs, fanin)`` — salted intermediate merge
       levels that bound every reducer's fan-in (see ``spark/plan.py``).
 
-Both ``mapInPandas`` stages give every row a partition-wide key code (one
-``pd.factorize`` per key column; the NULL key and a key spread over several
-Arrow batches stay one group).  A spec whose family overrides the segment
-pair (``Aggregator.build_segments`` / ``merge_segments``: the t-digest and
-HLL) keeps each batch's (code, value) or (code, blob) arrays and makes ONE
+Both ``mapInArrow`` stages take and yield ``pa.RecordBatch``es and never
+import pandas.  Values are numpy views of the Arrow buffers; only a
+``value_fn`` spec converts its ``input_cols`` to pandas.  Every row gets a
+partition-wide key code (one Arrow ``dictionary_encode`` per key column;
+the NULL key and a key spread over several Arrow batches stay one group),
+and the output key columns are ``take``s of the input's own key values, so
+a timestamp key never depends on the session time zone.  Each output blob
+column is one data buffer plus int32 offsets, and the merge reads its
+blobs as memoryviews into the input's data buffer.
+
+A spec whose family overrides the segment pair
+(``Aggregator.build_segments`` / ``merge_segments``: the t-digest and HLL)
+keeps each batch's (code, value) or (code, blob) arrays and makes ONE
 segment call per partition that builds or merges every key at once.  The
 per-object loop — one sketch per key fed batch by batch, ``update`` /
 ``merge_blobs`` then ``serialize`` / ``finish_merge`` — runs instead for
@@ -59,7 +67,8 @@ from functools import partial
 from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
 
@@ -94,45 +103,137 @@ def _norm_key(key) -> tuple:
 #: family's own buffers bound
 _RETAIN_BYTES = 1 << 23
 
+# ---------------------------------------------------------------------------
+# Arrow <-> numpy without pandas.  ``Array.to_numpy``, ``np.asarray(array)``,
+# ``pa.array(<list or ndarray>)`` and ``pa.scalar`` all import pandas into
+# the Python worker; reading and building buffers directly does not.
+# ---------------------------------------------------------------------------
+
+
+def _np(arr: pa.Array, dtype) -> np.ndarray:
+    """A fixed-width array's values as a read-only numpy view of its data
+    buffer (a NULL slot holds whatever the buffer holds there)."""
+    if not len(arr):
+        return np.empty(0, dtype=dtype)
+    return np.frombuffer(arr.buffers()[1], dtype=dtype,
+                         count=arr.offset + len(arr))[arr.offset:]
+
+
+def _bits(buf: pa.Buffer, offset: int, n: int) -> np.ndarray:
+    """``n`` booleans of an Arrow bitmap, from bit ``offset``."""
+    if not n:
+        return np.zeros(0, dtype=bool)
+    raw = np.frombuffer(buf, dtype=np.uint8, count=(offset + n + 7) // 8)
+    return np.unpackbits(raw, count=offset + n, bitorder="little")[offset:].view(bool)
+
+
+def _nulls(arr: pa.Array) -> np.ndarray | None:
+    """The NULL mask of ``arr``; None when it holds no NULL."""
+    if not arr.null_count:
+        return None
+    return ~_bits(arr.buffers()[0], arr.offset, len(arr))
+
+
+def _doubles(arr: pa.Array) -> np.ndarray:
+    """float64 values with NULL as NaN."""
+    if arr.type != pa.float64():
+        arr = arr.cast(pa.float64(), safe=False)
+    vals, null = _np(arr, np.float64), _nulls(arr)
+    return vals if null is None else np.where(null, np.nan, vals)
+
+
+def _binary(blobs: list) -> pa.Array:
+    """One binary column (NULL for None): every blob copied once into one
+    data buffer, int32 offsets."""
+    n = len(blobs)
+    size = np.fromiter((0 if b is None else len(b) for b in blobs), dtype=np.int64, count=n)
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(size, out=offsets[1:])
+    if offsets[-1] >= 2**31:
+        raise ValueError(f"{offsets[-1]} bytes of sketches in one batch: over the "
+                         "2 GiB a binary column holds")
+    valid = np.fromiter((b is not None for b in blobs), dtype=bool, count=n)
+    nulls = n - int(valid.sum())
+    return pa.Array.from_buffers(
+        pa.binary(), n,
+        [pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None,
+         pa.py_buffer(offsets.astype(np.int32)),
+         pa.py_buffer(b"".join(filter(None, blobs)))],
+        null_count=nulls)
+
+
+def _blobs(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, int]:
+    """(rows, blobs, bytes) of a binary column's non-NULL rows: each blob a
+    memoryview into the column's one data buffer, nothing copied."""
+    if not len(arr):
+        return np.zeros(0, dtype=np.intp), np.zeros(0, dtype=object), 0
+    wide = pa.types.is_large_binary(arr.type)
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int64 if wide else np.int32,
+                         count=arr.offset + len(arr) + 1)[arr.offset:]
+    null = _nulls(arr)
+    rows = np.arange(len(arr)) if null is None else np.flatnonzero(~null)
+    lo, hi = offs[rows], offs[rows + 1]
+    data = memoryview(arr.buffers()[2] or b"")
+    blobs = np.fromiter((data[a:b] for a, b in zip(lo.tolist(), hi.tolist())),
+                        dtype=object, count=len(rows))
+    return rows, blobs, int((hi - lo).sum())
+
+
+_NAN = float("nan")
+
 
 class _KeyCodes:
     """Partition-wide key codes: each distinct key tuple gets the next
     integer when it first appears.  The keys new to a batch are numbered
-    in pandas' ``groupby(sort=False)`` order (by each key column's order of
-    first appearance, leftmost column first), so rows come out in the
-    order they always had.  A NULL key value is None, so the NULL key is
-    one group in every Arrow batch."""
+    by each key column's order of first appearance, leftmost column first
+    (one Arrow ``dictionary_encode`` per column), so rows come out in the
+    order they always had.  A NULL key value is None and every NaN is one
+    value, so NULL and NaN keys are one group each in every Arrow batch.
+    ``tuples`` holds each code's key values; ``columns()`` takes each key
+    column's rows from the batches where the keys first appeared, so key
+    values leave the stage as they came in."""
 
     def __init__(self, keys: list[str]) -> None:
         self.keys = keys
         self.code: dict[tuple, int] = {}
         self.tuples: list[tuple] = []
+        self._rows: list[list[pa.Array]] = []
 
-    def __call__(self, pdf: pd.DataFrame) -> np.ndarray:
-        """The key code of every row of one batch: one ``factorize`` per
-        key column, one dict lookup per distinct key of the batch."""
+    def __call__(self, batch: pa.RecordBatch) -> np.ndarray:
+        """The key code of every row of one batch: one ``dictionary_encode``
+        per key column, one dict lookup per distinct key of the batch."""
         if not self.keys:
             self._code(())
-            return np.zeros(len(pdf), dtype=np.intp)
+            return np.zeros(batch.num_rows, dtype=np.intp)
         gid, cols = None, []
         for k in self.keys:
-            c, u = pd.factorize(pdf[k], use_na_sentinel=False)
-            u = np.asarray(u, dtype=object)
-            u[pd.isna(u)] = None
-            cols.append((c, u))
+            enc = pc.dictionary_encode(batch.column(k), null_encoding="encode")
+            c = _np(enc.indices, np.int32).astype(np.intp)
+            cols.append((c, enc.dictionary))
             if gid is None:
                 gid = c
             else:  # lexicographic in the column codes, kept dense
-                gid = np.unique(gid * len(u) + c, return_inverse=True)[1]
+                gid = np.unique(gid * len(enc.dictionary) + c, return_inverse=True)[1]
         if len(cols) == 1 and len(gid):
-            # factorize numbers values in order of first appearance, so each
+            # codes number values in order of first appearance, so each
             # one's first row is where the running max of gid steps up
             top = np.maximum.accumulate(gid)
             first = np.flatnonzero(np.r_[True, top[1:] != top[:-1]])
         else:
             first = np.unique(gid, return_index=True)[1]
-        lut = np.fromiter(map(self._code, zip(*(u[c[first]] for c, u in cols))),
-                          dtype=np.intp, count=len(first))
+        values = []
+        for c, u in cols:
+            py = u.to_pylist()
+            if pa.types.is_floating(u.type):
+                py = [_NAN if x != x else x for x in py]
+            values.append([py[i] for i in c[first].tolist()])
+        known = len(self.tuples)
+        lut = np.fromiter(map(self._code, zip(*values)), dtype=np.intp, count=len(first))
+        new = first[lut >= known]
+        if len(new):
+            rows = pa.Array.from_buffers(pa.int64(), len(new),
+                                         [None, pa.py_buffer(new.astype(np.int64))])
+            self._rows.append([batch.column(k).take(rows) for k in self.keys])
         return lut[gid]
 
     def _code(self, key: tuple) -> int:
@@ -141,6 +242,11 @@ class _KeyCodes:
             code = self.code[key] = len(self.tuples)
             self.tuples.append(key)
         return code
+
+    def columns(self) -> list[pa.Array]:
+        """Each key column, one row per code."""
+        return [pa.concat_arrays([rows[i] for rows in self._rows])
+                for i in range(len(self.keys))]
 
 
 def _runs(codes: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -252,21 +358,28 @@ class _Spec:
             cols.append((self._w, F.col(self.weight_col).cast("double")))
         return cols
 
-    def values(self, pdf: pd.DataFrame):
-        """(values, NULL mask or None, weights or None) of one Arrow batch."""
+    def values(self, batch):
+        """(values, NULL mask or None, weights or None) of one Arrow batch
+        of the ``columns`` projection (a ``pa.RecordBatch``, or a mapping of
+        those column names to arrays), read from its buffers.  Only a
+        ``value_fn`` sees pandas: its ``input_cols`` alone convert."""
         mask = None
         if self.rule == "fn":
-            vals = np.asarray(self.value_fn(pdf), dtype="float64")
+            cols = pa.RecordBatch.from_arrays([batch[c] for c in self.input_cols],
+                                              names=self.input_cols)
+            vals = np.asarray(self.value_fn(cols.to_pandas(date_as_object=True)),
+                              dtype="float64")
         elif self.rule == "hash":
-            mask = pdf[self._m].to_numpy(dtype=bool)
-            vals = pdf[self._v].to_numpy(dtype="int64").view(np.uint64)
+            m = batch[self._m]
+            mask = _bits(m.buffers()[1], m.offset, len(m))
+            vals = _np(batch[self._v], np.uint64)
         elif self.rule == "raw":
-            vals = pdf[self._v].to_numpy(dtype=object)
-            mask = pd.isna(vals)
+            col = batch[self._v]
+            vals = np.fromiter(col.to_pylist(), dtype=object, count=len(col))
+            mask = _nulls(col)
         else:  # NaN/NULL are dropped by the numeric families' update_batch
-            vals = pdf[self._v].to_numpy(dtype="float64", na_value=np.nan)
-        wts = (pdf[self._w].to_numpy(dtype="float64", na_value=np.nan)
-               if self.weight_col else None)
+            vals = _doubles(batch[self._v])
+        wts = _doubles(batch[self._w]) if self.weight_col else None
         return vals, (mask if mask is not None and mask.any() else None), wts
 
     def update(self, agg, vals, mask, wts, idx) -> None:
@@ -328,12 +441,12 @@ def _schema(frame: DataFrame, keys: list[str], specs: list[_Spec]) -> StructType
     )
 
 
-def _frame(keys: list[str], specs: list[_Spec], tuples: list[tuple],
-           blobs: list[list]) -> pd.DataFrame:
-    """Kernel rows: one per key tuple, one binary column per spec."""
-    rows = {k: [key[i] for key in tuples] for i, k in enumerate(keys)}
-    rows.update(zip([s.name for s in specs], blobs))
-    return pd.DataFrame(rows, columns=keys + [s.name for s in specs])
+def _frame(keys: list[str], specs: list[_Spec], codes_of: _KeyCodes,
+           blobs: list[list]) -> pa.RecordBatch:
+    """Kernel rows: one per key code, one binary column per spec."""
+    return pa.RecordBatch.from_arrays(
+        [*codes_of.columns(), *map(_binary, blobs)],
+        names=[*keys, *(s.name for s in specs)])
 
 
 def _partial_builder(keys: list[str], specs: list[_Spec]):
@@ -341,7 +454,7 @@ def _partial_builder(keys: list[str], specs: list[_Spec]):
     one ``build_segments`` call per spec at the end of the partition, or
     the per-object loop (``_Partition``)."""
 
-    def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         codes_of = _KeyCodes(keys)
 
         def feeder(s: _Spec):
@@ -352,11 +465,11 @@ def _partial_builder(keys: list[str], specs: list[_Spec]):
             return feed
 
         parts = [_Partition(feeder(s), s.build_segmented) for s in specs]
-        for pdf in batches:
-            codes = codes_of(pdf)
+        for batch in batches:
+            codes = codes_of(batch)
             k = len(codes_of.tuples)
             for s, part in zip(specs, parts):
-                vals, mask, wts = s.values(pdf)
+                vals, mask, wts = s.values(batch)
                 keep = slice(None) if mask is None else ~mask  # NULLs never ingested
                 values = (vals[keep],) if wts is None else (vals[keep], wts[keep])
                 part.add(codes[keep], values,
@@ -371,7 +484,7 @@ def _partial_builder(keys: list[str], specs: list[_Spec]):
                     b if b is not None else
                     s.blob(part.aggs[c] if c in part.aggs else s.new(tuples[c]), merged=False)
                     for c, b in enumerate(out)])
-            yield _frame(keys, specs, tuples, blobs)
+            yield _frame(keys, specs, codes_of, blobs)
 
     return build
 
@@ -384,7 +497,7 @@ def partials(df: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
     ensure_on_workers(df.sparkSession)
     sp = _specs(specs, keys)
     narrow = _project(df, keys, sp)
-    return narrow.mapInPandas(_partial_builder(keys, sp), schema=_schema(narrow, keys, sp))
+    return narrow.mapInArrow(_partial_builder(keys, sp), schema=_schema(narrow, keys, sp))
 
 
 def merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
@@ -397,33 +510,31 @@ def merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
 
     if all(s.kind in _LARGE_STATE for s in sp):
 
-        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            aggs = []
+        def merge_group(pdf):
+            out = pdf[keys].iloc[:1].reset_index(drop=True)
             for s in sp:
                 blobs = [bytes(b) for b in pdf[s.name] if b is not None]
-                aggs.append(s.cls.merge_blobs(None, blobs, **s.params) if blobs else None)
-            key = tuple(pdf[k].iloc[0] for k in keys)
-            return _frame(keys, sp, [key], [[s.blob(a, merged=True)] for s, a in zip(sp, aggs)])
+                agg = s.cls.merge_blobs(None, blobs, **s.params) if blobs else None
+                out[s.name] = [s.blob(agg, merged=True)]
+            return out
 
         grouping = keys or [F.lit(1).alias("_g")]
         return partials.groupBy(*grouping).applyInPandas(merge_group, schema=schema)
 
-    def merge_stream(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def merge_stream(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         codes_of = _KeyCodes(keys)
 
         def feeder(s: _Spec):
             def feed(agg, code, blobs):
-                return s.cls.merge_blobs(agg, [bytes(b) for b in blobs], **s.params)
+                return s.cls.merge_blobs(agg, blobs, **s.params)
             return feed
 
         parts = [_Partition(feeder(s), s.merge_segmented) for s in sp]
-        for pdf in batches:
-            codes = codes_of(pdf)
+        for batch in batches:
+            codes = codes_of(batch)
             for s, part in zip(sp, parts):
-                col = pdf[s.name].to_numpy()
-                present = ~pd.isna(col)
-                part.add(codes[present], (col[present],), sum(map(len, col[present])),
-                         len(codes_of.tuples))
+                rows, blobs, size = _blobs(batch.column(s.name))
+                part.add(codes[rows], (blobs,), size, len(codes_of.tuples))
         if codes_of.tuples:
             k = len(codes_of.tuples)
             blobs = []
@@ -434,10 +545,10 @@ def merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
                     b if b is not None else
                     s.blob(part.aggs[c], merged=True) if c in part.aggs else None
                     for c, b in enumerate(out)])
-            yield _frame(keys, sp, codes_of.tuples, blobs)
+            yield _frame(keys, sp, codes_of, blobs)
 
     shuffled = partials.repartition(*keys) if keys else partials.repartition(1)
-    return shuffled.mapInPandas(merge_stream, schema=schema)
+    return shuffled.mapInArrow(merge_stream, schema=schema)
 
 
 def tree_merge(partials: DataFrame, keys: list[str], specs: list[dict],
@@ -513,10 +624,17 @@ def sketch_aggregate(
     )
 
 
+# The UDFs below are pandas UDFs built on call, never at import: building
+# one imports pandas, and importing this module must not (it runs in every
+# kernel worker).  Their functions carry no annotations, which makes them
+# scalar pandas UDFs without resolving ``pd`` from this module.
+
+
 def mg_items_udf():
     """binary(MG sketch) → array<struct<item,est>> for exploding a
     frequent-items summary into rows.  Post-aggregation only: runs on
     ≤|distinct keys| sketch rows, never row-scale data."""
+    import pandas as pd
     from pyspark.sql.types import ArrayType, LongType, StringType
 
     schema = ArrayType(StructType([
@@ -524,8 +642,7 @@ def mg_items_udf():
         StructField("est", LongType(), True),
     ]))
 
-    @F.pandas_udf(schema)
-    def f(sk: pd.Series) -> pd.Series:
+    def f(sk):
         out = []
         for b in sk:
             if b is None:
@@ -535,25 +652,35 @@ def mg_items_udf():
                             for k, v in MisraGries.deserialize(bytes(b)).items()])
         return pd.Series(out)
 
-    return f
+    return F.pandas_udf(f, schema)
 
 
 def _blob_udf(fn):
     """double per sketch row: ``fn(blob bytes)``, NULL for a NULL sketch.
     Post-aggregation only: runs on sketch rows, never row-scale data."""
+    import pandas as pd
 
-    @F.pandas_udf(DoubleType())
-    def f(blobs: pd.Series) -> pd.Series:
+    def f(blobs):
         return pd.Series([None if b is None else fn(bytes(b)) for b in blobs],
                          dtype="float64")
 
-    return f
+    return F.pandas_udf(f, DoubleType())
 
 
-hll_estimate_udf = _blob_udf(lambda b: HLL.deserialize(b).estimate())
-kmv_estimate_udf = _blob_udf(lambda b: KMV.deserialize(b).estimate())
-#: exact count of the values a CMS ingested
-cms_total_udf = _blob_udf(lambda b: float(CMS.deserialize(b).total))
+#: the one-blob estimate UDFs, module attributes built on first access
+_BLOB_FNS = {
+    "hll_estimate_udf": lambda b: HLL.deserialize(b).estimate(),
+    "kmv_estimate_udf": lambda b: KMV.deserialize(b).estimate(),
+    #: exact count of the values a CMS ingested
+    "cms_total_udf": lambda b: float(CMS.deserialize(b).total),
+}
+
+
+def __getattr__(name: str):
+    if name not in _BLOB_FNS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    udf = globals()[name] = _blob_udf(_BLOB_FNS[name])
+    return udf
 
 
 # ---------------------------------------------------------------------------
@@ -699,6 +826,7 @@ def profile_table(
     # whole scan+build subtree once per column (2C scans, exactly what
     # this operator exists to avoid)
     q = tdigest_quantiles_udf([0.5, 0.95], discrete=discrete)
+    cms_total_udf, hll_estimate_udf = map(__getattr__, ("cms_total_udf", "hll_estimate_udf"))
     n_rows = F.coalesce(cms_total_udf("_rows"), F.lit(0.0))
     structs = []
     for i, c in enumerate(cols):

@@ -13,8 +13,8 @@ Two aggregates are generated for every kind in ``sketch_ops.SKETCHES``,
 built with that family's one parameter set in ``PARAMS``:
 
   ``<kind>_agg(col)``        ingests the group's values by the kernel's rule
-      (``_Spec.update``); NULLs are never ingested, so an all-NULL group
-      gives an empty sketch;
+      (``_Spec.values`` + ``_Spec.update``); NULLs are never ingested, so
+      an all-NULL group gives an empty sketch;
   ``<kind>_merge_agg(blob)`` merges stored sketches (``merge_blobs`` +
       ``finish_merge``); a group whose sketches are all NULL merges to NULL.
 
@@ -102,17 +102,6 @@ def _check(name: str, rule: str, arr: pa.Array) -> None:
                         f"pass CAST(<column> AS {sql_type})")
 
 
-def _ingest(rule: str, arr: pa.Array) -> np.ndarray:
-    """The non-NULL values of one group in the form ``_Spec.update`` takes
-    (the kernel's ``_Spec.values`` over its JVM-side projection)."""
-    arr = arr.drop_null()
-    if rule == "hash":
-        return xxh64_long(arr.to_numpy())
-    if rule == "raw":
-        return arr.to_numpy(zero_copy_only=False)
-    return arr.cast(pa.float64(), safe=False).to_numpy()
-
-
 def _aggregates(kind: str) -> dict:
     """``<kind>_agg`` and ``<kind>_merge_agg`` for one registered family."""
     spec = _Spec({"name": kind, "kind": kind, "params": PARAMS[kind]}, 0)
@@ -121,8 +110,11 @@ def _aggregates(kind: str) -> dict:
     @arrow_udf(BinaryType())
     def agg(v: pa.Array) -> bytes:
         _check(name, spec.rule, v)
+        vals, mask, _ = spec.values({spec._v: v, spec._m: v.is_null()})
+        if spec.rule == "hash":  # the kernel hashes JVM-side, in its projection
+            vals = xxh64_long(vals)
         sk = spec.new()
-        spec.update(sk, _ingest(spec.rule, v), None, None, slice(None))
+        spec.update(sk, vals, mask, None, slice(None))
         return spec.blob(sk, merged=True)
 
     @arrow_udf(BinaryType())

@@ -39,6 +39,7 @@ from typing import Iterable, Iterator
 from zoneinfo import ZoneInfo
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -149,6 +150,7 @@ def _stateful_windowed(
     ensure_on_workers(stream.sparkSession)
     (sp,) = _specs(spec, keys)
     out_name = sp.name
+    ingest_cols = [name for name, _ in sp.columns()]
     tz = _session_tz(stream)
     keyed = (
         stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
@@ -197,8 +199,9 @@ def _stateful_windowed(
             if b:
                 prev = bytes(b)
         agg = sp.restore(prev)
-        for pdf in pdfs:
-            sp.update(agg, *sp.values(pdf), slice(None))
+        for pdf in pdfs:  # to Arrow once, then the kernel's ingest rule
+            batch = pa.RecordBatch.from_pandas(pdf[ingest_cols], preserve_index=False)
+            sp.update(agg, *sp.values(batch), slice(None))
         blob = agg.serialize()
         state.update((blob,))
         # (re)arm the timeout at window_end (epoch ms from the UTC-naive

@@ -7,11 +7,11 @@ and under key skew.  So we make the reference's partial/final split
 (reference README.md:31-41 delegates it to SQL ``STRING_AGG`` + ``of_string``)
 explicit:
 
-  phase 1 — ``tdigest_partials``: ``mapInPandas`` over a narrow projection;
+  phase 1 — ``tdigest_partials``: ``mapInArrow`` over a narrow projection;
             one partial digest per (input partition × key).  Pure map side,
             no shuffle; the Arrow batches feed ``MergingDigest.update_batch``
             (vectorized numpy, no per-row Python).
-  phase 2 — ``tdigest_merge``: ``repartition(keys)`` + one ``mapInPandas``
+  phase 2 — ``tdigest_merge``: ``repartition(keys)`` + one ``mapInArrow``
             accumulator; each key's ≤ P partial digests merge by
             byte-concatenation (a concat of serialized digests IS a valid
             digest) + one deterministic compress.  Shuffle volume is

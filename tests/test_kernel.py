@@ -316,6 +316,7 @@ def test_key_codes_keep_groupby_row_order():
     order, so kernel rows come out in the order they always had (the
     shuffle and stored files stay byte-for-byte the same); NULL is None."""
     import pandas as pd
+    import pyarrow as pa
 
     from sketchlib.spark.sketch_ops import _KeyCodes
 
@@ -330,8 +331,51 @@ def test_key_codes_keep_groupby_row_order():
                           (g if isinstance(g, tuple) else (g,)))
                     for g in df.groupby(keys, dropna=False, sort=False).indices]
             codes_of = _KeyCodes(keys)
-            codes = codes_of(df)
+            codes = codes_of(pa.RecordBatch.from_pandas(df, preserve_index=False))
             assert codes_of.tuples == want
             rows = [tuple(None if pd.isna(v) else v for v in r)
                     for r in df[keys].itertuples(index=False)]
             assert [codes_of.tuples[c] for c in codes] == rows
+
+
+def test_time_keys_ignore_session_time_zone(spark):
+    """Key columns cross the kernel as Arrow values, never as pandas
+    timestamps localized to the session time zone: partials and merges
+    keyed by a timestamp, a date and a decimal column give the same rows
+    under UTC and America/Los_Angeles.  The timestamps include both
+    instants of the hour Los Angeles repeats on 2021-11-07, which stay two
+    keys, and a NULL key."""
+    from pyspark.sql import functions as F
+
+    from sketchlib.spark.sketch_ops import merge, partials
+
+    specs = [{"name": "td", "kind": "tdigest", "col": "v", "params": {"delta": 0.0}},
+             {"name": "h", "kind": "hll", "col": "v", "params": {"p": 10}}]
+    keys = ["ts", "d", "dec"]
+    df = spark.range(120).selectExpr(
+        # 08:00, 08:30, 09:00, 09:30 UTC: 01:00 and 01:30 PDT, then PST
+        "IF(id % 13 = 0, NULL, timestamp_micros(1636272000000000"
+        " + (id % 4) * 1800000000)) AS ts",
+        "date_add(DATE'2021-11-06', CAST(id % 3 AS INT)) AS d",
+        "CAST(id % 5 AS DECIMAL(10, 2)) / 4 AS dec",
+        "CAST(id AS DOUBLE) AS v",
+    ).repartition(3)
+
+    def rows(frame):
+        out = frame.select(F.unix_micros("ts").alias("us"), "d", "dec", "td", "h")
+        return sorted((tuple(r) for r in out.collect()), key=repr)
+
+    conf = "spark.sql.session.timeZone"
+    saved = spark.conf.get(conf)
+    got = {}
+    try:
+        for tz in ("UTC", "America/Los_Angeles"):
+            spark.conf.set(conf, tz)
+            parts = partials(df, keys, specs)
+            got[tz] = rows(parts), rows(merge(parts, keys, specs))
+    finally:
+        spark.conf.set(conf, saved)
+    assert got["UTC"] == got["America/Los_Angeles"]
+    merged = got["UTC"][1]
+    assert len({r[0] for r in merged}) == 5  # four instants and NULL
+    assert len(merged) == len({r[:3] for r in merged})

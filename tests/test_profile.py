@@ -114,7 +114,7 @@ def test_profile_plan_one_scan_one_exchange(spark, docs):
     )
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 2, plan
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 2, plan
 
 
 def test_profile_spec_validation(spark, docs):

@@ -91,7 +91,7 @@ def main():
     p = plan_of(token_stats(docs))
     check("token_stats pure JVM (no Python)", p,
           must=[r"codegen id"],
-          must_not=[r"ArrowEvalPython|BatchEvalPython|MapInPandas"])
+          must_not=[r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow"])
 
     # 6. dedup minhash signatures: JVM aggregates, no Python stage
     from sketchlib.spark.dedup import minhash_signatures
@@ -99,7 +99,7 @@ def main():
     p = plan_of(minhash_signatures(docs))
     check("minhash signatures pure JVM", p,
           must=[r"HashAggregate"],
-          must_not=[r"ArrowEvalPython|BatchEvalPython|MapInPandas"])
+          must_not=[r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow"])
 
     # 6b. LSH verification prunes to candidates BEFORE the pair count:
     # the plan must contain LeftSemi joins (candidate restriction), and they
@@ -263,7 +263,7 @@ def main():
     p = plan_of(q_sample_stratified_hash(spark, sf_dir))
     check("stratified sample scan-only", p,
           must=[r"Scan parquet", r"codegen id"],
-          must_not=[r"Exchange", r"MapInPandas|BatchEvalPython|ArrowEvalPython"])
+          must_not=[r"Exchange", r"MapInPandas|MapInArrow|BatchEvalPython|ArrowEvalPython"])
 
     # 6m. weighted per-stratum sample: rank filter rewritten with a
     # partial WindowGroupLimit below the Exchange
@@ -272,7 +272,7 @@ def main():
     p = plan_of(q_sample_weighted_topk(spark, sf_dir))
     check("weighted sample window-group-limit", p,
           must=[r"WindowGroupLimit"],
-          must_not=[r"MapInPandas|BatchEvalPython|ArrowEvalPython"])
+          must_not=[r"MapInPandas|MapInArrow|BatchEvalPython|ArrowEvalPython"])
 
     # 6n. per-row p_rank scoring: digest dimension is BROADCAST (collected at
     # plan-build), so the scoring plan is scan+MapInPandas only — no join,
@@ -291,7 +291,7 @@ def main():
     check("range join equi-join (no nested loop)", p,
           must=[r"Join"],
           must_not=[r"NestedLoop", r"CartesianProduct",
-                    r"MapInPandas|BatchEvalPython|ArrowEvalPython"])
+                    r"MapInPandas|MapInArrow|BatchEvalPython|ArrowEvalPython"])
 
     # 6p. Bloom-accelerated join: the probe-side pre-filter is a map-side
     # MapInPandas at the SCAN (before any Exchange), the orders scan reads
@@ -552,7 +552,7 @@ def main():
     p = plan_of(q_text_normalize_dedup(spark, sf_dir))
     check("normalize+line-dedup pure codegen", p,
           must=[r"codegen id"],
-          must_not=[r"ArrowEvalPython|BatchEvalPython|MapInPandas",
+          must_not=[r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow",
                     r"Exchange"])
 
     # 6g. sliding-from-tumbling derivation: given a STORED digest table,
@@ -574,7 +574,7 @@ def main():
         window_col="day"))
     check("sliding windows: pure-JVM concat over stored digests", p,
           must=[r"Window"],
-          must_not=[r"ArrowEvalPython|BatchEvalPython|MapInPandas",
+          must_not=[r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow",
                     r"Scan parquet[^\n]*documents"])
 
     # 7. checkpoint resume: anti-join against completed parts is broadcast
