@@ -221,7 +221,10 @@ def test_redact_pii_semantics(spark):
         redact_pii(df, kinds=("email", "ssn"))
 
     plan = redact_pii(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "mapInPandas" not in plan.lower()
+    assert "Exchange" not in plan
+    for op in ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython",
+               "FlatMapGroupsInPandas"):
+        assert op not in plan, op
 
 
 def test_redact_pii_streams(spark, tmp_path):

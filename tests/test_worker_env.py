@@ -109,19 +109,18 @@ def test_workers_reuse_unchanged_zip_directories(spark):
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
 
 
-_NO_PANDAS_SCRIPT = r"""
+_WORKER_SCRIPT = r"""
+import json
 import sys
 sys.path.insert(0, sys.argv[1])
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import SparkSession
 
+from sketchlib.spark.session import get_spark
 from sketchlib.spark.sketch_ops import sketch_aggregate, sketch_merge
 from sketchlib.spark.tdigest_ops import tdigest_aggregate, tdigest_merge
 
-spark = (SparkSession.builder.master("local[2]")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false").getOrCreate())
+spark = get_spark("worker-env", cpus=2, shuffle_partitions=4)
 df = spark.range(20000, numPartitions=4).selectExpr(
     "CAST(id % 5 AS STRING) AS k", "CAST(id % 97 AS DOUBLE) AS v", "id % 1009 AS u")
 td = tdigest_aggregate(df, ["k"], "v")
@@ -134,43 +133,147 @@ assert sketch_merge(hll, [], "hll", {"p": 10}).count() == 1
 def probe(batches):
     import os
     import sys
+    import zipimport
 
     # read before building any output: most ways to build a batch from
     # Python values import pandas themselves
-    flags = ("pandas" in sys.modules) * 2 + ("sketchlib.spark.sketch_ops" in sys.modules)
+    pandas = "pandas" in sys.modules
+    kernel = "sketchlib.spark.sketch_ops" in sys.modules
+    import pyspark
+
+    import sketchlib.spark.zipcache as zc
+
+    with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
+        daemon = f.read().decode().split("\0")[:-1]
+    info = json.dumps({
+        "pid": os.getpid(), "pandas": pandas, "kernel": kernel, "pyspark": pyspark.__file__,
+        "daemon": daemon,
+        "zipcache": zipimport.zipimporter.invalidate_caches is zc._invalidate_if_changed,
+    }).encode()
     for _ in batches:
         pass
-    row = np.array([os.getpid() * 4 + flags], dtype=np.int64)
+    offsets = np.array([0, len(info)], dtype=np.int32)
     yield pa.RecordBatch.from_arrays(
-        [pa.Array.from_buffers(pa.int64(), 1, [None, pa.py_buffer(row)])], names=["w"])
+        [pa.Array.from_buffers(pa.binary(), 1, [None, pa.py_buffer(offsets), pa.py_buffer(info)])],
+        names=["info"])
 
 
-words = [r["w"] for r in spark.range(16, numPartitions=8).mapInArrow(probe, "w long").collect()]
-for pid in sorted({w // 4 for w in words}):
-    flags = {w % 4 for w in words if w // 4 == pid}
-    print("worker", pid, "pandas", any(f & 2 for f in flags), "kernel", any(f & 1 for f in flags))
+for r in spark.range(16, numPartitions=8).mapInArrow(probe, "info binary").collect():
+    print("probe", bytes(r["info"]).decode())
 spark.stop()
 """
 
 
-def test_kernel_workers_never_import_pandas(tmp_path):
-    """The kernel's two stages are Arrow-only (sketch_ops module
-    docstring): in a fresh session whose workers ran only t-digest and HLL
-    kernel tasks, no Python worker has imported pandas.  A probe task on
-    each pooled worker reports ``"pandas" in sys.modules`` and whether the
-    worker ever loaded the kernel."""
+@pytest.fixture(scope="module")
+def worker_probes(tmp_path_factory):
+    """One fresh ``get_spark`` session (in a subprocess) whose workers ran
+    t-digest and HLL kernel tasks, then a probe task on each pooled worker;
+    the probes' reports.  An empty ``spark-defaults.conf`` keeps the driver
+    CDS archive out of it, and the workers run this interpreter."""
+    import json
     import os
     import subprocess
     import sys
 
+    tmp = tmp_path_factory.mktemp("workers")
+    (tmp / "conf").mkdir()
+    (tmp / "conf" / "spark-defaults.conf").write_text("")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = {**os.environ, "SPARK_LOCAL_DIRS": str(tmp_path)}
-    out = subprocess.run([sys.executable, "-c", _NO_PANDAS_SCRIPT, repo],
+    env = {**os.environ, "SPARK_LOCAL_DIRS": str(tmp), "SPARK_CONF_DIR": str(tmp / "conf"),
+           "SKETCHLIB_DRIVER_MEM": "1g", "PYSPARK_PYTHON": sys.executable}
+    out = subprocess.run([sys.executable, "-c", _WORKER_SCRIPT, repo],
                          capture_output=True, text=True, timeout=600, env=env,
-                         cwd=str(tmp_path))
+                         cwd=str(tmp))
     assert out.returncode == 0, out.stderr[-3000:]
-    workers = [line.split() for line in out.stdout.splitlines()
-               if line.startswith("worker ")]
-    assert workers, out.stdout
-    assert all(w[3] == "False" for w in workers), workers
-    assert any(w[5] == "True" for w in workers), workers
+    probes = [json.loads(line[len("probe "):]) for line in out.stdout.splitlines()
+              if line.startswith("probe ")]
+    assert len(probes) == 8, out.stdout
+    return probes
+
+
+def test_kernel_workers_never_import_pandas(worker_probes):
+    """The kernel's two stages are Arrow-only (sketch_ops module
+    docstring): in a fresh session whose workers ran only t-digest and HLL
+    kernel tasks, no Python worker has imported pandas.  Each probe reports
+    ``"pandas" in sys.modules`` and whether its worker ever loaded the
+    kernel."""
+    assert not [p["pid"] for p in worker_probes if p["pandas"]], worker_probes
+    assert any(p["kernel"] for p in worker_probes), worker_probes
+
+
+def test_workers_fork_from_the_sketchlib_daemon(worker_probes):
+    """get_spark's workers are forked from ``python -m sketchlib_daemon
+    pyspark.worker``, and importing sketchlib there still wraps the
+    zipimporter (sketchlib.spark.zipcache)."""
+    import sys
+
+    from sketchlib.spark.session import DAEMON_MODULE
+
+    for p in worker_probes:
+        assert p["daemon"][-3:] == ["-m", DAEMON_MODULE, "pyspark.worker"], p
+        if sys.version_info < (3, 13):
+            assert p["zipcache"], p
+
+
+def _daemon_module():
+    """The daemon module, loaded from its file (not run: it is not
+    ``__main__``)."""
+    import importlib.util
+    import os
+
+    from sketchlib.spark.session import DAEMON_DIR, DAEMON_MODULE
+
+    spec = importlib.util.spec_from_file_location(
+        DAEMON_MODULE, os.path.join(DAEMON_DIR, DAEMON_MODULE + ".py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_workers_import_the_installed_pyspark(worker_probes):
+    """Where this interpreter's installed pyspark and py4j are the versions
+    of Spark's zips, the workers' pyspark is the installed, byte-compiled
+    one, not the source-only pyspark.zip."""
+    import os
+    import sys
+
+    lib = os.path.join(os.environ.get("SPARK_HOME", ""), "python", "lib")
+    zips = [os.path.join(lib, n) for n in sorted(os.listdir(lib))
+            if n == "pyspark.zip" or n.endswith("-src.zip")] if os.path.isdir(lib) else []
+    path = zips + [p for p in sys.path if p not in zips]
+    if not zips or _daemon_module().without_spark_zips(path) == path:
+        pytest.skip("the installed pyspark and py4j are not the versions of Spark's zips")
+    for p in worker_probes:
+        assert "pyspark.zip" not in p["pyspark"], p
+
+
+@pytest.mark.parametrize("case", ["match", "other_zip_version", "other_py4j", "not_installed"])
+def test_daemon_drops_spark_zips_only_for_matching_installs(tmp_path, case):
+    """The daemon's path rule: pyspark.zip and py4j-*-src.zip leave
+    ``sys.path`` only when the pyspark and py4j found on the rest of it are
+    the versions the zips hold; in every other case the path is unchanged."""
+    import zipfile
+
+    lib = tmp_path / "lib"
+    lib.mkdir()
+    pyspark_zip, py4j_zip = str(lib / "pyspark.zip"), str(lib / "py4j-0.10.9.9-src.zip")
+    zip_version = "9.9.0" if case == "other_zip_version" else "4.1.2"
+    with zipfile.ZipFile(pyspark_zip, "w") as z:
+        z.writestr("pyspark/__init__.py", "")
+        z.writestr("pyspark/version.py", f"__version__: str = '{zip_version}'\n")
+    with zipfile.ZipFile(py4j_zip, "w") as z:
+        z.writestr("py4j/__init__.py", "")
+    site = tmp_path / "site"
+    site.mkdir()
+    if case != "not_installed":
+        py4j_version = "0.10.9.8" if case == "other_py4j" else "0.10.9.9"
+        for pkg, version in (("pyspark", "4.1.2"), ("py4j", py4j_version)):
+            (site / pkg).mkdir()
+            (site / pkg / "__init__.py").write_text("")
+            (site / pkg / "version.py").write_text(f"__version__ = '{version}'\n")
+    path = [str(tmp_path / "cwd"), pyspark_zip, py4j_zip, str(tmp_path / "core.jar"), str(site)]
+    kept = _daemon_module().without_spark_zips(list(path))
+    if case == "match":
+        assert kept == [path[0], path[3], path[4]]
+    else:
+        assert kept == path
