@@ -283,16 +283,19 @@ def ensure_pages(path: str, n_rows: int, chunk: int = 50_000) -> None:
           file=sys.stderr)
 
 
-def _extract_len_fn(pdf):
+def _extract_len_fn(batch):
     """Fused value_fn for tdigest_partials: html -> extracted text length.
     Runs inside the partials stage, so extraction + ingest cost ONE Arrow
-    hop.  Uses the length-only projection pushdown (bytes-native, ~1.4
-    KB-sized allocations/doc vs ~3.4 for text materialization — the
-    8→32-worker scaling lever, see sketchlib/data/extract.py); output is
-    byte-identical to extract_series(...).str.len() by guarded fallback."""
+    hop.  ``batch`` is the stage's ``pa.RecordBatch`` of ``html``, read
+    from its Arrow buffers (no pandas in the worker).  Uses the length-only
+    projection pushdown (bytes-native, ~1.4 KB-sized allocations/doc vs
+    ~3.4 for text materialization — the 8→32-worker scaling lever, see
+    sketchlib/data/extract.py); output is byte-identical to
+    extract_series(...).str.len() by guarded fallback, NaN (not ingested)
+    for a NULL page."""
     from sketchlib.data.extract import extract_len_series
 
-    return extract_len_series(pdf["html"])
+    return extract_len_series(batch["html"])
 
 
 def measure_build(cpus: int, path: str, reps: int = 3) -> dict:

@@ -14,14 +14,22 @@ Length-only consumers (the per-lang text-length digest build) call
 never decode or build the text or its tokens — after the tag pass, a
 256-byte ``translate`` table maps each byte to whitespace or not, and the
 length is counted from that (see ``extract_len_one``).
+``extract_len_series`` also reads an Arrow binary/string column straight
+from its buffers, so the fused digest build's Python workers never import
+pandas: only ``extract_series`` does, on call.
 """
 
 from __future__ import annotations
 
+import math
 import re
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 _SCRIPT = re.compile(r"<script.*?</script>", re.DOTALL | re.IGNORECASE)
 _STYLE = re.compile(r"<style.*?</style>", re.DOTALL | re.IGNORECASE)
@@ -61,6 +69,8 @@ def extract_series(html: pd.Series) -> pd.Series:
     object/string dtype are Python loops anyway, so there is no
     vectorization to lose).  Output is byte-identical to ``extract_one``.
     """
+    import pandas as pd
+
     ss, ts, gs = _SCRIPT.sub, _STYLE.sub, _TAG.sub
     return pd.Series(
         [
@@ -104,19 +114,24 @@ def extract_len_one(html: bytes) -> int:
     count them), one 25k-page generated file measures 0.28-0.36 s instead
     of 0.43-0.48 s on one core of a 4-CPU x86 host.
     """
-    # the bytes fast path is only exact when bytes.split() (ASCII
-    # whitespace) agrees with str.split() (Unicode whitespace + \x1c-\x1f)
-    # AND byte length == char length: pure-ASCII input with no \x1c-\x1f
-    # controls.  Four memchr-backed ``in`` tests give the same verdict as
-    # one regex class search, 22 ms vs 135 ms over 20k generated pages.
-    if (
-        not html.isascii()
-        or b"\x1c" in html
-        or b"\x1d" in html
-        or b"\x1e" in html
-        or b"\x1f" in html
-    ):
+    if not _ascii_clean(html):
         return len(extract_one(html))
+    return _ascii_len(html)
+
+
+def _ascii_clean(html: bytes) -> bool:
+    """Whether the bytes fast path is exact for ``html``: ``bytes.split()``
+    (ASCII whitespace) agrees with ``str.split()`` (Unicode whitespace plus
+    \\x1c-\\x1f) AND byte length equals char length, i.e. pure ASCII with
+    no \\x1c-\\x1f controls.  Four memchr-backed ``in`` tests give the same
+    verdict as one regex class search, 22 ms vs 135 ms over 20k generated
+    pages."""
+    return (html.isascii() and b"\x1c" not in html and b"\x1d" not in html
+            and b"\x1e" not in html and b"\x1f" not in html)
+
+
+def _ascii_len(html: bytes) -> int:
+    """The fast path of ``extract_len_one``, for ``_ascii_clean`` input."""
     # ~80% of pages hold neither span: one search skips both passes
     if _SCRIPT_OR_STYLE_B.search(html):
         html = _STYLE_B.sub(b"", _SCRIPT_B.sub(b"", html))
@@ -125,15 +140,55 @@ def extract_len_one(html: bytes) -> int:
     return len(t) - t.count(b" ") + n - 1 if n else 0
 
 
-def _len_any(b) -> int:
-    if not isinstance(b, (bytes, bytearray)):
-        b = str(b).encode("utf-8")
+def _len_any(b) -> float:
+    if isinstance(b, str):
+        b = b.encode("utf-8")
+    elif not isinstance(b, (bytes, bytearray)):
+        return math.nan  # a NULL page: None, NaN or pd.NA
     return extract_len_one(b)
 
 
-def extract_len_series(html: pd.Series) -> np.ndarray:
-    """Vectorized ``extract_len_one`` over a Series of bytes, bytearray or
-    str: returns float64 lengths (digest-ingest dtype).  Byte-identical to
+#: offset width of each Arrow html type ``extract_len_series`` reads
+_ARROW_OFFSETS = {pa.binary(): np.int32, pa.string(): np.int32,
+                  pa.large_binary(): np.int64, pa.large_string(): np.int64}
+
+
+def _arrow_lens(arr: pa.Array) -> np.ndarray:
+    """``extract_len_one`` of every row of one Arrow binary/string array,
+    NULL as NaN, read from its buffers (``to_numpy`` / ``to_pylist`` would
+    import pandas or decode each string).  The rows' bytes are copied once
+    into one ``bytes`` and each row is a slice of it; a batch that is
+    ``_ascii_clean`` as a whole skips every row's own check."""
+    width = _ARROW_OFFSETS.get(arr.type)
+    if width is None:
+        raise TypeError(f"html must be Arrow binary or string, not {arr.type}")
+    n = len(arr)
+    if not n:
+        return np.empty(0, dtype=np.float64)
+    valid, offsets, data = arr.buffers()
+    offs = np.frombuffer(offsets, dtype=width, count=arr.offset + n + 1)[arr.offset:]
+    lo, hi = int(offs[0]), int(offs[-1])
+    blob = data.slice(lo, hi - lo).to_pybytes() if hi > lo else b""
+    one = _ascii_len if _ascii_clean(blob) else extract_len_one
+    rel = (offs - lo).tolist()
+    out = np.fromiter((one(blob[a:b]) for a, b in zip(rel, rel[1:])),
+                      dtype=np.float64, count=n)
+    if arr.null_count:
+        bits = np.frombuffer(valid, dtype=np.uint8, count=(arr.offset + n + 7) // 8)
+        out[np.unpackbits(bits, count=arr.offset + n, bitorder="little")[arr.offset:] == 0] = np.nan
+    return out
+
+
+def extract_len_series(html) -> np.ndarray:
+    """Vectorized ``extract_len_one``: float64 lengths (digest-ingest
+    dtype), NaN for a NULL page, of a pandas Series (or any sequence) of
+    bytes, bytearray or str, or of an Arrow binary, large_binary, string or
+    large_string ``Array``/``ChunkedArray`` — the column a ``value_fn``
+    reads off its ``pa.RecordBatch``.  Byte-identical to
     ``extract_series(html).str.len()`` — asserted in
     tests/test_extraction.py including the fallback triggers."""
+    if isinstance(html, pa.ChunkedArray):
+        return np.concatenate([np.empty(0)] + [_arrow_lens(c) for c in html.chunks])
+    if isinstance(html, pa.Array):
+        return _arrow_lens(html)
     return np.fromiter(map(_len_any, html), dtype=np.float64, count=len(html))

@@ -26,14 +26,19 @@ spec, named by the spec.
       levels that bound every reducer's fan-in (see ``spark/plan.py``).
 
 Both ``mapInArrow`` stages take and yield ``pa.RecordBatch``es and never
-import pandas.  Values are numpy views of the Arrow buffers; only a
-``value_fn`` spec converts its ``input_cols`` to pandas.  Every row gets a
-partition-wide key code (one Arrow ``dictionary_encode`` per key column;
-the NULL key and a key spread over several Arrow batches stay one group),
-and the output key columns are ``take``s of the input's own key values, so
-a timestamp key never depends on the session time zone.  Each output blob
-column is one data buffer plus int32 offsets, and the merge reads its
-blobs as memoryviews into the input's data buffer.
+import pandas.  Values are numpy views of the Arrow buffers.  A
+``value_fn`` is ``pa.RecordBatch -> np.ndarray``: it gets the batch of its
+``input_cols`` as it is and returns one value per row (a numeric family
+drops NaN, like a NULL), so a worker imports pandas only if a ``value_fn``
+converts the batch itself (``data.extract.extract_len_series`` reads html
+straight from the Arrow buffers).
+
+Every row gets a partition-wide key code (one Arrow ``dictionary_encode``
+per key column; the NULL key and a key spread over several Arrow batches
+stay one group), and the output key columns are ``take``s of the input's
+own key values, so a timestamp key never depends on the session time zone.
+Each output blob column is one data buffer plus int32 offsets, and the
+merge reads its blobs as memoryviews into the input's data buffer.
 
 A spec whose family overrides the segment pair
 (``Aggregator.build_segments`` / ``merge_segments``: the t-digest and HLL)
@@ -361,14 +366,14 @@ class _Spec:
     def values(self, batch):
         """(values, NULL mask or None, weights or None) of one Arrow batch
         of the ``columns`` projection (a ``pa.RecordBatch``, or a mapping of
-        those column names to arrays), read from its buffers.  Only a
-        ``value_fn`` sees pandas: its ``input_cols`` alone convert."""
+        those column names to arrays), read from its buffers.  A
+        ``value_fn`` gets the ``pa.RecordBatch`` of its ``input_cols`` as it
+        is and returns a numpy array of the values."""
         mask = None
         if self.rule == "fn":
             cols = pa.RecordBatch.from_arrays([batch[c] for c in self.input_cols],
                                               names=self.input_cols)
-            vals = np.asarray(self.value_fn(cols.to_pandas(date_as_object=True)),
-                              dtype="float64")
+            vals = np.asarray(self.value_fn(cols), dtype="float64")
         elif self.rule == "hash":
             m = batch[self._m]
             mask = _bits(m.buffers()[1], m.offset, len(m))

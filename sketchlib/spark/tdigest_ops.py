@@ -112,10 +112,13 @@ def tdigest_partials(
 ) -> DataFrame:
     """Phase 1: one partial digest row per (input partition × key).
 
-    ``value_fn``: optional ``pd.DataFrame -> np.ndarray`` computing the
-    values inside the same Python stage (reads ``input_cols``).  This fuses
-    upstream vectorized work — e.g. html→text extraction — with sketch
-    ingest in ONE JVM↔Python Arrow hop instead of two.
+    ``value_fn``: optional ``pa.RecordBatch -> np.ndarray`` computing the
+    values inside the same Python stage: it gets the Arrow batch of
+    ``input_cols`` as it is (no pandas conversion) and returns one value
+    per row; NaN is dropped like a NULL.  This fuses upstream vectorized
+    work — e.g. html→text extraction,
+    ``lambda b: extract_len_series(b["html"])`` — with sketch ingest in ONE
+    JVM↔Python Arrow hop instead of two.
     """
     return partials(df, keys, _digest(
         delta, discrete, col=value_col, weight_col=weight_col,

@@ -5,6 +5,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -140,3 +141,100 @@ def test_extract_len_series_accepts_bytes_bytearray_str(docs):
         got = extract_len_series(pd.Series(col, dtype=object))
         assert got.dtype == np.float64
         np.testing.assert_array_equal(got, want)
+
+
+#: the Arrow html types ``extract_len_series`` reads from the buffers
+_ARROW_HTML = [pa.binary(), pa.large_binary(), pa.string(), pa.large_string()]
+
+
+def _arrow_html(rows, typ):
+    """``rows`` (str or None) as an Arrow array of ``typ``."""
+    if pa.types.is_binary(typ) or pa.types.is_large_binary(typ):
+        rows = [None if r is None else r.encode("utf-8") for r in rows]
+    return pa.array(rows, type=typ)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(st.none() | st.lists(st.sampled_from(_FRAGMENTS), max_size=10), max_size=12),
+       st.sampled_from(_ARROW_HTML), st.integers(0, 12))
+def test_extract_len_series_arrow_matches_list(docs, typ, cut):
+    """The Arrow path (one copy of the data buffer, one batch-wide ASCII
+    check) equals the list path row for row: every html type, NULL and
+    empty rows, a sliced array (non-zero offset) and a ChunkedArray."""
+    from sketchlib.data.extract import extract_len_series
+
+    rows = [None if d is None else "".join(d) for d in docs]
+    raw = [None if r is None else r.encode("utf-8") for r in rows]
+    want = extract_len_series(raw)  # a NULL page is NaN, never len("None")
+    np.testing.assert_array_equal(
+        want, [np.nan if r is None else len(extract_one(r)) for r in raw])
+    np.testing.assert_array_equal(extract_len_series(pd.Series(raw, dtype=object)), want)
+    arr = _arrow_html(rows, typ)
+    cut = min(cut, len(rows))
+    for got, exp in ((arr, want), (arr.slice(cut), want[cut:]),
+                     (arr.slice(cut, 2), want[cut:cut + 2]),
+                     (pa.chunked_array([arr.slice(0, cut), arr.slice(cut)], type=typ), want),
+                     (pa.chunked_array([], type=typ), want[:0])):
+        lens = extract_len_series(got)
+        assert lens.dtype == np.float64
+        np.testing.assert_array_equal(lens, exp)
+
+
+@pytest.mark.parametrize("typ", _ARROW_HTML, ids=str)
+def test_extract_len_series_arrow_mixed_batch(typ):
+    """One non-ASCII row and one \\x1c row among clean ones send the whole
+    batch down the guarded per-row path; each of those rows counts
+    differently on the bytes fast path, so a batch check that missed them
+    would show here."""
+    from sketchlib.data.extract import _ascii_len, extract_len_series
+
+    rows = ["<p>one two</p>", None, "", "a\xa0\xa0b <p>x</p>", "<script>s</script>c",
+            "a\x1c\x1cb", "  tail  "]
+    want = [np.nan if r is None else len(extract_one(r.encode("utf-8"))) for r in rows]
+    for r in ("a\xa0\xa0b <p>x</p>", "a\x1c\x1cb"):  # the bytes path would miscount them
+        assert _ascii_len(r.encode("utf-8")) != len(extract_one(r.encode("utf-8")))
+    arr = _arrow_html(rows, typ)
+    np.testing.assert_array_equal(extract_len_series(arr), want)
+    np.testing.assert_array_equal(extract_len_series(arr.slice(3)), want[3:])
+    with pytest.raises(TypeError):
+        extract_len_series(pa.array([1, 2]))
+
+
+def test_kernel_and_extraction_import_no_pandas():
+    """Importing the kernel and the extraction module (what a fused
+    digest-build worker unpickles) loads no pandas."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import sys; sys.path.insert(0, sys.argv[1]); "
+            "import sketchlib.spark.sketch_ops, sketchlib.data.extract; "
+            "assert 'pandas' not in sys.modules")
+    out = subprocess.run([sys.executable, "-c", code, repo], capture_output=True, text=True)
+    assert out.returncode == 0, out.stderr[-2000:]
+
+
+@pytest.mark.spark
+def test_fused_extract_len_never_ingests_null_html(spark):
+    """A ``value_fn`` digest over html with NULL pages counts only the
+    non-NULL pages, and equals the digest of their stored text lengths."""
+    from pyspark.sql import functions as F
+
+    from sketchlib.data.extract import extract_len_series
+    from sketchlib.spark.tdigest_ops import tdigest_aggregate, tdigest_merge, tdigest_partials
+    from sketchlib.tdigest.core import MergingDigest
+
+    pdf = gen_chunk(0, 400)[["lang", "html", "text"]]
+    pdf.loc[pdf.index % 7 == 0, "html"] = None
+    df = spark.createDataFrame(pdf).repartition(3)
+    got = tdigest_merge(
+        tdigest_partials(df, ["lang"], None, delta=0.0,
+                         value_fn=lambda b: extract_len_series(b["html"]), input_cols=["html"]),
+        ["lang"], delta=0.0).collect()
+    want = tdigest_aggregate(df.where(F.col("html").isNotNull())
+                             .select("lang", F.length("text").alias("L")),
+                             ["lang"], "L", delta=0.0).collect()
+    pages = pdf[pdf["html"].notna()].groupby("lang").size().to_dict()
+    got = {r["lang"]: bytes(r["digest"]) for r in got}
+    assert {k: MergingDigest.deserialize(b).count for k, b in got.items()} == pages
+    assert got == {r["lang"]: bytes(r["digest"]) for r in want}

@@ -158,16 +158,22 @@ def test_caller_default_java_options_survive(env):
 def test_worker_daemon_module_and_path(env):
     """get_spark names the worker daemon module and puts its directory (no
     ``__init__.py``: the daemon imports no sketchlib) first on the workers'
-    PYTHONPATH, ahead of a caller's; ``extra`` still picks the stock daemon."""
+    PYTHONPATH, ahead of a caller's; ``extra`` still picks the stock daemon.
+    It also turns the driver's DataFrame call-site capture off, and
+    ``extra`` turns it back on."""
+    debugging = "spark.python.sql.dataFrameDebugging.enabled"
     opts, _ = _launch(env)
     assert opts["spark.python.daemon.module"] == S.DAEMON_MODULE
     assert opts["spark.executorEnv.PYTHONPATH"] == S.DAEMON_DIR
+    assert opts[debugging] == "false"
     assert os.path.isfile(os.path.join(S.DAEMON_DIR, S.DAEMON_MODULE + ".py"))
     assert not os.path.exists(os.path.join(S.DAEMON_DIR, "__init__.py"))
     opts, _ = _launch(env, extra={"spark.executorEnv.PYTHONPATH": os.pathsep.join(["/a", "/b"]),
-                                  "spark.python.daemon.module": "pyspark.daemon"})
+                                  "spark.python.daemon.module": "pyspark.daemon",
+                                  debugging: "true"})
     assert opts["spark.executorEnv.PYTHONPATH"] == os.pathsep.join([S.DAEMON_DIR, "/a", "/b"])
     assert opts["spark.python.daemon.module"] == "pyspark.daemon"
+    assert opts[debugging] == "true"
 
 
 @pytest.mark.parametrize("case", ["context", "gateway", "gateway_port", "hadoop_conf",

@@ -116,9 +116,11 @@ sys.path.insert(0, sys.argv[1])
 import numpy as np
 import pyarrow as pa
 
+from sketchlib.data.extract import extract_len_series
+from sketchlib.data.gen_pages import gen_chunk
 from sketchlib.spark.session import get_spark
 from sketchlib.spark.sketch_ops import sketch_aggregate, sketch_merge
-from sketchlib.spark.tdigest_ops import tdigest_aggregate, tdigest_merge
+from sketchlib.spark.tdigest_ops import tdigest_aggregate, tdigest_merge, tdigest_partials
 
 spark = get_spark("worker-env", cpus=2, shuffle_partitions=4)
 df = spark.range(20000, numPartitions=4).selectExpr(
@@ -128,6 +130,11 @@ hll = sketch_aggregate(df, ["k"], "u", "hll", {"p": 10})
 assert td.count() == 5 and hll.count() == 5
 assert tdigest_merge(td, [], delta=0.01).count() == 1
 assert sketch_merge(hll, [], "hll", {"p": 10}).count() == 1
+# the fused html -> extracted length -> digest pass, on every partition
+pdf = gen_chunk(0, 400)[["lang", "html"]]
+fused = tdigest_partials(spark.createDataFrame(pdf).repartition(8), ["lang"], None,
+                         value_fn=lambda b: extract_len_series(b["html"]), input_cols=["html"])
+assert tdigest_merge(fused, ["lang"]).count() == pdf["lang"].nunique()
 
 
 def probe(batches):
@@ -167,8 +174,8 @@ spark.stop()
 @pytest.fixture(scope="module")
 def worker_probes(tmp_path_factory):
     """One fresh ``get_spark`` session (in a subprocess) whose workers ran
-    t-digest and HLL kernel tasks, then a probe task on each pooled worker;
-    the probes' reports.  An empty ``spark-defaults.conf`` keeps the driver
+    t-digest, HLL and fused extract-length kernel tasks, then a probe task
+    on each pooled worker; the probes' reports.  An empty ``spark-defaults.conf`` keeps the driver
     CDS archive out of it, and the workers run this interpreter."""
     import json
     import os
@@ -194,9 +201,10 @@ def worker_probes(tmp_path_factory):
 def test_kernel_workers_never_import_pandas(worker_probes):
     """The kernel's two stages are Arrow-only (sketch_ops module
     docstring): in a fresh session whose workers ran only t-digest and HLL
-    kernel tasks, no Python worker has imported pandas.  Each probe reports
-    ``"pandas" in sys.modules`` and whether its worker ever loaded the
-    kernel."""
+    kernel tasks and the fused html -> ``extract_len_series`` -> t-digest
+    pass (a ``value_fn`` gets the Arrow batch), no Python worker has
+    imported pandas.  Each probe reports ``"pandas" in sys.modules`` and
+    whether its worker ever loaded the kernel."""
     assert not [p["pid"] for p in worker_probes if p["pandas"]], worker_probes
     assert any(p["kernel"] for p in worker_probes), worker_probes
 
