@@ -28,9 +28,9 @@ batch by batch through the per-object loop.
 
 ``sketchlib.spark.sketch_ops`` lifts any registered Aggregator into the
 DataFrame-level partial/merge kernel (mapInArrow partials, one shuffle,
-then a mapInArrow accumulator merge — or ``groupBy().applyInPandas`` for
-the MB-scale Bloom/CMS states).  It calls the segment pair once per spec
-and partition for the families that override them.
+then a mapInArrow accumulator merge, for every family).  It calls the
+segment pair once per spec and partition for the families that override
+them.
 """
 
 from __future__ import annotations

@@ -8,9 +8,9 @@ Why this matters at 10^12 rows / 100 TB:
 The partial stage emits one ≤40 KB digest per (input partition × key).  At
 P = 800k input partitions (100 TB / 128 MB) a hot key ("en" ≈ 55% of the
 web) receives up to P partial rows ≈ 30 GB into ONE reducer in the naive
-``groupBy(key)`` plan.  The kernel's ``sketch_ops.tree_merge`` (wrapped
-here per family) bounds every reducer's fan-in to ``fanin`` partials by
-inserting salted intermediate merge levels:
+``groupBy(key)`` plan.  The kernel's ``sketch_ops.tree_merge(partials,
+keys, specs, fanin)`` bounds every reducer's fan-in to ``fanin`` partials
+by inserting salted intermediate merge levels:
 
   level 0:  merge by (key, salt = blob_hash % S) — S ≈ P/fanin reducers/key
   level k:  salt = salt % (S / fanin^k)          — fan-in ``fanin`` per node
@@ -20,6 +20,9 @@ Each level is a shuffle of sketch rows only (KBs per row).  Because the
 distributed merge is a lossless commutative union (compression only where a
 node's union exceeds the size cap), tree shape does not change results in
 exact mode, and changes them only within the error bound in compressed mode.
+For the byte-canonical families (HLL register-max, Bloom bit-OR, CMS
+counter-sum, KMV bottom-k, DDSketch bucket-sum) the tree's blob is the
+flat merge's; KLL/MG stay within their documented merge bound.
 
 Salting here is *lossless* — unlike salted numeric aggs that need a second
 exact pass, mergeable sketches recombine salted sub-sketches into exactly
@@ -29,64 +32,6 @@ the sketch the unsalted plan would build (same multiset union).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-from sketchlib.spark.sketch_ops import _sketch, partials, tree_merge
-from sketchlib.spark.tdigest_ops import _digest
-
-
-def tree_merge_tdigest(
-    partials: DataFrame,
-    keys: list[str],
-    delta: float = 0.01,
-    discrete: bool = False,
-    fanin: int = 64,
-) -> DataFrame:
-    """Merge partial digests with bounded reducer fan-in."""
-    return tree_merge(partials, keys, _digest(delta, discrete), fanin)
-
-
-def tree_merge_sketch(
-    partials: DataFrame,
-    keys: list[str],
-    sketch: str,
-    params: dict | None = None,
-    fanin: int = 64,
-) -> DataFrame:
-    """``tree_merge_tdigest`` for every sibling family in the
-    ``sketch_ops.SKETCHES`` registry.  Every registry sketch's merge is a
-    commutative semilattice/monoid on the SAME serialized state the direct
-    merge uses, so tree shape does not change the result: for the
-    byte-canonical families (HLL register-max, Bloom bit-OR, CMS
-    counter-sum, KMV bottom-k, dd bucket-sum) the output blob is
-    byte-identical to the flat ``sketch_merge`` — pytest-proved — and for
-    KLL/MG it is within the family's documented merge bound."""
-    return tree_merge(partials, keys, _sketch(sketch, params), fanin)
-
-
-def sketch_aggregate_skewed(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    sketch: str,
-    params: dict | None = None,
-    fanin: int = 64,
-) -> DataFrame:
-    """Full skew-safe sibling-sketch plan: partials → salted tree merge."""
-    spec = _sketch(sketch, params, col=value_col)
-    return tree_merge(partials(df, keys, spec), keys, spec, fanin)
-
-
-def tdigest_aggregate_skewed(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    delta: float = 0.01,
-    discrete: bool = False,
-    fanin: int = 64,
-) -> DataFrame:
-    """Full skew-safe plan: partials → salted tree merge → final digest."""
-    spec = _digest(delta, discrete, col=value_col)
-    return tree_merge(partials(df, keys, spec), keys, spec, fanin)
 
 
 # ---------------------------------------------------------------------------

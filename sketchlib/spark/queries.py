@@ -356,23 +356,16 @@ HAVING count(*) >= ceil(0.2 * (SELECT count(*) FROM documents))
 def q_kll_nearest_rank_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLL in oracle mode (k large enough that no compaction triggers at
     test scale): weighted nearest-rank quantiles, exactly SQL-checkable."""
+    from pyspark.sql.types import ArrayType, DoubleType
+
     from sketchlib.kll import KLL
-    from sketchlib.spark.sketch_ops import sketch_aggregate
+    from sketchlib.spark.sketch_ops import _blob_udf, sketch_aggregate
 
     docs = load(spark, sf_dir, "documents")
     sk = sketch_aggregate(docs, ["lang"], "n_chars", "kll", {"k": 32768})
-
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
-
     ps = list(PS_DISCRETE.values())
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def quant(s):
-        import pandas as pd
-
-        return pd.Series([KLL.deserialize(bytes(b)).quantile(ps).tolist() for b in s])
-
+    quant = _blob_udf(ArrayType(DoubleType()),
+                      lambda b: KLL.deserialize(b).quantile(ps).tolist())
     out = sk.withColumn("_q", quant("sketch"))
     for i, alias in enumerate(PS_DISCRETE):
         out = out.withColumn(alias, F.col("_q")[i])
@@ -963,29 +956,17 @@ def q_kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     without inclusion-exclusion error blowup and the reason the bottom-k
     sample is coordinated.  Exact side: distinct (type,user) self-join —
     the verification oracle, not the scale path."""
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import DoubleType
 
     from sketchlib.kmv import KMV
-    from sketchlib.spark.sketch_ops import sketch_aggregate
+    from sketchlib.spark.sketch_ops import _blob_udf, sketch_aggregate
 
     ev = load(spark, sf_dir, "events")
     sk = sketch_aggregate(ev, ["event_type"], "user_id", "kmv", {"k": 1024})
-
-    @pandas_udf(DoubleType())
-    def jac(sa, sb):
-        return pd.Series([
-            KMV.deserialize(bytes(x)).jaccard(KMV.deserialize(bytes(y)))
-            for x, y in zip(sa, sb)
-        ])
-
-    @pandas_udf(DoubleType())
-    def diff_est(sa, sb):
-        return pd.Series([
-            KMV.deserialize(bytes(x)).difference_estimate(KMV.deserialize(bytes(y)))
-            for x, y in zip(sa, sb)
-        ])
+    jac = _blob_udf(DoubleType(), lambda x, y: (
+        KMV.deserialize(x).jaccard(KMV.deserialize(y))))
+    diff_est = _blob_udf(DoubleType(), lambda x, y: (
+        KMV.deserialize(x).difference_estimate(KMV.deserialize(y))))
 
     a = sk.select(F.col("event_type").alias("type_a"), F.col("sketch").alias("sa"))
     b = sk.select(F.col("event_type").alias("type_b"), F.col("sketch").alias("sb"))
@@ -2284,15 +2265,17 @@ def q_corpus_profile_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact; HLL++ gets the bounded-error verdict boolean (within max(2%,
     ±2) of exact).  pytest additionally proves profile output byte-equals
     each dedicated single-sketch path."""
+    import numpy as np
+    from pyspark.sql.types import LongType
+
     from sketchlib.cms import CMS
     from sketchlib.spark.sketch_ops import (
+        _blob_udf,
         hll_estimate_udf,
         mg_items_udf,
         profile_aggregate,
         profile_pivot,
     )
-
-    import pandas as pd
 
     docs = load(spark, sf_dir, "documents").select("lang", "source", "n_chars")
     specs = [
@@ -2305,16 +2288,8 @@ def q_corpus_profile_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     wide = profile_pivot(profile_aggregate(docs, ["lang"], specs), ["lang"], specs)
 
-    @F.pandas_udf("long")
-    def cms_probe(blobs, hs):
-        import numpy as np
-
-        out = []
-        for b, h in zip(blobs, hs):
-            cms = CMS.deserialize(bytes(b))
-            out.append(int(cms.query_hashed(
-                np.array([h], dtype="int64").view(np.uint64))[0]))
-        return pd.Series(out, dtype="int64")
+    cms_probe = _blob_udf(LongType(), lambda b, h: int(CMS.deserialize(b).query_hashed(
+        np.array([h], dtype="int64").view(np.uint64))[0]))
 
     qq = tdigest_quantiles_udf([0.5, 0.95], discrete=True)
     top = F.array_max(F.expr(

@@ -18,10 +18,10 @@ spec, named by the spec.
       emits one row per (input partition × key).  No shuffle; no per-row
       Python.
   ``merge(partials, keys, specs)`` — ONE Exchange on the keys, then a
-      ``mapInArrow`` accumulator emitting one merged row per key.  When
-      every spec is a ``_LARGE_STATE`` family (Bloom/CMS, MB-scale),
-      ``groupBy().applyInPandas`` holds one group in memory at a time
-      instead.  A (key, spec) that received no sketch merges to NULL.
+      ``mapInArrow`` accumulator emitting one merged row per key, for
+      every family (a worker holds one merged sketch per co-located key
+      plus one Arrow batch).  A (key, spec) that received no sketch merges
+      to NULL.
   ``tree_merge(partials, keys, specs, fanin)`` — salted intermediate merge
       levels that bound every reducer's fan-in (see ``spark/plan.py``).
 
@@ -55,7 +55,10 @@ The shuffle therefore carries one serialized sketch per (partition × key ×
 spec), never raw rows.  The one-sketch APIs (``sketch_*`` here,
 ``tdigest_*`` in ``tdigest_ops``), the long-format ``profile_*``, the
 checkpointer, the streaming operators and the SQL aggregates
-(``spark/sql.py``) are thin wrappers over these.
+(``spark/sql.py``) are thin wrappers over these.  Every query UDF over the
+stored sketch columns (estimates, quantiles, wire, the SQL query
+functions) is one ``_blob_udf``: an Arrow UDF, so importing this module,
+``tdigest_ops`` or ``sql`` imports no pandas.
 
 Ingest rules: hash families project ``xxhash64(value)`` JVM-side
 (whole-stage codegen, no Python string hashing) and ingest int64 through
@@ -75,7 +78,18 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DataType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from sketchlib.aggregator import Aggregator, narrow_codes
 from sketchlib.bloom import Bloom
@@ -92,11 +106,6 @@ SKETCHES = {"tdigest": MergingDigest, "hll": HLL, "cms": CMS, "bloom": Bloom,
 #: how each family ingests a column; every other family reads doubles
 _INGEST = {"hll": "hash", "cms": "hash", "bloom": "hash", "kmv": "hash",
            "mg": "raw"}
-#: families whose serialized state can be MBs per sketch: their merge keeps
-#: ``groupBy().applyInPandas`` (one group materialized at a time) instead of
-#: the per-partition accumulator, which would hold every co-located key's
-#: sketch in memory at once
-_LARGE_STATE = {"bloom", "cms"}
 
 
 def _norm_key(key) -> tuple:
@@ -513,19 +522,6 @@ def merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
     sp = _specs(specs, keys)
     schema = _schema(partials, keys, sp)
 
-    if all(s.kind in _LARGE_STATE for s in sp):
-
-        def merge_group(pdf):
-            out = pdf[keys].iloc[:1].reset_index(drop=True)
-            for s in sp:
-                blobs = [bytes(b) for b in pdf[s.name] if b is not None]
-                agg = s.cls.merge_blobs(None, blobs, **s.params) if blobs else None
-                out[s.name] = [s.blob(agg, merged=True)]
-            return out
-
-        grouping = keys or [F.lit(1).alias("_g")]
-        return partials.groupBy(*grouping).applyInPandas(merge_group, schema=schema)
-
     def merge_stream(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         codes_of = _KeyCodes(keys)
 
@@ -611,7 +607,7 @@ def sketch_merge(
     params: dict | None = None,
 ) -> DataFrame:
     """Phase 2 for one sketch: the kernel ``merge`` over the ``sketch``
-    column (Bloom/CMS take the one-group-at-a-time path)."""
+    column."""
     return merge(partials, keys, _sketch(sketch, params))
 
 
@@ -629,63 +625,44 @@ def sketch_aggregate(
     )
 
 
-# The UDFs below are pandas UDFs built on call, never at import: building
-# one imports pandas, and importing this module must not (it runs in every
-# kernel worker).  Their functions carry no annotations, which makes them
-# scalar pandas UDFs without resolving ``pd`` from this module.
+# ---------------------------------------------------------------------------
+# Query UDFs over sketch columns.  Post-aggregation only: they loop over
+# sketch rows in Python, never over row-scale data.
+# ---------------------------------------------------------------------------
+
+
+def _blob_udf(rtype: DataType, fn, null=None, check=None):
+    """``(blob, arg...) -> rtype``: ``fn(blob bytes, arg...)`` per row, the
+    arguments as Python values; ``null`` where the blob or an argument is
+    NULL.  ``check(*args)`` sees each batch's argument arrays first.  An
+    Arrow UDF, so building one imports no pandas; a float NaN in the output
+    becomes NULL, as it does in a pandas UDF."""
+    out_type = to_arrow_type(rtype)
+
+    @arrow_udf(rtype)
+    def f(blob: pa.Array, *args: pa.Array) -> pa.Array:
+        if check is not None:
+            check(*args)
+        out = [null if b is None or None in a else fn(b, *a)
+               for b, *a in zip(blob.to_pylist(), *(x.to_pylist() for x in args))]
+        return pa.array(out, type=out_type, from_pandas=True)
+
+    return f
 
 
 def mg_items_udf():
     """binary(MG sketch) → array<struct<item,est>> for exploding a
-    frequent-items summary into rows.  Post-aggregation only: runs on
-    ≤|distinct keys| sketch rows, never row-scale data."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType, StringType
-
-    schema = ArrayType(StructType([
-        StructField("item", StringType(), True),
-        StructField("est", LongType(), True),
-    ]))
-
-    def f(sk):
-        out = []
-        for b in sk:
-            if b is None:
-                out.append(None)
-            else:
-                out.append([{"item": k, "est": v}
-                            for k, v in MisraGries.deserialize(bytes(b)).items()])
-        return pd.Series(out)
-
-    return F.pandas_udf(f, schema)
+    frequent-items summary into rows."""
+    return _blob_udf(
+        ArrayType(StructType([StructField("item", StringType(), True),
+                              StructField("est", LongType(), True)])),
+        lambda b: [{"item": k, "est": v} for k, v in MisraGries.deserialize(b).items()])
 
 
-def _blob_udf(fn):
-    """double per sketch row: ``fn(blob bytes)``, NULL for a NULL sketch.
-    Post-aggregation only: runs on sketch rows, never row-scale data."""
-    import pandas as pd
-
-    def f(blobs):
-        return pd.Series([None if b is None else fn(bytes(b)) for b in blobs],
-                         dtype="float64")
-
-    return F.pandas_udf(f, DoubleType())
-
-
-#: the one-blob estimate UDFs, module attributes built on first access
-_BLOB_FNS = {
-    "hll_estimate_udf": lambda b: HLL.deserialize(b).estimate(),
-    "kmv_estimate_udf": lambda b: KMV.deserialize(b).estimate(),
-    #: exact count of the values a CMS ingested
-    "cms_total_udf": lambda b: float(CMS.deserialize(b).total),
-}
-
-
-def __getattr__(name: str):
-    if name not in _BLOB_FNS:
-        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
-    udf = globals()[name] = _blob_udf(_BLOB_FNS[name])
-    return udf
+hll_estimate_udf = _blob_udf(DoubleType(), lambda b: HLL.deserialize(b).estimate())
+kmv_estimate_udf = _blob_udf(DoubleType(), lambda b: KMV.deserialize(b).estimate())
+#: exact count of the values a CMS ingested
+cms_total_udf = _blob_udf(DoubleType(), lambda b: float(CMS.deserialize(b).total))
 
 
 # ---------------------------------------------------------------------------
@@ -728,8 +705,8 @@ def profile_merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> Da
     spec's column (a projection, no shuffle), the kernel merges, and the
     result goes back to long format — one row per (key, spec) present in
     the input.  The accumulator holds (keys-per-partition × specs) sketches
-    in memory at once: size profile specs accordingly (KB-scale params; a
-    dense 8 MB Bloom belongs on the single-sketch path)."""
+    in memory at once, as every kernel merge does: size profile specs
+    accordingly (KB-scale params)."""
     wide = partials.select(*keys, *[
         F.when(F.col("sk_name") == s["name"], F.col("sketch")).alias(s["name"])
         for s in specs
@@ -831,7 +808,6 @@ def profile_table(
     # whole scan+build subtree once per column (2C scans, exactly what
     # this operator exists to avoid)
     q = tdigest_quantiles_udf([0.5, 0.95], discrete=discrete)
-    cms_total_udf, hll_estimate_udf = map(__getattr__, ("cms_total_udf", "hll_estimate_udf"))
     n_rows = F.coalesce(cms_total_udf("_rows"), F.lit(0.0))
     structs = []
     for i, c in enumerate(cols):

@@ -34,21 +34,23 @@ their ingested totals) — and sketches built either way mix freely in
 ``<kind>_merge_agg`` and the query functions.  ``cms_query`` and
 ``bloom_contains`` hash their BIGINT probe the same way.
 
-The aggregates are Arrow grouped-aggregate UDFs (PySpark >= 4.1): a
-pandas one would receive a nullable BIGINT as float64 and round the low
-bits away.  Catalyst gives either kind **no partial aggregation** — every
-group's rows shuffle to one reducer — so at scale build with the two-phase
-kernel (``sketch_aggregate`` / ``tdigest_aggregate``) and use this module
-over the stored sketch columns.
+The aggregates are Arrow grouped-aggregate UDFs (PySpark >= 4.1) and the
+query functions Arrow scalar UDFs (``sketch_ops._blob_udf``): a pandas UDF
+would receive a nullable BIGINT as float64 and round the low bits away,
+and a NULL DOUBLE argument as NaN instead of NULL.
+
+Scale: Catalyst gives a grouped-aggregate UDF **no partial aggregation** —
+every group's rows shuffle to one reducer — so at scale build with the
+two-phase kernel (``sketch_aggregate`` / ``tdigest_aggregate``) and use
+this module's query functions over the stored sketch columns.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BinaryType, BooleanType, DataType, DoubleType, LongType
 
 from sketchlib.bloom import Bloom
@@ -57,7 +59,13 @@ from sketchlib.ddsketch import DDSketch
 from sketchlib.hashing import xxh64_long
 from sketchlib.kll import KLL
 from sketchlib.mg import MisraGries
-from sketchlib.spark.sketch_ops import SKETCHES, _Spec, hll_estimate_udf, kmv_estimate_udf
+from sketchlib.spark.sketch_ops import (
+    SKETCHES,
+    _blob_udf,
+    _Spec,
+    hll_estimate_udf,
+    kmv_estimate_udf,
+)
 from sketchlib.spark.tdigest_ops import (
     tdigest_count_udf,
     tdigest_ks_udf,
@@ -135,33 +143,15 @@ def _aggregates(kind: str) -> dict:
 def _rowwise(rtype: DataType, fn):
     """``(blob, arg...) -> rtype``: ``fn(blob bytes, arg...)`` per row, NULL
     where the blob is NULL or empty or an argument is NULL."""
-
-    @pandas_udf(rtype)
-    def f(blob: pd.Series, *args: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if b is None or len(b) == 0 or any(x is None for x in a)
-            else fn(bytes(b), *a)
-            for b, *a in zip(blob, *args)
-        ], dtype="object")
-
-    return f
+    return _blob_udf(rtype, lambda b, *a: fn(b, *a) if b else None)
 
 
-def _probe(name: str, rtype: DataType, out_type: pa.DataType, fn):
+def _probe(name: str, rtype: DataType, fn):
     """``(blob, key BIGINT) -> rtype``: ``fn(blob bytes, hashed key)`` per
     row, the key hashed as the hash-family aggregates hash it; NULL where
     either side is NULL."""
-
-    @arrow_udf(rtype)
-    def f(blob: pa.Array, key: pa.Array) -> pa.Array:
-        _check(name, "hash", key)
-        h = xxh64_long(key.fill_null(0).to_numpy())
-        return pa.array([
-            None if b is None or k is None else fn(b, h[i:i + 1])
-            for i, (b, k) in enumerate(zip(blob.to_pylist(), key.to_pylist()))
-        ], type=out_type)
-
-    return f
+    return _blob_udf(rtype, lambda b, k: fn(b, xxh64_long(np.array([k], dtype=np.int64))),
+                     check=lambda key: _check(name, "hash", key))
 
 
 def _td_quantile(b: bytes, p, discrete: bool = False) -> float:
@@ -203,11 +193,11 @@ FUNCTIONS = {
     "tdigest_from_wire": tdigest_unwire_udf,
     "hll_estimate": hll_estimate_udf,
     "kmv_estimate": kmv_estimate_udf,
-    "cms_query": _probe("cms_query", LongType(), pa.int64(),
+    "cms_query": _probe("cms_query", LongType(),
                         lambda b, h: int(CMS.deserialize(b).query_hashed(h)[0])),
     "cms_inner_product": _rowwise(LongType(), lambda a, b: int(
-        CMS.deserialize(a).inner_product(CMS.deserialize(bytes(b))))),
-    "bloom_contains": _probe("bloom_contains", BooleanType(), pa.bool_(),
+        CMS.deserialize(a).inner_product(CMS.deserialize(b)))),
+    "bloom_contains": _probe("bloom_contains", BooleanType(),
                              lambda b, h: bool(Bloom.deserialize(b).contains_hashed(h)[0])),
     "kll_quantile": _rowwise(DoubleType(), _quantile(KLL)),
     "dd_quantile": _rowwise(DoubleType(), _quantile(DDSketch)),

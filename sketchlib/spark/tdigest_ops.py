@@ -34,9 +34,7 @@ from __future__ import annotations
 from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -46,7 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from sketchlib.spark.sketch_ops import _norm_key, merge, partials
+from sketchlib.spark.sketch_ops import _blob_udf, _norm_key, merge, partials
 from sketchlib.tdigest.core import (
     MergingDigest,
     bytes_to_centroids,
@@ -55,6 +53,8 @@ from sketchlib.tdigest.core import (
     parse_tdigest_wire,
     psi_jsd_of_centroids,
     quantiles_of_centroids,
+    trimmed_mean_of_centroids,
+    w1_of_centroids,
     wrap_tdigest_wire,
 )
 
@@ -160,156 +160,96 @@ def tdigest_aggregate(
 # GUARD: these loop per ROW in Python by design — legal only because they
 # run AFTER aggregation, on ≤|distinct keys| digest rows (thousands), never
 # on row-scale data.  Do not point them at a per-row column; the per-row
-# path is tdigest_partials' vectorized update_batch.
+# path is tdigest_partials' vectorized update_batch.  Each is one
+# ``sketch_ops._blob_udf``: NULL for a NULL digest unless noted; the empty
+# digest is the zero-length blob.
 # ---------------------------------------------------------------------------
+
+
+def _centroids_or_none(stat):
+    """``stat(means, ns)`` of a digest; None for the empty digest."""
+    return lambda b: stat(*bytes_to_centroids(b)) if b else None
 
 
 def tdigest_quantiles_udf(ps: list[float], discrete: bool = False):
     """Returns array<double> of the requested quantiles per digest row."""
     ps_arr = np.asarray(ps, dtype=np.float64)
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def f(dig: pd.Series) -> pd.Series:
-        out = []
-        for b in dig:
-            if b is None or len(b) == 0:
-                out.append(None)
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(quantiles_of_centroids(m, n, ps_arr, discrete).tolist())
-        return pd.Series(out)
-
-    return f
+    return _blob_udf(ArrayType(DoubleType()), _centroids_or_none(
+        lambda m, n: quantiles_of_centroids(m, n, ps_arr, discrete).tolist()))
 
 
 def tdigest_cdf_udf(qs: list[float], discrete: bool = False):
     """Returns array<double> of p_rank (fraction of mass ≤ q) per digest row."""
     qs_arr = np.asarray(qs, dtype=np.float64)
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def f(dig: pd.Series) -> pd.Series:
-        out = []
-        for b in dig:
-            if b is None or len(b) == 0:
-                out.append(None)
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(cdf_of_centroids(m, n, qs_arr, discrete).tolist())
-        return pd.Series(out)
-
-    return f
+    return _blob_udf(ArrayType(DoubleType()), _centroids_or_none(
+        lambda m, n: cdf_of_centroids(m, n, qs_arr, discrete).tolist()))
 
 
-@pandas_udf(IntegerType())
-def tdigest_size_udf(dig: pd.Series) -> pd.Series:
-    """Number of centroids (reference info.size)."""
-    return pd.Series([0 if b is None else len(b) // 16 for b in dig], dtype="int32")
+#: Number of centroids (reference info.size); 0 for a NULL digest.
+tdigest_size_udf = _blob_udf(IntegerType(), lambda b: len(b) // 16, null=0)
+
+#: Total ingested weight (reference info.count); 0 for a NULL digest.
+tdigest_count_udf = _blob_udf(
+    DoubleType(), lambda b: float(bytes_to_centroids(b)[1].sum()), null=0.0)
+
+_EMPTY_INFO = {"count": 0.0, "size": 0, "min": None, "max": None, "bytes": 0}
 
 
-@pandas_udf(DoubleType())
-def tdigest_count_udf(dig: pd.Series) -> pd.Series:
-    """Total ingested weight (reference info.count)."""
-    out = []
-    for b in dig:
-        if b is None or len(b) == 0:
-            out.append(0.0)
-        else:
-            _, n = bytes_to_centroids(bytes(b))
-            out.append(float(n.sum()))
-    return pd.Series(out)
+def _info(b: bytes) -> dict:
+    m, n = bytes_to_centroids(b)
+    if not len(m):
+        return _EMPTY_INFO
+    return {"count": float(n.sum()), "size": len(m), "min": float(m[0]),
+            "max": float(m[-1]), "bytes": len(b)}
 
 
-@pandas_udf(StructType([
+#: Reference ``info`` (src/tdigest.ml:161-168) as one struct: total weight,
+#: centroid count, exact min/max means (the protected tail singletons),
+#: serialized size; a NULL digest reads as the empty one.  The reference's
+#: compress/cumulate counters are per-PROCESS engine state, not a property
+#: of the serialized bytes this UDF sees — they are surfaced cluster-wide
+#: through ``TDigestMetrics`` accumulators (and per-object via
+#: ``MergingDigest.info()``).
+tdigest_info_udf = _blob_udf(StructType([
     StructField("count", DoubleType()),
     StructField("size", IntegerType()),
     StructField("min", DoubleType()),
     StructField("max", DoubleType()),
     StructField("bytes", IntegerType()),
-]))
-def tdigest_info_udf(dig: pd.Series) -> pd.DataFrame:
-    """Reference ``info`` (src/tdigest.ml:161-168) as one struct: total
-    weight, centroid count, exact min/max means (the protected tail
-    singletons), serialized size.  The reference's compress/cumulate
-    counters are per-PROCESS engine state, not a property of the serialized
-    bytes this UDF sees — they are surfaced cluster-wide through
-    ``TDigestMetrics`` accumulators (and per-object via
-    ``MergingDigest.info()``)."""
-    counts, sizes, mins, maxs, nbytes = [], [], [], [], []
-    for b in dig:
-        if b is None or len(b) == 0:
-            counts.append(0.0), sizes.append(0), nbytes.append(0)
-            mins.append(None), maxs.append(None)
-        else:
-            m, n = bytes_to_centroids(bytes(b))
-            counts.append(float(n.sum())), sizes.append(len(m))
-            mins.append(float(m[0])), maxs.append(float(m[-1]))
-            nbytes.append(len(b))
-    return pd.DataFrame({"count": counts, "size": pd.array(sizes, dtype="int32"),
-                         "min": mins, "max": maxs,
-                         "bytes": pd.array(nbytes, dtype="int32")})
+]), _info, null=_EMPTY_INFO)
+
+#: Relational view of a digest (reference Private.centroids).
+tdigest_centroids_udf = _blob_udf(
+    ArrayType(StructType([StructField("mean", DoubleType()),
+                          StructField("n", DoubleType())])),
+    lambda b: [{"mean": float(a), "n": float(c)} for a, c in zip(*bytes_to_centroids(b))])
 
 
-@pandas_udf(ArrayType(StructType([
-    StructField("mean", DoubleType()), StructField("n", DoubleType()),
-])))
-def tdigest_centroids_udf(dig: pd.Series) -> pd.Series:
-    """Relational view of a digest (reference Private.centroids)."""
-    out = []
-    for b in dig:
-        if b is None:
-            out.append(None)
-        else:
-            m, n = bytes_to_centroids(bytes(b))
-            out.append([{"mean": float(a), "n": float(c)} for a, c in zip(m, n)])
-    return pd.Series(out)
+def _pair(stat):
+    """``stat(means_a, ns_a, means_b, ns_b)`` of two digests; None when
+    either holds no centroid — the documented contract is NULL for an empty
+    side, not the NaN the statistic would surface (ADVICE r03)."""
+
+    def fn(a: bytes, b: bytes):
+        (ma, na), (mb, nb) = bytes_to_centroids(a), bytes_to_centroids(b)
+        return stat(ma, na, mb, nb) if len(ma) and len(mb) else None
+
+    return fn
 
 
-@pandas_udf(DoubleType())
-def tdigest_ks_udf(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-    """Two-sample KS distance between two digest columns per row
-    (``ks_of_centroids``): drift detection between stored sketches, zero
-    fact rescans.  Exact when both digests are discrete; NULL if either
-    side is empty.  Post-aggregation only (runs on sketch rows)."""
-    out = []
-    for a, b in zip(dig_a, dig_b):
-        if a is None or b is None or len(a) == 0 or len(b) == 0:
-            out.append(None)
-        else:
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            # a VALID blob can still hold zero centroids — the documented
-            # contract is NULL for an empty side, not the NaN that
-            # ks_of_centroids would surface (ADVICE r03)
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                out.append(ks_of_centroids(ma, na, mb, nb))
-    return pd.Series(out, dtype="float64")
+#: Two-sample KS distance between two digest columns per row
+#: (``ks_of_centroids``): drift detection between stored sketches, zero
+#: fact rescans.  Exact when both digests are discrete; NULL if either side
+#: is NULL or empty.
+tdigest_ks_udf = _blob_udf(DoubleType(), _pair(ks_of_centroids))
 
-
-@pandas_udf(DoubleType())
-def tdigest_w1_udf(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-    """1-Wasserstein (earth-mover) distance between two digest columns per
-    row (``w1_of_centroids``): the drift monitor in VALUE units — how far
-    the mass moved, where KS reports only the largest CDF gap.  Exact when
-    both digests are discrete; NULL if either side is empty (same contract
-    as ``tdigest_ks_udf``).  Post-aggregation only (runs on sketch rows).
-    Gate users should wrap in ``F.round(..., 6)`` — the ks_global lesson:
-    a foreign engine's sum order can flip final ulps at a value-hash."""
-    from sketchlib.tdigest.core import w1_of_centroids
-
-    out = []
-    for a, b in zip(dig_a, dig_b):
-        if a is None or b is None or len(a) == 0 or len(b) == 0:
-            out.append(None)
-        else:
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                out.append(w1_of_centroids(ma, na, mb, nb))
-    return pd.Series(out, dtype="float64")
+#: 1-Wasserstein (earth-mover) distance between two digest columns per row
+#: (``w1_of_centroids``): the drift monitor in VALUE units — how far the
+#: mass moved, where KS reports only the largest CDF gap.  Exact when both
+#: digests are discrete; NULL as for ``tdigest_ks_udf``.  Gate users should
+#: wrap in ``F.round(..., 6)`` — the ks_global lesson: a foreign engine's
+#: sum order can flip final ulps at a value-hash.
+tdigest_w1_udf = _blob_udf(DoubleType(), _pair(w1_of_centroids))
 
 
 def tdigest_psi_jsd_udf(bins: int = 10, eps: float = 1e-6, ndigits: int = 9):
@@ -320,96 +260,49 @@ def tdigest_psi_jsd_udf(bins: int = 10, eps: float = 1e-6, ndigits: int = 9):
     when both digests are discrete.  NULL if either side is empty (same
     contract as ``tdigest_ks_udf``).  Results are rounded to ``ndigits``
     decimals so the ascending-bin Python sum and a SQL engine's
-    arbitrary-order SUM hash identically; pass ``ndigits=None`` to disable.
-    Post-aggregation only (runs on sketch rows)."""
+    arbitrary-order SUM hash identically; pass ``ndigits=None`` to disable."""
     if bins < 2:
         raise ValueError(f"tdigest_psi_jsd: need bins >= 2, got {bins}")
 
-    @pandas_udf(ArrayType(DoubleType()))
-    def f(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-        out = []
-        for a, b in zip(dig_a, dig_b):
-            if a is None or b is None or len(a) == 0 or len(b) == 0:
-                out.append(None)
-                continue
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                psi, jsd = psi_jsd_of_centroids(ma, na, mb, nb, bins, eps)
-                if ndigits is not None:
-                    psi, jsd = round(psi, ndigits), round(jsd, ndigits)
-                out.append([psi, jsd])
-        return pd.Series(out)
+    def psi_jsd(ma, na, mb, nb) -> list[float]:
+        out = psi_jsd_of_centroids(ma, na, mb, nb, bins, eps)
+        return [x if ndigits is None else round(x, ndigits) for x in out]
 
-    return f
+    return _blob_udf(ArrayType(DoubleType()), _pair(psi_jsd))
 
 
 def tdigest_trimmed_mean_udf(lo: float = 0.1, hi: float = 0.9):
     """double: mean of the mass between rank quantiles [lo, hi) per digest
     row (robust-stats companion; exact in exact/discrete mode)."""
-    from sketchlib.tdigest.core import trimmed_mean_of_centroids
-
     if not 0.0 <= lo < hi <= 1.0:  # fail fast at plan-build, not in a task
         raise ValueError(f"trimmed_mean: need 0 <= lo < hi <= 1, got {lo},{hi}")
-
-    @pandas_udf(DoubleType())
-    def f(dig: pd.Series) -> pd.Series:
-        out = []
-        for b in dig:
-            if b is None or len(b) == 0:
-                out.append(float("nan"))
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(trimmed_mean_of_centroids(m, n, lo, hi))
-        return pd.Series(out)
-
-    return f
+    return _blob_udf(DoubleType(), _centroids_or_none(
+        lambda m, n: trimmed_mean_of_centroids(m, n, lo, hi)))
 
 
 def tdigest_wire_udf(delta: float, discrete: bool = False):
     """binary(raw payload) → binary(versioned wire blob): prefixes the
     SKB1/TDIG header carrying the digest's delta/discrete settings, so a
     digest column stored in a table is self-describing (SURVEY §1.3)."""
-
-    @pandas_udf(BinaryType())
-    def f(dig: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if b is None else wrap_tdigest_wire(bytes(b), delta, discrete)
-            for b in dig
-        ])
-
-    return f
+    return _blob_udf(BinaryType(), lambda b: wrap_tdigest_wire(b, delta, discrete))
 
 
-@pandas_udf(BinaryType())
-def tdigest_unwire_udf(dig: pd.Series) -> pd.Series:
-    """binary(wire blob OR legacy raw payload) → binary(raw payload) — the
-    inverse of ``tdigest_wire_udf`` for feeding stored digests back into the
-    byte-concat merge path."""
-    return pd.Series([
-        None if b is None else parse_tdigest_wire(bytes(b))[0] for b in dig
-    ])
+#: binary(wire blob OR legacy raw payload) → binary(raw payload) — the
+#: inverse of ``tdigest_wire_udf`` for feeding stored digests back into the
+#: byte-concat merge path.
+tdigest_unwire_udf = _blob_udf(BinaryType(), lambda b: parse_tdigest_wire(b)[0])
 
 
 def tdigest_compress_udf(delta: float, discrete: bool = False):
     """binary→binary recompression under a (possibly different) delta
     (reference compress with one-shot delta override)."""
 
-    @pandas_udf(BinaryType())
-    def f(dig: pd.Series) -> pd.Series:
-        out = []
-        for b in dig:
-            if b is None:
-                out.append(None)
-            else:
-                d = MergingDigest.deserialize(bytes(b), delta=delta, discrete=discrete)
-                d.compress()
-                out.append(d.serialize())
-        return pd.Series(out)
+    def recompress(b: bytes) -> bytes:
+        d = MergingDigest.deserialize(b, delta=delta, discrete=discrete)
+        d.compress()
+        return d.serialize()
 
-    return f
+    return _blob_udf(BinaryType(), recompress)
 
 
 def tdigest_prank_rows(
@@ -459,7 +352,7 @@ def tdigest_prank_rows(
         list(df.schema.fields) + [StructField(out_col, DoubleType(), True)]
     )
 
-    def score(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def score(batches: Iterable) -> Iterator:  # pandas DataFrames
         tab = bc.value
         for pdf in batches:
             scores = np.full(len(pdf), np.nan)

@@ -477,7 +477,7 @@ def cdf_of_centroids(
     0 below min, 1 above max; exact centroid hit → mean_cumn/N in merging
     mode (midpoint convention) or cumn/N in discrete mode; linear
     interpolation in (mean, mean_cumn) space between centroids otherwise.
-    Empty digest → NaN.
+    Empty digest or NaN ``q`` → NaN.
     """
     qs = np.asarray(qs, dtype=np.float64)
     s = len(means)
@@ -490,9 +490,11 @@ def cdf_of_centroids(
 
     below = qs < means[0]
     above = qs > means[s - 1]
+    nan = np.isnan(qs)
     out[below] = 0.0
     out[above] = 1.0
-    mid = ~(below | above)
+    out[nan] = np.nan
+    mid = ~(below | above | nan)
     lte = np.searchsorted(means, qs, side="right") - 1  # ≥0 within mid
     li = np.clip(lte, 0, s - 1)
     if discrete:

@@ -349,3 +349,15 @@ def test_psi_jsd_empty_side_is_nan():
     n = np.array([3.0, 4.0])
     assert all(np.isnan(v) for v in psi_jsd_of_centroids(e, e, m, n))
     assert all(np.isnan(v) for v in psi_jsd_of_centroids(m, n, e, e))
+
+
+def test_cdf_of_nan_probe_is_nan_in_both_modes():
+    """A NaN probe is unrankable: NaN in merging and discrete mode alike,
+    and the other probes of the call keep their values."""
+    from sketchlib.tdigest.core import cdf_of_centroids
+
+    m, n = np.array([1.0, 2.0, 5.0]), np.array([1.0, 2.0, 1.0])
+    for discrete, at_2 in ((False, 0.5), (True, 0.75)):
+        out = cdf_of_centroids(m, n, [np.nan, 2.0, 0.0, 9.0], discrete)
+        assert np.isnan(out[0]), discrete
+        assert out[1:].tolist() == [at_2, 0.0, 1.0], discrete

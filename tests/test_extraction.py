@@ -202,13 +202,15 @@ def test_extract_len_series_arrow_mixed_batch(typ):
 
 def test_kernel_and_extraction_import_no_pandas():
     """Importing the kernel and the extraction module (what a fused
-    digest-build worker unpickles) loads no pandas."""
+    digest-build worker unpickles), the t-digest operators and the SQL
+    surface loads no pandas."""
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = ("import sys; sys.path.insert(0, sys.argv[1]); "
-            "import sketchlib.spark.sketch_ops, sketchlib.data.extract; "
+            "import sketchlib.spark.sketch_ops, sketchlib.data.extract, sketchlib.spark, "
+            "sketchlib.spark.tdigest_ops, sketchlib.spark.sql; "
             "assert 'pandas' not in sys.modules")
     out = subprocess.run([sys.executable, "-c", code, repo], capture_output=True, text=True)
     assert out.returncode == 0, out.stderr[-2000:]

@@ -75,17 +75,21 @@ def _exact(frame, kind, col):
                          ids=[f"{k}-{'-'.join(map(str, p))}" for k, _, p in FAMILIES])
 def test_four_paths_agree_with_nulls(spark, frame, tmp_path, kind, col, params):
     from sketchlib.spark.checkpoint import TDigestCheckpointer
-    from sketchlib.spark.plan import tree_merge_sketch
-    from sketchlib.spark.sketch_ops import profile_aggregate, sketch_aggregate, sketch_partials
+    from sketchlib.spark.sketch_ops import (
+        profile_aggregate,
+        sketch_aggregate,
+        sketch_partials,
+        tree_merge,
+    )
 
     direct = {r["g"]: bytes(r["sketch"])
               for r in sketch_aggregate(frame, ["g"], col, kind, params).collect()}
     spec = [{"name": "one", "col": col, "kind": kind, "params": params}]
     profiled = {r["g"]: bytes(r["sketch"])
                 for r in profile_aggregate(frame, ["g"], spec).collect()}
-    tree = {r["g"]: bytes(r["sketch"]) for r in tree_merge_sketch(
-        sketch_partials(frame, ["g"], col, kind, params), ["g"], kind, params,
-        fanin=2).collect()}
+    tree = {r["g"]: bytes(r["sketch"]) for r in tree_merge(
+        sketch_partials(frame, ["g"], col, kind, params), ["g"],
+        [{"name": "sketch", "kind": kind, "params": params}], fanin=2).collect()}
     kw = (dict(delta=params.get("delta", 0.01), discrete=params.get("discrete", False))
           if kind == "tdigest" else dict(params=params))
     ck = TDigestCheckpointer(spark, str(tmp_path / "ck"), ["g"], col, "id",
@@ -109,6 +113,22 @@ def test_four_paths_agree_with_nulls(spark, frame, tmp_path, kind, col, params):
                 assert got[g] == blob, (name, g)
     for name, got in paths.items():
         assert set(got) == set(direct), name
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cms"])
+def test_large_state_families_merge_in_the_accumulator(spark, frame, kind):
+    """Bloom and CMS merge through the one ``mapInArrow`` accumulator like
+    every family: partials + merge are two MapInArrow, no grouped pandas."""
+    import re
+
+    from sketchlib.spark.sketch_ops import sketch_aggregate
+
+    params = next(p for k, _, p in FAMILIES if k == kind)
+    df = sketch_aggregate(frame, ["g"], "s", kind, params)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 2, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 # ---------------------------------------------------------------------------

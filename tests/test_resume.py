@@ -67,8 +67,13 @@ def test_checkpoint_rows_carry_lineage_and_metrics(spark, docs, tmp_path):
     assert per_part == docs.count()
 
 
+#: the one-spec t-digest kernel spec of ``tdigest_aggregate(..., "n_chars")``
+DIGEST = {"name": "digest", "kind": "tdigest", "col": "n_chars",
+          "params": {"delta": 0.0, "discrete": False}}
+
+
 def test_tree_merge_equals_flat_merge_exact_mode(spark, docs):
-    from sketchlib.spark.plan import tdigest_aggregate_skewed, tree_merge_tdigest
+    from sketchlib.spark.sketch_ops import partials as kernel_partials, tree_merge
     from sketchlib.spark.tdigest_ops import tdigest_aggregate, tdigest_partials
 
     flat = {
@@ -78,13 +83,14 @@ def test_tree_merge_equals_flat_merge_exact_mode(spark, docs):
     partials = tdigest_partials(docs.repartition(32), ["lang"], "n_chars", delta=0.0)
     tree = {
         r["lang"]: bytes(r["digest"])
-        for r in tree_merge_tdigest(partials, ["lang"], delta=0.0, fanin=4).collect()
+        for r in tree_merge(partials, ["lang"], [DIGEST], fanin=4).collect()
     }
     assert tree == flat
     skewed = {
         r["lang"]: bytes(r["digest"])
-        for r in tdigest_aggregate_skewed(
-            docs.repartition(32), ["lang"], "n_chars", delta=0.0, fanin=4
+        for r in tree_merge(
+            kernel_partials(docs.repartition(32), ["lang"], [DIGEST]), ["lang"],
+            [DIGEST], fanin=4
         ).collect()
     }
     assert skewed == flat
@@ -95,8 +101,12 @@ def test_tree_merge_sketch_byte_equal_families(spark, docs):
     every byte-canonical sibling family (HLL register-max, Bloom bit-OR,
     CMS counter-sum, KMV bottom-k, dd bucket-sum) at fan-in 2 over 32
     input partitions (forces multiple salted levels)."""
-    from sketchlib.spark.plan import sketch_aggregate_skewed, tree_merge_sketch
-    from sketchlib.spark.sketch_ops import sketch_aggregate, sketch_partials
+    from sketchlib.spark.sketch_ops import (
+        partials as kernel_partials,
+        sketch_aggregate,
+        sketch_partials,
+        tree_merge,
+    )
 
     for kind, col, params in (
         ("hll", "doc_id", {"p": 12}),
@@ -105,6 +115,7 @@ def test_tree_merge_sketch_byte_equal_families(spark, docs):
         ("kmv", "doc_id", {"k": 256}),
         ("dd", "n_chars", {"alpha": 0.01, "max_bins": 2048}),
     ):
+        spec = [{"name": "sketch", "kind": kind, "col": col, "params": params}]
         flat = {
             r["lang"]: bytes(r["sketch"])
             for r in sketch_aggregate(docs, ["lang"], col, kind, params).collect()
@@ -114,15 +125,14 @@ def test_tree_merge_sketch_byte_equal_families(spark, docs):
         )
         tree = {
             r["lang"]: bytes(r["sketch"])
-            for r in tree_merge_sketch(
-                partials, ["lang"], kind, params, fanin=2
-            ).collect()
+            for r in tree_merge(partials, ["lang"], spec, fanin=2).collect()
         }
         assert tree == flat, kind
         skewed = {
             r["lang"]: bytes(r["sketch"])
-            for r in sketch_aggregate_skewed(
-                docs.repartition(32), ["lang"], col, kind, params, fanin=2
+            for r in tree_merge(
+                kernel_partials(docs.repartition(32), ["lang"], spec), ["lang"],
+                spec, fanin=2
             ).collect()
         }
         assert skewed == flat, kind
@@ -132,12 +142,12 @@ def test_tree_merge_compressed_within_bound(spark, docs):
     import numpy as np
 
     import duckdb
-    from sketchlib.spark.plan import tdigest_aggregate_skewed
+    from sketchlib.spark.sketch_ops import partials, tree_merge
     from sketchlib.spark.tdigest_ops import tdigest_quantiles_udf
 
-    dig = tdigest_aggregate_skewed(
-        docs.repartition(32), ["lang"], "n_chars", delta=0.01, fanin=4
-    )
+    spec = [{**DIGEST, "params": {"delta": 0.01, "discrete": False}}]
+    dig = tree_merge(partials(docs.repartition(32), ["lang"], spec), ["lang"], spec,
+                     fanin=4)
     q = tdigest_quantiles_udf([0.5, 0.99])
     rows = dig.withColumn("qs", q("digest")).collect()
     for r in rows:

@@ -233,3 +233,17 @@ def test_prank_rows_null_and_missing_group(spark):
     }
     assert out[1] == 0.5 and out[2] == 1.0
     assert out[3] is None and out[4] is None
+
+
+def test_prank_rows_merging_mode_null_value(spark):
+    """Merging mode scores a NULL value NULL too (a NaN probe used to
+    index past the last centroid and fail the task)."""
+    from sketchlib.spark.tdigest_ops import tdigest_prank_rows
+
+    df = spark.createDataFrame(
+        [(1, "a", 10.0), (2, "a", 20.0), (3, "a", None), (4, "zz", 5.0)],
+        "id long, k string, v double",
+    )
+    out = {r["id"]: r["p_rank"]
+           for r in tdigest_prank_rows(df, ["k"], "v", discrete=False).collect()}
+    assert out == {1: 0.25, 2: 0.75, 3: None, 4: 0.5}

@@ -495,3 +495,31 @@ def test_sql_merge_agg_all_null_is_null(spark, nullable):
     """).collect()
     assert len(rows) == 3
     assert all(r[k] is None for r in rows for k in SKETCHES)
+
+
+def test_sql_rowwise_null_argument_is_null(spark):
+    """Every row-wise query function gives NULL for a NULL argument (a
+    NULL DOUBLE is not read as NaN); an explicit NaN ``p`` still passes
+    through to an end of the digest."""
+    from sketchlib.spark.sql import register_sql_functions
+
+    register_sql_functions(spark)
+    spark.sql("""
+        SELECT tdigest_agg(x) AS td, kll_agg(x) AS kl, dd_agg(x) AS dd,
+               mg_agg(s) AS mg, cms_agg(v) AS cm
+        FROM (SELECT CAST(id AS DOUBLE) AS x, CAST(id % 7 AS STRING) AS s,
+                     id AS v FROM range(100))
+    """).createOrReplaceTempView("rowwise_null")
+    null = "CAST(NULL AS DOUBLE)"
+    calls = [f"tdigest_quantile(td, {null})", f"tdigest_cdf(td, {null})",
+             f"tdigest_trimmed_mean(td, {null}, 0.9)", f"tdigest_trimmed_mean(td, 0.1, {null})",
+             f"tdigest_winsor_bound(td, {null})", f"kll_quantile(kl, {null})",
+             f"dd_quantile(dd, {null})", "mg_estimate(mg, CAST(NULL AS STRING))",
+             "cms_inner_product(cm, CAST(NULL AS BINARY))"]
+    row = spark.sql("SELECT " + ", ".join(f"{c} AS c{i}" for i, c in enumerate(calls))
+                    + " FROM rowwise_null").collect()[0]
+    assert {c: row[f"c{i}"] for i, c in enumerate(calls)} == dict.fromkeys(calls)
+    nan = spark.sql("""
+        SELECT tdigest_quantile(td, CAST('NaN' AS DOUBLE)) AS nan_p,
+               tdigest_quantile(td, 1.0) AS top FROM rowwise_null""").collect()[0]
+    assert nan["nan_p"] == nan["top"] == 99.0

@@ -58,7 +58,7 @@ def test_workers_reuse_unchanged_zip_directories(spark):
 
     import pyarrow as pa
 
-    from sketchlib.spark import tdigest_aggregate
+    from sketchlib.spark.tdigest_ops import tdigest_aggregate
 
     df = spark.range(1000).selectExpr("id % 3 AS k", "CAST(id AS DOUBLE) AS v")
     assert tdigest_aggregate(df, ["k"], "v").count() == 3
