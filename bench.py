@@ -120,6 +120,23 @@ def calibration_probe(reps: int = 5) -> dict:
     return cal
 
 
+def pages_bench(record: dict, cpus: int) -> dict | None:
+    """The headline's ``pages_bench`` entry from a ``BENCH/scaling.json``
+    record; None unless the record's local[32] run used ``cpus`` CPUs, since
+    throughput measured on another host does not compare with this run."""
+    big = record["local32"]
+    if big["cpus"] != cpus:
+        return None
+    return {
+        "rows": record["rows"],
+        "cpus": big["cpus"],
+        "e2e_docs_per_sec_local32": big["e2e"]["docs_per_sec"],
+        "scan_docs_per_sec_local32": big["scan"]["docs_per_sec"],
+        "scaling_efficiency_n_vs_4n": record["scaling_efficiency_2_to_8"],
+        "max_rank_error_d001": record["accuracy"]["max_rank_error"],
+    }
+
+
 def main() -> None:
     from sketchlib.spark.session import get_spark
 
@@ -212,16 +229,9 @@ def main() -> None:
     # bench (python bench.py --scaling; details in BENCH/BASELINE.md)
     try:
         with open(os.path.join(REPO, "BENCH", "scaling.json")) as f:
-            sc = json.load(f)
-        out["pages_bench"] = {
-            "rows": sc["rows"],
-            # the host the record was measured on, which need not be this one
-            "cpus": sc["local32"]["cpus"],
-            "e2e_docs_per_sec_local32": sc["local32"]["e2e"]["docs_per_sec"],
-            "scan_docs_per_sec_local32": sc["local32"]["scan"]["docs_per_sec"],
-            "scaling_efficiency_n_vs_4n": sc["scaling_efficiency_2_to_8"],
-            "max_rank_error_d001": sc["accuracy"]["max_rank_error"],
-        }
+            pages = pages_bench(json.load(f), int(CPUS))
+        if pages is not None:
+            out["pages_bench"] = pages
     except (OSError, KeyError, ValueError):
         pass
     # The driver captures only a bounded stdout tail: the final line must be

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import time
 import uuid
-from datetime import datetime
+from datetime import datetime, timezone
 from typing import Iterable, Iterator
 
 import pyarrow as pa
@@ -256,10 +256,17 @@ class TDigestCheckpointer:
 
 def _key_string(parts: tuple) -> str | None:
     """A checkpoint row's key: the key values joined by ``|``, a NULL or
-    NaN value rendered empty, a timestamp as its session-local wall time; a
-    key whose every value is NULL or NaN stays NULL."""
+    NaN value rendered empty, a timestamp as its UTC wall time (so the
+    repeated hour of a DST fall-back keeps its two instants apart, and a
+    key does not depend on the session time zone); a key whose every value
+    is NULL or NaN stays NULL."""
     missing = [x is None or x != x for x in parts]
     if parts and all(missing):
         return None
-    return "|".join("" if m else str(x.replace(tzinfo=None) if isinstance(x, datetime) else x)
+    return "|".join("" if m else str(_utc_wall(x) if isinstance(x, datetime) else x)
                     for x, m in zip(parts, missing))
+
+
+def _utc_wall(t: datetime) -> datetime:
+    """A tz-aware timestamp as a naive UTC one; a naive one as it is."""
+    return t if t.tzinfo is None else t.astimezone(timezone.utc).replace(tzinfo=None)

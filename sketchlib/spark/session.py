@@ -7,9 +7,15 @@ local[N]):
   are tiny — one ≤40 KB row per partition×key — so AQE collapses them).
 - Arrow on, batches bounded by rows and by bytes: every sketch ingest path
   is a vectorized Arrow (or pandas) UDF.  Up to 65536 rows amortize the
-  JVM↔Python hop for narrow sketch rows; the 4 MiB cap
+  JVM↔Python hop for narrow sketch rows; the 1 MiB cap
   (``arrow.maxBytesPerBatch``) keeps a batch of wide rows (html pages)
-  from holding tens of MB per Python worker.
+  from holding tens of MB per Python worker.  A worker's heap grows to
+  its largest batch and keeps it (``MALLOC_TRIM_THRESHOLD_=-1``, below):
+  on the fused html -> length -> t-digest ingest it read 30.1 MB at a
+  4 MiB cap against 19.1-21.1 MB at 1 MiB, while passes took 671/673 ms
+  at 4 MiB, 719/678 ms at 1 MiB and 689/684 ms at 256 KiB (the ~3k-key
+  t-digest + HLL rollup: 1166/1135, 1236/1156 and 1221/1157 ms), so the
+  smaller cap costs no pass time on 4 CPUs.
 - shuffle.partitions is a default for local runs; at cluster scale set it
   to ~2-3× total cores or rely on AQE.
 - Python-worker glibc malloc tuning (MALLOC_MMAP_MAX_=0,
@@ -26,11 +32,12 @@ local[N]):
   kind of per-process worker fix: PySpark's per-task
   ``importlib.invalidate_caches()`` makes every zipimporter re-read its
   archive's central directory on CPython 3.10-3.12 (3.13 re-reads lazily).
-  A warm worker holds 16-20 of them, over pyspark.zip, the Spark core jar,
-  py4j and the shipped sketchlib zip, so each task paid 156-238 ms before
-  touching data.  Importing sketchlib in a worker wraps the method: an
-  archive whose (mtime_ns, size, inode) is unchanged since the wrapper last
-  read it keeps its parsed directory; a changed, replaced or missing one is
+  A warm worker held 16-20 of them, over pyspark.zip, the Spark core jar,
+  py4j and the shipped sketchlib zip (before the daemon below dropped the
+  first three), so each task paid 156-238 ms before touching data.
+  Importing sketchlib in a worker wraps the method: an archive whose
+  (mtime_ns, size, inode) is unchanged since the wrapper last read it
+  keeps its parsed directory; a changed, replaced or missing one is
   re-read as before.  Nothing to configure, and the driver is untouched.
 - Python-worker daemon from the installed PySpark: every worker is forked
   from a daemon, and Spark's stock daemon imports ``pyspark.daemon`` and
@@ -44,10 +51,12 @@ local[N]):
   (``worker_daemon/sketchlib_daemon.py``, a top-level module that imports
   no sketchlib, nor numpy, pyarrow or pandas) and puts its directory first
   in ``spark.executorEnv.PYTHONPATH``, ahead of a caller's value there.  It
-  drops the ``pyspark.zip`` and ``py4j-*-src.zip`` entries from
-  ``sys.path`` only when the pyspark and py4j installed on the rest of it
-  are the versions the zips hold (read from their ``version.py`` and the
-  py4j zip's name, importing neither), then runs
+  drops the ``pyspark.zip`` and ``py4j-*-src.zip`` entries and the Spark
+  core jar (no Python file in it, but a directory of 5,359 entries that
+  each worker read: 39.6 ms and +3.1 MB) from ``sys.path`` only when the
+  pyspark and py4j installed on the rest of it are the versions the zips
+  hold (read from their ``version.py`` and the py4j zip's name, importing
+  neither), then runs
   ``pyspark.daemon.manager()``; otherwise PySpark imports exactly as
   before.  ``extra={"spark.python.daemon.module": "pyspark.daemon"}``
   restores the stock daemon.  ``job_session`` leaves the daemon alone: a
@@ -107,7 +116,7 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 #: ``spark.sql.execution.arrow.maxBytesPerBatch`` of both factories
-ARROW_BATCH_BYTES = 4 << 20
+ARROW_BATCH_BYTES = 1 << 20
 
 #: the Python-worker daemon ``get_spark`` names (see the module docstring),
 #: a top-level module in a directory of its own

@@ -631,12 +631,40 @@ def sketch_aggregate(
 # ---------------------------------------------------------------------------
 
 
+#: numpy dtypes of the fixed-width outputs ``_column`` builds from buffers
+_FIXED = {pa.float64(): np.float64, pa.int64(): np.int64, pa.int32(): np.int32,
+          pa.bool_(): bool}
+
+
+def _column(values: list, out_type: pa.DataType) -> pa.Array:
+    """A query UDF's output column, NULL for None and for a float NaN.
+    Fixed-width and binary outputs are built from buffers, which imports no
+    pandas; a struct or list output goes through ``pa.array``, which does."""
+    if out_type == pa.binary():
+        return _binary(values)
+    dtype = _FIXED.get(out_type)
+    if dtype is None:
+        return pa.array(values, type=out_type, from_pandas=True)
+    n = len(values)
+    valid = np.fromiter((v is not None and v == v for v in values), dtype=bool, count=n)
+    data = np.fromiter((v if ok else 0 for v, ok in zip(values, valid)), dtype=dtype, count=n)
+    if dtype is bool:
+        data = np.packbits(data, bitorder="little")
+    nulls = n - int(valid.sum())
+    return pa.Array.from_buffers(
+        out_type, n,
+        [pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None,
+         pa.py_buffer(data)],
+        null_count=nulls)
+
+
 def _blob_udf(rtype: DataType, fn, null=None, check=None):
     """``(blob, arg...) -> rtype``: ``fn(blob bytes, arg...)`` per row, the
     arguments as Python values; ``null`` where the blob or an argument is
     NULL.  ``check(*args)`` sees each batch's argument arrays first.  An
-    Arrow UDF, so building one imports no pandas; a float NaN in the output
-    becomes NULL, as it does in a pandas UDF."""
+    Arrow UDF whose DOUBLE, BIGINT, INT, BOOLEAN and BINARY outputs are
+    built without pandas (``_column``); a float NaN in the output becomes
+    NULL, as it does in a pandas UDF."""
     out_type = to_arrow_type(rtype)
 
     @arrow_udf(rtype)
@@ -645,7 +673,7 @@ def _blob_udf(rtype: DataType, fn, null=None, check=None):
             check(*args)
         out = [null if b is None or None in a else fn(b, *a)
                for b, *a in zip(blob.to_pylist(), *(x.to_pylist() for x in args))]
-        return pa.array(out, type=out_type, from_pandas=True)
+        return _column(out, out_type)
 
     return f
 

@@ -9,11 +9,19 @@ written: a daemon took 0.9-1.3 s to start on 4 CPUs, against 0.35 s from the
 installed, byte-compiled package, and the compiler's freed memory stays in
 the daemon and in every worker forked from it (64 MB against 52 MB).
 
+Spark also puts its core jar (``$SPARK_HOME/jars/spark-core_*.jar``, the
+jar ``PythonUtils.sparkPythonPath`` finds its own class in) on that path:
+5,359 entries and no Python file, whose directory each worker read on its
+first task (39.6 ms and +3.1 MB per worker).
+
 ``sketchlib.spark.session.get_spark`` names this module instead.  It drops
-the two zips from ``sys.path`` when the pyspark and py4j installed on the
-rest of it are the versions the zips hold, then runs
-``pyspark.daemon.manager()``; ``sys.argv[1]`` still names the worker module.
-In any other case ``sys.path`` stays as it is and PySpark imports as before.
+the two zips and the core jar from ``sys.path`` (and their cached
+importers) when the pyspark and py4j installed on the rest of it are the
+versions the zips hold, then runs ``pyspark.daemon.manager()``;
+``sys.argv[1]`` still names the worker module.  Were there pyspark modules
+in the jar, they would be of the version just matched against the
+installed package.  In any other case ``sys.path`` stays as it is and
+PySpark imports as before.
 
 This is a top-level module in a directory of its own: the daemon never
 imports ``sketchlib``, and nothing beyond what ``pyspark.daemon`` imports,
@@ -54,15 +62,21 @@ def _py4j_zip_version(entry: str) -> str | None:
     return None
 
 
+def _spark_core_jar(entry: str) -> bool:
+    name = os.path.basename(entry)
+    return name.startswith("spark-core_") and name.endswith(".jar")
+
+
 def without_spark_zips(path: list[str]) -> list[str]:
-    """``path`` without its ``pyspark.zip`` and ``py4j-*-src.zip`` entries
-    when the pyspark and py4j found on the rest of it have the versions
-    those zips hold; otherwise ``path`` itself."""
+    """``path`` without its ``pyspark.zip``, ``py4j-*-src.zip`` and
+    ``spark-core_*.jar`` entries when the pyspark and py4j found on the rest
+    of it have the versions those zips hold; otherwise ``path`` itself."""
     pyspark_zips = {p for p in path if os.path.basename(p) == "pyspark.zip"}
     py4j_versions = {v for v in map(_py4j_zip_version, path) if v is not None}
     if not pyspark_zips or not py4j_versions:
         return path
-    rest = [p for p in path if p not in pyspark_zips and _py4j_zip_version(p) is None]
+    rest = [p for p in path if p not in pyspark_zips and _py4j_zip_version(p) is None
+            and not _spark_core_jar(p)]
     try:
         zip_versions = {_version(zipimport.zipimporter(p).get_data("pyspark/version.py"))
                         for p in pyspark_zips}
@@ -77,7 +91,7 @@ def without_spark_zips(path: list[str]) -> list[str]:
 
 if __name__ == "__main__":
     kept = without_spark_zips(sys.path)
-    # the zips' importers stay cached otherwise, and every task's
+    # the dropped entries' importers stay cached otherwise, and every task's
     # importlib.invalidate_caches() would re-read their directories
     for entry in set(sys.path).difference(kept):
         sys.path_importer_cache.pop(entry, None)

@@ -49,3 +49,23 @@ def test_documented_bench_flags_are_accepted():
                 cited.setdefault(flag, []).append(os.path.relpath(path, REPO_ROOT))
     unknown = {f: files for f, files in cited.items() if f not in modes}
     assert not unknown, f"docs cite bench.py modes that do not exist: {unknown}"
+
+
+def test_pages_bench_only_from_a_record_of_this_cpu_count():
+    """The headline quotes the committed pages-build record only when its
+    local[32] run used this run's CPU count: another host's throughput does
+    not compare with this one's."""
+    import importlib.util
+    import json
+
+    spec = importlib.util.spec_from_file_location("bench_headline", BENCH)
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    with open(os.path.join(REPO_ROOT, "BENCH", "scaling.json")) as f:
+        record = json.load(f)
+    cpus = record["local32"]["cpus"]
+    quoted = bench.pages_bench(record, cpus)
+    assert quoted["cpus"] == cpus
+    assert quoted["e2e_docs_per_sec_local32"] == record["local32"]["e2e"]["docs_per_sec"]
+    for other in (1, cpus - 1, cpus * 2):
+        assert bench.pages_bench(record, other) is None

@@ -307,3 +307,39 @@ def test_wrong_checkpoint_format_raises_not_restarts(spark, docs, tmp_path):
                               table_format="orc", **kw)
     with pytest.raises(ValueError, match="unreadable"):
         bad.completed_parts()
+
+
+def _dst_checkpoint_keys(spark, tmp_path, tz):
+    """Final (key, digest) of a checkpointer keyed by a timestamp holding
+    08:00, 08:30, 09:00 and 09:30 UTC on 2021-11-07 (01:00 and 01:30 PDT,
+    then the same wall times PST), run under session time zone ``tz``."""
+    from sketchlib.spark.checkpoint import TDigestCheckpointer
+
+    df = spark.range(40).selectExpr(
+        "id", "timestamp_micros(1636272000000000 + (id % 4) * 1800000000) AS ts",
+        "CAST(id AS DOUBLE) AS v")
+    conf = "spark.sql.session.timeZone"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, tz)
+    try:
+        ck = TDigestCheckpointer(spark, str(tmp_path / "ck"), ["ts"], "v", "id",
+                                 n_parts=4, delta=0.0)
+        assert ck.run(df) == 4
+        return _final_digests(ck)
+    finally:
+        spark.conf.set(conf, saved)
+
+
+def test_checkpoint_timestamp_keys_are_utc_wall_times(spark, tmp_path):
+    """Under a UTC session a timestamp key reads as before, so existing
+    checkpoints still resume."""
+    got = _dst_checkpoint_keys(spark, tmp_path, "UTC")
+    assert sorted(got) == ["2021-11-07 08:00:00", "2021-11-07 08:30:00",
+                           "2021-11-07 09:00:00", "2021-11-07 09:30:00"]
+
+
+def test_checkpoint_timestamp_keys_survive_dst_fall_back(spark, tmp_path):
+    """The hour Los Angeles repeats stays two hours of keys: four instants
+    finalize to four keys, the UTC session's keys and digests."""
+    la = _dst_checkpoint_keys(spark, tmp_path / "la", "America/Los_Angeles")
+    assert la == _dst_checkpoint_keys(spark, tmp_path / "utc", "UTC")

@@ -45,14 +45,16 @@ def test_session_factories_set_malloc_tunables():
         assert "spark.executorEnv.MALLOC_MMAP_MAX_" in src, fn.__name__
         assert "spark.executorEnv.MALLOC_TRIM_THRESHOLD_" in src, fn.__name__
         # and the Arrow batch byte cap that bounds a worker's wide batches
-        assert "spark.sql.execution.arrow.maxBytesPerBatch" in src, fn.__name__
+        assert ('"spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES)'
+                in src), fn.__name__
+    assert session.ARROW_BATCH_BYTES == 1 << 20
 
 
 def test_workers_reuse_unchanged_zip_directories(spark):
     """sketchlib.spark.zipcache: once sketchlib is imported in a Python
     worker, the per-task ``importlib.invalidate_caches()`` re-reads no
-    unchanged archive (pyspark.zip, the Spark jar, py4j, the shipped
-    sketchlib zip); the driver keeps the stock method."""
+    unchanged archive on its path (the shipped sketchlib zip, and Spark's
+    zips where the daemon keeps them); the driver keeps the stock method."""
     import sys
     import zipimport
 
@@ -119,8 +121,9 @@ import pyarrow as pa
 from sketchlib.data.extract import extract_len_series
 from sketchlib.data.gen_pages import gen_chunk
 from sketchlib.spark.session import get_spark
-from sketchlib.spark.sketch_ops import sketch_aggregate, sketch_merge
-from sketchlib.spark.tdigest_ops import tdigest_aggregate, tdigest_merge, tdigest_partials
+from sketchlib.spark.sketch_ops import hll_estimate_udf, sketch_aggregate, sketch_merge
+from sketchlib.spark.tdigest_ops import (
+    tdigest_aggregate, tdigest_merge, tdigest_partials, tdigest_size_udf, tdigest_unwire_udf)
 
 spark = get_spark("worker-env", cpus=2, shuffle_partitions=4)
 df = spark.range(20000, numPartitions=4).selectExpr(
@@ -140,6 +143,7 @@ assert tdigest_merge(fused, ["lang"]).count() == pdf["lang"].nunique()
 def probe(batches):
     import os
     import sys
+    import types
     import zipimport
 
     # read before building any output: most ways to build a batch from
@@ -152,10 +156,25 @@ def probe(batches):
 
     with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
         daemon = f.read().decode().split("\0")[:-1]
+    mods = {n: m for n, m in list(sys.modules.items())
+            if n == "sketchlib" or n.startswith("sketchlib.")}
+    # a function's code names the file it was compiled from: the archive
+    # name for the shipped bytecode, a longer path for a compile of source
+    def from_source(name, mod):
+        own = name.replace(".", "/") + ("/__init__.py" if hasattr(mod, "__path__") else ".py")
+        return any(isinstance(f, types.FunctionType) and f.__code__.co_filename != own
+                   and f.__code__.co_filename.endswith("/" + own) for f in vars(mod).values())
+
+    compiled = sorted(n for n, m in mods.items() if from_source(n, m))
     info = json.dumps({
         "pid": os.getpid(), "pandas": pandas, "kernel": kernel, "pyspark": pyspark.__file__,
         "daemon": daemon,
         "zipcache": zipimport.zipimporter.invalidate_caches is zc._invalidate_if_changed,
+        "shipped": [p for p in sys.path if os.path.basename(p).startswith("sketchlib-")
+                    and p.endswith(".zip")],
+        "files": {n: getattr(m, "__file__", None) for n, m in mods.items()},
+        "compiled": compiled,
+        "jars": [p for p in sys.path if p.endswith(".jar")],
     }).encode()
     for _ in batches:
         pass
@@ -165,18 +184,32 @@ def probe(batches):
         names=["info"])
 
 
-for r in spark.range(16, numPartitions=8).mapInArrow(probe, "info binary").collect():
-    print("probe", bytes(r["info"]).decode())
+def probe_all(phase):
+    for r in spark.range(16, numPartitions=8).mapInArrow(probe, "info binary").collect():
+        print("probe", phase, bytes(r["info"]).decode())
+
+
+probe_all("kernel")
+print("batch_bytes", spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch"))
+# the query UDFs, on several workers: DOUBLE, INT and BINARY outputs
+assert len(hll.repartition(4).select(hll_estimate_udf("sketch")).collect()) == 5
+sizes = td.repartition(4).select(tdigest_size_udf("digest").alias("n"),
+                                 tdigest_unwire_udf("digest").alias("w")).collect()
+assert len(sizes) == 5 and all(r["n"] > 0 and r["w"] for r in sizes)
+probe_all("query")
 spark.stop()
 """
 
 
 @pytest.fixture(scope="module")
-def worker_probes(tmp_path_factory):
+def worker_session(tmp_path_factory):
     """One fresh ``get_spark`` session (in a subprocess) whose workers ran
     t-digest, HLL and fused extract-length kernel tasks, then a probe task
-    on each pooled worker; the probes' reports.  An empty ``spark-defaults.conf`` keeps the driver
-    CDS archive out of it, and the workers run this interpreter."""
+    on each pooled worker ("kernel"), then the HLL estimate, t-digest size
+    and unwire query UDFs and the probes again ("query"): the probes'
+    reports by phase, and the session's Arrow batch byte cap.  An empty
+    ``spark-defaults.conf`` keeps the driver CDS archive out of it, and the
+    workers run this interpreter from a directory without sketchlib."""
     import json
     import os
     import subprocess
@@ -192,10 +225,21 @@ def worker_probes(tmp_path_factory):
                          capture_output=True, text=True, timeout=600, env=env,
                          cwd=str(tmp))
     assert out.returncode == 0, out.stderr[-3000:]
-    probes = [json.loads(line[len("probe "):]) for line in out.stdout.splitlines()
-              if line.startswith("probe ")]
-    assert len(probes) == 8, out.stdout
-    return probes
+    probes = {}
+    for line in out.stdout.splitlines():
+        if line.startswith("probe "):
+            _, phase, info = line.split(" ", 2)
+            probes.setdefault(phase, []).append(json.loads(info))
+    assert [len(probes.get(p, ())) for p in ("kernel", "query")] == [8, 8], out.stdout
+    batch_bytes = next(line.split()[1] for line in out.stdout.splitlines()
+                       if line.startswith("batch_bytes "))
+    return probes, int(batch_bytes)
+
+
+@pytest.fixture(scope="module")
+def worker_probes(worker_session):
+    """The probes taken after the kernel tasks."""
+    return worker_session[0]["kernel"]
 
 
 def test_kernel_workers_never_import_pandas(worker_probes):
@@ -238,10 +282,10 @@ def _daemon_module():
     return mod
 
 
-def test_workers_import_the_installed_pyspark(worker_probes):
-    """Where this interpreter's installed pyspark and py4j are the versions
-    of Spark's zips, the workers' pyspark is the installed, byte-compiled
-    one, not the source-only pyspark.zip."""
+def _spark_zips_dropped() -> bool:
+    """Whether this interpreter's installed pyspark and py4j are the
+    versions of Spark's zips, so that the daemon drops them (and the core
+    jar) from its workers' path."""
     import os
     import sys
 
@@ -249,17 +293,52 @@ def test_workers_import_the_installed_pyspark(worker_probes):
     zips = [os.path.join(lib, n) for n in sorted(os.listdir(lib))
             if n == "pyspark.zip" or n.endswith("-src.zip")] if os.path.isdir(lib) else []
     path = zips + [p for p in sys.path if p not in zips]
-    if not zips or _daemon_module().without_spark_zips(path) == path:
+    return bool(zips) and _daemon_module().without_spark_zips(path) != path
+
+
+def test_workers_import_the_installed_pyspark(worker_probes):
+    """Where this interpreter's installed pyspark and py4j are the versions
+    of Spark's zips, the workers' pyspark is the installed, byte-compiled
+    one, not the source-only pyspark.zip, and no jar is on their path."""
+    if not _spark_zips_dropped():
         pytest.skip("the installed pyspark and py4j are not the versions of Spark's zips")
     for p in worker_probes:
         assert "pyspark.zip" not in p["pyspark"], p
+        assert p["jars"] == [], p
+
+
+def test_workers_import_sketchlib_bytecode(worker_session):
+    """Every sketchlib module a worker loaded came from the checked-hash
+    ``.pyc`` in the zip the driver shipped, and none was compiled from
+    source (sketchlib.spark.shipping)."""
+    import os
+
+    for p in [p for phase in worker_session[0].values() for p in phase]:
+        assert len(p["shipped"]) == 1, p
+        zpath = p["shipped"][0] + os.sep
+        assert p["files"] and all(f.startswith(zpath) and f.endswith(".pyc")
+                                  for f in p["files"].values()), p
+        assert p["compiled"] == [], p
+
+
+def test_query_udf_workers_never_import_pandas(worker_session):
+    """The query UDFs build their DOUBLE, INT and BINARY outputs from
+    buffers: after the HLL estimate, t-digest size and unwire UDFs ran, no
+    pooled worker has imported pandas."""
+    probes = worker_session[0]["query"]
+    assert not [p["pid"] for p in probes if p["pandas"]], probes
+
+
+def test_get_spark_caps_arrow_batches_at_1_mib(worker_session):
+    assert worker_session[1] == 1 << 20
 
 
 @pytest.mark.parametrize("case", ["match", "other_zip_version", "other_py4j", "not_installed"])
 def test_daemon_drops_spark_zips_only_for_matching_installs(tmp_path, case):
-    """The daemon's path rule: pyspark.zip and py4j-*-src.zip leave
-    ``sys.path`` only when the pyspark and py4j found on the rest of it are
-    the versions the zips hold; in every other case the path is unchanged."""
+    """The daemon's path rule: pyspark.zip, py4j-*-src.zip and the Spark
+    core jar leave ``sys.path`` only when the pyspark and py4j found on the
+    rest of it are the versions the zips hold; in every other case the path
+    is unchanged.  Another jar stays either way."""
     import zipfile
 
     lib = tmp_path / "lib"
@@ -279,9 +358,11 @@ def test_daemon_drops_spark_zips_only_for_matching_installs(tmp_path, case):
             (site / pkg).mkdir()
             (site / pkg / "__init__.py").write_text("")
             (site / pkg / "version.py").write_text(f"__version__ = '{version}'\n")
-    path = [str(tmp_path / "cwd"), pyspark_zip, py4j_zip, str(tmp_path / "core.jar"), str(site)]
+    jar = str(tmp_path / "jars" / "spark-core_2.13-4.1.2.jar")
+    path = [str(tmp_path / "cwd"), pyspark_zip, py4j_zip, jar, str(tmp_path / "core.jar"),
+            str(site)]
     kept = _daemon_module().without_spark_zips(list(path))
     if case == "match":
-        assert kept == [path[0], path[3], path[4]]
+        assert kept == [path[0], path[4], path[5]]
     else:
         assert kept == path
