@@ -36,6 +36,7 @@ from typing import Iterable, Iterator
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import TimestampType
 
 CHECKPOINT_SCHEMA = (
     "run_id string, part_id int, key string, digest binary, "
@@ -46,6 +47,14 @@ _CHECKPOINT_ARROW = pa.schema([
     ("digest", pa.binary()), ("rows", pa.int64()), ("wall_ms", pa.float64()),
     ("input_snapshot", pa.string()), ("lineage", pa.string()),
 ])
+
+#: appended to the lineage of a checkpoint keyed by a timestamp, whose keys
+#: are UTC wall times (``_key_string``).  Its rows written before that held
+#: session-local wall times under the untagged lineage: the same strings
+#: only under a UTC session.
+_UTC_KEYS = " [timestamp keys in UTC]"
+#: session time zones whose wall times are UTC's
+_UTC_ZONES = {"UTC", "Etc/UTC", "GMT", "Etc/GMT", "Z", "+00:00"}
 
 
 class TDigestCheckpointer:
@@ -136,13 +145,32 @@ class TDigestCheckpointer:
         resumable; new rows are always written in canonical form."""
         return f"{self.sketch}({self.params})<-{self.value_col} by {','.join(self.keys)}"
 
-    def completed_parts(self) -> DataFrame:
+    def _timestamp_keyed(self, df: DataFrame) -> bool:
+        return any(isinstance(df.schema[k].dataType, TimestampType) for k in self.keys)
+
+    def _accepted_lineages(self, timestamp_keyed: bool | None) -> set[str]:
+        """The lineages a resume accepts: this configuration's, canonical or
+        legacy, tagged ``_UTC_KEYS`` when a key is a timestamp.  The untagged
+        ones of a timestamp-keyed run only under a UTC session, where its old
+        session-local keys are the UTC ones.  ``None``: key types unknown,
+        any of them."""
+        base = {self._lineage(), self._lineage_legacy()}
+        tagged = {lineage + _UTC_KEYS for lineage in base}
+        if timestamp_keyed is None:
+            return base | tagged
+        if not timestamp_keyed:
+            return base
+        zone = self.spark.conf.get("spark.sql.session.timeZone")
+        return tagged | (base if zone in _UTC_ZONES else set())
+
+    def completed_parts(self, df: DataFrame | None = None) -> DataFrame:
         """Distinct part_ids already checkpointed (any run attempt counts:
         partials are deterministic per partition).  Refuses to resume a
         checkpoint whose recorded lineage (sketch kind/params/value/keys)
         differs from this configuration — mixing incompatible partials
         would either crash late (merge param mismatch) or finalize silently
-        wrong."""
+        wrong.  ``df``, the input, tells whether a key is a timestamp
+        (``_accepted_lineages``); ``run`` always passes it."""
         spark = self.spark
         try:
             done = spark.read.format(self.table_format).load(self.ckpt_path)
@@ -161,12 +189,15 @@ class TDigestCheckpointer:
                 f"checkpoint? ({msg.splitlines()[0]})"
             ) from e
         lineages = [r["lineage"] for r in done.select("lineage").distinct().collect()]
-        ok = {self._lineage(), self._lineage_legacy()}
-        if lineages and not set(lineages) <= ok:
+        timestamp_keyed = None if df is None else self._timestamp_keyed(df)
+        if lineages and not set(lineages) <= self._accepted_lineages(timestamp_keyed):
+            this = self._lineage() + (_UTC_KEYS if timestamp_keyed else "")
             raise ValueError(
                 f"checkpoint at {self.ckpt_path} was written with lineage "
-                f"{lineages} but this run is {self._lineage()!r}; use a fresh "
+                f"{lineages} but this run is {this!r}; use a fresh "
                 "--checkpoint path (or matching parameters) to resume"
+                + (" (keys that are session-local wall times resume only under "
+                   "a UTC session)" if timestamp_keyed else "")
             )
         return done.select("part_id").distinct()
 
@@ -184,7 +215,7 @@ class TDigestCheckpointer:
         keys = ["_part_id"] + self.keys
         specs = _specs([self._spec()], keys)
         tagged = _project(self._with_part_id(df), keys, specs)
-        done = self.completed_parts()
+        done = self.completed_parts(tagged)
         pending = tagged.join(
             F.broadcast(done.withColumnRenamed("part_id", "_part_id")),
             "_part_id",
@@ -199,7 +230,8 @@ class TDigestCheckpointer:
 
         user_keys, build = self.keys, _partial_builder(keys, specs)
         run_id, input_snapshot, lineage = (
-            self.run_id, self._input_snapshot(df), self._lineage(),
+            self.run_id, self._input_snapshot(df),
+            self._lineage() + (_UTC_KEYS if self._timestamp_keyed(tagged) else ""),
         )
 
         def checkpoint_rows(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

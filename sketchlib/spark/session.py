@@ -6,16 +6,18 @@ local[N]):
 - AQE on: runtime coalescing of the post-aggregation shuffles (sketch rows
   are tiny — one ≤40 KB row per partition×key — so AQE collapses them).
 - Arrow on, batches bounded by rows and by bytes: every sketch ingest path
-  is a vectorized Arrow (or pandas) UDF.  Up to 65536 rows amortize the
-  JVM↔Python hop for narrow sketch rows; the 1 MiB cap
-  (``arrow.maxBytesPerBatch``) keeps a batch of wide rows (html pages)
-  from holding tens of MB per Python worker.  A worker's heap grows to
-  its largest batch and keeps it (``MALLOC_TRIM_THRESHOLD_=-1``, below):
-  on the fused html -> length -> t-digest ingest it read 30.1 MB at a
-  4 MiB cap against 19.1-21.1 MB at 1 MiB, while passes took 671/673 ms
-  at 4 MiB, 719/678 ms at 1 MiB and 689/684 ms at 256 KiB (the ~3k-key
-  t-digest + HLL rollup: 1166/1135, 1236/1156 and 1221/1157 ms), so the
-  smaller cap costs no pass time on 4 CPUs.
+  is a vectorized Arrow (or pandas) UDF.  A batch holds at most 65536 rows
+  (``arrow.maxRecordsPerBatch``) and 1 MiB (``arrow.maxBytesPerBatch``),
+  so the byte cap, not the row cap, ends the batch once rows are wider
+  than 16 bytes: nearly every ingest with a string key, and every batch of
+  html pages.  A worker's heap grows to its largest batch and keeps it
+  (``MALLOC_TRIM_THRESHOLD_=-1``, below): on ``ingest_extract_digest``
+  (the fused html -> length -> t-digest ingest) it read 30.1 MB at a
+  4 MiB cap against 19.1-21.1 MB at 1 MiB.  Pass time was checked on two
+  workloads only, two passes each on 4 CPUs: ``ingest_extract_digest``
+  671/673 ms at 4 MiB, 719/678 ms at 1 MiB, 689/684 ms at 256 KiB;
+  ``host_rollup`` (the ~3k-key t-digest + HLL rollup) 1166/1135,
+  1236/1156 and 1221/1157 ms.  Neither moved beyond its noise.
 - shuffle.partitions is a default for local runs; at cluster scale set it
   to ~2-3× total cores or rely on AQE.
 - Python-worker glibc malloc tuning (MALLOC_MMAP_MAX_=0,
@@ -27,7 +29,7 @@ local[N]):
   allocation-heavy kernels).  Keeping freed blocks on the heap free-list
   instead measured 2.1x on the decontam probe stage standalone.  Worker
   heaps then hold their per-batch peak instead of returning it — bounded,
-  since batch sizes are (maxRecordsPerBatch-)bounded.
+  since batch sizes are bounded (above).
 - Python-worker zip-directory reuse (sketchlib.spark.zipcache), the same
   kind of per-process worker fix: PySpark's per-task
   ``importlib.invalidate_caches()`` makes every zipimporter re-read its

@@ -7,28 +7,10 @@ zips the installed package once per Spark application and ships it with
 ``addPyFile`` — the programmatic equivalent of
 ``spark-submit --py-files sketchlib.zip`` and a no-op when already shipped.
 ``build_zip`` is the one zip builder; ``tools/package.py`` calls it too.
-
-The zip holds bytecode beside the source: each ``sketchlib/**.py`` has a
-checked-hash ``.pyc`` (PEP 552) next to it, compiled by the driver's
-interpreter, every entry stored uncompressed.  ``zipimport`` prefers the
-``.pyc`` after checking its hash against the ``.py`` in the same zip, and
-falls back on the source when the magic number is another Python
-version's, so a zip stays valid for ``--py-files`` on any cluster.  A
-worker that compiled sketchlib from a source-only zip paid 76-78 ms and
-+4.2 MB for ``sketch_ops`` and ``extract``, against 11-14 ms and +0.8 MB
-from bytecode (4 CPUs, ``PYTHONDONTWRITEBYTECODE`` set, so no worker could
-fall back on a ``__pycache__``).  Building the zip takes ~120 ms, against
-~30 ms for the deflated source alone.
-
-The code objects' file names are the archive names
-(``sketchlib/spark/sketch_ops.py``): where the zip lands on a worker is
-not known when it is built.
 """
 
 from __future__ import annotations
 
-import importlib.util
-import marshal
 import os
 import tempfile
 import zipfile
@@ -42,31 +24,20 @@ PKG_DIR = os.path.dirname(os.path.abspath(sketchlib.__file__))
 _SHIPPED: set[str] = set()
 
 
-def _checked_pyc(source: bytes, name: str) -> bytes:
-    """PEP 552 checked-hash bytecode of ``source``, what ``py_compile``
-    writes with ``PycInvalidationMode.CHECKED_HASH``: magic, flags 0b11,
-    the source hash, the marshalled code."""
-    code = compile(source, name, "exec", dont_inherit=True)
-    return (importlib.util.MAGIC_NUMBER + (0b11).to_bytes(4, "little")
-            + importlib.util.source_hash(source) + marshal.dumps(code))
-
-
 def build_zip(out_path: str) -> str:
     """Write every ``sketchlib/**.py`` into ``out_path`` under its
-    ``sketchlib/...`` name, each followed by its checked-hash ``.pyc``, in
-    sorted walk order, uncompressed."""
+    ``sketchlib/...`` name, in sorted walk order."""
     os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_STORED) as z:
+    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as z:
         for root, dirs, files in os.walk(PKG_DIR):
             dirs.sort()
             for f in sorted(files):
                 if f.endswith(".py"):
                     full = os.path.join(root, f)
-                    name = os.path.join("sketchlib", os.path.relpath(full, PKG_DIR))
-                    with open(full, "rb") as src:
-                        source = src.read()
-                    z.writestr(zipfile.ZipInfo.from_file(full, name), source)
-                    z.writestr(name + "c", _checked_pyc(source, name))
+                    z.write(
+                        full,
+                        os.path.join("sketchlib", os.path.relpath(full, PKG_DIR)),
+                    )
     return out_path
 
 

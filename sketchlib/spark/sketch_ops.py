@@ -166,14 +166,19 @@ def _binary(blobs: list) -> pa.Array:
     if offsets[-1] >= 2**31:
         raise ValueError(f"{offsets[-1]} bytes of sketches in one batch: over the "
                          "2 GiB a binary column holds")
-    valid = np.fromiter((b is not None for b in blobs), dtype=bool, count=n)
-    nulls = n - int(valid.sum())
+    bitmap, nulls = _validity(np.fromiter((b is not None for b in blobs), dtype=bool, count=n))
     return pa.Array.from_buffers(
         pa.binary(), n,
-        [pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None,
-         pa.py_buffer(offsets.astype(np.int32)),
+        [bitmap, pa.py_buffer(offsets.astype(np.int32)),
          pa.py_buffer(b"".join(filter(None, blobs)))],
         null_count=nulls)
+
+
+def _validity(valid: np.ndarray) -> tuple[pa.Buffer | None, int]:
+    """An Arrow validity bitmap of ``valid`` (None when no row is NULL) and
+    the NULL count."""
+    nulls = len(valid) - int(valid.sum())
+    return (pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None), nulls
 
 
 def _blobs(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, int]:
@@ -650,12 +655,8 @@ def _column(values: list, out_type: pa.DataType) -> pa.Array:
     data = np.fromiter((v if ok else 0 for v, ok in zip(values, valid)), dtype=dtype, count=n)
     if dtype is bool:
         data = np.packbits(data, bitorder="little")
-    nulls = n - int(valid.sum())
-    return pa.Array.from_buffers(
-        out_type, n,
-        [pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None,
-         pa.py_buffer(data)],
-        null_count=nulls)
+    bitmap, nulls = _validity(valid)
+    return pa.Array.from_buffers(out_type, n, [bitmap, pa.py_buffer(data)], null_count=nulls)
 
 
 def _blob_udf(rtype: DataType, fn, null=None, check=None):

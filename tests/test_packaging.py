@@ -13,23 +13,13 @@ from tests.conftest import REPO_ROOT
 
 
 def test_dist_zip_is_fresh(tmp_path):
-    """The zip's ``.py`` entries are the source tree's, each followed by a
-    checked-hash ``.pyc`` of this interpreter whose hash is the source's,
-    every entry stored uncompressed (sketchlib.spark.shipping)."""
-    import importlib.util
-
     zpath = str(tmp_path / "sketchlib.zip")
     subprocess.run(
         [sys.executable, os.path.join(REPO_ROOT, "tools", "package.py"), zpath],
         check=True, capture_output=True, cwd=str(tmp_path),
     )
     with zipfile.ZipFile(zpath) as z:
-        infos = z.infolist()
-        in_zip = {i.filename: i.file_size for i in infos if i.filename.endswith(".py")}
-        pycs = {i.filename[:-1]: z.read(i) for i in infos if i.filename.endswith(".pyc")}
-        sources = {name: z.read(name) for name in in_zip}
-    assert len(infos) == len(in_zip) + len(pycs)
-    assert {i.compress_type for i in infos} == {zipfile.ZIP_STORED}
+        in_zip = {i.filename: i.file_size for i in z.infolist()}
     src = {}
     pkg = os.path.join(REPO_ROOT, "sketchlib")
     for root, _dirs, files in os.walk(pkg):
@@ -43,11 +33,6 @@ def test_dist_zip_is_fresh(tmp_path):
         f"extra={sorted(set(in_zip) - set(src))} "
         f"size_diff={sorted(k for k in src.keys() & in_zip.keys() if src[k] != in_zip[k])}"
     )
-    assert set(pycs) == set(in_zip)
-    for name, pyc in pycs.items():
-        assert pyc[:4] == importlib.util.MAGIC_NUMBER, name
-        assert int.from_bytes(pyc[4:8], "little") == 0b11, name  # hash-based, checked
-        assert pyc[8:16] == importlib.util.source_hash(sources[name]), name
 
 
 class _FakeContext:

@@ -309,37 +309,79 @@ def test_wrong_checkpoint_format_raises_not_restarts(spark, docs, tmp_path):
         bad.completed_parts()
 
 
-def _dst_checkpoint_keys(spark, tmp_path, tz):
-    """Final (key, digest) of a checkpointer keyed by a timestamp holding
-    08:00, 08:30, 09:00 and 09:30 UTC on 2021-11-07 (01:00 and 01:30 PDT,
-    then the same wall times PST), run under session time zone ``tz``."""
-    from sketchlib.spark.checkpoint import TDigestCheckpointer
-
-    df = spark.range(40).selectExpr(
+def _dst_frame(spark):
+    """40 rows keyed by a timestamp holding 08:00, 08:30, 09:00 and 09:30
+    UTC on 2021-11-07 (01:00 and 01:30 PDT, then the same wall times PST)."""
+    return spark.range(40).selectExpr(
         "id", "timestamp_micros(1636272000000000 + (id % 4) * 1800000000) AS ts",
         "CAST(id AS DOUBLE) AS v")
+
+
+@pytest.fixture
+def session_zone(spark):
+    """Sets ``spark.sql.session.timeZone`` for one test, then restores it."""
     conf = "spark.sql.session.timeZone"
     saved = spark.conf.get(conf)
-    spark.conf.set(conf, tz)
-    try:
-        ck = TDigestCheckpointer(spark, str(tmp_path / "ck"), ["ts"], "v", "id",
-                                 n_parts=4, delta=0.0)
-        assert ck.run(df) == 4
-        return _final_digests(ck)
-    finally:
-        spark.conf.set(conf, saved)
+    yield lambda tz: spark.conf.set(conf, tz)
+    spark.conf.set(conf, saved)
 
 
-def test_checkpoint_timestamp_keys_are_utc_wall_times(spark, tmp_path):
+def _dst_checkpointer(spark, path):
+    from sketchlib.spark.checkpoint import TDigestCheckpointer
+
+    return TDigestCheckpointer(spark, str(path), ["ts"], "v", "id", n_parts=4, delta=0.0)
+
+
+def _dst_checkpoint_keys(spark, tmp_path, session_zone, tz):
+    """Final (key, digest) of a timestamp-keyed checkpoint of ``_dst_frame``
+    run under session time zone ``tz``."""
+    session_zone(tz)
+    ck = _dst_checkpointer(spark, tmp_path / "ck")
+    assert ck.run(_dst_frame(spark)) == 4
+    return _final_digests(ck)
+
+
+def test_checkpoint_timestamp_keys_are_utc_wall_times(spark, tmp_path, session_zone):
     """Under a UTC session a timestamp key reads as before, so existing
-    checkpoints still resume."""
-    got = _dst_checkpoint_keys(spark, tmp_path, "UTC")
+    checkpoints still resume there."""
+    got = _dst_checkpoint_keys(spark, tmp_path, session_zone, "UTC")
     assert sorted(got) == ["2021-11-07 08:00:00", "2021-11-07 08:30:00",
                            "2021-11-07 09:00:00", "2021-11-07 09:30:00"]
 
 
-def test_checkpoint_timestamp_keys_survive_dst_fall_back(spark, tmp_path):
+def test_checkpoint_timestamp_keys_survive_dst_fall_back(spark, tmp_path, session_zone):
     """The hour Los Angeles repeats stays two hours of keys: four instants
     finalize to four keys, the UTC session's keys and digests."""
-    la = _dst_checkpoint_keys(spark, tmp_path / "la", "America/Los_Angeles")
-    assert la == _dst_checkpoint_keys(spark, tmp_path / "utc", "UTC")
+    la = _dst_checkpoint_keys(spark, tmp_path / "la", session_zone, "America/Los_Angeles")
+    assert la == _dst_checkpoint_keys(spark, tmp_path / "utc", session_zone, "UTC")
+
+
+@pytest.mark.parametrize("tz", ["America/Los_Angeles", "UTC"])
+def test_session_local_timestamp_checkpoint_resumes_only_under_utc(
+        spark, tmp_path, session_zone, monkeypatch, tz):
+    """A timestamp-keyed checkpoint started before keys were UTC carries the
+    untagged lineage.  Resumed under a non-UTC session, its session-local
+    keys would split each group in two at finalize, so the resume is
+    refused; under UTC its keys are the new ones, and the resumed run
+    finalizes to a clean run's digests.  The old writer is today's with the
+    tag blanked: the refusal reads only the lineage."""
+    import sketchlib.spark.checkpoint as checkpoint
+
+    session_zone(tz)
+    df = _dst_frame(spark)
+    old = _dst_checkpointer(spark, tmp_path / "old")
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "_UTC_KEYS", "")  # a pre-change writer
+        assert old.run(df, fail_after_parts=2) == 2
+    lineages = {r["lineage"] for r in spark.read.parquet(str(tmp_path / "old")).collect()}
+    assert lineages == {old._lineage()}
+
+    resumed = _dst_checkpointer(spark, tmp_path / "old")
+    if tz != "UTC":
+        with pytest.raises(ValueError, match="only under a UTC session"):
+            resumed.run(df)
+        return
+    assert resumed.run(df) == 2
+    clean = _dst_checkpointer(spark, tmp_path / "clean")
+    assert clean.run(df) == 4
+    assert _final_digests(resumed) == _final_digests(clean)

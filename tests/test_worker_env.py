@@ -143,7 +143,6 @@ assert tdigest_merge(fused, ["lang"]).count() == pdf["lang"].nunique()
 def probe(batches):
     import os
     import sys
-    import types
     import zipimport
 
     # read before building any output: most ways to build a batch from
@@ -156,24 +155,10 @@ def probe(batches):
 
     with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
         daemon = f.read().decode().split("\0")[:-1]
-    mods = {n: m for n, m in list(sys.modules.items())
-            if n == "sketchlib" or n.startswith("sketchlib.")}
-    # a function's code names the file it was compiled from: the archive
-    # name for the shipped bytecode, a longer path for a compile of source
-    def from_source(name, mod):
-        own = name.replace(".", "/") + ("/__init__.py" if hasattr(mod, "__path__") else ".py")
-        return any(isinstance(f, types.FunctionType) and f.__code__.co_filename != own
-                   and f.__code__.co_filename.endswith("/" + own) for f in vars(mod).values())
-
-    compiled = sorted(n for n, m in mods.items() if from_source(n, m))
     info = json.dumps({
         "pid": os.getpid(), "pandas": pandas, "kernel": kernel, "pyspark": pyspark.__file__,
         "daemon": daemon,
         "zipcache": zipimport.zipimporter.invalidate_caches is zc._invalidate_if_changed,
-        "shipped": [p for p in sys.path if os.path.basename(p).startswith("sketchlib-")
-                    and p.endswith(".zip")],
-        "files": {n: getattr(m, "__file__", None) for n, m in mods.items()},
-        "compiled": compiled,
         "jars": [p for p in sys.path if p.endswith(".jar")],
     }).encode()
     for _ in batches:
@@ -209,7 +194,7 @@ def worker_session(tmp_path_factory):
     and unwire query UDFs and the probes again ("query"): the probes'
     reports by phase, and the session's Arrow batch byte cap.  An empty
     ``spark-defaults.conf`` keeps the driver CDS archive out of it, and the
-    workers run this interpreter from a directory without sketchlib."""
+    workers run this interpreter."""
     import json
     import os
     import subprocess
@@ -305,20 +290,6 @@ def test_workers_import_the_installed_pyspark(worker_probes):
     for p in worker_probes:
         assert "pyspark.zip" not in p["pyspark"], p
         assert p["jars"] == [], p
-
-
-def test_workers_import_sketchlib_bytecode(worker_session):
-    """Every sketchlib module a worker loaded came from the checked-hash
-    ``.pyc`` in the zip the driver shipped, and none was compiled from
-    source (sketchlib.spark.shipping)."""
-    import os
-
-    for p in [p for phase in worker_session[0].values() for p in phase]:
-        assert len(p["shipped"]) == 1, p
-        zpath = p["shipped"][0] + os.sep
-        assert p["files"] and all(f.startswith(zpath) and f.endswith(".pyc")
-                                  for f in p["files"].values()), p
-        assert p["compiled"] == [], p
 
 
 def test_query_udf_workers_never_import_pandas(worker_session):
